@@ -461,9 +461,8 @@ def cmd_mask(tbl, args):
             )
         else:
             # hashlib per value: each iteration is ONE OpenSSL C call —
-            # measured 159 MB/s on this host vs 8.5 MB/s for the fully
-            # vectorized NumPy wave kernel (kernels/md5.py; MD5's 64
-            # sequential rounds are DRAM-bound as u32 lane arrays). The
+            # a vectorized NumPy MD5 (64 sequential rounds over u32 lane
+            # arrays) measured ~19x slower and was removed. The
             # distributed rewrite path hashes JVM-side (rewrite.mask_hash,
             # F.md5) — this local tool takes the fastest in-process option.
             hashed = RaggedBytes.from_pylist(

@@ -58,6 +58,7 @@ import hmac
 import os
 import struct
 
+from .format import PAGE_DICT
 from .thrift_compact import (
     CT_BINARY,
     CT_BOOL_FALSE,
@@ -451,7 +452,7 @@ def encrypt_parquet(plain: bytes, footer_key: bytes,
             page_ord = 0
             pos = start
             for hdr_bytes, header, body in _walk_pages(plain, start, total):
-                is_dict = header.get(1) == 2  # PageType.DICTIONARY_PAGE
+                is_dict = header.get(1) == PAGE_DICT
                 if is_dict:
                     hmod = _module_aad(file_aad, MOD_DICT_PAGE_HEADER, rg_i, col_i)
                     bmod = _module_aad(file_aad, MOD_DICT_PAGE, rg_i, col_i)
@@ -787,7 +788,7 @@ def encrypt_parquet_plaintext_footer(
                 pos = start
                 end = start + total
                 for hdr_bytes, hdr, body in _walk_pages(plain, start, total):
-                    is_dict = hdr.get(1) == 2
+                    is_dict = hdr.get(1) == PAGE_DICT
                     if is_dict:
                         hmod = _module_aad(
                             file_aad, MOD_DICT_PAGE_HEADER, rg_i, col_i)

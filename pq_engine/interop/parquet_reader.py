@@ -37,8 +37,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..kernels import bytestream, delta, dictionary, plain, rle
+from ..kernels import bytestream, delta, deltastrings, dictionary, fixedlen, plain, rle
 from ..kernels.ragged import RaggedBytes
+from .format import (ENC_BSS, ENC_DBA, ENC_DELTA_BP, ENC_DLBA, ENC_PLAIN,
+                     ENC_PLAIN_DICT, ENC_RLE, ENC_RLE_DICT, PAGE_DATA,
+                     PAGE_DATA_V2, PAGE_DICT)
 from .thrift_compact import read_struct
 
 MAGIC = b"PAR1"
@@ -49,10 +52,6 @@ _CODEC = {0: "none", 1: "snappy", 2: "gzip", 4: "lz4", 5: "brotli",
           6: "zstd", 7: "lz4_raw"}
 _NUMDT = {"int32": np.int32, "int64": np.int64,
           "float32": np.float32, "float64": np.float64}
-
-ENC_PLAIN, ENC_PLAIN_DICT, ENC_RLE = 0, 2, 3
-ENC_DELTA_BP, ENC_DLBA, ENC_DBA, ENC_RLE_DICT, ENC_BSS = 5, 6, 7, 8, 9
-PAGE_DATA, PAGE_DICT, PAGE_DATA_V2 = 0, 2, 3
 
 
 def _leaf(se: dict) -> dict:
@@ -287,9 +286,9 @@ def _decode_values(enc: int, body, phys: str, count: int, type_length,
         if phys == "byte_array":
             return plain.decode_plain_bytes(body, count)
         if phys == "flba":
-            return plain.decode_plain_fixed(body, type_length, count)
+            return fixedlen.decode_plain_fixed(body, type_length, count)
         if phys == "int96":
-            return plain.decode_plain_fixed(body, 12, count)
+            return fixedlen.decode_plain_fixed(body, 12, count)
         return plain.decode_plain_numeric(body, _NUMDT[phys], count)
     if enc == ENC_RLE and phys == "bool":
         # bool RLE pages carry a u32 length prefix then the hybrid stream
@@ -298,31 +297,12 @@ def _decode_values(enc: int, body, phys: str, count: int, type_length,
         return delta.decode_delta(body, _NUMDT[phys])
     if enc == ENC_BSS:
         if phys == "flba":
-            return bytestream.decode_bss_fixed(body, type_length, count)
+            return fixedlen.decode_bss_fixed(body, type_length, count)
         return bytestream.decode_bss(body, _NUMDT[phys], count)
     if enc == ENC_DLBA:
-        lengths, used = delta.decode_delta(body, np.int64, return_consumed=True)
-        offsets = np.zeros(count + 1, dtype=np.int64)
-        np.cumsum(lengths[:count], out=offsets[1:])
-        data = np.frombuffer(body, dtype=np.uint8, count=int(offsets[-1]),
-                             offset=used)
-        return RaggedBytes(offsets, data.copy())
+        return deltastrings.decode_dlba(body, count)
     if enc == ENC_DBA:
-        prefixes, used = delta.decode_delta(body, np.int64, return_consumed=True)
-        suf_lens, used2 = delta.decode_delta(
-            memoryview(body)[used:], np.int64, return_consumed=True
-        )
-        raw = bytes(memoryview(body)[used + used2:])
-        # prefix reconstruction is sequential by definition (each value
-        # borrows from the PREVIOUS reconstructed value) — per-value loop,
-        # acceptable on the verification surface
-        vals, pos, prev = [], 0, b""
-        for i in range(count):
-            s = raw[pos : pos + int(suf_lens[i])]
-            pos += int(suf_lens[i])
-            prev = prev[: int(prefixes[i])] + s
-            vals.append(prev)
-        return RaggedBytes.from_pylist(vals)
+        return deltastrings.decode_dba(body, count)
     raise ValueError(f"unsupported encoding {enc} for {phys}")
 
 
@@ -348,9 +328,9 @@ def _decode_dict_page(hdr, body, chunk, phys, type_length):
     if phys == "byte_array":
         return plain.decode_plain_bytes(raw, n_dict)
     if phys == "flba":
-        return plain.decode_plain_fixed(raw, type_length, n_dict)
+        return fixedlen.decode_plain_fixed(raw, type_length, n_dict)
     if phys == "int96":
-        return plain.decode_plain_fixed(raw, 12, n_dict)
+        return fixedlen.decode_plain_fixed(raw, 12, n_dict)
     return plain.decode_plain_numeric(raw, _NUMDT[phys], n_dict)
 
 
@@ -1012,8 +992,8 @@ def _rg_can_match(pred, rg, by_name):
     return _range_can_match(op, _coerce(val, leaf), mn, mx)
 
 
-_DICT_ENCODINGS = (2, 8)   # PLAIN_DICTIONARY / RLE_DICTIONARY
-_DATA_PAGE_TYPES = (0, 3)  # DATA_PAGE / DATA_PAGE_V2
+_DICT_ENCODINGS = (ENC_PLAIN_DICT, ENC_RLE_DICT)
+_DATA_PAGE_TYPES = (PAGE_DATA, PAGE_DATA_V2)
 
 
 def _all_pages_dict(chunk):

@@ -31,6 +31,9 @@ import numpy as np
 
 from ..kernels import bytestream, delta, deltastrings, dictionary, plain, rle
 from ..kernels.ragged import RaggedBytes
+from .format import (ENC_BSS, ENC_DBA, ENC_DELTA_BP, ENC_DLBA, ENC_PLAIN,
+                     ENC_PLAIN_DICT, ENC_RLE, PAGE_DATA, PAGE_DATA_V2,
+                     PAGE_DICT)
 from .thrift_compact import StructWriter
 
 MAGIC = b"PAR1"
@@ -93,17 +96,8 @@ def _annotate(se: "StructWriter", ptype: str) -> None:
         se.struct(10, StructWriter().struct(15, StructWriter()))
     elif ptype == "interval":
         se.i32(6, 21)  # INTERVAL (FLBA(12) months/days/millis)
-ENC_PLAIN = 0
-ENC_PLAIN_DICT = 2
-ENC_RLE = 3
-ENC_DELTA_BP = 5
-ENC_DLBA = 6
-ENC_DBA = 7
-ENC_RLE_DICT = 8
-ENC_BSS = 9
-PAGE_DATA = 0
-PAGE_DICT = 2
-PAGE_DATA_V2 = 3
+
+
 # CompressionCodecName.java:26-33 / parquet-format CompressionCodec enum
 CODEC_ENUM = {None: 0, "none": 0, "snappy": 1, "gzip": 2, "zstd": 6}
 
@@ -120,58 +114,28 @@ def _compress_body(body: bytes, compression: str | None) -> bytes:
 
 
 def _encode_values(ptype: str, codec: str, vals):
-    """Return (encoding enum, data page value bytes, dict page bytes|None)."""
+    """(encoding enum, data page value bytes) of one page's non-null values.
+    Dictionary chunks are factorized once per chunk by _write_flat_chunk."""
     if ptype in ("string", "binary"):
         if codec == "plain":
-            return ENC_PLAIN, plain.encode_plain_bytes(vals), None
+            return ENC_PLAIN, plain.encode_plain_bytes(vals)
         if codec == "dlba":
-            return ENC_DLBA, deltastrings.encode_delta_length(vals)[4:], None  # raw layout below
+            return ENC_DLBA, deltastrings.encode_dlba(vals)
         if codec == "dba":
-            return ENC_DBA, None, None  # handled specially
-        if codec == "dict":
-            codes, uniques = dictionary.factorize_bytes(vals)
-            body = dictionary.encode_dict_data_page(codes, max(len(uniques) - 1, 0))
-            dict_page = plain.encode_plain_bytes(uniques)
-            return ENC_PLAIN_DICT, body, (dict_page, len(uniques))
+            return ENC_DBA, deltastrings.encode_dba(vals)
     if ptype == "bool":
-        return ENC_PLAIN, plain.encode_plain_bool(vals), None
+        return ENC_PLAIN, plain.encode_plain_bool(vals)
     if _physical(ptype)[0] == FLBA:
         if codec != "plain":
             raise ValueError(f"FLBA ptype {ptype!r}: only PLAIN supported here")
-        return ENC_PLAIN, np.ascontiguousarray(vals, dtype=np.uint8).tobytes(), None
+        return ENC_PLAIN, np.ascontiguousarray(vals, dtype=np.uint8).tobytes()
     if codec == "plain":
-        return ENC_PLAIN, plain.encode_plain_numeric(vals), None
+        return ENC_PLAIN, plain.encode_plain_numeric(vals)
     if codec == "delta":
-        return ENC_DELTA_BP, delta.encode_delta(vals), None
+        return ENC_DELTA_BP, delta.encode_delta(vals)
     if codec == "bss":
-        return ENC_BSS, bytestream.encode_bss(vals), None
-    if codec == "dict":
-        codes, uniques = dictionary.factorize_numeric(vals)
-        body = dictionary.encode_dict_data_page(codes, max(len(uniques) - 1, 0))
-        return ENC_PLAIN_DICT, body, (plain.encode_plain_numeric(uniques), len(uniques))
+        return ENC_BSS, bytestream.encode_bss(vals)
     raise ValueError(f"unsupported {ptype}/{codec}")
-
-
-def _parquet_dlba(col: RaggedBytes) -> bytes:
-    """parquet DELTA_LENGTH_BYTE_ARRAY layout: delta-packed lengths then raw
-    bytes (no length prefix — the page is self-describing)."""
-    return delta.encode_delta(col.lengths.astype(np.int32)) + col.data.tobytes()
-
-
-def _parquet_dba(col: RaggedBytes) -> bytes:
-    """parquet DELTA_BYTE_ARRAY: delta-packed prefix lengths, then a full
-    DELTA_LENGTH_BYTE_ARRAY of the suffixes."""
-    prefixes = deltastrings.shared_prefix_lengths(col)
-    lens = col.lengths
-    suf_lens = lens - prefixes
-    suf_off = np.zeros(len(col) + 1, dtype=np.int64)
-    np.cumsum(suf_lens, out=suf_off[1:])
-    total = int(suf_off[-1])
-    gather = np.repeat(col.offsets[:-1] + prefixes - suf_off[:-1], suf_lens) + np.arange(
-        total, dtype=np.int64
-    )
-    suffixes = RaggedBytes(suf_off, col.data[gather])
-    return delta.encode_delta(prefixes.astype(np.int32)) + _parquet_dlba(suffixes)
 
 
 def _crc32_signed(body) -> int:
@@ -397,12 +361,12 @@ def _write_parquet_bytes(fobj, columns: list[dict], n_rows: int,
                 band = dict(band)
                 band["bloom"] = True
             if data_page_rows and data_page_rows > 0 and r1 > r0:
-                chunks.append(_write_flat_chunk_paged(
-                    out, band, r1 - r0, compression, page_version,
-                    data_page_rows, pageidx))
+                page_rows, index_out = data_page_rows, pageidx
             else:
-                chunks.append(_write_flat_chunk(
-                    out, band, r1 - r0, compression, page_version))
+                page_rows, index_out = r1 - r0, None
+            chunks.append(_write_flat_chunk(
+                out, band, r1 - r0, compression, page_version, page_rows,
+                index_out))
         row_groups.append((chunks, r1 - r0))
     if pageidx:
         _emit_page_index(out, pageidx)
@@ -410,127 +374,17 @@ def _write_parquet_bytes(fobj, columns: list[dict], n_rows: int,
 
 
 def _write_flat_chunk(out: bytearray, col: dict, n_rows: int,
-                      compression: str | None, page_version: int):
-    """One flat column chunk: optional dict page + one data page (V1/V2),
-    ColumnMetaData with Statistics. Returns (ColumnChunk writer, size)."""
-    name, ptype, codec = col["name"], col["ptype"], col.get("codec")
-    vals, validity = col["values"], col.get("validity")
-    chunk_start = len(out)
-    dict_off = None
-    encodings = [ENC_RLE]
-
-    if ptype in ("string", "binary") and codec == "dlba":
-        enc, body = ENC_DLBA, _parquet_dlba(vals)
-        dict_info = None
-    elif ptype in ("string", "binary") and codec == "dba":
-        enc, body = ENC_DBA, _parquet_dba(vals)
-        dict_info = None
-    else:
-        enc, body, dict_info = _encode_values(ptype, codec, vals)
-
-    if dict_info is not None:
-        dict_bytes, n_uniques = dict_info
-        dict_off = len(out)
-        comp_dict = _compress_body(dict_bytes, compression)
-        out += _page_header(
-            PAGE_DICT, n_uniques, ENC_PLAIN, len(dict_bytes),
-            len(comp_dict), body=comp_dict,
-        )
-        out += comp_dict
-        encodings.append(ENC_PLAIN)
-
-    data_off = len(out)
-    if page_version == 2:
-        # V2: def levels raw RLE (no length prefix), uncompressed,
-        # before the (optionally compressed) values
-        if validity is not None:
-            v = np.asarray(validity)
-            dlv = rle.encode_hybrid(v.astype(np.uint64), 1)
-            n_nulls = int((~v).sum())
-        else:
-            dlv = b""
-            n_nulls = 0
-        comp_vals = _compress_body(body, compression)
-        out += _page_header_v2(
-            n_rows, n_nulls, enc, len(dlv), len(body), len(comp_vals),
-            compression not in (None, "none"), body=dlv + comp_vals,
-        )
-        out += dlv
-        out += comp_vals
-    else:
-        # V1 data page: [def levels (u32-prefixed RLE)] + values,
-        # compressed together
-        if validity is not None:
-            levels = rle.encode_hybrid_length_prefixed(
-                np.asarray(validity).astype(np.uint64), 1
-            )
-        else:
-            levels = b""
-        page_body = levels + body
-        comp_body = _compress_body(page_body, compression)
-        out += _page_header(PAGE_DATA, n_rows, enc, len(page_body),
-                            len(comp_body), body=comp_body)
-        out += comp_body
-    encodings.append(enc)
-
-    raw_total = (
-        (len(dlv) + len(body)) if page_version == 2 else len(page_body)
-    ) + (len(dict_bytes) if dict_info else 0)
-    pages_size = len(out) - chunk_start  # pages only: blooms live after
-    data_pt = PAGE_DATA_V2 if page_version == 2 else PAGE_DATA
-    enc_stats = ([(PAGE_DICT, ENC_PLAIN, 1)] if dict_info else []) \
-        + [(data_pt, enc, 1)]
-    return _flat_cc(out, chunk_start, col, n_rows, compression, encodings,
-                    raw_total, pages_size, data_off, dict_off, enc_stats)
-
-
-def _flat_cc(out: bytearray, chunk_start: int, col: dict, n_rows: int,
-             compression: str | None, encodings: list[int], raw_total: int,
-             pages_size: int, data_off: int, dict_off: int | None,
-             enc_stats: list[tuple[int, int, int]] | None = None):
-    """ColumnChunk + ColumnMetaData for an already-written flat chunk
-    (optionally appending its bloom filter first). ``enc_stats`` is the
-    PageEncodingStats list [(page_type, encoding, count)] for field 13 —
-    what proves to a DictionaryFilter-style reader that every data page
-    is dict-encoded. Returns (cc writer, chunk byte size)."""
-    name, ptype = col["name"], col["ptype"]
-    vals, validity = col["values"], col.get("validity")
-    bloom_off, bloom_len = _append_bloom(out, col, ptype, vals)
-    meta = (
-        StructWriter()
-        .i32(1, _physical(ptype)[0])
-        .list_i32(2, sorted(set(encodings)))
-        .list_string(3, [name])
-        .i32(4, CODEC_ENUM[compression])
-        .i64(5, n_rows)
-        .i64(6, raw_total)
-        .i64(7, pages_size)
-        .i64(9, data_off)
-    )
-    if dict_off is not None:
-        meta.i64(11, dict_off)
-    meta.struct(12, _chunk_statistics(ptype, vals, validity, n_rows))
-    if enc_stats:
-        meta.list_struct(13, [
-            StructWriter().i32(1, pt).i32(2, enc).i32(3, cnt)
-            for pt, enc, cnt in enc_stats
-        ])
-    if bloom_off is not None:
-        meta.i64(14, bloom_off).i32(15, bloom_len)
-    cc = StructWriter().i64(2, chunk_start).struct(3, meta)
-    return cc, len(out) - chunk_start
-
-
-def _write_flat_chunk_paged(out: bytearray, col: dict, n_rows: int,
-                            compression: str | None, page_version: int,
-                            page_rows: int, index_out: list):
-    """Flat chunk as MULTIPLE data pages of ``page_rows`` rows each, with
-    per-page ColumnIndex/OffsetIndex entries collected into ``index_out``
-    — the ColumnIndexBuilder/OffsetIndexBuilder analog (parquet-column
-    .../columnindex/ColumnIndexBuilder.java add(), OffsetIndexBuilder).
-    A dict chunk factorizes ONCE (one dict page shared by every data page,
-    parquet-mr semantics); every other codec encodes each page
-    independently — pages are the format's self-contained re-sync unit."""
+                      compression: str | None, page_version: int,
+                      page_rows: int, index_out: list | None):
+    """One flat column chunk: an optional dictionary page, data pages
+    (V1/V2) of ``page_rows`` rows each, then ColumnMetaData with
+    Statistics. A dict chunk factorizes ONCE (one dict page shared by every
+    data page, parquet-mr semantics); every other codec encodes each page
+    independently — pages are the format's self-contained re-sync unit.
+    With ``index_out``, per-page ColumnIndex/OffsetIndex entries are
+    collected there — the ColumnIndexBuilder/OffsetIndexBuilder analog
+    (parquet-column .../columnindex/ColumnIndexBuilder.java add(),
+    OffsetIndexBuilder). Returns (ColumnChunk writer, chunk byte size)."""
     name, ptype, codec = col["name"], col["ptype"], col.get("codec")
     vals, validity = col["values"], col.get("validity")
     chunk_start = len(out)
@@ -538,7 +392,7 @@ def _write_flat_chunk_paged(out: bytearray, col: dict, n_rows: int,
     dict_off = None
     raw_total = 0
     shared = None  # (codes over chunk non-null values, max dict id)
-    if codec == "dict":
+    if codec == "dict" and ptype != "bool" and _physical(ptype)[0] != FLBA:
         if isinstance(vals, RaggedBytes):
             codes, uniques = dictionary.factorize_bytes(vals)
             dict_bytes = plain.encode_plain_bytes(uniques)
@@ -556,9 +410,10 @@ def _write_flat_chunk_paged(out: bytearray, col: dict, n_rows: int,
     data_off = len(out)
     locs, null_pages, mins, maxs, null_counts = [], [], [], [], []
     stats_ok = True
-    enc = ENC_PLAIN
     vstart = 0  # non-null value cursor (dict codes alignment)
-    for r0 in range(0, n_rows, page_rows):
+    # an empty chunk still gets one (empty) data page
+    page_starts = range(0, n_rows or 1, page_rows or 1)
+    for r0 in page_starts:
         r1 = min(r0 + page_rows, n_rows)
         page = _slice_flat_col(col, r0, r1, n_rows)
         pv, pval = page["values"], page.get("validity")
@@ -567,15 +422,13 @@ def _write_flat_chunk_paged(out: bytearray, col: dict, n_rows: int,
             body = dictionary.encode_dict_data_page(
                 shared[0][vstart:vstart + nv], shared[1])
             enc = ENC_PLAIN_DICT
-        elif codec == "dlba":
-            enc, body = ENC_DLBA, _parquet_dlba(pv)
-        elif codec == "dba":
-            enc, body = ENC_DBA, _parquet_dba(pv)
         else:
-            enc, body, _di = _encode_values(ptype, codec, pv)
+            enc, body = _encode_values(ptype, codec, pv)
         vstart += nv
         page_off = len(out)
         if page_version == 2:
+            # V2: def levels raw RLE (no length prefix), uncompressed,
+            # before the (optionally compressed) values
             if pval is not None:
                 v = np.asarray(pval)
                 dlv = rle.encode_hybrid(v.astype(np.uint64), 1)
@@ -590,6 +443,8 @@ def _write_flat_chunk_paged(out: bytearray, col: dict, n_rows: int,
             out += comp_vals
             raw_total += len(dlv) + len(body)
         else:
+            # V1 data page: [def levels (u32-prefixed RLE)] + values,
+            # compressed together
             levels = (rle.encode_hybrid_length_prefixed(
                 np.asarray(pval).astype(np.uint64), 1)
                 if pval is not None else b"")
@@ -600,6 +455,8 @@ def _write_flat_chunk_paged(out: bytearray, col: dict, n_rows: int,
                                 body=comp_body)
             out += comp_body
             raw_total += len(page_body)
+        if index_out is None:
+            continue  # no page index: skip the per-page min/max
         # PageLocation: offset, size incl. header, first_row_index (rg-rel.)
         locs.append((page_off, len(out) - page_off, r0))
         null_counts.append((r1 - r0) - nv)
@@ -610,19 +467,41 @@ def _write_flat_chunk_paged(out: bytearray, col: dict, n_rows: int,
         mins.append(mm[0] if mm else b"")
         maxs.append(mm[1] if mm else b"")
     encodings.append(enc)
-    pages_size = len(out) - chunk_start
+    pages_size = len(out) - chunk_start  # pages only: blooms live after
     data_pt = PAGE_DATA_V2 if page_version == 2 else PAGE_DATA
+    # PageEncodingStats (field 13): what proves to a DictionaryFilter-style
+    # reader that every data page is dict-encoded
     enc_stats = ([(PAGE_DICT, ENC_PLAIN, 1)] if dict_off is not None else []) \
-        + [(data_pt, enc, len(locs))]
-    cc, size = _flat_cc(out, chunk_start, col, n_rows, compression,
-                        encodings, raw_total, pages_size, data_off, dict_off,
-                        enc_stats)
-    index_out.append({
-        "cc": cc, "locs": locs, "null_pages": null_pages, "mins": mins,
-        "maxs": maxs, "null_counts": null_counts, "ptype": ptype,
-        "stats_ok": stats_ok and not all(null_pages),
-    })
-    return cc, size
+        + [(data_pt, enc, len(page_starts))]
+    bloom_off, bloom_len = _append_bloom(out, col, ptype, vals)
+    meta = (
+        StructWriter()
+        .i32(1, _physical(ptype)[0])
+        .list_i32(2, sorted(set(encodings)))
+        .list_string(3, [name])
+        .i32(4, CODEC_ENUM[compression])
+        .i64(5, n_rows)
+        .i64(6, raw_total)
+        .i64(7, pages_size)
+        .i64(9, data_off)
+    )
+    if dict_off is not None:
+        meta.i64(11, dict_off)
+    meta.struct(12, _chunk_statistics(ptype, vals, validity, n_rows))
+    meta.list_struct(13, [
+        StructWriter().i32(1, pt).i32(2, e).i32(3, cnt)
+        for pt, e, cnt in enc_stats
+    ])
+    if bloom_off is not None:
+        meta.i64(14, bloom_off).i32(15, bloom_len)
+    cc = StructWriter().i64(2, chunk_start).struct(3, meta)
+    if index_out is not None:
+        index_out.append({
+            "cc": cc, "locs": locs, "null_pages": null_pages, "mins": mins,
+            "maxs": maxs, "null_counts": null_counts, "ptype": ptype,
+            "stats_ok": stats_ok and not all(null_pages),
+        })
+    return cc, len(out) - chunk_start
 
 
 _STAT_DTYPE = {"int32": "<i4", "date32": "<i4", "int64": "<i8",

@@ -15,12 +15,9 @@ import numpy as np
 
 
 def encode_bss(values: np.ndarray) -> bytes:
-    """values: fixed-width numeric array (float32/float64/int32/int64) or an
-    (n, k) uint8 matrix for FLBA."""
-    if values.ndim == 2:
-        mat = np.ascontiguousarray(values, dtype=np.uint8)
-    else:
-        mat = np.ascontiguousarray(values).view(np.uint8).reshape(len(values), values.dtype.itemsize)
+    """values: fixed-width numeric array (float32/float64/int32/int64);
+    FLBA columns use fixedlen.encode_bss_fixed."""
+    mat = np.ascontiguousarray(values).view(np.uint8).reshape(len(values), values.dtype.itemsize)
     return mat.T.tobytes()
 
 
@@ -31,7 +28,3 @@ def decode_bss(buf, dtype, count: int) -> np.ndarray:
     out = np.ascontiguousarray(mat.T).reshape(-1).view(dt)
     return out
 
-
-def decode_bss_fixed(buf, k: int, count: int) -> np.ndarray:
-    mat = np.frombuffer(buf, dtype=np.uint8, count=k * count).reshape(k, count)
-    return np.ascontiguousarray(mat.T)

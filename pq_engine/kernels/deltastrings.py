@@ -1,17 +1,24 @@
-"""DELTA_LENGTH_BYTE_ARRAY and DELTA_BYTE_ARRAY (incremental/prefix encoding).
+"""DELTA_LENGTH_BYTE_ARRAY and DELTA_BYTE_ARRAY (incremental/prefix encoding)
+— the one encoder and one decoder of each, shared by the engine's pages and
+the parquet interop writer/reader.
 
-DELTA_LENGTH_BYTE_ARRAY (/root/reference/parquet-column/.../deltalengthbytearray/
-DeltaLengthByteArrayValuesWriter.java:43-70): DELTA_BINARY_PACKED of the int32
-lengths, then the concatenated raw bytes. Arrow's string layout *is already*
-offsets+data, so encode/decode is offsets arithmetic — no per-value work.
+DELTA_LENGTH_BYTE_ARRAY (parquet-column DeltaLengthByteArrayValuesWriter.java:
+43-70): DELTA_BINARY_PACKED of the int32 lengths, then the concatenated raw
+bytes. Arrow's string layout *is already* offsets+data, so encode/decode is
+offsets arithmetic — no per-value work.
 
-DELTA_BYTE_ARRAY (/root/reference/parquet-column/.../deltastrings/
-DeltaByteArrayWriter.java:38-104): per value, the shared-prefix length with the
-*previous* value (DELTA_BINARY_PACKED) followed by the suffix
-(DELTA_LENGTH_BYTE_ARRAY). The reference finds prefixes with SIMD
-``Arrays.mismatch`` (:96); we compute all prefixes at once by materializing a
-capped (n, CAP) byte matrix and comparing row i with row i-1 — prefixes longer
-than CAP are truncated (costs compression, never correctness).
+DELTA_BYTE_ARRAY (parquet-column DeltaByteArrayWriter.java:38-104): per
+value, the shared-prefix length with the *previous* value
+(DELTA_BINARY_PACKED) followed by the suffixes (DELTA_LENGTH_BYTE_ARRAY).
+The reference finds prefixes with SIMD ``Arrays.mismatch`` (:96); we compute
+all prefixes at once by comparing row i with row i-1 over a capped prefix
+window — prefixes longer than CAP are truncated (costs compression, never
+correctness; foreign writers' uncapped prefixes decode fine).
+
+Two layouts of the same pieces (DELTA_BINARY_PACKED heads + raw data):
+``encode_dlba``/``encode_dba`` write the parquet-spec page bodies; the
+engine's page blobs (``encode_delta_length``/``encode_delta_byte_array``)
+put a u32 LE byte length in front of each head.
 """
 
 from __future__ import annotations
@@ -24,20 +31,49 @@ from .ragged import RaggedBytes, padded_words
 PREFIX_CAP = 256  # longest shared prefix we exploit; avoids huge (n, maxlen) matrices
 
 
+def _dlba_pieces(col: RaggedBytes) -> tuple:
+    """(DELTA head of the lengths, raw data). Layouts join the pieces once:
+    join reads the numpy buffer directly — one copy of the data, not two."""
+    return encode_delta(col.lengths.astype(np.int32)), col.data.data
+
+
+def _framed(pieces: tuple) -> bytes:
+    """Engine blob layout: each DELTA head behind its u32 LE byte length."""
+    *heads, data = pieces
+    parts = []
+    for h in heads:
+        parts += (len(h).to_bytes(4, "little"), h)
+    return b"".join([*parts, data])
+
+
+def _ragged(lengths: np.ndarray, buf, data_off: int, count: int) -> RaggedBytes:
+    if count and lengths[:count].min() < 0:
+        raise ValueError("DELTA_LENGTH_BYTE_ARRAY: negative value length")
+    offsets = np.zeros(count + 1, dtype=np.int64)
+    np.cumsum(lengths[:count], out=offsets[1:])
+    data = np.frombuffer(buf, dtype=np.uint8, count=int(offsets[-1]), offset=data_off)
+    return RaggedBytes(offsets, data)
+
+
+def encode_dlba(col: RaggedBytes) -> bytes:
+    """parquet DELTA_LENGTH_BYTE_ARRAY page body (self-describing: no
+    length prefix in front of the lengths stream)."""
+    return b"".join(_dlba_pieces(col))
+
+
+def decode_dlba(buf, count: int) -> RaggedBytes:
+    lengths, used = decode_delta(buf, np.int64, return_consumed=True)
+    return _ragged(lengths, buf, used, count)
+
+
 def encode_delta_length(col: RaggedBytes) -> bytes:
-    lengths = col.lengths.astype(np.int32)
-    head = encode_delta(lengths)
-    # join reads the numpy buffer directly: one copy of the data, not two
-    return b"".join((len(head).to_bytes(4, "little"), head, col.data.data))
+    return _framed(_dlba_pieces(col))
 
 
 def decode_delta_length(buf, count: int) -> RaggedBytes:
     hlen = int.from_bytes(bytes(buf[:4]), "little")
     lengths = decode_delta(memoryview(buf)[4 : 4 + hlen], np.int64)
-    offsets = np.zeros(count + 1, dtype=np.int64)
-    np.cumsum(lengths[:count], out=offsets[1:])
-    data = np.frombuffer(buf, dtype=np.uint8, count=int(offsets[-1]), offset=4 + hlen)
-    return RaggedBytes(offsets, data)
+    return _ragged(lengths, buf, 4 + hlen, count)
 
 
 _POWERS64 = np.uint64(1) << np.arange(64, dtype=np.uint64)
@@ -71,10 +107,10 @@ def shared_prefix_lengths(col: RaggedBytes, cap: int = PREFIX_CAP) -> np.ndarray
     return out
 
 
-def encode_delta_byte_array(col: RaggedBytes, cap: int = PREFIX_CAP) -> bytes:
+def _dba_pieces(col: RaggedBytes, cap: int) -> tuple:
+    """(DELTA head of the prefix lengths, *DLBA pieces of the suffixes)."""
     prefixes = shared_prefix_lengths(col, cap)
-    lens = col.lengths
-    suf_lens = lens - prefixes
+    suf_lens = col.lengths - prefixes
     # suffix bytes: for value i, bytes [offsets[i]+prefix[i], offsets[i+1])
     suf_off = np.zeros(len(col) + 1, dtype=np.int64)
     np.cumsum(suf_lens, out=suf_off[1:])
@@ -83,12 +119,31 @@ def encode_delta_byte_array(col: RaggedBytes, cap: int = PREFIX_CAP) -> bytes:
         total, dtype=np.int64
     )
     suffixes = RaggedBytes(suf_off, col.data[gather])
-    head = encode_delta(prefixes.astype(np.int32))
-    body = encode_delta_length(suffixes)
-    return len(head).to_bytes(4, "little") + head + body
+    return (encode_delta(prefixes.astype(np.int32)), *_dlba_pieces(suffixes))
+
+
+def encode_dba(col: RaggedBytes) -> bytes:
+    """parquet DELTA_BYTE_ARRAY page body: prefix lengths, then a
+    DELTA_LENGTH_BYTE_ARRAY body of the suffixes."""
+    return b"".join(_dba_pieces(col, PREFIX_CAP))
+
+
+def decode_dba(buf, count: int) -> RaggedBytes:
+    prefixes, used = decode_delta(buf, np.int64, return_consumed=True)
+    return _join_prefixes(prefixes[:count], decode_dlba(memoryview(buf)[used:], count))
+
+
+def encode_delta_byte_array(col: RaggedBytes, cap: int = PREFIX_CAP) -> bytes:
+    return _framed(_dba_pieces(col, cap))
 
 
 def decode_delta_byte_array(buf, count: int) -> RaggedBytes:
+    hlen = int.from_bytes(bytes(buf[:4]), "little")
+    prefixes = decode_delta(memoryview(buf)[4 : 4 + hlen], np.int64)[:count]
+    return _join_prefixes(prefixes, decode_delta_length(memoryview(buf)[4 + hlen :], count))
+
+
+def _join_prefixes(prefixes: np.ndarray, suffixes: RaggedBytes) -> RaggedBytes:
     """Stateful reconstruction (needs previous value,
     RequiresPreviousReader.java:23). The prefix-copy recursion is sequential by
     nature; we resolve it vectorized by chasing prefix *provenance*: byte j of
@@ -96,11 +151,17 @@ def decode_delta_byte_array(buf, count: int) -> RaggedBytes:
     which itself resolves to the nearest earlier value whose suffix covers j.
     Implemented as a per-column-position scan over the (n, maxlen) index grid.
     """
-    hlen = int.from_bytes(bytes(buf[:4]), "little")
-    prefixes = decode_delta(memoryview(buf)[4 : 4 + hlen], np.int64)[:count]
-    suffixes = decode_delta_length(memoryview(buf)[4 + hlen :], count)
+    count = len(suffixes)
     suf_lens = suffixes.lengths
     lens = prefixes + suf_lens
+    # a value can only borrow bytes its predecessor has (prefix[0] borrows
+    # from nothing) — checked once here, so the provenance chains below
+    # never read past a value or before the first one
+    prev_lens = np.zeros(count, dtype=np.int64)
+    prev_lens[1:] = lens[:-1]
+    if np.any((prefixes < 0) | (prefixes > prev_lens)):
+        raise ValueError(
+            "DELTA_BYTE_ARRAY: prefix longer than the previous value (or negative)")
     offsets = np.zeros(count + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
     out = np.zeros(int(offsets[-1]), dtype=np.uint8)
@@ -113,15 +174,13 @@ def decode_delta_byte_array(buf, count: int) -> RaggedBytes:
         out[dst] = suffixes.data
     # resolve prefix bytes by provenance: byte j of value i (j < prefix[i])
     # equals byte j of the nearest earlier value a with prefix[a] <= j — and
-    # for THAT value byte j is a suffix byte, already placed above. The
-    # encoder guarantees prefix[i] <= len(value i-1), so j < len(a) holds
+    # for THAT value byte j is a suffix byte, already placed above. The check
+    # above guarantees prefix[i] <= len(value i-1), so j < len(a) holds
     # along the chain. One maximum.accumulate per byte position j.
     maxp = int(prefixes.max()) if count else 0
     row_ids = np.arange(count, dtype=np.int64)
     for j in range(maxp):
         need = prefixes > j
-        if not need.any():
-            continue
         anc = np.maximum.accumulate(np.where(need, np.int64(-1), row_ids))
         rows = np.flatnonzero(need)
         out[offsets[rows] + j] = out[offsets[anc[rows]] + j]

@@ -6,7 +6,7 @@ Layouts (public parquet-format; reference writer:
 * fixed-width numerics: little-endian raw values back-to-back;
 * BINARY/STRING: u32 LE length prefix + bytes per value (writeBytes at :49);
 * BOOLEAN: 1-bit-packed LSB-first (BooleanPlainValuesWriter.java:16);
-* FIXED_LEN_BYTE_ARRAY: raw bytes, no prefix.
+* FIXED_LEN_BYTE_ARRAY: raw bytes, no prefix (kernels in fixedlen.py).
 
 All pure NumPy: ``astype('<dtype').tobytes()`` / ``np.frombuffer``.
 """
@@ -98,11 +98,3 @@ def encode_plain_bool(values: np.ndarray) -> bytes:
 def decode_plain_bool(buf, count: int) -> np.ndarray:
     return np.unpackbits(np.frombuffer(buf, dtype=np.uint8), bitorder="little")[:count].astype(bool)
 
-
-def encode_plain_fixed(col: np.ndarray) -> bytes:
-    """FLBA: (n, k) uint8 matrix → raw bytes."""
-    return np.ascontiguousarray(col, dtype=np.uint8).tobytes()
-
-
-def decode_plain_fixed(buf, k: int, count: int) -> np.ndarray:
-    return np.frombuffer(buf, dtype=np.uint8, count=k * count).reshape(count, k)

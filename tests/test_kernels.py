@@ -6,7 +6,7 @@ ByteStreamSplitValues*Test, TestBitPackingColumn — /root/reference/parquet-col
 import numpy as np
 import pytest
 
-from pq_engine.kernels import bitpack, rle, plain, dictionary, delta, bytestream, deltastrings
+from pq_engine.kernels import bitpack, rle, plain, dictionary, delta, bytestream, deltastrings, fixedlen
 from pq_engine.kernels.ragged import RaggedBytes
 from pq_engine.kernels.varint import (
     encode_uvarint,
@@ -191,7 +191,7 @@ def test_plain_bool():
 
 def test_plain_fixed():
     mat = RNG.integers(0, 256, size=(40, 16)).astype(np.uint8)
-    out = plain.decode_plain_fixed(plain.encode_plain_fixed(mat), 16, 40)
+    out = fixedlen.decode_plain_fixed(fixedlen.encode_plain_fixed(mat), 16, 40)
     np.testing.assert_array_equal(out, mat)
 
 
@@ -360,7 +360,7 @@ def test_bss_golden_layout():
 
 def test_bss_fixed():
     mat = RNG.integers(0, 256, size=(10, 4)).astype(np.uint8)
-    out = bytestream.decode_bss_fixed(bytestream.encode_bss(mat), 4, 10)
+    out = fixedlen.decode_bss_fixed(fixedlen.encode_bss_fixed(mat), 4, 10)
     np.testing.assert_array_equal(out, mat)
 
 
@@ -416,6 +416,38 @@ def test_delta_byte_array_prefix_cap():
     _rt_dba([long + b"a", long + b"b", long + b"c"])
 
 
+@pytest.mark.parametrize("prefixes", [[0, 5], [3, 0]])
+def test_delta_byte_array_rejects_impossible_prefix(prefixes):
+    # the value borrows more bytes than its predecessor has (prefix[0] has
+    # no predecessor) — both layouts share the check
+    pre = delta.encode_delta(np.array(prefixes, np.int32))
+    suf = delta.encode_delta(np.array([2, 1], np.int32))
+    spec = pre + suf + b"abc"
+    framed = b"".join((len(pre).to_bytes(4, "little"), pre,
+                       len(suf).to_bytes(4, "little"), suf, b"abc"))
+    with pytest.raises(ValueError, match="prefix longer"):
+        deltastrings.decode_dba(spec, 2)
+    with pytest.raises(ValueError, match="prefix longer"):
+        deltastrings.decode_delta_byte_array(framed, 2)
+
+
+def test_delta_length_rejects_negative_length():
+    body = delta.encode_delta(np.array([5, -2], np.int32)) + b"abcde"
+    with pytest.raises(ValueError, match="negative value length"):
+        deltastrings.decode_dlba(body, 2)
+
+
+def test_delta_string_layouts_share_pieces():
+    col = RaggedBytes.from_pylist([b"parquet-mr", b"parquet", b"", b"parquet-x"])
+    assert deltastrings.decode_dlba(deltastrings.encode_dlba(col), len(col)) == col
+    assert deltastrings.decode_dba(deltastrings.encode_dba(col), len(col)) == col
+    # engine blob = spec body with a u32 length in front of each DELTA head
+    lens = delta.encode_delta(col.lengths.astype(np.int32))
+    assert deltastrings.encode_dlba(col) == lens + col.data.tobytes()
+    assert deltastrings.encode_delta_length(col) == (
+        len(lens).to_bytes(4, "little") + deltastrings.encode_dlba(col))
+
+
 def test_shared_prefix_lengths():
     col = RaggedBytes.from_pylist([b"abc", b"abd", b"ab", b"xyz", b"xyz"])
     np.testing.assert_array_equal(
@@ -440,18 +472,3 @@ def test_ragged_arrow_roundtrip():
     assert col.to_pylist() == [b"foo", b"", b"barbaz"]
     back = col.to_arrow()
     assert back.to_pylist() == ["foo", "", "barbaz"]
-
-
-def test_md5_ragged_matches_hashlib():
-    import hashlib
-
-    import numpy as np
-
-    from pq_engine.kernels.md5 import md5_ragged
-    from pq_engine.kernels.ragged import RaggedBytes
-
-    rng = np.random.default_rng(0)
-    vals = [bytes(rng.integers(0, 256, int(l))) for l in rng.integers(0, 300, 500)]
-    vals += [b"", b"a" * 55, b"a" * 56, b"a" * 63, b"a" * 64, b"a" * 65, b"x" * 1000]
-    got = md5_ragged(RaggedBytes.from_pylist(vals)).to_pylist()
-    assert got == [hashlib.md5(v).hexdigest().encode() for v in vals]

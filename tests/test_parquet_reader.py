@@ -113,6 +113,58 @@ def test_our_interop_writer_files_round_trip(tmp_path):
     assert df["f"].tolist() == pytest.approx(np.linspace(0, 1, 100).tolist())
 
 
+@pytest.mark.parametrize("page_version", ["1.0", "2.0"])
+def test_pyarrow_delta_byte_array_file(page_version, tmp_path):
+    """A foreign writer's DELTA_BYTE_ARRAY pages: nulls, empty strings and
+    shared prefixes far longer than our encoder's PREFIX_CAP (256)."""
+    from pq_engine.interop.parquet_reader import to_arrow
+    from pq_engine.kernels.deltastrings import PREFIX_CAP
+
+    stem = "s" * (PREFIX_CAP + 200)
+    vals = []
+    for i in range(3000):
+        if i % 11 == 0:
+            vals.append(None)
+        elif i % 7 == 0:
+            vals.append("")
+        elif i // 100 % 2 == 0:  # runs sharing a PREFIX_CAP+ prefix
+            vals.append(stem + str(i))
+        else:
+            vals.append("https://example.com/%d/page" % (i // 9))
+    tbl = pa.table({"s": pa.array(vals, pa.string())})
+    p = str(tmp_path / "dba.parquet")
+    pq.write_table(tbl, p, use_dictionary=False, compression="snappy",
+                   column_encoding={"s": "DELTA_BYTE_ARRAY"},
+                   data_page_version=page_version, data_page_size=4096)
+    md = pq.ParquetFile(p).metadata.row_group(0).column(0)
+    assert "DELTA_BYTE_ARRAY" in md.encodings
+    assert to_arrow(p).column("s").to_pylist() == vals
+
+
+def test_malformed_delta_byte_array_page_rejected(tmp_path):
+    """A prefix longer than the previous value cannot be honoured; the page
+    is rejected instead of silently truncated."""
+    from pq_engine.interop.format import ENC_DBA, PAGE_DATA
+    from pq_engine.interop.parquet_writer import _page_header, write_parquet
+    from pq_engine.interop.thrift_compact import read_struct
+    from pq_engine.kernels import delta
+
+    p = tmp_path / "bad.parquet"
+    write_parquet(str(p), [{"name": "s", "ptype": "string", "codec": "dba",
+                            "values": RaggedBytes.from_pylist([b"ab", b"abc"])}], 2)
+    buf = p.read_bytes()
+    off = read_footer(buf)["row_groups"][0]["chunks"][0]["data_off"]
+    hdr, body_pos = read_struct(buf, off)
+    # same page with prefixes [0, 5]: value 1 borrows 5 bytes from "ab"
+    bad = (delta.encode_delta(np.array([0, 5], np.int32))
+           + delta.encode_delta(np.array([2, 1], np.int32)) + b"abc")
+    assert len(bad) == hdr[3]
+    page = _page_header(PAGE_DATA, 2, ENC_DBA, len(bad), len(bad), body=bad) + bad
+    p.write_bytes(buf[:off] + page + buf[body_pos + hdr[3]:])
+    with pytest.raises(ValueError, match="prefix longer than the previous"):
+        read_parquet(str(p))
+
+
 def test_driver_testdata_matches_duckdb():
     import duckdb
 

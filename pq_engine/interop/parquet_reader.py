@@ -1283,6 +1283,8 @@ def _decode_chunk_rows(buf, chunk, col, nrows, ranges, report, crypto=None):
 
 def _select_rows(values, validity, keep):
     """Row-subset a kernel-form column by boolean ``keep`` over its rows."""
+    if keep.all():
+        return values, (None if validity is None or validity.all() else validity)
     if validity is None:
         if isinstance(values, RaggedBytes):
             return values.take(np.flatnonzero(keep)), None

@@ -208,17 +208,16 @@ def _minmax_bytes(ptype: str, vals):
     interpretation (decimal/int96, bool — declared scope) and for all-NaN
     float slices (spec: NaN is ignored for stats)."""
     if ptype in ("string", "binary"):
-        data = vals.data.tobytes()
-        offs = vals.offsets
-        nvals = len(offs) - 1
-        mn = mx = data[offs[0]:offs[1]]
-        for i in range(1, nvals):
-            s = data[offs[i]:offs[i + 1]]
-            if s < mn:
-                mn = s
-            elif s > mx:
-                mx = s
-        return mn, mx
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        # zero-copy large_binary view; Arrow's binary min/max is memcmp
+        # order with a shorter prefix first, i.e. unsigned lexicographic
+        arr = pa.Array.from_buffers(
+            pa.large_binary(), len(vals),
+            [None, pa.py_buffer(vals.offsets), pa.py_buffer(vals.data)])
+        mm = pc.min_max(arr)
+        return mm["min"].as_py(), mm["max"].as_py()
     if ptype in ("int32", "int64", "float32", "float64", "date32"):
         a = np.asarray(vals)
         if a.dtype.kind == "f":

@@ -301,7 +301,8 @@ def _values_to_arrow(values, validity, ptype: str) -> pa.Array:
     # — instead of the old take + if_else pair, which copied the whole column
     # TWICE (for a blob column that was most of the decode wall):
     #   - binary/string: null slots get zero-length offsets; the data buffer
-    #     is reused untouched (dense values are already in row order)
+    #     is reused untouched (dense values are already in row order), so
+    #     the dense offsets must start at 0
     #   - fixed-width primitives: one scatter of the dense rows into a
     #     zeroed full-length buffer
     n = len(validity)
@@ -312,8 +313,12 @@ def _values_to_arrow(values, validity, ptype: str) -> pa.Array:
     t = dense.type
     nnz = len(dense)
     vbuf = pa.py_buffer(np.packbits(validity, bitorder="little"))
-    if (pt.is_binary(t) or pt.is_string(t)) and dense.offset == 0:
-        bufs = dense.buffers()
+    bufs = dense.buffers()
+    if (
+        (pt.is_binary(t) or pt.is_string(t))
+        and dense.offset == 0
+        and np.frombuffer(bufs[1], dtype=np.int32, count=1)[0] == 0
+    ):
         off32 = np.frombuffer(bufs[1], dtype=np.int32, count=nnz + 1)
         new_lens = np.zeros(n, dtype=np.int32)
         new_lens[validity] = np.diff(off32)
@@ -329,7 +334,7 @@ def _values_to_arrow(values, validity, ptype: str) -> pa.Array:
         and dense.offset == 0
     ):
         item = t.bit_width // 8
-        src = np.frombuffer(dense.buffers()[1], dtype=np.uint8, count=nnz * item)
+        src = np.frombuffer(bufs[1], dtype=np.uint8, count=nnz * item)
         out = np.zeros(n * item, dtype=np.uint8)
         out.reshape(n, item)[validity] = src.reshape(nnz, item)
         return pa.Array.from_buffers(

@@ -183,6 +183,21 @@ def test_plain_bytes_roundtrip():
     assert out == col
 
 
+@pytest.mark.parametrize("body,count", [
+    (b"\x05\x00\x00\x00ab", 1),                 # payload cut short
+    (b"\x01\x00\x00\x00a\x02\x00", 2),          # cut inside a prefix
+    (b"\x00\x00", 1),                             # no whole prefix
+    (b"", 1),
+    (b"\xff\xff\xff\xff", 1),                    # length past the end
+    (b"\x00\x00\x00\x00" * 3, 4),               # one record short
+    (b"\x00\x00\x00\x00", 10**12),              # corrupt count
+], ids=["payload_cut", "prefix_cut", "short_prefix", "empty", "huge_length",
+        "record_short", "huge_count"])
+def test_plain_bytes_malformed_raises_value_error(body, count):
+    with pytest.raises(ValueError):
+        plain.decode_plain_bytes(body, count)
+
+
 def test_plain_bool():
     vals = np.array([True, False, True, True, False] * 7)
     out = plain.decode_plain_bool(plain.encode_plain_bool(vals), len(vals))

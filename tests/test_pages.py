@@ -2,6 +2,8 @@
 decode_column with nulls, multi-page splits, byte caps, the PLAIN safety
 rail, and manifest stats (FIXTURES.md F2/F3 cases)."""
 
+import zlib
+
 import numpy as np
 import pytest
 
@@ -131,6 +133,19 @@ def test_crc_detects_corruption():
     bad = bytearray(blob)
     bad[len(bad) // 2] ^= 0xFF
     with pytest.raises(IOError):
+        pages.decode_column([(meta, bytes(bad))])
+
+
+def test_plain_string_overrun_raises_value_error():
+    """A PLAIN BYTE_ARRAY body whose lengths run past its end (CRC intact)
+    fails as ValueError from the kernel, not IndexError/struct.error."""
+    vals = RaggedBytes.from_pylist([b"hello", b"world!", b"x"])
+    meta, blob = pages.encode_column(vals, "string", codec="plain")[0]
+    bad = bytearray(blob)
+    assert bad[10] == 6  # u32 length of b"world!" after the level byte
+    bad[10] = 60
+    meta = dict(meta, crc32=zlib.crc32(bytes(bad)))
+    with pytest.raises(ValueError):
         pages.decode_column([(meta, bytes(bad))])
 
 

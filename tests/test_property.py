@@ -2,11 +2,14 @@
 SURVEY §5.2: TestStatistics RandomValues with logged seeds). Hypothesis
 shrinks failures to minimal counterexamples."""
 
+import struct
+
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from pq_engine import pages
-from pq_engine.kernels import delta, fsst, rle
+from pq_engine.interop.parquet_writer import _minmax_bytes
+from pq_engine.kernels import delta, fsst, plain, rle
 from pq_engine.kernels.deltastrings import (
     decode_dba,
     decode_delta_byte_array,
@@ -57,6 +60,60 @@ def test_dba_decode_matches_sequential_reference(items):
     body = delta.encode_delta(np.array(prefixes, np.int32)) + encode_dlba(
         RaggedBytes.from_pylist(suffixes))
     assert decode_dba(body, len(vals)).to_pylist() == vals
+
+
+LONG = plain.LONG_VALUE_BYTES
+PLAIN_BYTES_CASES = st.one_of(
+    st.lists(st.binary(max_size=40), max_size=120),  # short, mixed lengths
+    st.integers(0, 50).map(lambda n: [b""] * n),  # all empty (and no values)
+    st.integers(0, 24).flatmap(  # one length: the decoder's fast path
+        lambda k: st.lists(st.binary(min_size=k, max_size=k), max_size=80)),
+    st.lists(  # mean length on either side of the long-value switch
+        st.one_of(st.binary(max_size=8),
+                  st.integers(0, 3 * LONG).map(lambda k: (b"\x80a\xff" * k)[:k])),
+        max_size=10),
+)
+
+
+def _spec_plain(vals):
+    """PLAIN BYTE_ARRAY the spec's way: one value at a time."""
+    return b"".join(struct.pack("<I", len(v)) + v for v in vals)
+
+
+def _sliced(vals, head, tail):
+    """``vals`` as a RaggedBytes window over a larger buffer: offsets[0] > 0
+    when ``head`` is non-empty, bytes past offsets[-1] when ``tail`` is."""
+    full = RaggedBytes.from_pylist(head + vals + tail)
+    return RaggedBytes(full.offsets[len(head):len(head) + len(vals) + 1], full.data)
+
+
+@settings(max_examples=80, deadline=None)
+@given(PLAIN_BYTES_CASES, st.lists(st.binary(max_size=9), max_size=3),
+       st.lists(st.binary(max_size=9), max_size=3))
+def test_plain_bytes_encode_matches_spec(vals, head, tail):
+    assert plain.encode_plain_bytes(RaggedBytes.from_pylist(vals)) == _spec_plain(vals)
+    assert plain.encode_plain_bytes(_sliced(vals, head, tail)) == _spec_plain(vals)
+
+
+@settings(max_examples=80, deadline=None)
+@given(PLAIN_BYTES_CASES, st.binary(max_size=12))
+def test_plain_bytes_decode_roundtrip(vals, trailing):
+    want = RaggedBytes.from_pylist(vals)
+    assert plain.decode_plain_bytes(_spec_plain(vals), len(vals)) == want
+    # a body may carry bytes past its last value
+    assert plain.decode_plain_bytes(_spec_plain(vals) + trailing, len(vals)) == want
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.one_of(st.binary(max_size=6),
+                          st.sampled_from([b"", b"ab", b"abc", b"\x00", b"\xff",
+                                           b"\x7f\x80", b"\xff\x00"])),
+                min_size=1, max_size=60),
+       st.lists(st.binary(max_size=4), max_size=2),
+       st.sampled_from(["string", "binary"]))
+def test_minmax_bytes_is_unsigned_lexicographic(vals, head, ptype):
+    # Python orders bytes unsigned-lexicographically, shorter prefix first
+    assert _minmax_bytes(ptype, _sliced(vals, head, head)) == (min(vals), max(vals))
 
 
 @settings(max_examples=30, deadline=None)

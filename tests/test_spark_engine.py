@@ -6,11 +6,14 @@ semantics) on the Spark execution model."""
 import shutil
 import tempfile
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from pq_engine.datagen import webpages_df
+from pq_engine.kernels.ragged import RaggedBytes
 from pq_engine.spark.engine import (
+    _values_to_arrow,
     decode_table,
     encode_table,
     lineage_from_pages,
@@ -115,3 +118,13 @@ def test_text_pure_function_of_url_preserved(spark, webpages):
     joined = back.alias("a").join(webpages.alias("b"), "url")
     mismatches = joined.filter(F.col("a.text") != F.col("b.text")).count()
     assert mismatches == 0
+
+
+@pytest.mark.parametrize("ptype,want", [("string", ["ab", None, "c"]),
+                                        ("binary", [b"ab", None, b"c"])])
+def test_nullable_ragged_to_arrow_nonzero_offset_base(ptype, want):
+    """Dense offsets that start past 0 (a sliced column) must not reach the
+    fast path that reuses the data buffer under offsets rebuilt from 0."""
+    vals = RaggedBytes(np.array([3, 5, 6]), np.frombuffer(b"xxxabc", np.uint8))
+    got = _values_to_arrow(vals, np.array([True, False, True]), ptype)
+    assert got.to_pylist() == want

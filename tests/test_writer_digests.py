@@ -23,6 +23,10 @@ MATRIX = {
         "e314f40ff9e1d3a01a4aa1a5aaa3d7215f8330807e357d0449c6abcafd3c2ed7",
     ("string", "dba"):
         "af7a257ba3d2e6a4b99e5c8d3081335f833dbb7900d7b5a1e397ece4a80dcfb0",
+    ("binary", "plain"):
+        "eb10c49cbeccbda8db19efbeb120de3c3024642e5769258ffba86a4a90c49221",
+    ("binary", "dict"):
+        "67eff2b8b7483741ecfcbb1273ec2320c3bc57a4c25947936c43f39d175d7bf6",
     ("int64", "plain"):
         "e756e3aae4668ee342b27fc122491401560fc5cfe73297bfa6b5d4637f3f7f1e",
     ("int64", "dict"):
@@ -52,6 +56,19 @@ def _values(ptype: str, n: int, rng):
         return RaggedBytes.from_pylist([
             b"" if p % 17 == 0 else b"https://host%d.example/p/%d" % (h, p)
             for h, p in zip(host, page)
+        ])
+    if ptype == "binary":
+        # bytes >= 0x80 (min/max order is unsigned), prefix pairs (b"ab" <
+        # b"abc") and empty values only in the first page, so later pages
+        # carry non-empty page-index minimums
+        stems = [rng.integers(0, 256, k, dtype=np.uint8).tobytes()
+                 for k in rng.integers(1, 5, 50)]
+        tails = [b"", b"\x00", b"\x7f", b"\x80", b"\xff\xff"]
+        stem = rng.integers(0, len(stems), n)
+        tail = rng.integers(0, len(tails), n)
+        return RaggedBytes.from_pylist([
+            b"" if i < 600 and i % 13 == 0 else stems[s] + tails[t]
+            for i, (s, t) in enumerate(zip(stem, tail))
         ])
     if ptype == "int64":
         return np.cumsum(rng.integers(-50, 1000, n)).astype(np.int64)

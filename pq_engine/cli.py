@@ -56,7 +56,7 @@ import sys
 import numpy as np
 import pyarrow.dataset as ds
 
-from .pages import RAGGED_TYPES, decode_column
+from .pages import BLOOM_PAGE, RAGGED_TYPES, RAW_COPY_PAGES, decode_column
 
 
 def _load(path):
@@ -344,7 +344,7 @@ def cmd_bloom_filter(tbl, args):
     if not args.column:
         sys.exit("--column required")
     sub = tbl.filter(
-        pc.and_(pc.equal(tbl["column"], args.column), pc.equal(tbl["page"], -1))
+        pc.and_(pc.equal(tbl["column"], args.column), pc.equal(tbl["page"], BLOOM_PAGE))
     )
     if sub.num_rows == 0:
         print("no bloom filters for column", args.column)
@@ -490,7 +490,7 @@ def cmd_trans_compression(tbl, args):
     to_label = args.to or "none"
     rows = tbl.to_pylist()
     for r in rows:
-        if r["compression"] == to_label or r["page"] in (-1, -4, -5, -6) or r["codec"] == "rowranges":
+        if r["compression"] == to_label or r["page"] in RAW_COPY_PAGES or r["codec"] == "rowranges":
             continue
         blob = bytes(r["data"])
         from .pages import split_page_blob

@@ -12,9 +12,10 @@ transforms over the from-scratch interop writer/reader:
   (4-byte LE length | 12-byte nonce | ciphertext | 16-byte tag), the
   patched FileMetaData is encrypted with the footer key, and the file ends
   with plaintext FileCryptoMetaData + combined length + "PARE".
-- :func:`decrypt_parquet`: the inverse — PARE bytes back to a plaintext
-  PAR1 file the existing :mod:`parquet_reader` consumes unchanged
-  (including its filtered row-group/page pruning).
+- :func:`decrypt_parquet`: the inverse for both footer modes — PARE or
+  plaintext-footer (PAR1, signed footer) bytes back to a plaintext PAR1
+  file the existing :mod:`parquet_reader` consumes unchanged (including
+  its filtered row-group/page pruning).
 
 Module AAD (``aad_mode="spec"``): a random 8-byte ``aad_file_unique``
 (stored in AesGcmV1) concatenated with the spec suffix — module type byte,
@@ -26,7 +27,7 @@ files this module decrypts).
 
 Column keys: pages of a column listed in ``column_keys`` are encrypted
 with that key and the chunk carries ENCRYPTION_WITH_COLUMN_KEY crypto
-metadata.
+metadata; a ``column_keys`` path that names no column raises.
 
 Also here (r6):
 
@@ -46,10 +47,15 @@ AES-CTR — nonce||be32-counter-from-1 IV, AesCtrEncryptor.java:43-45 —
 while all metadata modules stay GCM). Plaintext-footer mode is GCM-only
 by declared scope.
 
-The footer offset rewrite uses a generic thrift-compact TRANSCODER: it
-re-emits any struct byte-for-byte while a visitor patches integer fields
-addressed by field-id path — no schema knowledge baked in beyond the
-patched paths, so unknown fields written by other writers survive intact.
+All three transforms share one chunk walker (:func:`_relayout`: pages,
+bloom filters and page indexes copied verbatim, encrypted, or decrypted
+through :class:`FileDecryptor`) and one footer offset patcher
+(:func:`_footer_visit`) over the layout the walker returns; every reader
+opens the footer through :func:`open_footer`. The offset patch uses a
+generic thrift-compact TRANSCODER: it re-emits any struct byte-for-byte
+while a visitor patches integer fields addressed by field-id path — no
+schema knowledge baked in beyond the patched paths, so unknown fields
+written by other writers survive intact.
 """
 
 from __future__ import annotations
@@ -311,15 +317,16 @@ def _transcode(buf, pos, visit, path=(), struct_end=None, drop=None):
 # --------------------------------------------------- chunk page walking
 
 def _walk_pages(buf, start: int, total: int):
-    """Yield (header_bytes, header_dict, body_bytes) for each page of a
-    plaintext column chunk spanning [start, start+total)."""
+    """Yield (offset, header_bytes, body_bytes, is_dict) for each page of
+    a plaintext column chunk spanning [start, start+total)."""
     pos, end = start, start + total
     while pos < end:
         header, hend = read_struct(buf, pos)
         comp = header.get(3)
         if comp is None:
             raise ValueError("page header missing compressed_page_size")
-        yield bytes(buf[pos:hend]), header, bytes(buf[hend : hend + comp])
+        yield (pos, bytes(buf[pos:hend]), bytes(buf[hend : hend + comp]),
+               header.get(1) == PAGE_DICT)
         pos = hend + comp
     if pos != end:
         raise ValueError("column chunk page walk overran total_compressed_size")
@@ -340,10 +347,21 @@ def _chunk_span(meta: dict) -> tuple[int, int]:
     return start, meta[7]
 
 
+def _dotted(path_in_schema: list) -> str:
+    return ".".join(p.decode() for p in path_in_schema)
+
+
+def _field_hdr(fid: int, last_fid: int, ctype: int) -> bytes:
+    """Compact-protocol field header for ``fid`` following ``last_fid``."""
+    delta = fid - last_fid
+    if 0 < delta <= 15:
+        return bytes([(delta << 4) | ctype])
+    return bytes([ctype]) + _uvarint(_zigzag(fid, 16))
+
 
 def _patch_offset_index(idx_bytes: bytes, page_map: dict) -> bytes:
     """Rewrite an OffsetIndex's PageLocation offsets/sizes through
-    ``page_map`` (old data-page offset -> (new offset, new size)). The
+    ``page_map`` (old page offset -> (new offset, new size)). The
     OffsetIndex is the one auxiliary structure holding FILE positions, so
     unlike the ColumnIndex it cannot be carried verbatim across the
     module transform — parquet-mr rebuilds it against the encrypted
@@ -379,7 +397,302 @@ def _patch_page_size(hdr_bytes: bytes, new_size: int) -> bytes:
     return out
 
 
+# ------------------------------------------------------ page relayout
+
+class _Sealer:
+    """Writes plaintext pieces of one file as encryption modules: the file
+    AAD, the page-body cipher of the algorithm, and whether page headers
+    carry the body module's length (spec AAD mode)."""
+
+    def __init__(self, file_aad: bytes, ctr: bool, aad_mode: str):
+        self.file_aad = file_aad
+        self.ctr = ctr
+        self.spec = aad_mode == "spec"
+
+    def module(self, key: bytes, data: bytes, module: int, rg: int,
+               col: int, page: int = -1) -> bytes:
+        return _encrypt_module(
+            key, data, _module_aad(self.file_aad, module, rg, col, page))
+
+    def page(self, out: bytearray, key: bytes, rg: int, col: int,
+             hdr: bytes, body: bytes, is_dict: bool, ordinal: int) -> None:
+        """Append one page to ``out`` as header module + body module."""
+        page = -1 if is_dict else ordinal
+        if self.ctr:
+            body_mod = _encrypt_module_ctr(key, body)
+        else:
+            body_mod = self.module(
+                key, body, MOD_DICT_PAGE if is_dict else MOD_DATA_PAGE,
+                rg, col, page)
+        # spec (parquet-mr/arrow): compressed_page_size holds the
+        # ciphertext module length; DuckDB 1.x (empty-AAD peer) expects
+        # the plaintext length and over-reads otherwise
+        if self.spec:
+            hdr = _patch_page_size(hdr, len(body_mod))
+        out += self.module(
+            key, hdr, MOD_DICT_PAGE_HEADER if is_dict else MOD_DATA_PAGE_HEADER,
+            rg, col, page)
+        out += body_mod
+
+
+class _Layout:
+    """Where :func:`_relayout` put each chunk, keyed by (row group,
+    column): ``pages`` maps every old page offset to (new offset, new
+    size); ``chunk`` and ``meta`` map ColumnChunk / ColumnMetaData field
+    ids to their new values (page-index spans 4-7; total_compressed_size
+    7 and bloom span 14/15)."""
+
+    def __init__(self):
+        self.pages: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
+        self.chunk: dict[tuple[int, int], dict[int, int]] = {}
+        self.meta: dict[tuple[int, int], dict[int, int]] = {}
+
+
+def _relayout(buf, out: bytearray, chunks: list,
+              sealer: _Sealer | None = None) -> _Layout:
+    """Copy every chunk's pages then its bloom filter, and after all
+    chunks every page index, from ``buf`` to the end of ``out``.
+
+    ``chunks`` lists ``((rg, col), cc, meta, dec, key)`` in file order. A
+    chunk is read through ``dec`` (the file's :class:`FileDecryptor`) or,
+    with ``dec`` None, as plaintext; it is written encrypted under ``key``
+    by ``sealer`` or, with ``key`` None, as plaintext. Bloom modules are
+    not part of the new total_compressed_size (mirrors the plaintext
+    layout, and the decrypt walk spans exactly the page modules)."""
+    lay = _Layout()
+    for keyc, cc, meta, dec, key in chunks:
+        rg, col = keyc
+        start, total = _chunk_span(meta)
+        if dec is None:
+            pages = _walk_pages(buf, start, total)
+        else:
+            pages = dec.pages(rg, col, start, total, meta.get(11) is not None)
+        pmap = lay.pages[keyc] = {}
+        chunk_start = len(out)
+        ordinal = 0
+        for off, hdr, body, is_dict in pages:
+            new = len(out)
+            if key is None:
+                out += hdr
+                out += body
+            else:
+                sealer.page(out, key, rg, col, hdr, body, is_dict, ordinal)
+            pmap[off] = (new, len(out) - new)
+            ordinal += not is_dict
+        fields = lay.meta[keyc] = {7: len(out) - chunk_start}
+        boff = meta.get(14)
+        if boff is not None:
+            if dec is None:
+                bhdr, hend = read_struct(buf, boff)
+                bhead, bits = buf[boff:hend], buf[hend : hend + bhdr[1]]
+            else:
+                bhead, bits = dec.bloom_modules(rg, col, boff)
+            fields[14] = len(out)
+            if key is None:
+                out += bhead
+                out += bits
+            else:
+                out += sealer.module(key, bhead, MOD_BLOOM_HEADER, rg, col)
+                out += sealer.module(key, bits, MOD_BLOOM_BITSET, rg, col)
+            fields[15] = len(out) - fields[14]
+
+    # page-index region: the ColumnIndex holds no file offsets and is
+    # carried as is; the OffsetIndex is rewritten against the new layout
+    for keyc, cc, meta, dec, key in chunks:
+        rg, col = keyc
+        fields = lay.chunk[keyc] = {}
+        for name, off_f, len_f, module in (
+                ("column_index", 6, 7, MOD_COLUMN_INDEX),
+                ("offset_index", 4, 5, MOD_OFFSET_INDEX)):
+            off, ln = cc.get(off_f), cc.get(len_f)
+            if off is None:
+                continue
+            if ln is None:
+                raise ValueError(
+                    f"malformed footer: {name}_offset without {name}_length")
+            if dec is None:
+                data = bytes(buf[off : off + ln])
+            else:
+                data, _ = dec._mod(rg, col, off, module)
+            if module == MOD_OFFSET_INDEX:
+                data = _patch_offset_index(data, lay.pages[keyc])
+            if key is not None:
+                data = sealer.module(key, data, module, rg, col)
+            fields[off_f], fields[len_f] = len(out), len(data)
+            out += data
+    return lay
+
+
+def _footer_visit(lay: _Layout):
+    """The :func:`_transcode` visitor that points a FileMetaData at the
+    layout ``lay``. Field ids: FileMetaData.row_groups = 4; RowGroup.columns
+    = 1, total_byte_size = 2; ColumnChunk.file_offset = 2, meta_data = 3,
+    page-index spans 4-7; ColumnMetaData.total_compressed_size = 7,
+    data_page_offset = 9, dictionary_page_offset = 11, bloom span 14/15."""
+    rg_bytes: dict[int, int] = {}
+    for (rg_i, _), fields in lay.meta.items():
+        rg_bytes[rg_i] = rg_bytes.get(rg_i, 0) + fields[7]
+
+    def visit(path, v):
+        if len(path) == 3 and path[0] == 4 and path[2] == 2:
+            return rg_bytes.get(path[1], 0)
+        if len(path) < 5 or path[0] != 4 or path[2] != 1:
+            return None
+        keyc, field = (path[1], path[3]), path[4:]
+        pages = lay.pages[keyc]
+        if field == (2,):
+            if v in pages:
+                return pages[v][0]
+            return min(new for new, _ in pages.values())
+        if field in ((3, 9), (3, 11)):
+            if v not in pages:
+                raise ValueError("page offset not on a module boundary")
+            return pages[v][0]
+        if len(field) == 1:
+            return lay.chunk[keyc].get(field[0])
+        if len(field) == 2 and field[0] == 3:
+            return lay.meta[keyc].get(field[1])
+        return None
+
+    return visit
+
+
+def _algorithm_union(ctr: bool, aad_file_unique: bytes,
+                     aad_prefix: bytes = b"",
+                     supply_aad_prefix: bool = False) -> StructWriter:
+    """EncryptionAlgorithm union: AES_GCM_V1 (1) or AES_GCM_CTR_V1 (2),
+    both carrying (aad_prefix, aad_file_unique, supply_aad_prefix)."""
+    algo = StructWriter()
+    if aad_prefix and not supply_aad_prefix:
+        algo.binary(1, aad_prefix)
+    if aad_file_unique:
+        algo.binary(2, aad_file_unique)
+    if supply_aad_prefix:
+        algo.boolean(3, True)
+    return StructWriter().struct(2 if ctr else 1, algo)
+
+
+def _aes_params(union: dict, missing: str) -> dict:
+    """Parse an EncryptionAlgorithm union (see :func:`_algorithm_union`)."""
+    for fid, name in ((1, "AES_GCM_V1"), (2, "AES_GCM_CTR_V1")):
+        if fid in union:
+            gcm = union[fid] if isinstance(union[fid], dict) else {}
+            return {
+                "algorithm": name,
+                "aad_prefix": gcm.get(1, b""),
+                "aad_file_unique": gcm.get(2, b""),
+                "supply_aad_prefix": bool(gcm.get(3)),
+            }
+    raise ValueError(missing)
+
+
 # --------------------------------------------------------- encrypt side
+
+def _encrypt_file(plain: bytes, footer_key: bytes,
+                  column_keys: dict[str, bytes],
+                  column_key_metadata: dict[str, bytes] | None,
+                  aad_mode: str, ctr: bool, file_aad: bytes,
+                  plaintext_footer: bool,
+                  footer_key_metadata: bytes | None = None
+                  ) -> tuple[bytearray, bytes]:
+    """The part both encryption modes share -> (magic + relaid chunks +
+    page indexes, patched FileMetaData bytes). Chunks of ``column_keys``
+    columns are encrypted under their column key; the others under
+    ``footer_key``, or copied verbatim when ``plaintext_footer``."""
+    flen = int.from_bytes(plain[-8:-4], "little")
+    fbytes = plain[len(plain) - 8 - flen : len(plain) - 8]
+    fmeta, _ = read_struct(fbytes)
+    if fmeta.get(8) is not None:
+        raise ValueError("file already carries an encryption_algorithm")
+    default_key = None if plaintext_footer else footer_key
+    chunks = []
+    paths: dict[tuple[int, int], str] = {}
+    for rg_i, rg in enumerate(fmeta.get(4, [])):
+        for col_i, cc in enumerate(rg.get(1, [])):
+            meta = _chunk_meta(cc)
+            path = paths[(rg_i, col_i)] = _dotted(meta[3])
+            chunks.append(((rg_i, col_i), cc, meta, None,
+                           column_keys.get(path, default_key)))
+    missing = set(column_keys) - set(paths.values())
+    if missing:
+        raise ValueError(f"column_keys name absent columns: {sorted(missing)}")
+
+    sealer = _Sealer(file_aad, ctr, aad_mode)
+    out = bytearray(MAGIC if plaintext_footer else EMAGIC)
+    visit = _footer_visit(_relayout(plain, out, chunks, sealer))
+
+    # encrypted_column_metadata: each column-key chunk's full
+    # ColumnMetaData (offsets patched to the encrypted layout) as its own
+    # module under the COLUMN key — parquet-cpp/mr readers require it for
+    # column-key chunks, and it makes the column's stats readable only to
+    # column-key holders
+    md_spans = _md_spans(fbytes) if column_keys else {}
+    emd: dict[tuple[int, int], bytes] = {}
+    for keyc, path in paths.items():
+        if path in column_keys:
+            md, _ = _transcode(
+                fbytes, md_spans[keyc][0],
+                lambda p, v, kc=keyc: visit((4, kc[0], 1, kc[1], 3) + p, v))
+            emd[keyc] = sealer.module(
+                column_keys[path], md, MOD_COLUMN_METADATA, *keyc)
+    # a footer-key chunk is tagged ENCRYPTION_WITH_FOOTER_KEY in spec mode
+    # AND whenever column keys exist — in a file with any tagged chunk,
+    # untagged means PLAINTEXT (the arrow/parquet-mr subset-encryption
+    # contract); empty mode matches DuckDB, which tags nothing
+    tag_footer_key = not plaintext_footer and (
+        aad_mode == "spec" or bool(column_keys))
+
+    def struct_end(path, last_fid):
+        if path == () and plaintext_footer:
+            # FileMetaData.encryption_algorithm(8) marks the file as
+            # plaintext-footer encrypted; footer_signing_key_metadata(9)
+            extra = (_field_hdr(8, last_fid, CT_STRUCT)
+                     + _algorithm_union(ctr, file_aad).finish())
+            if footer_key_metadata:
+                extra += (_field_hdr(9, 8, CT_BINARY)
+                          + _uvarint(len(footer_key_metadata))
+                          + footer_key_metadata)
+            return extra
+        # RowGroup.ordinal (field 7, i16): parquet-mr/arrow readers take
+        # the AAD row-group component for COLUMN-KEY modules from this
+        # field (not from the positional index), so multi-row-group
+        # column-key files are unreadable to them without it
+        if (len(path) == 2 and path[0] == 4 and aad_mode == "spec"
+                and last_fid < 7):
+            return (_field_hdr(7, last_fid, CT_I16)
+                    + _uvarint(_zigzag(path[1], 16)))
+        if not (len(path) == 4 and path[0] == 4 and path[2] == 1) \
+                or last_fid >= 8:
+            return b""
+        keyc = (path[1], path[3])
+        if keyc in emd:
+            # ColumnChunk.crypto_metadata(8) = ENCRYPTION_WITH_COLUMN_KEY
+            # {path_in_schema, key_metadata}, then field 9
+            inner = StructWriter().list_string(1, paths[keyc].split("."))
+            ckm = (column_key_metadata or {}).get(paths[keyc])
+            if ckm:
+                inner.binary(2, ckm)
+            return (_field_hdr(8, last_fid, CT_STRUCT)
+                    + StructWriter().struct(2, inner).finish()
+                    + _field_hdr(9, 8, CT_BINARY)
+                    + _uvarint(len(emd[keyc])) + emd[keyc])
+        if tag_footer_key:
+            return (_field_hdr(8, last_fid, CT_STRUCT)
+                    + StructWriter().struct(1, StructWriter()).finish())
+        return b""
+
+    def drop(p):
+        # plaintext-footer redaction: Statistics (12) / SizeStatistics
+        # (16) of ENCRYPTED columns leave the plaintext footer — the full
+        # ColumnMetaData travels only inside encrypted_column_metadata
+        return (plaintext_footer and len(p) == 6 and p[0] == 4
+                and p[2] == 1 and p[4] == 3 and p[5] in (12, 16)
+                and (p[1], p[3]) in emd)
+
+    patched, _ = _transcode(fbytes, 0, visit, struct_end=struct_end,
+                            drop=drop)
+    return out, patched
+
 
 def encrypt_parquet(plain: bytes, footer_key: bytes,
                     column_keys: dict[str, bytes] | None = None,
@@ -420,226 +733,15 @@ def encrypt_parquet(plain: bytes, footer_key: bytes,
     if supply_aad_prefix and not aad_prefix:
         raise ValueError("supply_aad_prefix without an aad_prefix")
     ctr = algorithm == "AES_GCM_CTR_V1"
-    column_keys = column_keys or {}
     aad_file_unique = os.urandom(8) if aad_mode == "spec" else b""
-    file_aad = (aad_prefix + aad_file_unique) if aad_mode == "spec" else b""
-
-    flen = int.from_bytes(plain[-8:-4], "little")
-    fstart = len(plain) - 8 - flen
-    fmeta, _ = read_struct(plain[fstart : fstart + flen])
-    row_groups = fmeta.get(4, [])
-
-    out = bytearray(EMAGIC)
-    # (rg, col) -> {old offset -> new offset}; chunk order preserved
-    new_offsets: dict[tuple[int, int], dict[int, int]] = {}
-    sizes: dict[tuple[int, int], int] = {}
-    # auxiliary structures carried as their own modules (r6):
-    # blooms -> types 8/9, page index -> types 6/7
-    page_maps: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-    chunk_keys: dict[tuple[int, int], bytes] = {}
-    bloom_new: dict[tuple[int, int], tuple[int, int]] = {}
-    for rg_i, rg in enumerate(row_groups):
-        for col_i, cc in enumerate(rg.get(1, [])):
-            meta = _chunk_meta(cc)
-            path = ".".join(p.decode() for p in meta[3])
-            key = column_keys.get(path, footer_key)
-            chunk_keys[(rg_i, col_i)] = key
-            start, total = _chunk_span(meta)
-            dict_off = meta.get(11)
-            omap: dict[int, int] = {}
-            pmap: dict[int, tuple[int, int]] = {}
-            chunk_start = len(out)
-            page_ord = 0
-            pos = start
-            for hdr_bytes, header, body in _walk_pages(plain, start, total):
-                is_dict = header.get(1) == PAGE_DICT
-                if is_dict:
-                    hmod = _module_aad(file_aad, MOD_DICT_PAGE_HEADER, rg_i, col_i)
-                    bmod = _module_aad(file_aad, MOD_DICT_PAGE, rg_i, col_i)
-                else:
-                    hmod = _module_aad(
-                        file_aad, MOD_DATA_PAGE_HEADER, rg_i, col_i, page_ord)
-                    bmod = _module_aad(
-                        file_aad, MOD_DATA_PAGE, rg_i, col_i, page_ord)
-                    page_ord += 1
-                omap[pos] = len(out)
-                body_mod = (_encrypt_module_ctr(key, body) if ctr
-                            else _encrypt_module(key, body, bmod))
-                # spec (parquet-mr/arrow): compressed_page_size holds the
-                # ciphertext module length; DuckDB 1.x (empty-AAD peer)
-                # expects the plaintext length and over-reads otherwise
-                hdr_out = (_patch_page_size(hdr_bytes, len(body_mod))
-                           if aad_mode == "spec" else hdr_bytes)
-                out += _encrypt_module(key, hdr_out, hmod)
-                out += body_mod
-                if not is_dict:
-                    pmap[pos] = (omap[pos], len(out) - omap[pos])
-                pos += len(hdr_bytes) + len(body)
-            new_offsets[(rg_i, col_i)] = omap
-            page_maps[(rg_i, col_i)] = pmap
-            # pages only: bloom modules below are NOT part of
-            # total_compressed_size (mirrors the plaintext layout, and the
-            # decrypt walk spans exactly the page modules)
-            sizes[(rg_i, col_i)] = len(out) - chunk_start
-            # patched data/dict offsets must exist in the map
-            if dict_off is not None and dict_off not in omap:
-                raise ValueError("dictionary_page_offset not on a page boundary")
-            if meta[9] not in omap and dict_off is None:
-                raise ValueError("data_page_offset not on a page boundary")
-            boff = meta.get(14)
-            if boff is not None:
-                bhdr, hend = read_struct(plain, boff)
-                nbytes = bhdr[1]
-                new_boff = len(out)
-                out += _encrypt_module(
-                    key, plain[boff:hend],
-                    _module_aad(file_aad, MOD_BLOOM_HEADER, rg_i, col_i))
-                out += _encrypt_module(
-                    key, plain[hend:hend + nbytes],
-                    _module_aad(file_aad, MOD_BLOOM_BITSET, rg_i, col_i))
-                bloom_new[(rg_i, col_i)] = (new_boff, len(out) - new_boff)
-
-    # page index region: ColumnIndex carried verbatim, OffsetIndex
-    # rewritten against the encrypted module layout, each encrypted as its
-    # own module with the chunk's key (spec module types 6/7)
-    pageidx_new: dict[tuple[int, int], dict[str, tuple[int, int]]] = {}
-    for rg_i, rg in enumerate(row_groups):
-        for col_i, cc in enumerate(rg.get(1, [])):
-            entry: dict[str, tuple[int, int]] = {}
-            key = chunk_keys[(rg_i, col_i)]
-            ci_off, ci_len = cc.get(6), cc.get(7)
-            if ci_off is not None:
-                new_off = len(out)
-                out += _encrypt_module(
-                    key, plain[ci_off:ci_off + ci_len],
-                    _module_aad(file_aad, MOD_COLUMN_INDEX, rg_i, col_i))
-                entry["ci"] = (new_off, len(out) - new_off)
-            oi_off, oi_len = cc.get(4), cc.get(5)
-            if oi_off is not None:
-                patched_oi = _patch_offset_index(
-                    plain[oi_off:oi_off + oi_len], page_maps[(rg_i, col_i)])
-                new_off = len(out)
-                out += _encrypt_module(
-                    key, patched_oi,
-                    _module_aad(file_aad, MOD_OFFSET_INDEX, rg_i, col_i))
-                entry["oi"] = (new_off, len(out) - new_off)
-            if entry:
-                pageidx_new[(rg_i, col_i)] = entry
-
-    def visit(path, v):
-        # FileMetaData.row_groups = 4; RowGroup.columns = 1,
-        # total_byte_size = 2; ColumnChunk.file_offset = 2, meta_data = 3;
-        # ColumnMetaData.total_compressed_size = 7, data_page_offset = 9,
-        # dictionary_page_offset = 11
-        if len(path) == 3 and path[0] == 4 and path[2] == 2:
-            return sum(sz for (rg_i, _), sz in sizes.items() if rg_i == path[1])
-        if len(path) < 5 or path[0] != 4 or path[2] != 1:
-            return None
-        keyc = (path[1], path[3])
-        if path[4:] == (2,):
-            omap = new_offsets[keyc]
-            return omap.get(v, min(omap.values()))
-        if path[4:] == (3, 7):
-            return sizes[keyc]
-        if path[4:] in ((3, 9), (3, 11)):
-            omap = new_offsets[keyc]
-            if v not in omap:
-                raise ValueError("page offset not on a module boundary")
-            return omap[v]
-        if path[4:] == (4,):
-            return pageidx_new[keyc]["oi"][0]
-        if path[4:] == (5,):
-            return pageidx_new[keyc]["oi"][1]
-        if path[4:] == (6,):
-            return pageidx_new[keyc]["ci"][0]
-        if path[4:] == (7,):
-            return pageidx_new[keyc]["ci"][1]
-        if path[4:] == (3, 14):
-            return bloom_new[keyc][0]
-        if path[4:] == (3, 15):
-            return bloom_new[keyc][1]
-        return None
-
-    # spec mode: ColumnChunk.crypto_metadata (field 8) — union field 1
-    # (ENCRYPTION_WITH_FOOTER_KEY, empty struct) for footer-key chunks,
-    # union field 2 (ENCRYPTION_WITH_COLUMN_KEY{path_in_schema,
-    # key_metadata}) for column-key chunks, spliced delta-correctly before
-    # each chunk's STOP. Column-key chunks ALSO get field 9
-    # encrypted_column_metadata — the full ColumnMetaData (offsets patched
-    # to the encrypted layout) as its own module under the COLUMN key:
-    # parquet-cpp/mr readers require it for column-key chunks, and it is
-    # what makes the column's stats readable only to column-key holders.
-    # empty mode matches DuckDB, which writes no crypto_metadata at all.
-    chunk_paths = {
-        (rg_i, col_i): ".".join(p.decode() for p in _chunk_meta(cc)[3])
-        for rg_i, rg in enumerate(row_groups)
-        for col_i, cc in enumerate(rg.get(1, []))
-    }
-
-    md_spans = _md_spans(plain[fstart : fstart + flen]) if column_keys \
-        else {}
-
-    def _field_hdr(fid, last_fid, ctype):
-        delta = fid - last_fid
-        if 0 < delta <= 15:
-            return bytes([(delta << 4) | ctype])
-        return bytes([ctype]) + _uvarint(_zigzag(fid, 16))
-
-    def struct_end(path, last_fid):
-        # RowGroup.ordinal (field 7, i16): parquet-mr/arrow readers take
-        # the AAD row-group component for COLUMN-KEY modules from this
-        # field (not from the positional index), so multi-row-group
-        # column-key files are unreadable to them without it
-        if (len(path) == 2 and path[0] == 4 and aad_mode == "spec"
-                and last_fid < 7):
-            return (_field_hdr(7, last_fid, CT_I16)
-                    + _uvarint(_zigzag(path[1], 16)))
-        if not (len(path) == 4 and path[0] == 4 and path[2] == 1):
-            return b""
-        if aad_mode != "spec" and not column_keys:
-            return b""
-        keyc = (path[1], path[3])
-        cpath = chunk_paths.get(keyc)
-        if cpath is None or 8 <= last_fid:
-            return b""
-        if cpath in column_keys:
-            inner = StructWriter().list_string(1, cpath.split("."))
-            ckm = (column_key_metadata or {}).get(cpath)
-            if ckm:
-                inner.binary(2, ckm)
-            union = StructWriter().struct(2, inner)
-            s, e = md_spans[keyc]
-            patched_md, _ = _transcode(
-                plain, fstart + s,
-                lambda p, v, kc=keyc: visit((4, kc[0], 1, kc[1], 3) + p, v))
-            emd = _encrypt_module(
-                column_keys[cpath], patched_md,
-                _module_aad(file_aad, MOD_COLUMN_METADATA,
-                            keyc[0], keyc[1]))
-            return (_field_hdr(8, last_fid, CT_STRUCT) + union.finish()
-                    + _field_hdr(9, 8, CT_BINARY)
-                    + _uvarint(len(emd)) + emd)
-        # footer-key chunk: tagged ENCRYPTION_WITH_FOOTER_KEY in spec
-        # mode AND whenever column keys exist — in a file with any
-        # tagged chunk, untagged means PLAINTEXT (the arrow/parquet-mr
-        # subset-encryption contract), so partial tagging would
-        # misread footer-key chunks as plaintext
-        union = StructWriter().struct(1, StructWriter())
-        return _field_hdr(8, last_fid, CT_STRUCT) + union.finish()
-
-    patched, _ = _transcode(plain, fstart, visit, struct_end=struct_end)
-
+    file_aad = aad_prefix + aad_file_unique
+    out, footer = _encrypt_file(
+        plain, footer_key, column_keys or {}, column_key_metadata, aad_mode,
+        ctr, file_aad, plaintext_footer=False)
     footer_mod = _encrypt_module(
-        footer_key, patched, _module_aad(file_aad, MOD_FOOTER))
-    algo = StructWriter()
-    if aad_prefix and not supply_aad_prefix:
-        algo.binary(1, aad_prefix)  # AesGcm(Ctr)V1.aad_prefix
-    if aad_file_unique:
-        algo.binary(2, aad_file_unique)
-    if supply_aad_prefix:
-        algo.boolean(3, True)
-    fcmd = StructWriter().struct(
-        1, StructWriter().struct(2 if ctr else 1, algo))
+        footer_key, footer, _module_aad(file_aad, MOD_FOOTER))
+    fcmd = StructWriter().struct(1, _algorithm_union(
+        ctr, aad_file_unique, aad_prefix, supply_aad_prefix))
     if key_metadata:
         fcmd.binary(2, key_metadata)
     fcmd_bytes = fcmd.finish()
@@ -731,252 +833,17 @@ def encrypt_parquet_plaintext_footer(
             "pass a non-empty column_keys")
     if algorithm not in ("AES_GCM_V1", "AES_GCM_CTR_V1"):
         raise ValueError(f"unsupported encryption algorithm {algorithm!r}")
-    ctr = algorithm == "AES_GCM_CTR_V1"
     _aesgcm(footer_key)  # validate key length up front
     file_aad = os.urandom(8) if aad_mode == "spec" else b""
-
-    flen = int.from_bytes(plain[-8:-4], "little")
-    fstart = len(plain) - 8 - flen
-    fbytes = plain[fstart : fstart + flen]
-    fmeta, _ = read_struct(fbytes)
-    if fmeta.get(8) is not None:
-        raise ValueError("file already carries an encryption_algorithm")
-    row_groups = fmeta.get(4, [])
-    md_spans = _md_spans(fbytes)
-
-    out = bytearray(MAGIC)
-    new_offsets: dict[tuple[int, int], dict[int, int]] = {}
-    sizes: dict[tuple[int, int], int] = {}
-    page_maps: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-    encrypted: set[tuple[int, int]] = set()
-    chunk_keys: dict[tuple[int, int], bytes] = {}
-    bloom_new: dict[tuple[int, int], tuple[int, int]] = {}
-    seen_cols: set[str] = set()
-    for rg_i, rg in enumerate(row_groups):
-        for col_i, cc in enumerate(rg.get(1, [])):
-            meta = _chunk_meta(cc)
-            path = ".".join(p.decode() for p in meta[3])
-            start, total = _chunk_span(meta)
-            dict_off = meta.get(11)
-            omap: dict[int, int] = {}
-            pmap: dict[int, tuple[int, int]] = {}
-            chunk_start = len(out)
-            key = column_keys.get(path)
-            if key is None:
-                # plaintext chunk: pages copied verbatim, offsets shifted
-                shift = chunk_start - start
-                out += plain[start : start + total]
-                pos = start
-                first = True
-                for hdr_b, _hdr, body in _walk_pages(plain, start, total):
-                    omap[pos] = pos + shift
-                    if not (dict_off is not None and first):
-                        pmap[pos] = (pos + shift, len(hdr_b) + len(body))
-                    first = False
-                    pos += len(hdr_b) + len(body)
-                boff = meta.get(14)
-                if boff is not None:
-                    bhdr, hend = read_struct(plain, boff)
-                    span = (hend - boff) + bhdr[1]
-                    bloom_new[(rg_i, col_i)] = (len(out), span)
-                    out += plain[boff : boff + span]
-            else:
-                seen_cols.add(path)
-                encrypted.add((rg_i, col_i))
-                chunk_keys[(rg_i, col_i)] = key
-                page_ord = 0
-                pos = start
-                end = start + total
-                for hdr_bytes, hdr, body in _walk_pages(plain, start, total):
-                    is_dict = hdr.get(1) == PAGE_DICT
-                    if is_dict:
-                        hmod = _module_aad(
-                            file_aad, MOD_DICT_PAGE_HEADER, rg_i, col_i)
-                        bmod = _module_aad(
-                            file_aad, MOD_DICT_PAGE, rg_i, col_i)
-                    else:
-                        hmod = _module_aad(file_aad, MOD_DATA_PAGE_HEADER,
-                                           rg_i, col_i, page_ord)
-                        bmod = _module_aad(file_aad, MOD_DATA_PAGE,
-                                           rg_i, col_i, page_ord)
-                        page_ord += 1
-                    omap[pos] = len(out)
-                    body_mod = (_encrypt_module_ctr(key, body) if ctr
-                                else _encrypt_module(key, body, bmod))
-                    hdr_out = (_patch_page_size(hdr_bytes, len(body_mod))
-                               if aad_mode == "spec" else hdr_bytes)
-                    out += _encrypt_module(key, hdr_out, hmod)
-                    out += body_mod
-                    if not is_dict:
-                        pmap[pos] = (omap[pos], len(out) - omap[pos])
-                    pos += len(hdr_bytes) + len(body)
-                boff = meta.get(14)
-                if boff is not None:
-                    bhdr, hend = read_struct(plain, boff)
-                    new_boff = len(out)
-                    out += _encrypt_module(
-                        key, plain[boff:hend],
-                        _module_aad(file_aad, MOD_BLOOM_HEADER, rg_i, col_i))
-                    out += _encrypt_module(
-                        key, plain[hend : hend + bhdr[1]],
-                        _module_aad(file_aad, MOD_BLOOM_BITSET, rg_i, col_i))
-                    bloom_new[(rg_i, col_i)] = (new_boff, len(out) - new_boff)
-            new_offsets[(rg_i, col_i)] = omap
-            page_maps[(rg_i, col_i)] = pmap
-            sizes[(rg_i, col_i)] = (
-                (len(out) - chunk_start)
-                if (rg_i, col_i) in encrypted else total)
-            if (rg_i, col_i) in encrypted:
-                # bloom modules sit outside total_compressed_size
-                sizes[(rg_i, col_i)] -= (
-                    bloom_new.get((rg_i, col_i), (0, 0))[1])
-    missing = set(column_keys) - seen_cols
-    if missing:
-        raise ValueError(f"column_keys name absent columns: {sorted(missing)}")
-
-    # page index region: encrypted columns as modules, plaintext columns
-    # verbatim (OffsetIndex page locations rewritten for both — the whole
-    # layout moved)
-    pageidx_new: dict[tuple[int, int], dict[str, tuple[int, int]]] = {}
-    for rg_i, rg in enumerate(row_groups):
-        for col_i, cc in enumerate(rg.get(1, [])):
-            entry: dict[str, tuple[int, int]] = {}
-            enc = (rg_i, col_i) in encrypted
-            ci_off, ci_len = cc.get(6), cc.get(7)
-            if ci_off is not None:
-                ci = plain[ci_off : ci_off + ci_len]
-                if enc:
-                    ci = _encrypt_module(
-                        chunk_keys[(rg_i, col_i)], ci,
-                        _module_aad(file_aad, MOD_COLUMN_INDEX, rg_i, col_i))
-                entry["ci"] = (len(out), len(ci))
-                out += ci
-            oi_off, oi_len = cc.get(4), cc.get(5)
-            if oi_off is not None:
-                oi = _patch_offset_index(
-                    plain[oi_off : oi_off + oi_len], page_maps[(rg_i, col_i)])
-                if enc:
-                    oi = _encrypt_module(
-                        chunk_keys[(rg_i, col_i)], oi,
-                        _module_aad(file_aad, MOD_OFFSET_INDEX, rg_i, col_i))
-                entry["oi"] = (len(out), len(oi))
-                out += oi
-            if entry:
-                pageidx_new[(rg_i, col_i)] = entry
-
-    def md_visit(keyc):
-        # offset patches addressed relative to one ColumnMetaData struct
-        def visit(path, v):
-            if path == (7,):
-                return sizes[keyc]
-            if path in ((9,), (11,)):
-                return new_offsets[keyc][v]
-            if path == (14,):
-                return bloom_new[keyc][0]
-            if path == (15,):
-                return bloom_new[keyc][1]
-            return None
-        return visit
-
-    enc_md: dict[tuple[int, int], bytes] = {}
-    for keyc in encrypted:
-        s, e = md_spans[keyc]
-        patched_md, _ = _transcode(fbytes, s, md_visit(keyc))
-        enc_md[keyc] = _encrypt_module(
-            chunk_keys[keyc], patched_md,
-            _module_aad(file_aad, MOD_COLUMN_METADATA, keyc[0], keyc[1]))
-
-    def visit(path, v):
-        if len(path) == 3 and path[0] == 4 and path[2] == 2:
-            return sum(sz for (rg_i, _), sz in sizes.items()
-                       if rg_i == path[1])
-        if len(path) < 5 or path[0] != 4 or path[2] != 1:
-            return None
-        keyc = (path[1], path[3])
-        if path[4:] == (2,):
-            omap = new_offsets[keyc]
-            return omap.get(v, min(omap.values()))
-        if path[4:] == (3, 7):
-            return sizes[keyc]
-        if path[4:] in ((3, 9), (3, 11)):
-            return new_offsets[keyc][v]
-        if path[4:] == (4,):
-            return pageidx_new[keyc]["oi"][0]
-        if path[4:] == (5,):
-            return pageidx_new[keyc]["oi"][1]
-        if path[4:] == (6,):
-            return pageidx_new[keyc]["ci"][0]
-        if path[4:] == (7,):
-            return pageidx_new[keyc]["ci"][1]
-        if path[4:] == (3, 14):
-            return bloom_new[keyc][0]
-        if path[4:] == (3, 15):
-            return bloom_new[keyc][1]
-        return None
-
-    def drop(p):
-        # redaction: Statistics (12) / SizeStatistics (16) of ENCRYPTED
-        # columns leave the plaintext footer — the full ColumnMetaData
-        # travels only inside encrypted_column_metadata
-        return (len(p) == 6 and p[0] == 4 and p[2] == 1 and p[4] == 3
-                and p[5] in (12, 16) and (p[1], p[3]) in encrypted)
-
-    def _field_hdr(fid, last_fid, ctype):
-        delta = fid - last_fid
-        if 0 < delta <= 15:
-            return bytes([(delta << 4) | ctype])
-        return bytes([ctype]) + _uvarint(_zigzag(fid, 16))
-
-    chunk_paths = {
-        (rg_i, col_i): ".".join(p.decode() for p in _chunk_meta(cc)[3])
-        for rg_i, rg in enumerate(row_groups)
-        for col_i, cc in enumerate(rg.get(1, []))
-    }
-
-    def struct_end(path, last_fid):
-        if path == ():
-            # FileMetaData.encryption_algorithm(8) marks the file as
-            # plaintext-footer encrypted; footer_signing_key_metadata(9)
-            algo = StructWriter()
-            if file_aad:
-                algo.binary(2, file_aad)  # AesGcmV1.aad_file_unique
-            extra = (_field_hdr(8, last_fid, CT_STRUCT)
-                     + StructWriter().struct(2 if ctr else 1, algo).finish())
-            if footer_key_metadata:
-                extra += (_field_hdr(9, 8, CT_BINARY)
-                          + _uvarint(len(footer_key_metadata))
-                          + footer_key_metadata)
-            return extra
-        # RowGroup.ordinal — spec readers take the AAD row-group
-        # component for column-key modules from this field
-        if (len(path) == 2 and path[0] == 4 and aad_mode == "spec"
-                and last_fid < 7):
-            return (_field_hdr(7, last_fid, CT_I16)
-                    + _uvarint(_zigzag(path[1], 16)))
-        if not (len(path) == 4 and path[0] == 4 and path[2] == 1):
-            return b""
-        keyc = (path[1], path[3])
-        if keyc not in encrypted or last_fid >= 8:
-            return b""
-        inner = StructWriter().list_string(
-            1, chunk_paths[keyc].split("."))
-        ckm = (column_key_metadata or {}).get(chunk_paths[keyc])
-        if ckm:
-            inner.binary(2, ckm)
-        union = StructWriter().struct(2, inner)
-        emd = enc_md[keyc]
-        return (_field_hdr(8, last_fid, CT_STRUCT) + union.finish()
-                + _field_hdr(9, 8, CT_BINARY) + _uvarint(len(emd)) + emd)
-
-    patched, _ = _transcode(fbytes, 0, visit, struct_end=struct_end,
-                            drop=drop)
-
+    out, footer = _encrypt_file(
+        plain, footer_key, column_keys, column_key_metadata, aad_mode,
+        algorithm == "AES_GCM_CTR_V1", file_aad, plaintext_footer=True,
+        footer_key_metadata=footer_key_metadata)
     sig = _encrypt_module(
-        footer_key, patched, _module_aad(file_aad, MOD_FOOTER))
-    nonce, tag = sig[4 : 4 + NONCE_LEN], sig[-TAG_LEN:]
-    out += patched
-    out += nonce + tag
-    out += struct.pack("<I", len(patched) + NONCE_LEN + TAG_LEN)
+        footer_key, footer, _module_aad(file_aad, MOD_FOOTER))
+    out += footer
+    out += sig[4 : 4 + NONCE_LEN] + sig[-TAG_LEN:]
+    out += struct.pack("<I", len(footer) + NONCE_LEN + TAG_LEN)
     out += MAGIC
     return bytes(out)
 
@@ -984,30 +851,79 @@ def encrypt_parquet_plaintext_footer(
 # --------------------------------------------------------- decrypt side
 
 def read_crypto_footer(buf: bytes) -> dict:
-    """Parse the tail of a PARE file -> {aad_file_unique, key_metadata,
-    footer_module_start, algorithm}. Raises ValueError for non-encrypted
-    files. ``algorithm`` is 'AES_GCM_V1' or 'AES_GCM_CTR_V1' (union
-    fields 1/2 of EncryptionAlgorithm; both carry the same AAD trio)."""
+    """Parse the tail of a PARE file -> {aad_file_unique, aad_prefix,
+    supply_aad_prefix, key_metadata, footer_module_start, algorithm,
+    plaintext_footer=False}. Raises ValueError for non-encrypted files.
+    ``algorithm`` is 'AES_GCM_V1' or 'AES_GCM_CTR_V1' (union fields 1/2
+    of EncryptionAlgorithm; both carry the same AAD trio)."""
     if buf[:4] != EMAGIC or buf[-4:] != EMAGIC:
         raise ValueError("not an encrypted-footer parquet file (PARE magic)")
     (clen,) = struct.unpack_from("<I", buf, len(buf) - 8)
     area_start = len(buf) - 8 - clen
     fcmd, pos = read_struct(buf[area_start : len(buf) - 8])
-    algo = fcmd.get(1, {})
-    if 1 in algo:
-        gcm, algorithm = algo[1] or {}, "AES_GCM_V1"
-    elif 2 in algo:
-        gcm, algorithm = algo[2] or {}, "AES_GCM_CTR_V1"
-    else:
-        raise ValueError("FileCryptoMetaData missing encryption_algorithm")
     return {
-        "aad_file_unique": gcm.get(2, b"") if isinstance(gcm, dict) else b"",
-        "aad_prefix": gcm.get(1, b"") if isinstance(gcm, dict) else b"",
-        "supply_aad_prefix": bool(gcm.get(3)) if isinstance(gcm, dict) else False,
+        **_aes_params(fcmd.get(1, {}),
+                      "FileCryptoMetaData missing encryption_algorithm"),
         "key_metadata": fcmd.get(2),
         "footer_module_start": area_start + pos,
-        "algorithm": algorithm,
+        "plaintext_footer": False,
     }
+
+
+def footer_crypto(buf: bytes) -> dict:
+    """The key-free half of opening an encrypted file's footer: the
+    :func:`read_crypto_footer` fields of a PARE file, or for a
+    plaintext-footer file (PAR1 magic, signed footer) the same AAD and
+    algorithm fields from FileMetaData.encryption_algorithm(8), its
+    footer_signing_key_metadata(9) as ``key_metadata``, the footer bytes
+    and the 28-byte signature (nonce + GCM tag)."""
+    if buf[-4:] == EMAGIC:
+        return read_crypto_footer(buf)
+    if buf[-4:] != MAGIC:
+        raise ValueError("not a parquet file (magic)")
+    flen = int.from_bytes(buf[-8:-4], "little")
+    combined = buf[len(buf) - 8 - flen : len(buf) - 8]
+    if len(combined) <= NONCE_LEN + TAG_LEN:
+        raise ValueError("footer too short for a signature")
+    fbytes = combined[: -(NONCE_LEN + TAG_LEN)]
+    fmeta, _ = read_struct(fbytes)
+    if fmeta.get(8) is None:
+        raise ValueError(
+            "plaintext parquet file carries no encryption_algorithm")
+    return {
+        **_aes_params(fmeta[8], "unknown encryption_algorithm union field"),
+        "key_metadata": fmeta.get(9),
+        "plaintext_footer": True,
+        "footer_bytes": fbytes,
+        "signature": combined[-(NONCE_LEN + TAG_LEN):],
+    }
+
+
+def open_footer(buf: bytes, footer_key: bytes, aad_prefix: bytes = b"",
+                info: dict | None = None) -> tuple[bytes, bytes, dict]:
+    """Open an encrypted file's footer -> (FileMetaData bytes, file AAD,
+    :func:`footer_crypto` info). A PARE footer module is decrypted; a
+    plaintext footer's signature is verified by re-encrypting the footer
+    bytes with the stored nonce and comparing tags (the
+    InternalFileDecryptor footer-signature contract). Pass ``info`` when
+    the caller already read it (e.g. to find the footer key)."""
+    if info is None:
+        info = footer_crypto(buf)
+    if info["supply_aad_prefix"] and not aad_prefix:
+        raise ValueError("file requires caller-supplied aad_prefix")
+    file_aad = (aad_prefix or info["aad_prefix"]) + info["aad_file_unique"]
+    aad = _module_aad(file_aad, MOD_FOOTER)
+    if not info["plaintext_footer"]:
+        fbytes, _ = _decrypt_module(
+            footer_key, buf, info["footer_module_start"], aad)
+        return fbytes, file_aad, info
+    fbytes, sig = info["footer_bytes"], info["signature"]
+    ct = _aesgcm(footer_key).encrypt(sig[:NONCE_LEN], fbytes, aad or None)
+    if not hmac.compare_digest(ct[-TAG_LEN:], sig[NONCE_LEN:]):
+        raise ValueError(
+            "footer signature verification failed (wrong footer key or "
+            "tampered footer)")
+    return fbytes, file_aad, info
 
 
 def decrypt_parquet(buf: bytes, footer_key: bytes,
@@ -1019,246 +935,17 @@ def decrypt_parquet(buf: bytes, footer_key: bytes,
     empty-AAD (DuckDB) — AND plaintext-footer (PAR1, signed footer)
     files, whose signature is verified with the footer key before the
     encrypted columns are decrypted and their redacted ColumnMetaData
-    restored."""
-    column_keys = column_keys or {}
-    plaintext_footer = buf[:4] == MAGIC and buf[-4:] == MAGIC
-    if plaintext_footer:
-        flen = int.from_bytes(buf[-8:-4], "little")
-        combined = buf[len(buf) - 8 - flen : len(buf) - 8]
-        if len(combined) <= NONCE_LEN + TAG_LEN:
-            raise ValueError("footer too short for a signature")
-        fbytes = combined[: -(NONCE_LEN + TAG_LEN)]
-        nonce = combined[-(NONCE_LEN + TAG_LEN) : -TAG_LEN]
-        tag = combined[-TAG_LEN:]
-        fmeta, _ = read_struct(fbytes)
-        algo_u = fmeta.get(8)
-        if algo_u is None:
-            raise ValueError(
-                "plaintext parquet file carries no encryption_algorithm")
-        if 1 in algo_u:
-            gcm, algorithm = algo_u[1] or {}, "AES_GCM_V1"
-        elif 2 in algo_u:
-            gcm, algorithm = algo_u[2] or {}, "AES_GCM_CTR_V1"
-        else:
-            raise ValueError("unknown encryption_algorithm union field")
-        if gcm.get(3) and not aad_prefix:
-            raise ValueError("file requires caller-supplied aad_prefix")
-        file_aad = (aad_prefix or gcm.get(1, b"")) + gcm.get(2, b"")
-        ct = _aesgcm(footer_key).encrypt(
-            nonce, fbytes, _module_aad(file_aad, MOD_FOOTER) or None)
-        if not hmac.compare_digest(ct[-TAG_LEN:], tag):
-            raise ValueError(
-                "footer signature verification failed (wrong footer key "
-                "or tampered footer)")
-        info = {"algorithm": algorithm}
-    else:
-        info = read_crypto_footer(buf)
-        if info["supply_aad_prefix"] and not aad_prefix:
-            raise ValueError("file requires caller-supplied aad_prefix")
-        file_aad = (aad_prefix or info["aad_prefix"]) \
-            + info["aad_file_unique"]
-        fbytes, _ = _decrypt_module(
-            footer_key, buf, info["footer_module_start"],
-            _module_aad(file_aad, MOD_FOOTER))
-        fmeta, _ = read_struct(fbytes)
-    row_groups = fmeta.get(4, [])
-
+    restored. Keys and pages come from :class:`FileDecryptor`."""
+    dec = FileDecryptor(buf, footer_key, column_keys, aad_prefix)
+    chunks = []
+    for rg_i, rg in enumerate(dec._fmeta.get(4, [])):
+        for col_i, cc in enumerate(rg.get(1, [])):
+            keyc = (rg_i, col_i)
+            meta = dec._md_override.get(keyc) or _chunk_meta(cc)
+            chunks.append((keyc, cc, meta,
+                           None if dec.is_plain(rg_i, col_i) else dec, None))
     out = bytearray(MAGIC)
-    new_offsets: dict[tuple[int, int], dict[int, int]] = {}
-    sizes: dict[tuple[int, int], int] = {}
-    page_maps: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-    chunk_keys: dict[tuple[int, int], bytes] = {}
-    bloom_new: dict[tuple[int, int], tuple[int, int]] = {}
-    # chunks whose inline meta_data was REMOVED by the writer (parquet-mr/
-    # arrow fully redact column-key chunks): decrypted ColumnMetaData raw
-    # bytes, re-emitted as field 3 in the plaintext footer
-    redacted_md: dict[tuple[int, int], bytes] = {}
-    chunk_metas: dict[tuple[int, int], dict] = {}
-    # subset-encryption contract (arrow/parquet-mr): when ANY chunk is
-    # tagged with crypto_metadata, untagged chunks are PLAINTEXT and are
-    # copied through verbatim (key None)
-    any_tagged = any(
-        cc.get(8) is not None
-        for rg in row_groups for cc in rg.get(1, []))
-    for rg_i, rg in enumerate(row_groups):
-        rg_ord = rg.get(7, rg_i)  # AAD uses RowGroup.ordinal when present
-        for col_i, cc in enumerate(rg.get(1, [])):
-            crypto = cc.get(8)
-            if crypto is not None and 2 in crypto:
-                path = ".".join(p.decode() for p in crypto[2].get(1, []))
-                if path not in column_keys:
-                    raise ValueError(
-                        f"column {path!r} is encrypted with a column key; "
-                        "pass it in column_keys")
-                key = column_keys[path]
-            elif crypto is None and (any_tagged or plaintext_footer):
-                key = None  # plaintext chunk
-            else:
-                path = ".".join(p.decode() for p in _chunk_meta(cc)[3])
-                key = column_keys.get(path, footer_key)
-            meta = cc.get(3)
-            emd = cc.get(9)
-            if emd is not None and key is not None:
-                # encrypted_column_metadata is the authoritative copy
-                # (inline meta_data is absent for arrow files, REDACTED
-                # — statistics stripped — for plaintext-footer files);
-                # restore it into the output footer
-                md_plain, _ = _decrypt_module(
-                    key, emd, 0,
-                    _module_aad(file_aad, MOD_COLUMN_METADATA,
-                                rg_ord, col_i))
-                redacted_md[(rg_i, col_i)] = md_plain
-                meta, _ = read_struct(md_plain)
-            elif meta is None:
-                raise ValueError(
-                    "ColumnChunk carries neither meta_data nor "
-                    "encrypted_column_metadata")
-            chunk_metas[(rg_i, col_i)] = meta
-            chunk_keys[(rg_i, col_i)] = key
-            start, total = _chunk_span(meta)
-            has_dict = meta.get(11) is not None
-            omap: dict[int, int] = {}
-            pmap: dict[int, tuple[int, int]] = {}
-            chunk_start = len(out)
-            pos = start
-            end = start + total
-            page_ord = 0
-            first = True
-            if key is None:
-                # plaintext chunk: copy pages verbatim, offsets remapped
-                for hdr_bytes, header, body in _walk_pages(
-                        buf, start, total):
-                    omap[pos] = len(out)
-                    out += hdr_bytes
-                    out += body
-                    if header.get(1) != 2:
-                        pmap[pos] = (omap[pos], len(out) - omap[pos])
-                    pos += len(hdr_bytes) + len(body)
-                new_offsets[(rg_i, col_i)] = omap
-                page_maps[(rg_i, col_i)] = pmap
-                sizes[(rg_i, col_i)] = len(out) - chunk_start
-                boff = meta.get(14)
-                if boff is not None:
-                    bhdr, hend = read_struct(buf, boff)
-                    nbytes = bhdr[1]
-                    bloom_new[(rg_i, col_i)] = (
-                        len(out), hend - boff + nbytes)
-                    out += buf[boff:hend + nbytes]
-                continue
-            while pos < end:
-                is_dict = has_dict and first
-                if is_dict:
-                    hmod = _module_aad(file_aad, MOD_DICT_PAGE_HEADER, rg_ord, col_i)
-                    bmod = _module_aad(file_aad, MOD_DICT_PAGE, rg_ord, col_i)
-                else:
-                    hmod = _module_aad(
-                        file_aad, MOD_DATA_PAGE_HEADER, rg_ord, col_i, page_ord)
-                    bmod = _module_aad(
-                        file_aad, MOD_DATA_PAGE, rg_ord, col_i, page_ord)
-                    page_ord += 1
-                first = False
-                mod_start = pos
-                omap[pos] = len(out)
-                hdr_bytes, pos = _decrypt_module(key, buf, pos, hmod)
-                # GCM_CTR mode: page BODIES are CTR modules (no tag/AAD);
-                # every metadata module stays GCM
-                if info["algorithm"] == "AES_GCM_CTR_V1":
-                    body, pos = _decrypt_module_ctr(key, buf, pos)
-                else:
-                    body, pos = _decrypt_module(key, buf, pos, bmod)
-                # compressed_page_size back to the plaintext length (it
-                # held the ciphertext module length in the encrypted file)
-                out += _patch_page_size(hdr_bytes, len(body))
-                out += body
-                if not is_dict:
-                    pmap[mod_start] = (
-                        omap[mod_start], len(out) - omap[mod_start])
-            if pos != end:
-                raise ValueError("encrypted chunk module walk overran span")
-            new_offsets[(rg_i, col_i)] = omap
-            page_maps[(rg_i, col_i)] = pmap
-            sizes[(rg_i, col_i)] = len(out) - chunk_start
-            boff = meta.get(14)
-            if boff is not None:
-                bhdr_bytes, bpos = _decrypt_module(
-                    key, buf, boff,
-                    _module_aad(file_aad, MOD_BLOOM_HEADER, rg_ord, col_i))
-                bits, _ = _decrypt_module(
-                    key, buf, bpos,
-                    _module_aad(file_aad, MOD_BLOOM_BITSET, rg_ord, col_i))
-                new_boff = len(out)
-                out += bhdr_bytes
-                out += bits
-                bloom_new[(rg_i, col_i)] = (new_boff, len(out) - new_boff)
-
-    # page index region back to plaintext (ColumnIndex verbatim,
-    # OffsetIndex page locations rewritten to the plaintext layout)
-    pageidx_new: dict[tuple[int, int], dict[str, tuple[int, int]]] = {}
-    for rg_i, rg in enumerate(row_groups):
-        rg_ord = rg.get(7, rg_i)
-        for col_i, cc in enumerate(rg.get(1, [])):
-            entry: dict[str, tuple[int, int]] = {}
-            key = chunk_keys[(rg_i, col_i)]
-            ci_off, ci_len = cc.get(6), cc.get(7)
-            if ci_off is not None:
-                if ci_len is None:
-                    raise ValueError(
-                        "malformed footer: column_index_offset without "
-                        "column_index_length")
-                if key is None:  # plaintext chunk: index bytes verbatim
-                    ci = bytes(buf[ci_off:ci_off + ci_len])
-                else:
-                    ci, _ = _decrypt_module(
-                        key, buf, ci_off,
-                        _module_aad(file_aad, MOD_COLUMN_INDEX,
-                                    rg_ord, col_i))
-                entry["ci"] = (len(out), len(ci))
-                out += ci
-            oi_off, oi_len = cc.get(4), cc.get(5)
-            if oi_off is not None:
-                if oi_len is None:
-                    raise ValueError(
-                        "malformed footer: offset_index_offset without "
-                        "offset_index_length")
-                if key is None:
-                    oi = bytes(buf[oi_off:oi_off + oi_len])
-                else:
-                    oi, _ = _decrypt_module(
-                        key, buf, oi_off,
-                        _module_aad(file_aad, MOD_OFFSET_INDEX,
-                                    rg_ord, col_i))
-                oi = _patch_offset_index(oi, page_maps[(rg_i, col_i)])
-                entry["oi"] = (len(out), len(oi))
-                out += oi
-            if entry:
-                pageidx_new[(rg_i, col_i)] = entry
-
-    def visit(path, v):
-        if len(path) == 3 and path[0] == 4 and path[2] == 2:
-            return sum(sz for (rg_i, _), sz in sizes.items() if rg_i == path[1])
-        if len(path) < 5 or path[0] != 4 or path[2] != 1:
-            return None
-        keyc = (path[1], path[3])
-        if path[4:] == (2,):
-            omap = new_offsets[keyc]
-            return omap.get(v, min(omap.values()))
-        if path[4:] == (3, 7):
-            return sizes[keyc]
-        if path[4:] in ((3, 9), (3, 11)):
-            return new_offsets[keyc][v]
-        if path[4:] == (4,):
-            return pageidx_new[keyc]["oi"][0]
-        if path[4:] == (5,):
-            return pageidx_new[keyc]["oi"][1]
-        if path[4:] == (6,):
-            return pageidx_new[keyc]["ci"][0]
-        if path[4:] == (7,):
-            return pageidx_new[keyc]["ci"][1]
-        if path[4:] == (3, 14):
-            return bloom_new[keyc][0]
-        if path[4:] == (3, 15):
-            return bloom_new[keyc][1]
-        return None
+    visit = _footer_visit(_relayout(buf, out, chunks))
 
     def drop(p):
         # the plaintext output must not advertise encryption:
@@ -1267,12 +954,10 @@ def decrypt_parquet(buf: bytes, footer_key: bytes,
         # from encrypted_column_metadata (re-spliced by struct_end); and
         # FileMetaData.encryption_algorithm(8) +
         # footer_signing_key_metadata(9) of plaintext-footer inputs
-        if len(p) == 5 and p[0] == 4 and p[2] == 1 and p[4] in (8, 9):
-            return True
-        if (len(p) == 5 and p[0] == 4 and p[2] == 1 and p[4] == 3
-                and (p[1], p[3]) in redacted_md):
-            return True
-        return plaintext_footer and p in ((8,), (9,))
+        if len(p) == 5 and p[0] == 4 and p[2] == 1:
+            return p[4] in (8, 9) or (
+                p[4] == 3 and (p[1], p[3]) in dec._md_bytes)
+        return dec.plaintext_footer and p in ((8,), (9,))
 
     def struct_end(path, last_fid):
         # re-emit the decrypted ColumnMetaData (offsets patched to the
@@ -1280,17 +965,15 @@ def decrypt_parquet(buf: bytes, footer_key: bytes,
         # long-form header since field 3 lands after fields 4-7
         if not (len(path) == 4 and path[0] == 4 and path[2] == 1):
             return b""
-        keyc = (path[1], path[3])
-        md = redacted_md.get(keyc)
+        md = dec._md_bytes.get((path[1], path[3]))
         if md is None:
             return b""
         patched_md, _ = _transcode(
-            md, 0, lambda p, v, kc=keyc: visit((4, kc[0], 1, kc[1], 3) + p, v))
-        return (bytes([CT_STRUCT]) + _uvarint(_zigzag(3, 16))
-                + patched_md)
+            md, 0, lambda p, v: visit((4, path[1], 1, path[3], 3) + p, v))
+        return bytes([CT_STRUCT]) + _uvarint(_zigzag(3, 16)) + patched_md
 
-    patched, _ = _transcode(fbytes, 0, visit, struct_end=struct_end,
-                            drop=drop)
+    patched, _ = _transcode(dec.footer_bytes, 0, visit,
+                            struct_end=struct_end, drop=drop)
     out += patched
     out += struct.pack("<I", len(patched))
     out += MAGIC
@@ -1301,78 +984,35 @@ class FileDecryptor:
     """Lazy module-granular decryption for the NATIVE encrypted scan — the
     InternalFileDecryptor analog (parquet-hadoop .../crypto/
     InternalFileDecryptor.java:36, ParquetFileReader's encrypted read
-    path). Unlike :func:`decrypt_parquet` (a whole-file transform), only
-    the modules the filtered reader actually touches are decrypted: the
-    footer, then — for row groups that survive stats pruning — the probed
-    dictionary/bloom/page-index modules and the page modules inside the
-    surviving row ranges. At scale a selective predicate therefore
-    decrypts a small fraction of the ciphertext; ``modules_decrypted`` vs
-    :meth:`count_modules` quantifies exactly how much was skipped."""
+    path). Unlike :func:`decrypt_parquet` (a whole-file transform over
+    this class), only the modules the filtered reader actually touches
+    are decrypted: the footer, then — for row groups that survive stats
+    pruning — the probed dictionary/bloom/page-index modules and the page
+    modules inside the surviving row ranges. At scale a selective
+    predicate therefore decrypts a small fraction of the ciphertext;
+    ``modules_decrypted`` vs :meth:`count_modules` quantifies exactly how
+    much was skipped."""
 
     def __init__(self, buf: bytes, footer_key: bytes,
                  column_keys: dict[str, bytes] | None = None,
                  aad_prefix: bytes = b""):
         self.buf = buf
         self.column_keys = column_keys or {}
-        self.modules_decrypted = 0
         self._idx_cache: dict[int, bytes] = {}
         self._md_override: dict[tuple[int, int], dict] = {}
-        if buf[-4:] == EMAGIC:
-            self.plaintext_footer = False
-            info = read_crypto_footer(buf)
-            if info["supply_aad_prefix"] and not aad_prefix:
-                raise ValueError("file requires caller-supplied aad_prefix")
-            self.algorithm = info["algorithm"]
-            self.file_aad = (aad_prefix or info["aad_prefix"]) \
-                + info["aad_file_unique"]
-            self.footer_bytes, _ = _decrypt_module(
-                footer_key, buf, info["footer_module_start"],
-                _module_aad(self.file_aad, MOD_FOOTER))
-            self.modules_decrypted += 1
-        elif buf[-4:] == MAGIC:
-            # plaintext-footer mode: PAR1 magic, FileMetaData in the clear
-            # with encryption_algorithm set, footer SIGNED (nonce + GCM
-            # tag between footer and length) — verified by re-encrypting
-            # the footer bytes with the stored nonce and comparing tags
-            # (the InternalFileDecryptor footer-signature contract)
-            self.plaintext_footer = True
-            flen = int.from_bytes(buf[-8:-4], "little")
-            combined = buf[len(buf) - 8 - flen : len(buf) - 8]
-            if len(combined) <= NONCE_LEN + TAG_LEN:
-                raise ValueError("footer too short for a signature")
-            self.footer_bytes = combined[: -(NONCE_LEN + TAG_LEN)]
-            nonce = combined[-(NONCE_LEN + TAG_LEN) : -TAG_LEN]
-            tag = combined[-TAG_LEN:]
-            fmeta0, _ = read_struct(self.footer_bytes)
-            algo = fmeta0.get(8)
-            if algo is None:
-                raise ValueError(
-                    "plaintext parquet file carries no encryption_algorithm")
-            if 1 in algo:
-                gcm, self.algorithm = algo[1] or {}, "AES_GCM_V1"
-            elif 2 in algo:
-                gcm, self.algorithm = algo[2] or {}, "AES_GCM_CTR_V1"
-            else:
-                raise ValueError("unknown encryption_algorithm union field")
-            if gcm.get(3) and not aad_prefix:
-                raise ValueError("file requires caller-supplied aad_prefix")
-            self.file_aad = (aad_prefix or gcm.get(1, b"")) + gcm.get(2, b"")
-            ct = _aesgcm(footer_key).encrypt(
-                nonce, self.footer_bytes,
-                _module_aad(self.file_aad, MOD_FOOTER) or None)
-            if not hmac.compare_digest(ct[-TAG_LEN:], tag):
-                raise ValueError(
-                    "footer signature verification failed (wrong footer "
-                    "key or tampered footer)")
-        else:
-            raise ValueError("not a parquet file (magic)")
+        self._md_bytes: dict[tuple[int, int], bytes] = {}
+        self.footer_bytes, self.file_aad, info = open_footer(
+            buf, footer_key, aad_prefix)
+        self.plaintext_footer = info["plaintext_footer"]
+        self.algorithm = info["algorithm"]
+        self.modules_decrypted = 0 if self.plaintext_footer else 1
         fmeta, _ = read_struct(self.footer_bytes)
         # per-chunk key resolution is a footer-only walk (no data decrypt);
-        # key None = plaintext chunk (plaintext-footer mode only). For a
-        # column-key chunk the dotted path comes from the crypto-metadata
-        # union — parquet-mr/arrow REMOVE the inline meta_data entirely for
-        # those chunks (full redaction) and only encrypted_column_metadata
-        # carries it, so meta_data may legitimately be absent here.
+        # key None = plaintext chunk. For a column-key chunk the dotted
+        # path comes from the crypto-metadata union — parquet-mr/arrow
+        # REMOVE the inline meta_data entirely for those chunks (full
+        # redaction) and only encrypted_column_metadata carries it, so
+        # meta_data may legitimately be absent here.
         self._keys: dict[tuple[int, int], bytes | None] = {}
         # a spec-compliant writer (parquet-mr/arrow/ours in spec mode)
         # tags every ENCRYPTED chunk with crypto_metadata, so an untagged
@@ -1391,34 +1031,34 @@ class FileDecryptor:
             for col_i, cc in enumerate(rg.get(1, [])):
                 crypto = cc.get(8)
                 if crypto is not None and 2 in crypto:
-                    path = ".".join(
-                        p.decode() for p in crypto[2].get(1, []))
+                    path = _dotted(crypto[2].get(1, []))
                     if path not in self.column_keys:
                         raise ValueError(
                             f"column {path!r} is encrypted with a column "
                             "key; pass it in column_keys")
-                    self._keys[(rg_i, col_i)] = self.column_keys[path]
+                    key = self.column_keys[path]
                 elif self.plaintext_footer:
                     if crypto is not None:
                         raise ValueError(
                             "plaintext-footer mode: footer-key-encrypted "
                             "columns are not allowed by the spec")
-                    self._keys[(rg_i, col_i)] = None
+                    key = None
                 elif crypto is None and any_tagged:
-                    self._keys[(rg_i, col_i)] = None  # plaintext chunk
+                    key = None  # plaintext chunk
                 else:
-                    path = ".".join(p.decode() for p in _chunk_meta(cc)[3])
-                    self._keys[(rg_i, col_i)] = self.column_keys.get(
-                        path, footer_key)
+                    key = self.column_keys.get(
+                        _dotted(_chunk_meta(cc)[3]), footer_key)
+                self._keys[(rg_i, col_i)] = key
                 emd = cc.get(9)
-                if emd is not None and self._keys[(rg_i, col_i)] is not None:
+                if emd is not None and key is not None:
                     # encrypted_column_metadata: the unredacted
                     # ColumnMetaData under the column key
                     md_plain, _ = _decrypt_module(
-                        self._keys[(rg_i, col_i)], emd, 0,
+                        key, emd, 0,
                         _module_aad(self.file_aad, MOD_COLUMN_METADATA,
                                     self._rg_ord[rg_i], col_i))
                     self.modules_decrypted += 1
+                    self._md_bytes[(rg_i, col_i)] = md_plain
                     self._md_override[(rg_i, col_i)], _ = read_struct(
                         md_plain)
                 elif cc.get(3) is None:
@@ -1479,10 +1119,33 @@ class FileDecryptor:
             return b, end
         return self._mod(rg_i, col_i, pos, module, page)
 
-    def bloom(self, rg_i: int, col_i: int, off: int) -> tuple[dict, bytes]:
-        """Decrypt a chunk's BloomFilterHeader + bitset modules."""
+    def pages(self, rg_i: int, col_i: int, start: int, total: int,
+              has_dict: bool):
+        """Decrypt every page module of one chunk in file order -> yield
+        (encrypted page offset, plaintext header, body, is_dict)."""
+        pos, end = start, start + total
+        ordinal = 0
+        while pos < end:
+            is_dict = has_dict and pos == start
+            hdr, body, nxt = self.page(
+                rg_i, col_i, pos, is_dict, -1 if is_dict else ordinal)
+            yield pos, hdr, body, is_dict
+            ordinal += not is_dict
+            pos = nxt
+        if pos != end:
+            raise ValueError("encrypted chunk module walk overran span")
+
+    def bloom_modules(self, rg_i: int, col_i: int, off: int
+                      ) -> tuple[bytes, bytes]:
+        """Decrypt a chunk's BloomFilterHeader + bitset modules -> (header
+        thrift bytes, bitset)."""
         hb, pos = self._mod(rg_i, col_i, off, MOD_BLOOM_HEADER)
         bits, _ = self._mod(rg_i, col_i, pos, MOD_BLOOM_BITSET)
+        return hb, bits
+
+    def bloom(self, rg_i: int, col_i: int, off: int) -> tuple[dict, bytes]:
+        """Decrypt a chunk's BloomFilterHeader + bitset modules."""
+        hb, bits = self.bloom_modules(rg_i, col_i, off)
         hdr, _ = read_struct(hb)
         return hdr, bits
 
@@ -1507,22 +1170,11 @@ class FileDecryptor:
         fallback, still lazy at chunk granularity."""
         out = bytearray()
         omap: dict[int, int] = {}
-        pos, end = start, start + total
-        page_ord = 0
-        first = True
-        while pos < end:
-            is_dict = has_dict and first
-            first = False
-            omap[pos] = len(out)
-            hdr, body, pos = self.page(
-                rg_i, col_i, pos, is_dict,
-                -1 if is_dict else page_ord)
-            if not is_dict:
-                page_ord += 1
+        for off, hdr, body, _ in self.pages(rg_i, col_i, start, total,
+                                            has_dict):
+            omap[off] = len(out)
             out += hdr
             out += body
-        if pos != end:
-            raise ValueError("encrypted chunk module walk overran span")
         return bytes(out), omap
 
     def pages_plain(self, rg_i: int, col_i: int, dict_off: int | None,

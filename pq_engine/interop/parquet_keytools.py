@@ -42,11 +42,13 @@ import os
 from .parquet_crypto import (
     MOD_FOOTER,
     _aesgcm,
-    _decrypt_module,
+    _dotted,
     _encrypt_module,
     _module_aad,
     _transcode,
     encrypt_parquet,
+    footer_crypto,
+    open_footer,
     read_crypto_footer,
 )
 from .thrift_compact import read_struct
@@ -379,12 +381,7 @@ def rotate_master_keys(buf: bytes, old_masters: dict[str, bytes],
         raise ValueError("file carries no key metadata to rotate")
     footer_dek = unwrap_from_material(
         info["key_metadata"], old_masters, kek_cache)
-    if info["supply_aad_prefix"] and not aad_prefix:
-        raise ValueError("file requires caller-supplied aad_prefix")
-    file_aad = (aad_prefix or info["aad_prefix"]) + info["aad_file_unique"]
-    fbytes, _ = _decrypt_module(
-        footer_dek, buf, info["footer_module_start"],
-        _module_aad(file_aad, MOD_FOOTER))
+    fbytes, file_aad, _ = open_footer(buf, footer_dek, aad_prefix, info)
 
     keks = _KekPerMaster(new_masters)
 
@@ -451,42 +448,16 @@ def resolve_file_keys(buf: bytes, master_keys: dict[str, bytes],
     external-material files pass the parsed side file as
     ``material_store``. Plaintext-footer files (PAR1 magic,
     footer_signing_key_metadata in FileMetaData field 9) resolve too —
-    the footer key there is the SIGNING key."""
+    the footer key there is the SIGNING key, checked against the footer
+    signature. Files written with a caller-supplied ``aad_prefix`` need
+    it here as well."""
     kek_cache: dict = {}
-    if buf[-4:] == b"PAR1":
-        # plaintext-footer mode: footer is in the clear, signed; the
-        # signature (nonce+tag) sits between footer bytes and the length
-        flen = int.from_bytes(buf[-8:-4], "little")
-        combined = buf[len(buf) - 8 - flen : len(buf) - 8]
-        fmeta, _ = read_struct(combined)
-        km = fmeta.get(9)
-        if fmeta.get(8) is None or km is None:
-            raise ValueError(
-                "not an encrypted parquet file with key metadata")
-        footer_key = unwrap_from_material(
-            km, master_keys, kek_cache, material_store)
-        column_keys: dict[str, bytes] = {}
-        for rg in fmeta.get(4, []):
-            for cc in rg.get(1, []):
-                crypto = cc.get(8)
-                if crypto is None or 2 not in crypto:
-                    continue
-                path = ".".join(p.decode() for p in crypto[2].get(1, []))
-                ckm = crypto[2].get(2)
-                if path in column_keys or ckm is None:
-                    continue
-                column_keys[path] = unwrap_from_material(
-                    ckm, master_keys, kek_cache, material_store)
-        return footer_key, column_keys
-    info = read_crypto_footer(buf)
+    info = footer_crypto(buf)
     if info["key_metadata"] is None:
         raise ValueError("file carries no key metadata (raw-DEK file?)")
     footer_key = unwrap_from_material(
         info["key_metadata"], master_keys, kek_cache, material_store)
-    file_aad = (aad_prefix or info["aad_prefix"]) + info["aad_file_unique"]
-    fbytes, _ = _decrypt_module(
-        footer_key, buf, info["footer_module_start"],
-        _module_aad(file_aad, MOD_FOOTER))
+    fbytes, _, _ = open_footer(buf, footer_key, aad_prefix, info)
     fmeta, _ = read_struct(fbytes)
     column_keys: dict[str, bytes] = {}
     for rg in fmeta.get(4, []):
@@ -494,7 +465,7 @@ def resolve_file_keys(buf: bytes, master_keys: dict[str, bytes],
             crypto = cc.get(8)
             if crypto is None or 2 not in crypto:
                 continue
-            path = ".".join(p.decode() for p in crypto[2].get(1, []))
+            path = _dotted(crypto[2].get(1, []))
             km = crypto[2].get(2)
             if path in column_keys or km is None:
                 continue

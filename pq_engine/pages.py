@@ -165,7 +165,7 @@ def _decode_values(codec: str, ptype: str, buf, count: int):
 # ------------------------------------------------------------ chunk dict
 
 DICT_PAGE = -2  # manifest `page` value of the chunk dictionary page
-# (bloom index rows use -1); reference: one dict page per column chunk,
+# (bloom index rows use BLOOM_PAGE); reference: one dict page per column chunk,
 # written at chunk finalize — ColumnWriterBase.finalizeColumnChunk
 # (/root/reference/parquet-column/.../column/impl/ColumnWriterBase.java:280-302)
 
@@ -599,9 +599,13 @@ def _sizestats_row(ptype: str, unencoded, rep_hist, def_hist, pages=None):
     )
 
 
+BLOOM_PAGE = -1  # manifest `page` value of a chunk's bloom-filter row
+ROWRANGES_PAGE = -3  # manifest `page` value of a column's row-ranges row
 COLINDEX_PAGE = -4  # manifest `page` value of the persisted column-index row
 GEO_PAGE = -5  # manifest `page` value of the GeospatialStatistics bbox row
 SIZESTATS_PAGE = -6  # manifest `page` value of the SizeStatistics row
+# index rows a codec rewrite copies raw: their payload is no page data
+RAW_COPY_PAGES = (BLOOM_PAGE, COLINDEX_PAGE, GEO_PAGE, SIZESTATS_PAGE)
 
 
 def _parse_stat(v: str, kp: str):

@@ -24,6 +24,7 @@ import struct
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..pages import COLINDEX_PAGE, GEO_PAGE, SIZESTATS_PAGE
 from .engine import PAGE_SCHEMA
 
 _SUFFIX = "+aes-gcm"
@@ -88,7 +89,7 @@ def encrypt_pages(pages: DataFrame, keys: dict[str, bytes],
                 # order / bbox don't leak plaintext properties, and decrypt
                 # can restore them (they'd otherwise be destroyed — r3
                 # self-review #1)
-                if r.page in (-4, -5, -6):
+                if r.page in (COLINDEX_PAGE, GEO_PAGE, SIZESTATS_PAGE):
                     pt = (r.min or "").encode()
                 else:
                     # carry (min, max, ndv) INSIDE the authenticated
@@ -162,7 +163,7 @@ def decrypt_pages(pages: DataFrame, keys: dict[str, bytes],
                     blob[12:],
                     _aad(aad_prefix, int(r.split_id), int(r.batch_id), r.column, int(r.page)),
                 )
-                if r.page in (-4, -5, -6):
+                if r.page in (COLINDEX_PAGE, GEO_PAGE, SIZESTATS_PAGE):
                     # restore the metadata payload hidden at encrypt time
                     payload = pt.decode() if pt else None
                     datas.append(b"")

@@ -27,7 +27,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..kernels.ragged import RaggedBytes
 from ..memtune import tune_allocator
-from ..pages import PAGE_BYTES, PAGE_ROWS, RAGGED_TYPES, decode_column, encode_column
+from ..pages import (
+    BLOOM_PAGE,
+    DICT_PAGE,
+    GEO_PAGE,
+    PAGE_BYTES,
+    PAGE_ROWS,
+    RAGGED_TYPES,
+    ROWRANGES_PAGE,
+    decode_column,
+    encode_column,
+)
 
 # ---------------------------------------------------------------- schema
 
@@ -426,7 +436,7 @@ def _encode_arrow_batch(
                 rows["split_id"].append(split)
                 rows["batch_id"].append(bi)
                 rows["column"].append(name)
-                rows["page"].append(-1)  # chunk-index row, not a data page
+                rows["page"].append(BLOOM_PAGE)  # chunk-index row, not a data page
                 rows["codec"].append("bloom")
                 rows["ptype"].append(ptype)
                 rows["first_row"].append(-1)
@@ -916,10 +926,10 @@ def decode_table(
 
         arrays = []
         for name in cols:
-            # page >= -2 keeps the chunk dictionary page (-2); bloom index
-            # rows (-1) are skipped inside decode_column
+            # page >= DICT_PAGE keeps the chunk dictionary page; bloom index
+            # rows are skipped inside decode_column
             sub = tbl.filter(
-                pc.and_(pc.equal(tbl["column"], name), pc.greater_equal(tbl["page"], -2))
+                pc.and_(pc.equal(tbl["column"], name), pc.greater_equal(tbl["page"], DICT_PAGE))
             ).sort_by("page")
             pages = [
                 (
@@ -1030,7 +1040,7 @@ def prune_pages_by_stats(
         "split_id",
         "batch_id",
         F.lit(column).alias("column"),
-        F.lit(-3).cast("int").alias("page"),
+        F.lit(ROWRANGES_PAGE).cast("int").alias("page"),
         F.lit("rowranges").alias("codec"),
         F.col("ptype"),
         F.col("first_row"),
@@ -1065,7 +1075,7 @@ def prune_pages_by_bbox(
     # unreadable) geostats row must keep its chunk, never prune it
     geo = pages_df.filter(
         (F.col("column") == column)
-        & (F.col("page") == -5)
+        & (F.col("page") == GEO_PAGE)
         & F.col("min").isNotNull()
     )
     gx = lambda k: F.get_json_object(F.col("min"), f"$.{k}").cast("double")
@@ -1099,7 +1109,7 @@ def prune_pages_by_bloom(pages_df: DataFrame, column: str, value) -> DataFrame:
     values = list(value) if isinstance(value, (list, tuple, set)) else [value]
     keys = [bloom_key_for_value(v, ptype) for v in values]
 
-    blooms = pages_df.filter((F.col("column") == column) & (F.col("page") == -1))
+    blooms = pages_df.filter((F.col("column") == column) & (F.col("page") == BLOOM_PAGE))
 
     def check(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -1135,7 +1145,7 @@ def prune_pages_by_dictionary(pages_df: DataFrame, column: str, value) -> DataFr
     Ids are never decoded. Non-dict chunks are kept."""
     import pandas as pd
 
-    target = pages_df.filter((F.col("column") == column) & (F.col("page") >= -2))
+    target = pages_df.filter((F.col("column") == column) & (F.col("page") >= DICT_PAGE))
 
     raw_values = list(value) if isinstance(value, (list, tuple, set)) else [value]
 
@@ -1162,7 +1172,7 @@ def prune_pages_by_dictionary(pages_df: DataFrame, column: str, value) -> DataFr
 
         key = {"split_id": int(pdf.iloc[0]["split_id"]), "batch_id": int(pdf.iloc[0]["batch_id"])}
         data = pdf[pdf["page"] >= 0]
-        dict_rows = pdf[pdf["page"] == -2]
+        dict_rows = pdf[pdf["page"] == DICT_PAGE]
         if (data["codec"] != "dict").any() or len(dict_rows) == 0:
             return pd.DataFrame([key])  # non-dict pages → cannot disprove
         r = dict_rows.iloc[0]

@@ -78,6 +78,25 @@ def test_column_keys_and_crypto_metadata(tmp_path):
         decrypt_parquet(enc, FK, column_keys={"name": FK})
 
 
+def test_column_key_for_absent_column_refuses(tmp_path):
+    """A column_keys path that names no column refuses in every writer
+    entry point. Ignoring it would write the column the caller meant to
+    protect under the footer key, readable with the footer key alone."""
+    from pq_engine.cli import main
+    from pq_engine.interop.parquet_keytools import encrypt_parquet_keytools
+
+    plain = _plain_file(tmp_path)
+    with pytest.raises(ValueError, match=r"absent columns: \['nmae'\]"):
+        encrypt_parquet(plain, FK, column_keys={"name": CK, "nmae": CK})
+    with pytest.raises(ValueError, match="absent columns"):
+        encrypt_parquet_keytools(plain, {"kf": FK, "kc": CK}, "kf",
+                                 {"nmae": "kc"})
+    with pytest.raises(ValueError, match="absent columns"):
+        main(["encrypt-parquet", str(tmp_path / "plain.parquet"),
+              "--out", str(tmp_path / "enc.pare"), "--key", FK.hex(),
+              "--column-key", f"nmae={CK.hex()}"])
+
+
 def test_wrong_footer_key_and_tamper(tmp_path):
     plain = _plain_file(tmp_path)
     enc = encrypt_parquet(plain, FK, aad_mode="empty")
@@ -656,9 +675,10 @@ def test_cli_encrypt_decrypt_commands(tmp_path, capsys):
 
 def test_encrypt_pyarrow_written_file_drops_stale_page_index(tmp_path):
     """Encrypting a foreign (pyarrow) file with a page index: the index
-    bytes are not carried through the module transform, so ColumnChunk
-    fields 4-7 must be DROPPED (stale pointers) while Statistics survive
-    — the decrypted file still row-group-prunes and DuckDB reads it."""
+    rides the module transform (ColumnIndex as is, OffsetIndex repointed
+    at the new layout) and ColumnChunk fields 4-7 point at it, while
+    Statistics survive — the decrypted file still row-group-prunes and
+    DuckDB reads it."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as papq

@@ -343,6 +343,20 @@ def test_keytools_plaintext_footer_mode(tmp_path, algo):
         resolve_file_keys(enc, {"kf": MASTER["kc"], "kc": MASTER["kf"]})
 
 
+def test_resolve_file_keys_requires_supplied_aad_prefix(tmp_path):
+    """A file written with supply_aad_prefix stores only a flag; key
+    resolution without the prefix refuses by name, like every other
+    reader, instead of failing as a wrong key."""
+    plain, n = _plain_file(tmp_path)
+    enc = encrypt_parquet_keytools(
+        plain, MASTER, "kf", {"tag": "kc"}, aad_prefix=b"tbl/a.parquet",
+        supply_aad_prefix=True)
+    with pytest.raises(ValueError, match="caller-supplied aad_prefix"):
+        resolve_file_keys(enc, MASTER)
+    fkey, ckeys = resolve_file_keys(enc, MASTER, aad_prefix=b"tbl/a.parquet")
+    assert set(ckeys) == {"tag"}
+
+
 def test_gcm_ctr_arrow_interop_both_directions(tmp_path):
     """AES_GCM_CTR_V1 against arrow C++ both ways: arrow reads our
     keytools CTR file (CTR page bodies, GCM metadata modules), and we

@@ -56,7 +56,7 @@ import sys
 import numpy as np
 import pyarrow.dataset as ds
 
-from .pages import BLOOM_PAGE, RAGGED_TYPES, RAW_COPY_PAGES, decode_column
+from .pages import BLOOM_PAGE, RAGGED_TYPES, RAW_COPY_PAGES, ROWRANGES_PAGE, decode_column
 
 
 def _load(path):
@@ -490,7 +490,7 @@ def cmd_trans_compression(tbl, args):
     to_label = args.to or "none"
     rows = tbl.to_pylist()
     for r in rows:
-        if r["compression"] == to_label or r["page"] in RAW_COPY_PAGES or r["codec"] == "rowranges":
+        if r["compression"] == to_label or r["page"] in (*RAW_COPY_PAGES, ROWRANGES_PAGE):
             continue
         blob = bytes(r["data"])
         from .pages import split_page_blob

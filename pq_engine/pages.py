@@ -606,6 +606,8 @@ GEO_PAGE = -5  # manifest `page` value of the GeospatialStatistics bbox row
 SIZESTATS_PAGE = -6  # manifest `page` value of the SizeStatistics row
 # index rows a codec rewrite copies raw: their payload is no page data
 RAW_COPY_PAGES = (BLOOM_PAGE, COLINDEX_PAGE, GEO_PAGE, SIZESTATS_PAGE)
+# `compression` label suffix of a page sealed by spark.crypto.encrypt_pages
+ENCRYPTED_SUFFIX = "+aes-gcm"
 
 
 def _parse_stat(v: str, kp: str):

@@ -24,10 +24,8 @@ import struct
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..pages import COLINDEX_PAGE, GEO_PAGE, SIZESTATS_PAGE
+from ..pages import COLINDEX_PAGE, ENCRYPTED_SUFFIX, GEO_PAGE, ROWRANGES_PAGE, SIZESTATS_PAGE
 from .engine import PAGE_SCHEMA
-
-_SUFFIX = "+aes-gcm"
 
 
 def available() -> bool:
@@ -76,7 +74,7 @@ def encrypt_pages(pages: DataFrame, keys: dict[str, bytes],
             out = pdf.copy()
             datas, comps, crcs, mins, maxs, ndvs = [], [], [], [], [], []
             for r in pdf.itertuples():
-                if r.column not in ciphers or r.codec == "rowranges":
+                if r.column not in ciphers or r.page == ROWRANGES_PAGE:
                     datas.append(bytes(r.data))
                     comps.append(r.compression)
                     crcs.append(int(r.crc32))
@@ -109,7 +107,7 @@ def encrypt_pages(pages: DataFrame, keys: dict[str, bytes],
                     _aad(aad_prefix, int(r.split_id), int(r.batch_id), r.column, int(r.page)),
                 )
                 datas.append(nonce + ct)
-                comps.append(r.compression + _SUFFIX)
+                comps.append(r.compression + ENCRYPTED_SUFFIX)
                 # crc over the CIPHERTEXT: a plaintext checksum beside AES-GCM
                 # is a 32-bit confirmation oracle for guessable page contents
                 # (ADVICE r2). decrypt_pages recomputes the plaintext crc after
@@ -146,7 +144,7 @@ def decrypt_pages(pages: DataFrame, keys: dict[str, bytes],
             out = pdf.copy()
             datas, comps, encs, crcs, mins, maxs, ndvs = [], [], [], [], [], [], []
             for r in pdf.itertuples():
-                if not r.compression.endswith(_SUFFIX):
+                if not r.compression.endswith(ENCRYPTED_SUFFIX):
                     datas.append(bytes(r.data))
                     comps.append(r.compression)
                     encs.append(int(r.encoded_bytes))
@@ -186,7 +184,7 @@ def decrypt_pages(pages: DataFrame, keys: dict[str, bytes],
                     mins.append(mn)
                     maxs.append(mx)
                     ndvs.append(int(ndv))
-                comps.append(r.compression[: -len(_SUFFIX)])
+                comps.append(r.compression[: -len(ENCRYPTED_SUFFIX)])
             out["data"] = datas
             out["compression"] = comps
             out["encoded_bytes"] = encs

@@ -12,11 +12,14 @@ Here the same algebra composes over the PAGE TABLE: every leaf yields the
 set of (split_id, batch_id) chunk keys it cannot disprove (stats may only
 prove absence — chunks with omitted stats always survive), ``&`` intersects
 key sets, ``|`` unions them, ``~`` rewrites the tree to negated leaves.
-``filter_pages`` applies the final key set with one left-semi join;
+The pruner runs on the driver, before any data task, like parquet-java's
+filters over the footer: ``filter_pages`` collects the probed columns'
+metadata once (per data page one stats-level boolean per leaf, evaluated by
+Catalyst, plus the dictionary/bloom rows of eq/in/contains columns), checks
+dictionary and bloom membership in NumPy, and applies the surviving key set
+to the page table as a literal filter (a proved miss reads no data page);
 ``residual_expr`` emits the exact row-level predicate as a Catalyst Column
-for the decoded frame (the reference's record-level re-check). Key sets are
-metadata-sized frames — at 10^5 splits these joins are trivia next to one
-decoded page.
+for the decoded frame (the reference's record-level re-check).
 
 ``eq`` runs all three disprovers (stats range, chunk-dictionary membership,
 bloom membership) exactly like RowGroupFilter's level list; ``udp`` is the
@@ -163,129 +166,101 @@ def _invert(p: Pred) -> Pred:
 
 # ----------------------------------------------------------------- evaluate
 
-
-def _keys(df: DataFrame) -> DataFrame:
-    return df.select("split_id", "batch_id").distinct()
-
-
-def _numeric_probe(v) -> bool:
-    return isinstance(v, (int, float)) and not isinstance(v, bool)
-
-
-def _stats_keep(pages: DataFrame, col: str, cond: Column) -> DataFrame:
-    """Chunk keys whose `col` data-page stats do NOT disprove ``cond``
-    (evaluated over min/max/null_count; omitted stats keep the chunk)."""
-    probe = pages.filter((F.col("column") == col) & (F.col("page") >= 0))
-    return _keys(probe.filter(cond))
+# leaves whose chunk dictionary can disprove them; eq/in also probe blooms
+_MEMBER = ("eq", "in", "contains_eq", "contains_key")
 
 
 def _cmp_cols(v):
-    if _numeric_probe(v):
+    if isinstance(v, (int, float)) and not isinstance(v, bool):
         cast_t = "decimal(20,0)" if isinstance(v, int) else "double"
         return F.col("min").cast(cast_t), F.col("max").cast(cast_t)
     return F.col("min"), F.col("max")
 
 
-def _leaf_keys(leaf: Leaf, pages: DataFrame) -> DataFrame:
-    kind, col = leaf.kind, leaf.col
-    if kind == "always":
-        return _keys(pages)
-    if kind == "never":
-        return _keys(pages).limit(0)
-    if kind == "udp":
-        # omitted stats must keep the chunk — the user expression is only
-        # consulted when min/max exist (canDrop contract: prove absence)
-        no_stats = F.col("min").isNull() | F.col("max").isNull()
-        return _stats_keep(pages, col, no_stats | leaf.exprs[0])
-    if kind == "isnull":
-        return _stats_keep(pages, col, F.col("null_count") > 0)
-    if kind == "notnull":
-        return _stats_keep(pages, col, F.col("null_count") < F.col("n_rows"))
-    if kind == "in":
-        from .engine import prune_pages_by_bloom, prune_pages_by_dictionary
+def _probe_col(leaf: Leaf) -> str:
+    # contains over MAP KEYS targets the shredded key leaf (the parquet map
+    # group's repeated key field)
+    return f"{leaf.col}#key_value#key" if leaf.kind == "contains_key" else leaf.col
 
-        values = list(leaf.args[0])
-        mn, mx = _cmp_cols(values[0])
-        no_stats = F.col("min").isNull() | F.col("max").isNull()
+
+def _stats_keep(leaf: Leaf) -> Column:
+    """Statistics level: TRUE on a data page of the leaf's column whose
+    min/max/null_count/n_rows do NOT disprove it (omitted stats keep)."""
+    kind = leaf.kind
+    no_stats = F.col("min").isNull() | F.col("max").isNull()
+    if kind == "udp":
+        # the user expression is only consulted when min/max exist
+        # (canDrop contract: prove absence)
+        return no_stats | leaf.exprs[0]
+    if kind == "isnull":
+        return F.col("null_count") > 0
+    if kind == "notnull":
+        return F.col("null_count") < F.col("n_rows")
+    values = leaf.args[0] if kind == "in" else (leaf.args[0],)
+    mn, mx = _cmp_cols(values[0])
+    if kind in _MEMBER:
         in_range = no_stats
         for v in values:
             in_range = in_range | ((mn <= F.lit(v)) & (mx >= F.lit(v)))
-        keys = _stats_keep(pages, col, in_range)
-        keys = keys.join(_keys(prune_pages_by_dictionary(pages, col, values)),
-                         ["split_id", "batch_id"], "left_semi")
-        return keys.join(_keys(prune_pages_by_bloom(pages, col, values)),
-                         ["split_id", "batch_id"], "left_semi")
-    if kind in ("contains_eq", "contains_key"):
-        from .engine import prune_pages_by_dictionary
-
-        if kind == "contains_key":
-            # contains over MAP KEYS targets the shredded key leaf (the
-            # parquet map group's repeated key field)
-            col = f"{col}#key_value#key"
-        v = leaf.args[0]
-        mn, mx = _cmp_cols(v)
-        no_stats = F.col("min").isNull() | F.col("max").isNull()
-        keys = _stats_keep(
-            pages, col, no_stats | ((mn <= F.lit(v)) & (mx >= F.lit(v)))
-        )
-        # list-child chunk dictionaries hold CHILD values — membership
-        # disproof works exactly like a flat column
-        return keys.join(_keys(prune_pages_by_dictionary(pages, col, v)),
-                         ["split_id", "batch_id"], "left_semi")
-    v = leaf.args[0]
-    mn, mx = _cmp_cols(v)
-    no_stats = F.col("min").isNull() | F.col("max").isNull()
-    if kind == "eq":
-        # RowGroupFilter level order: statistics, then dictionary, then bloom
-        # — every level is conservative, the survivor set is their
-        # intersection (all metadata-sized)
-        from .engine import prune_pages_by_bloom, prune_pages_by_dictionary
-
-        keys = _stats_keep(
-            pages, col, no_stats | ((mn <= F.lit(v)) & (mx >= F.lit(v)))
-        )
-        keys = keys.join(_keys(prune_pages_by_dictionary(pages, col, v)),
-                         ["split_id", "batch_id"], "left_semi")
-        return keys.join(_keys(prune_pages_by_bloom(pages, col, v)),
-                         ["split_id", "batch_id"], "left_semi")
+        return in_range
+    v = F.lit(values[0])
     if kind == "noteq":
         # droppable only when every row provably equals v: min == max == v
         # and no nulls
-        drop = (
-            ~no_stats & (mn == F.lit(v)) & (mx == F.lit(v))
-            & (F.col("null_count") == 0)
-        )
-        return _stats_keep(pages, col, ~drop)
-    if kind == "lt":
-        return _stats_keep(pages, col, no_stats | (mn < F.lit(v)))
-    if kind == "lteq":
-        return _stats_keep(pages, col, no_stats | (mn <= F.lit(v)))
-    if kind == "gt":
-        return _stats_keep(pages, col, no_stats | (mx > F.lit(v)))
-    if kind == "gteq":
-        return _stats_keep(pages, col, no_stats | (mx >= F.lit(v)))
-    raise ValueError(f"unknown predicate kind {kind!r}")
+        return ~(~no_stats & (mn == v) & (mx == v) & (F.col("null_count") == 0))
+    bound = {"lt": mn < v, "lteq": mn <= v, "gt": mx > v, "gteq": mx >= v}
+    if kind not in bound:
+        raise ValueError(f"unknown predicate kind {kind!r}")
+    return no_stats | bound[kind]
 
 
-def _eval(p: Pred, pages: DataFrame) -> DataFrame:
-    if isinstance(p, And):
-        out = _eval(p.parts[0], pages)
-        for q in p.parts[1:]:
-            out = out.join(_eval(q, pages), ["split_id", "batch_id"], "left_semi")
-        return out
-    if isinstance(p, Or):
-        out = _eval(p.parts[0], pages)
-        for q in p.parts[1:]:
-            out = out.unionByName(_eval(q, pages))
-        return out.distinct()
-    return _leaf_keys(p, pages)
+def _leaves(p: Pred) -> list:
+    if isinstance(p, (And, Or)):
+        return [leaf for q in p.parts for leaf in _leaves(q)]
+    return [] if p.kind in ("always", "never") else [p]
 
 
 def filter_pages(pages: DataFrame, pred: Pred) -> DataFrame:
     """Drop every chunk the predicate tree disproves (RowGroupFilter analog);
-    decode the result, then apply :func:`residual_expr` for exactness."""
-    keys = _eval(pred, pages)
-    return pages.join(keys, ["split_id", "batch_id"], "left_semi")
+    decode the result, then apply :func:`residual_expr` for exactness.
+
+    One collect brings the metadata to the driver: per data page of a
+    probed column one stats-level boolean per leaf (Catalyst evaluates it),
+    plus the dictionary/bloom rows of eq/in/contains columns."""
+    from .engine import bloom_disproved, chunk_keys, dictionary_disproved, index_rows, select_chunks
+
+    leaves = _leaves(pred)
+    slot = {id(leaf): f"k{i}" for i, leaf in enumerate(leaves)}
+    if leaves:
+        data_page = lambda leaf: (F.col("column") == _probe_col(leaf)) & (F.col("page") >= 0)
+        meta = index_rows(
+            pages,
+            {_probe_col(leaf) for leaf in leaves},
+            {_probe_col(leaf) for leaf in leaves if leaf.kind in _MEMBER},
+            [F.coalesce(F.when(data_page(leaf), _stats_keep(leaf)), F.lit(False))
+             .alias(slot[id(leaf)]) for leaf in leaves],
+        )
+
+    def kept(p: Pred) -> set | None:  # None: every chunk
+        if isinstance(p, Or):
+            parts = [kept(q) for q in p.parts]
+            return None if None in parts else set().union(*parts)
+        if isinstance(p, And):
+            parts = [s for s in map(kept, p.parts) if s is not None]
+            return set.intersection(*parts) if parts else None
+        if p.kind in ("always", "never"):
+            return None if p.kind == "always" else set()
+        keys = set(chunk_keys(meta.filter(meta[slot[id(p)]])))
+        if p.kind in _MEMBER:
+            # RowGroupFilter level order: statistics, then dictionary, then
+            # bloom; every level is conservative
+            keys -= dictionary_disproved(meta, _probe_col(p), p.args[0])
+            if p.kind in ("eq", "in"):
+                keys -= bloom_disproved(meta, p.col, p.args[0])
+        return keys
+
+    keys = kept(pred)
+    return pages if keys is None else select_chunks(pages, keys)
 
 
 def residual_expr(p: Pred) -> Column:

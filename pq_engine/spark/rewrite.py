@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..pages import RAW_COPY_PAGES, decode_column, encode_column
+from ..pages import RAW_COPY_PAGES, ROWRANGES_PAGE, decode_column, encode_column
 from .engine import PAGE_SCHEMA
 
 
@@ -217,7 +217,7 @@ def transcode_compression(pages: DataFrame, to: str | None) -> DataFrame:
         out = pdf.copy()
         datas, encs, crcs, comps = [], [], [], []
         for r in pdf.itertuples():
-            raw_copy = r.page in RAW_COPY_PAGES or r.codec == "rowranges"
+            raw_copy = r.page in (*RAW_COPY_PAGES, ROWRANGES_PAGE)
             comps.append(r.compression if raw_copy else to_label)
             if r.compression == to_label or raw_copy:
                 # bloom index rows are raw filter bytes; rowranges/colindex

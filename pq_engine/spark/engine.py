@@ -1070,8 +1070,8 @@ def prune_pages_by_bbox(
     """Geospatial pushdown (GeospatialStatistics analog): drop every
     (split, batch) whose ``column`` bbox row (page = -5, emitted for WKB
     Point chunks) proves no geometry intersects the query rectangle. One
-    metadata collect — the bbox json parses with get_json_object, no
-    geometry bytes are touched. Chunks without a bbox row are kept."""
+    metadata collect at call time (the bbox json parses with get_json_object,
+    no geometry bytes are touched). Chunks without a bbox row are kept."""
     # bbox rows with a readable payload only: an encrypted (or otherwise
     # unreadable) geostats row must keep its chunk, never prune it
     geo = pages_df.filter(
@@ -1092,10 +1092,11 @@ def prune_pages_by_bbox(
 
 
 # Above this many keys select_chunks broadcasts a key frame instead of an
-# inline IN list. Measured on a 4-core host (60k cached rows): the IN list
-# costs ~30 us of parsing per key over a ~0.15 s job (0.16 s at 1000 keys,
-# 0.30 s at 5000, 1.33 s at 20000); the broadcast join ~0.40 s flat plus a
-# job. They cross near 6500 keys. (Column.isin's py4j call per key: 1.9 s at 5000.)
+# inline IN list. On a 4-core Intel Xeon VM (60k cached rows) the IN list
+# grows with its length (0.16 s at 1000 keys, 1.33 s at 20000); the
+# broadcast join stays at 0.40-0.45 s with its job. Across runs they crossed
+# between 4000 and 6500 keys (medians of 5: 0.44 vs 0.45 s at 4000, 0.62 vs
+# 0.40 at 7000); the cap is the low end. (Column.isin: 1.9 s at 5000.)
 LITERAL_KEYS_MAX = 4096
 
 
@@ -1107,8 +1108,8 @@ def select_chunks(pages_df: DataFrame, keys: set, keep: bool = True) -> DataFram
         return pages_df.filter(F.lit(False)) if keep else pages_df
     if len(keys) > LITERAL_KEYS_MAX:
         key_df = pages_df.sparkSession.createDataFrame(sorted(keys), "split_id int, batch_id int")
-        how = "left_semi" if keep else "left_anti"
-        return pages_df.join(F.broadcast(key_df), ["split_id", "batch_id"], how)
+        return pages_df.join(F.broadcast(key_df), ["split_id", "batch_id"],
+                             "left_semi" if keep else "left_anti")
     # split_id IN (...) is the conjunct a parquet page table can push down
     splits = ",".join(map(str, sorted({s for s, _ in keys})))
     packed = ",".join(str((s << 32) + b) for s, b in sorted(keys))
@@ -1144,10 +1145,8 @@ def _column_rows(meta: pa.Table, column: str, page=None) -> pa.Table:
     """``column``'s data-page rows of ``meta`` (or its rows of ``page``)."""
     import pyarrow.compute as pc
 
-    rows = meta.filter(pc.equal(meta["column"], column))
-    if page is None:
-        return rows.filter(pc.greater_equal(rows["page"], 0))
-    return rows.filter(pc.equal(rows["page"], page))
+    on_page = pc.greater_equal(meta["page"], 0) if page is None else pc.equal(meta["page"], page)
+    return meta.filter(pc.and_(pc.equal(meta["column"], column), on_page))
 
 
 def _probe_list(value) -> list:
@@ -1223,15 +1222,15 @@ def bloom_disproved(meta: pa.Table, column: str, value) -> set:
 
 
 def prune_pages_by_bloom(pages_df: DataFrame, column: str, value) -> DataFrame:
-    """Bloom-level pushdown (RowGroupFilter level 3): drop the chunks
-    :func:`bloom_disproved` names; chunks without a bloom row are kept."""
+    """Bloom level (RowGroupFilter level 3; one Spark job at call time):
+    drop the chunks :func:`bloom_disproved` names (no bloom row: kept)."""
     meta = index_rows(pages_df, [column])
     return select_chunks(pages_df, bloom_disproved(meta, column, value), keep=False)
 
 
 def prune_pages_by_dictionary(pages_df: DataFrame, column: str, value) -> DataFrame:
-    """Dictionary-level pushdown (RowGroupFilter level 2): drop the chunks
-    :func:`dictionary_disproved` names; non-dict chunks are kept."""
+    """Dictionary level (RowGroupFilter level 2; one Spark job at call time):
+    drop the chunks :func:`dictionary_disproved` names (non-dict: kept)."""
     meta = index_rows(pages_df, [column])
     return select_chunks(pages_df, dictionary_disproved(meta, column, value), keep=False)
 

@@ -224,12 +224,14 @@ def filter_pages(pages: DataFrame, pred: Pred) -> DataFrame:
     """Drop every chunk the predicate tree disproves (RowGroupFilter analog);
     decode the result, then apply :func:`residual_expr` for exactness.
 
-    One collect brings the metadata to the driver: per data page of a
-    probed column one stats-level boolean per leaf (Catalyst evaluates it),
-    plus the dictionary/bloom rows of eq/in/contains columns."""
+    One collect (a Spark job, run at call time) brings the metadata to the
+    driver: per data page of a probed column one stats-level boolean per
+    leaf (Catalyst evaluates it), plus the dictionary/bloom rows of
+    eq/in/contains columns."""
     from .engine import bloom_disproved, chunk_keys, dictionary_disproved, index_rows, select_chunks
 
-    leaves = _leaves(pred)
+    # one projected column per distinct Leaf: a tree may hold one twice (a | a)
+    leaves = list({id(leaf): leaf for leaf in _leaves(pred)}.values())
     slot = {id(leaf): f"k{i}" for i, leaf in enumerate(leaves)}
     if leaves:
         data_page = lambda leaf: (F.col("column") == _probe_col(leaf)) & (F.col("page") >= 0)

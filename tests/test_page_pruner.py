@@ -43,6 +43,7 @@ PINNED = {
         "and_always": "0.0 0.1 0.2 0.3 0.4 0.5 0.6 0.7 0.8 0.9",
         "and_never": "",
         "two_columns": "0.0 0.1 0.2 0.3 0.4 0.5 0.6 0.7 0.8 0.9",
+        "same_leaf_or": "0.0 0.1 0.4 0.5 0.6",
     },
     "events": {
         "eq_dict_miss": "",
@@ -60,6 +61,7 @@ PINNED = {
         "udp_ts": "0.0",
         "and_or": "0.0 0.1 0.2 0.9",
         "not_and": "0.0 0.1 0.8 0.9",
+        "same_leaf_twice": "0.0 0.1 0.2 0.9",
     },
     "webpages": {
         "lang_miss": "",
@@ -71,6 +73,7 @@ PINNED = {
         "text_gt": "0.0 1.0 2.0 3.0 5.0 7.0",
         "ts_lt": "",
         "or": "0.0",
+        "same_leaf_twice": "1.0 5.0 7.0",
     },
     "nested": {
         "contains_miss": "",
@@ -85,6 +88,8 @@ PINNED = {
 
 def _cases(url: str = "") -> dict:
     """``url`` is the first url of the webpages slice (known once built)."""
+    # one Leaf object used twice in a tree
+    orderkey, click, rare = P.eq("l_orderkey", 5979), P.eq("event_type", "click"), P.eq("lang", "sl")
     return {
         "lineitem": {
             "eq_dict_miss": P.eq("l_returnflag", "B"),
@@ -116,6 +121,7 @@ def _cases(url: str = "") -> dict:
             "and_always": P.notin("l_returnflag", []) & P.eq("l_returnflag", "A"),
             "and_never": P.in_("l_returnflag", []) & P.eq("l_returnflag", "A"),
             "two_columns": P.eq("l_returnflag", "A") & P.eq("l_linestatus", "O"),
+            "same_leaf_or": orderkey | orderkey,
         },
         "events": {
             "eq_dict_miss": P.eq("event_type", "refund"),
@@ -138,6 +144,7 @@ def _cases(url: str = "") -> dict:
             "and_or": (P.eq("event_type", "click") & P.lt("event_id", 3000))
             | (P.gtEq("event_id", 9000) & ~P.eq("user_id", 5)),
             "not_and": ~(P.gtEq("event_id", 2000) & P.lt("event_id", 8000)),
+            "same_leaf_twice": (click & P.lt("event_id", 3000)) | (click & P.gtEq("event_id", 9000)),
         },
         "webpages": {
             "lang_miss": P.eq("lang", "qq"),
@@ -149,6 +156,7 @@ def _cases(url: str = "") -> dict:
             "text_gt": P.gt("text", "tok98"),
             "ts_lt": P.lt("warc_ts", 0),
             "or": P.eq("lang", "qq") | P.eq("url", url),
+            "same_leaf_twice": (rare & P.gt("text", "tok98")) | (rare & P.eq("url", url)),
         },
         "nested": {
             "contains_miss": P.contains_eq("tags", "bz"),

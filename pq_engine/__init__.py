@@ -20,10 +20,10 @@ decode side of any conforming reader agrees bit-for-bit.
 
 __version__ = "0.3.0"
 
-# Worker-side process tuning (idempotent, opt-out via PQ_ENGINE_NO_MALLOC_TUNE):
-# malloc thresholds for page-fault-expensive hosts + the zipimporter
-# invalidate_caches mtime guard (PySpark invalidates import caches per task;
-# see memtune._patch_zipimport_invalidate). Running it at package import means
+# Worker-side process tuning (idempotent): malloc thresholds for
+# page-fault-expensive hosts (opt-out via PQ_ENGINE_NO_MALLOC_TUNE) + on
+# Python < 3.12 the zipimporter invalidate_caches mtime guard (PySpark
+# invalidates import caches per task; see memtune._patch_zipimport_invalidate). Running it at package import means
 # any Spark worker that unpickles a function referencing pq_engine is tuned
 # from its first task onward.
 from pq_engine.memtune import tune_allocator as _tune

@@ -9,13 +9,16 @@ re-malloc reuses warm pages.
 
 Call :func:`tune_allocator` once per process (imported by ``pq_engine.kernels``;
 the Spark engine also sets ``MALLOC_MMAP_THRESHOLD_`` etc. via ``executorEnv``
-so Python workers start tuned). Set ``PQ_ENGINE_NO_MALLOC_TUNE=1`` to opt out.
+so Python workers start tuned). Set ``PQ_ENGINE_NO_MALLOC_TUNE=1`` to opt out
+of the malloc settings; the zipimport guard below stays on, since it changes no
+allocation and only skips a re-parse.
 """
 
 from __future__ import annotations
 
 import ctypes
 import os
+import sys
 
 _M_TRIM_THRESHOLD = -1
 _M_TOP_PAD = -2
@@ -68,15 +71,19 @@ def _patch_zipimport_invalidate() -> None:
 def tune_allocator(warm_mb: int = 0) -> bool:
     """Raise glibc malloc thresholds; optionally pre-fault ``warm_mb`` MiB of
     heap so the first real batch doesn't pay first-touch. Returns True if
-    applied."""
+    applied. On Python < 3.12 it also installs the zipimport guard, with or
+    without ``PQ_ENGINE_NO_MALLOC_TUNE``."""
     global _done
-    if _done or os.environ.get("PQ_ENGINE_NO_MALLOC_TUNE"):
+    if _done:
         return False
     _done = True
-    try:
-        _patch_zipimport_invalidate()
-    except Exception:  # stdlib drift — never let tuning break a worker
-        pass
+    if sys.version_info < (3, 12):  # 3.12+ has the guard built in
+        try:
+            _patch_zipimport_invalidate()
+        except Exception:  # stdlib drift — never let tuning break a worker
+            pass
+    if os.environ.get("PQ_ENGINE_NO_MALLOC_TUNE"):
+        return False
     try:
         libc = ctypes.CDLL("libc.so.6", use_errno=True)
         libc.mallopt(_M_MMAP_THRESHOLD, 1 << 30)

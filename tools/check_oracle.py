@@ -9,11 +9,10 @@ Env: PQ_ORACLE_SF_DIR overrides the sf directory (default /root/testdata/sf0.01)
 from __future__ import annotations
 
 import hashlib
+import os as _os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-import os as _os
+sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
 
 SF_DIR = _os.environ.get("PQ_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [

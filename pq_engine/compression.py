@@ -40,12 +40,25 @@ def _pa_codec(name: str):
     if codec is None:
         import pyarrow as pa
 
-        level = _PA_CODECS[name]
+        level = _PA_CODECS.get(name)
         codec = (
             pa.Codec(name, compression_level=level) if level is not None else pa.Codec(name)
         )
         _CODEC_CACHE[name] = codec
     return codec
+
+
+def decompress_view(name: str, body, raw_size: int) -> memoryview:
+    """Decompress a raw ``name`` stream of ``raw_size`` bytes with the cached
+    pyarrow codec, into a buffer from the system allocator, and return it as
+    an unsigned-byte view without a copy (Arrow exports signed ``b`` items).
+    The system allocator runs under memtune's malloc settings, so the memory
+    of a freed page body is reused warm; Arrow's default jemalloc pool
+    hands out fresh pages instead."""
+    import pyarrow as pa
+
+    out = _pa_codec(name).decompress(body, raw_size, memory_pool=pa.system_memory_pool())
+    return memoryview(out).cast("B")
 
 
 def compress(body: bytes, compression: str | None) -> bytes:
@@ -68,5 +81,5 @@ def decompress(body, compression: str | None):
     if compression in _PA_CODECS:
         mv = memoryview(body)
         raw_len = int.from_bytes(bytes(mv[:4]), "little")
-        return bytes(_pa_codec(compression).decompress(mv[4:], raw_len))
+        return decompress_view(compression, mv[4:], raw_len)
     raise ValueError(f"unknown page compression {compression!r}")

@@ -29,8 +29,16 @@ Scope (validated with clear errors):
     BYTE_STREAM_SPLIT / RLE(bool), codecs none/snappy/gzip/brotli/zstd/
     lz4_raw
   * FILTERED scans (read_parquet_filtered): row groups pruned by chunk
-    Statistics, pages pruned by ColumnIndex/OffsetIndex row ranges, then
-    exact record-level evaluation — only surviving pages are decoded.
+    Statistics, dictionary and bloom filter, pages pruned by
+    ColumnIndex/OffsetIndex row ranges. Each surviving row group is then
+    decoded predicate-first: (1) the predicate's columns over the
+    surviving ranges, then the exact record-level predicate; (2) every
+    other read column only over the pages (by its OffsetIndex) that hold
+    a matching row — none at all when no row matches; a chunk without an
+    OffsetIndex is one page, decoded whole or not at all. The report's
+    ``pages_total`` counts every page of every read column in a scanned
+    row group (a chunk without an OffsetIndex counts 1) and
+    ``pages_scanned`` the pages actually decoded.
 """
 
 from __future__ import annotations
@@ -247,7 +255,7 @@ def _chunk_fields(md: dict) -> dict:
 MAX_PAGE_UNCOMPRESSED = 1 << 30
 
 
-def _decompress(body: bytes, codec: str, raw_size: int) -> bytes:
+def _decompress(body, codec: str, raw_size: int):
     # parquet page bodies are RAW codec streams (no length prefix — the
     # PageHeader carries uncompressed_page_size); our engine's
     # compression.py prefixes its own blobs, so go to the codecs directly
@@ -262,9 +270,9 @@ def _decompress(body: bytes, codec: str, raw_size: int) -> bytes:
 
         out = zlib.decompress(body, wbits=31)
     else:
-        import pyarrow as pa
+        from ..compression import decompress_view
 
-        out = bytes(pa.Codec(codec).decompress(body, raw_size))
+        out = decompress_view(codec, body, raw_size)
     if len(out) != raw_size:
         raise ValueError(
             f"decompressed size {len(out)} != header uncompressed {raw_size}"
@@ -1231,17 +1239,23 @@ def _pred_page_ranges(pred, rg, by_name, buf, nrows, report, crypto=None):
     return _merge_ranges(keep)
 
 
-def _decode_chunk_rows(buf, chunk, col, nrows, ranges, report, crypto=None):
-    """Decode only the pages of ``chunk`` overlapping ``ranges`` (via its
-    OffsetIndex when present) and return (values, validity, covered_rows
-    bool[nrows]). With ``crypto`` (an encrypted file scanned natively),
-    ONLY the surviving page modules are decrypted."""
+def _decode_chunk_rows(buf, chunk, col, want, report, crypto=None):
+    """Decode only the pages of ``chunk`` that hold a row of ``want``
+    (bool[nrows]), found through its OffsetIndex, and return (values,
+    validity, covered_rows bool[nrows]). A chunk without an OffsetIndex is
+    one page: decoded whole, or not at all when ``want`` is empty. Every
+    page of the chunk counts in ``pages_total``, the decoded ones in
+    ``pages_scanned``. With ``crypto`` (an encrypted file scanned
+    natively), ONLY the decoded page modules are decrypted."""
     crypto = _chunk_crypto(crypto, chunk)
     oi_off, oi_len = chunk["offidx"]
+    nrows = len(want)
     covered = np.zeros(nrows, dtype=bool)
     if oi_off is None:
-        report["pages_scanned"] += 1
         report["pages_total"] += 1
+        if not want.any():
+            return None, None, covered
+        report["pages_scanned"] += 1
         if crypto is not None:
             start = chunk["data_off"]
             if chunk["dict_off"] is not None:
@@ -1263,7 +1277,7 @@ def _decode_chunk_rows(buf, chunk, col, nrows, ranges, report, crypto=None):
     keep_idx = []
     for i, (off, _size, first) in enumerate(locs):
         last = locs[i + 1][2] if i + 1 < len(locs) else nrows
-        if any(s < last and first < e for s, e in ranges):
+        if want[first:last].any():
             pages.append((off, last - first))
             keep_idx.append(i)
             covered[first:last] = True
@@ -1301,9 +1315,6 @@ def _select_rows(values, validity, keep):
 def _eval_pred(pred, cols):
     """Exact record-level evaluation -> bool mask (NULL compares False,
     the SQL semantics)."""
-    if pred is None:
-        any_vals = next(iter(cols.values()))[0]
-        return np.ones(len(any_vals), dtype=bool)
     if pred[0] == "and":
         return _eval_pred(pred[1], cols) & _eval_pred(pred[2], cols)
     if pred[0] == "or":
@@ -1375,11 +1386,15 @@ def read_parquet_filtered(path_or_buf, predicate,
                           footer_key: bytes | None = None,
                           column_keys: dict[str, bytes] | None = None,
                           aad_prefix: bytes = b""):
-    """Filtered read: row groups pruned by chunk Statistics, pages pruned
-    by ColumnIndex/OffsetIndex row ranges (only surviving pages are
-    DECODED), then exact record-level evaluation. FLAT primitive columns
-    only. ``predicate`` is a nested tuple: ("and"|"or", p, q) or
-    (op, column, value) with op in eq/ne/lt/le/gt/ge.
+    """Filtered read: row groups pruned by chunk Statistics, dictionary and
+    bloom filter, pages pruned by ColumnIndex/OffsetIndex row ranges. In
+    each surviving row group the predicate's columns are decoded first,
+    over the surviving ranges, and the exact record-level predicate runs
+    on them; every other read column is then decoded only over the pages
+    that hold a matching row (none when no row matches). FLAT primitive
+    columns only. ``predicate`` is a nested tuple: ("and"|"or", p, q) or
+    (op, column, value) with op in eq/ne/lt/le/gt/ge; ``None`` matches
+    every row.
 
     With ``footer_key`` the same pruning runs NATIVELY over an
     encrypted-footer (PARE) file — the ParquetFileReader +
@@ -1390,7 +1405,11 @@ def read_parquet_filtered(path_or_buf, predicate,
 
     Returns (schema, {name: (values, validity)}, report) where report
     counts row_groups/pages total vs scanned — the
-    readNextFilteredRowGroup + ColumnIndexFilter contract."""
+    readNextFilteredRowGroup + ColumnIndexFilter contract.
+    ``pages_total`` counts every page of every read column (predicate
+    columns included) in a scanned row group, a chunk without an
+    OffsetIndex as 1; ``pages_scanned`` counts the pages decoded;
+    ``rows_after_prune`` the rows the indexes left in scanned row groups."""
     if isinstance(path_or_buf, (bytes, bytearray)):
         buf = bytes(path_or_buf)
     else:
@@ -1442,16 +1461,14 @@ def read_parquet_filtered(path_or_buf, predicate,
             raise ValueError(
                 f"column {name!r} is encrypted; pass footer_key and its "
                 "column key to read it")
-    read_cols = list(dict.fromkeys(list(want) + sorted(
-        _pred_cols(predicate) - set(want)
-    )))
+    pred_cols = sorted(_pred_cols(predicate))
     report = {
         "row_groups_total": len(meta["row_groups"]), "row_groups_scanned": 0,
         "pages_total": 0, "pages_scanned": 0,
         "rows_total": meta["num_rows"], "rows_after_prune": 0,
         "rows_matched": 0,
     }
-    acc = {name: [] for name in read_cols}
+    acc = {name: [] for name in want}
     for rg in meta["row_groups"]:
         nrows = rg["num_rows"]
         if not _rg_can_match(predicate, rg, by_name):
@@ -1471,37 +1488,44 @@ def read_parquet_filtered(path_or_buf, predicate,
         if not ranges:
             continue  # page index proved no page can match
         report["row_groups_scanned"] += 1
-        decoded = {}
-        covered_all = None
-        for name in read_cols:
-            chunk = _find_chunk(rg, [name])
-            values, validity, covered = _decode_chunk_rows(
-                buf, chunk, by_name[name], nrows, ranges, report, crypto
-            )
-            decoded[name] = (values, validity, covered)
-            covered_all = covered if covered_all is None \
-                else covered_all & covered
-        # align every column to the intersected covered row set, then the
-        # pruned ranges, then the exact predicate
         tmask = np.zeros(nrows, dtype=bool)
         for s, e in ranges:
             tmask[s:e] = True
-        tmask &= covered_all
+        # phase 1: the predicate's columns over the surviving ranges, then
+        # the exact predicate
+        decoded = {}
+        for name in pred_cols:
+            decoded[name] = _decode_chunk_rows(
+                buf, _find_chunk(rg, [name]), by_name[name], tmask, report,
+                crypto)
+            tmask &= decoded[name][2]
         report["rows_after_prune"] += int(tmask.sum())
-        aligned = {}
-        for name, (values, validity, covered) in decoded.items():
-            keep = tmask[covered]  # rows of this chunk's decoded span
-            aligned[name] = (*_select_rows(values, validity, keep),
-                             by_name[name])
-        match = _eval_pred(predicate, aligned)
-        report["rows_matched"] += int(match.sum())
-        for name in read_cols:
-            values, validity, leaf = aligned[name]
-            acc[name].append(_select_rows(
-                values,
-                validity,
-                match,
-            ))
+        aligned = {
+            name: (*_select_rows(values, validity, tmask[covered]),
+                   by_name[name])
+            for name, (values, validity, covered) in decoded.items()
+        }
+        match = (_eval_pred(predicate, aligned) if predicate is not None
+                 else np.ones(int(tmask.sum()), dtype=bool))
+        n_match = int(match.sum())
+        report["rows_matched"] += n_match
+        matched = np.zeros(nrows, dtype=bool)
+        matched[np.flatnonzero(tmask)[match]] = True
+        # phase 2: every other column, only over the pages holding a match
+        for name in acc:
+            if name in aligned:
+                values, validity, _ = aligned[name]
+                keep = match
+            else:
+                values, validity, covered = _decode_chunk_rows(
+                    buf, _find_chunk(rg, [name]), by_name[name], matched,
+                    report, crypto)
+                keep = matched[covered]
+                if int(keep.sum()) != n_match:
+                    raise ValueError(
+                        f"offset index of {name!r} does not cover every row")
+            if n_match:
+                acc[name].append(_select_rows(values, validity, keep))
     out = {}
     for name in want:
         parts = [

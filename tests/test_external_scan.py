@@ -14,13 +14,6 @@ from pq_engine.spark.external import list_parquet_files, scan_parquet
 MASTER = {"kf": b"0123456789012345", "kc": b"abcdefghijklmnop"}
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from pq_engine.spark.session import get_spark
-
-    return get_spark(cores=4, app="test_external_scan")
-
-
 def _write_plain_dir(tmp_path, n_files=3, rows=400):
     import pyarrow as pa
     import pyarrow.parquet as papq

@@ -292,3 +292,17 @@ def test_sizestats_per_page_sums_to_chunk():
     for k in range(4):
         assert sum(p["def_hist"][k] for p in s2["pages"]) == s2["def_hist"][k]
     assert all(p["unencoded_bytes"] is None for p in s2["pages"])
+
+
+@pytest.mark.parametrize("codec", ["none", "zlib", "zstd", "snappy", "lz4", "lz4_raw", "brotli", "gzip"])
+def test_decompressed_body_reads_like_bytes(codec):
+    """A decompressed page body (an Arrow buffer, not copied) indexes and
+    slices as unsigned bytes, like the bytes it was made from."""
+    from pq_engine import compression
+
+    if not compression.available(codec):
+        pytest.skip(f"{codec} not available")
+    body = bytes(range(256)) * 40
+    out = compression.decompress(compression.compress(body, codec), codec)
+    assert len(out) == len(body) and bytes(out) == body
+    assert out[255] == 255 and list(out[250:256]) == list(range(250, 256))

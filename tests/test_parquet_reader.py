@@ -585,3 +585,182 @@ def test_page_crc_write_and_verify(tmp_path):
     buf2[60] ^= 0xFF
     with pytest.raises(ValueError, match="CRC32 mismatch|corrupt"):
         read_parquet_pandas(bytes(buf2))
+
+
+# --------------------------------------------------------------------------
+# predicate-first filtered reads: the predicate's columns are decoded first,
+# the other columns only over the pages that hold a matching row
+
+PF_ROWS = 6000
+
+
+def _pf_table():
+    rng = np.random.default_rng(5)
+    n = PF_ROWS
+
+    def nulls(p):
+        return rng.random(n) < p
+
+    s = [None if z else "s%05d" % (2 * v)
+         for z, v in zip(nulls(0.1), rng.integers(0, 10_000, n))]
+    b = [None if z else bytes(rng.integers(0, 256, int(k), dtype=np.uint8))
+         for z, k in zip(nulls(0.2), rng.integers(0, 40, n))]
+    k = [None if z else int(v)
+         for z, v in zip(nulls(0.15), rng.integers(-50_000, 50_000, n))]
+    ts = np.int64(1_600_000_000_000_000) + np.arange(n, dtype=np.int64) * 1_000_000
+    return pa.table({
+        "id": pa.array(np.arange(n), pa.int64()),
+        "s": pa.array(s, pa.string()),
+        "b": pa.array(b, pa.binary()),
+        "k": pa.array(k, pa.int64()),
+        "ts": pa.array(np.where(nulls(0.05), None, ts).tolist(),
+                       pa.timestamp("us")),
+    })
+
+
+def _pf_files(tmp_path, tbl):
+    """The same table as an interop-writer file (row groups of 2000 rows,
+    pages of 250, so a page index), and as pyarrow files with and without
+    one."""
+    from pq_engine.interop.parquet_writer import write_parquet
+    from pq_engine.spark.engine import _arrow_to_values, arrow_type_to_ptype
+
+    cols = []
+    for f in tbl.schema:
+        ptype = arrow_type_to_ptype(f.type)
+        values, validity = _arrow_to_values(tbl[f.name], ptype)
+        cols.append({"name": f.name, "ptype": ptype, "codec": "plain",
+                     "values": values, "validity": validity})
+    ours = str(tmp_path / "interop.parquet")
+    write_parquet(ours, cols, tbl.num_rows, row_group_size=2000,
+                  data_page_rows=250, compression="zstd")
+    indexed = str(tmp_path / "pa_index.parquet")
+    pq.write_table(tbl, indexed, row_group_size=2000, data_page_size=2048,
+                   write_page_index=True, use_dictionary=False,
+                   compression="snappy")
+    whole = str(tmp_path / "pa_whole.parquet")
+    pq.write_table(tbl, whole, row_group_size=2000, use_dictionary=False)
+    return {"interop": ours, "pa_index": indexed, "pa_whole": whole}
+
+
+def _pf_read(path, pred, columns=None):
+    from pq_engine.interop.parquet_reader import _arrow_flat, read_parquet_filtered
+
+    schema, data, report = read_parquet_filtered(path, pred, columns)
+    by_name = {c["name"]: c for c in schema}
+    got = {name: _arrow_flat(v, val, by_name[name]).to_pylist()
+           for name, (v, val) in data.items()}
+    return got, report
+
+
+TS0 = 1_600_000_000_000_000
+PF_PREDICATES = {
+    # "s" holds only even numbers: inside every page's min/max, never equal
+    "miss": (("eq", "s", "s10001"), None),
+    "sparse_eq": (("eq", "k", -48_387), None),  # the k of row 4321 only
+    "range": (("and", ("ge", "ts", TS0 + 3_100 * 1_000_000),
+               ("lt", "ts", TS0 + 3_160 * 1_000_000)), None),
+    "and": (("and", ("gt", "k", 40_000), ("lt", "s", "s02000")), None),
+    "or": (("or", ("eq", "s", "s06714"), ("ge", "id", PF_ROWS - 30)), None),
+    "outside_projection": (("le", "k", -49_000), ["b", "ts"]),
+    "all_rows": (None, ["s", "k"]),
+}
+
+
+def _pf_expected(tbl, pred):
+    import pyarrow.compute as pc
+
+    if pred is None:
+        return tbl
+    ops = {"eq": pc.equal, "ne": pc.not_equal, "lt": pc.less,
+           "le": pc.less_equal, "gt": pc.greater, "ge": pc.greater_equal}
+
+    def mask(p):
+        if p[0] == "and":
+            return pc.and_kleene(mask(p[1]), mask(p[2]))
+        if p[0] == "or":
+            return pc.or_kleene(mask(p[1]), mask(p[2]))
+        op, name, val = p
+        col = tbl[name]
+        if pa.types.is_timestamp(col.type):
+            col = col.cast(pa.int64())
+        return ops[op](col, val)
+
+    return tbl.filter(mask(pred))  # null keeps no row, the SQL rule
+
+
+@pytest.mark.parametrize("name", list(PF_PREDICATES))
+@pytest.mark.parametrize("kind", ["interop", "pa_index", "pa_whole"])
+def test_predicate_first_rows_match_pyarrow(tmp_path, kind, name):
+    """Every predicate kind returns exactly pyarrow's filter of the same
+    table, whatever the file carries (a page index or none)."""
+    tbl = _pf_table()
+    path = _pf_files(tmp_path, tbl)[kind]
+    pred, columns = PF_PREDICATES[name]
+    got, report = _pf_read(path, pred, columns)
+    exp = _pf_expected(tbl, pred)
+    cols = columns or tbl.column_names
+    assert list(got) == cols
+    for c in cols:
+        col = exp[c]
+        if pa.types.is_timestamp(col.type):
+            col = col.cast(pa.int64())  # the reader returns the raw int64
+        assert got[c] == col.to_pylist(), c
+    assert report["rows_matched"] == exp.num_rows
+    if name == "sparse_eq":
+        assert exp.num_rows == 1
+
+
+@pytest.mark.parametrize("kind", ["interop", "pa_index", "pa_whole"])
+def test_predicate_first_miss_decodes_only_predicate_pages(tmp_path, kind):
+    """A miss the indexes cannot disprove decodes the predicate column's
+    pages and nothing else; ``pages_total`` still counts every page of
+    every read column, as an unfiltered read of the same file does."""
+    tbl = _pf_table()
+    path = _pf_files(tmp_path, tbl)[kind]
+    _, full = _pf_read(path, None)
+    _, s_only = _pf_read(path, None, ["s"])
+    assert full["pages_scanned"] == full["pages_total"]
+    got, miss = _pf_read(path, PF_PREDICATES["miss"][0])
+    assert all(v == [] for v in got.values())
+    assert miss["row_groups_scanned"] == miss["row_groups_total"] == 3
+    assert miss["rows_after_prune"] == PF_ROWS and miss["rows_matched"] == 0
+    assert miss["pages_total"] == full["pages_total"]
+    assert miss["pages_scanned"] == s_only["pages_total"]
+    assert miss["pages_scanned"] < miss["pages_total"]
+
+
+def test_predicate_first_decodes_only_pages_with_a_match(tmp_path):
+    """An eq the page index cannot narrow (random ``s`` values) decodes the
+    predicate column's surviving pages, then in each other column only the
+    pages that hold a matching row."""
+    tbl = _pf_table()
+    path = _pf_files(tmp_path, tbl)["interop"]
+    value = tbl["s"][4321].as_py()
+    pred = ("eq", "s", value)
+    _, s_only = _pf_read(path, pred, ["s"])
+    got, report = _pf_read(path, pred)
+    rows = [i for i, v in enumerate(tbl["s"].to_pylist()) if v == value]
+    assert got["id"] == rows
+    # every column pages at the same 250-row boundaries
+    match_pages = len({r // 250 for r in rows})
+    assert s_only["pages_scanned"] > 2 * match_pages
+    assert report["pages_total"] == 5 * s_only["pages_total"]
+    assert report["pages_scanned"] == s_only["pages_scanned"] + 4 * match_pages
+
+
+def test_predicate_first_offset_index_missing_a_matching_row(tmp_path, monkeypatch):
+    """An OffsetIndex whose pages do not reach a matching row (a corrupt
+    file) raises instead of returning a column shorter than the others."""
+    from pq_engine.interop import parquet_reader as R
+
+    path = _pf_files(tmp_path, _pf_table())["interop"]
+    real = R._parse_offset_index
+
+    def drop_first_page(buf, off, ln, chunk=None, crypto=None):
+        locs = real(buf, off, ln, chunk, crypto)
+        return locs[1:] if chunk["path"] == ["b"] else locs
+
+    monkeypatch.setattr(R, "_parse_offset_index", drop_first_page)
+    with pytest.raises(ValueError, match="does not cover"):
+        R.read_parquet_filtered(path, ("eq", "id", 3))

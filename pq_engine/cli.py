@@ -74,32 +74,59 @@ def _load(path):
     return tbl
 
 
-def _page_dicts(tbl, split, batch, column):
-    import pyarrow.compute as pc
+_PAGE_FIELDS = ("page", "codec", "ptype", "n_rows", "crc32", "compression")
 
-    mask = pc.and_(
-        pc.and_(
-            pc.and_(pc.equal(tbl["split_id"], split), pc.equal(tbl["batch_id"], batch)),
-            pc.equal(tbl["column"], column),
-        ),
-        pc.greater_equal(tbl["page"], -2),  # keep chunk dict pages (-2);
-        # bloom rows (-1) are skipped inside decode_column
-    )
-    sub = tbl.filter(mask).sort_by("page")
-    return [
-        (
-            {
-                "page": sub["page"][i].as_py(),
-                "codec": sub["codec"][i].as_py(),
-                "ptype": sub["ptype"][i].as_py(),
-                "n_rows": sub["n_rows"][i].as_py(),
-                "crc32": sub["crc32"][i].as_py(),
-                "compression": sub["compression"][i].as_py(),
-            },
-            sub["data"][i].as_py(),
-        )
-        for i in range(sub.num_rows)
-    ]
+
+class _PageChunks:
+    """The page table grouped once: one stable sort of its chunk rows
+    (data, dictionary and bloom pages: ``page >= -2``; ``decode_column``
+    skips the bloom rows) by (column, split_id, batch_id, page), sliced per
+    chunk. ``columns`` and ``keys`` are the sorted distinct columns and
+    (split_id, batch_id) pairs of the whole table. Page bodies are
+    materialised one chunk at a time, when :meth:`pages` asks for them."""
+
+    def __init__(self, tbl):
+        import pyarrow.compute as pc
+
+        split = tbl["split_id"].to_numpy()
+        batch = tbl["batch_id"].to_numpy()
+        self.columns = sorted(pc.unique(tbl["column"]).to_pylist())
+        self.keys = sorted(set(zip(split.tolist(), batch.tolist())))
+        keep = np.flatnonzero(tbl["page"].to_numpy() >= -2)
+        by = ["column", "split_id", "batch_id", "page"]
+        heads = tbl.select(by).take(keep)
+        order = pc.sort_indices(heads, sort_keys=[(k, "ascending") for k in by]).to_numpy()
+        self._rows = keep[order]
+        heads = heads.take(order)
+        new = np.zeros(len(order), dtype=bool)
+        new[:1] = True
+        for k in by[:3]:
+            new[1:] |= pc.not_equal(heads[k][1:], heads[k][:-1]).to_numpy()
+        starts = np.flatnonzero(new)
+        ends = [*starts[1:].tolist(), len(order)]
+        heads = heads.take(starts)
+        chunk_keys = zip(*(heads[k].to_pylist() for k in by[:3]))
+        self._slices = dict(zip(chunk_keys, zip(starts.tolist(), ends)))
+        self._tbl = tbl
+
+    def chunk(self, split, batch, column):
+        """One chunk's rows of the page table, in page order, cut out as
+        zero-copy slices, one per run of consecutive rows (``Table.take``
+        would first concatenate every chunk of the table)."""
+        import pyarrow as pa
+
+        a, b = self._slices.get((column, split, batch), (0, 0))
+        rows = self._rows[a:b]
+        if not len(rows):
+            return self._tbl.slice(0, 0)
+        runs = np.split(rows, np.flatnonzero(np.diff(rows) != 1) + 1)
+        return pa.concat_tables(self._tbl.slice(r[0], len(r)) for r in runs)
+
+    def pages(self, split, batch, column) -> list[tuple[dict, bytes]]:
+        """One chunk's ``(meta, body)`` pages, in page order."""
+        sub = self.chunk(split, batch, column).select([*_PAGE_FIELDS, "data"]).to_pydict()
+        bodies = sub.pop("data")
+        return [(dict(zip(_PAGE_FIELDS, meta)), body) for *meta, body in zip(*sub.values(), bodies)]
 
 
 def cmd_meta(tbl, args):
@@ -146,7 +173,7 @@ def cmd_stats(tbl, args):
 
 
 def cmd_dictionary(tbl, args):
-    pages = _page_dicts(tbl, args.split, args.batch, args.column)
+    pages = _PageChunks(tbl).pages(args.split, args.batch, args.column)
     if not pages:
         sys.exit(f"no pages for column {args.column}")
     values, _ = decode_column(pages)
@@ -159,18 +186,14 @@ def cmd_dictionary(tbl, args):
 
 
 def cmd_cat(tbl, args):
-    import pyarrow.compute as pc
-
-    keys = set()
-    for i in range(tbl.num_rows):
-        keys.add((tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()))
-    columns = sorted({tbl["column"][i].as_py() for i in range(tbl.num_rows)})
+    chunks = _PageChunks(tbl)
+    columns = chunks.columns
     emitted = 0
-    for split, batch in sorted(keys):
+    for split, batch in chunks.keys:
         decoded = {}
         n = None
         for c in columns:
-            values, validity = decode_column(_page_dicts(tbl, split, batch, c))
+            values, validity = decode_column(chunks.pages(split, batch, c))
             if hasattr(values, "to_pylist"):
                 vals = values.to_pylist()
             else:
@@ -194,16 +217,14 @@ def cmd_scan(tbl, args):
     """ScanCommand analog: decode everything, count records, xor checksums."""
     import zlib as _z
 
-    keys = sorted(
-        {(tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()) for i in range(tbl.num_rows)}
-    )
-    columns = sorted({tbl["column"][i].as_py() for i in range(tbl.num_rows)})
+    chunks = _PageChunks(tbl)
+    keys, columns = chunks.keys, chunks.columns
     rows = 0
     crc = 0
     for split, batch in keys:
         n = None
         for c in columns:
-            pages = _page_dicts(tbl, split, batch, c)
+            pages = chunks.pages(split, batch, c)
             values, validity = decode_column(pages)
             n = len(validity) if validity is not None else len(values)
             for meta, _ in pages:
@@ -427,12 +448,10 @@ def cmd_mask(tbl, args):
         sys.exit("--column and --out required")
     os.makedirs(args.out, exist_ok=True)
     rest = tbl.filter(pc.not_equal(tbl["column"], args.column))
-    keys = sorted(
-        {(tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()) for i in range(tbl.num_rows)}
-    )
+    chunks = _PageChunks(tbl)
     new_rows = []
-    for split, batch in keys:
-        pages = _page_dicts(tbl, split, batch, args.column)
+    for split, batch in chunks.keys:
+        pages = chunks.pages(split, batch, args.column)
         if not pages:
             continue
         data_pages = [p for p in pages if p[0]["page"] >= 0]
@@ -1062,22 +1081,15 @@ def cmd_check_stats(tbl, args):
     import pyarrow.compute as pc
 
     bad = 0
-    keys = sorted(
-        {(tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()) for i in range(tbl.num_rows)}
-    )
-    columns = sorted({tbl["column"][i].as_py() for i in range(tbl.num_rows)})
-    for split, batch in keys:
-        for c in columns:
-            pages = _page_dicts(tbl, split, batch, c)
+    chunks = _PageChunks(tbl)
+    for split, batch in chunks.keys:
+        for c in chunks.columns:
+            pages = chunks.pages(split, batch, c)
             data = [p for p in pages if p[0]["page"] >= 0]
             if not data:
                 continue
-            sub = tbl.filter(
-                pc.and_(
-                    pc.and_(pc.equal(tbl["split_id"], split), pc.equal(tbl["batch_id"], batch)),
-                    pc.and_(pc.equal(tbl["column"], c), pc.greater_equal(tbl["page"], 0)),
-                )
-            ).sort_by("page")
+            sub = chunks.chunk(split, batch, c)
+            sub = sub.filter(pc.greater_equal(sub["page"], 0))
             ptype = data[0][0]["ptype"]
             if ptype.startswith(("list<", "fixed[")) or ptype in ("binary",):
                 continue  # stats omitted by design for these
@@ -1183,64 +1195,75 @@ def cmd_geospatial_stats(tbl, args):
         )
 
 
-def cmd_to_parquet(tbl, args):
-    """ConvertCommand analog (to standard PARQUET instead of Avro — the
-    interop target independent readers actually consume): decode the page
-    table and write a real .parquet via the physical interop writer, one
-    row group, readable by pyarrow/DuckDB."""
-    from .interop.parquet_writer import write_parquet
-    from .pages import kernel_ptype
+# flat ptypes every export command writes; decimal64 joins them by prefix
+_EXPORT_PTYPES = frozenset({
+    "string", "binary", "int32", "int64", "float32", "float64", "bool",
+    "timestamp_us", "timestamp_ntz_us", "date32", "uuid",
+})
 
-    if not args.out:
-        sys.exit("--out required")
-    keys = sorted(
-        {(tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()) for i in range(tbl.num_rows)}
-    )
-    columns = sorted({tbl["column"][i].as_py() for i in range(tbl.num_rows)})
-    cols_out = []
-    n_rows = 0
-    for c in columns:
-        vals_parts, valid_parts, ptype = [], [], None
-        for split, batch in keys:
-            pages = _page_dicts(tbl, split, batch, c)
+
+def _export_columns(tbl, ptypes, prefixes, command) -> tuple[list[dict], int]:
+    """Decode every column of the page table for an export command, its
+    chunks in (split_id, batch_id) order, one chunk's pages at a time.
+    Returns ``([{name, ptype, values, validity}], n_rows)``; validity is
+    None for a column without nulls. A column whose ptype is neither in
+    ``ptypes`` nor starts with one of ``prefixes`` is reported and skipped."""
+    from .pages import _concat_ragged
+
+    chunks = _PageChunks(tbl)
+    cols_out, n_rows = [], 0
+    for c in chunks.columns:
+        vals_parts, valid_parts = [], []
+        for split, batch in chunks.keys:
+            pages = chunks.pages(split, batch, c)
             if not pages:
                 continue
             ptype = next(p[0]["ptype"] for p in pages if p[0]["page"] >= 0)
+            if ptype not in ptypes and not ptype.startswith(prefixes):
+                print(f"skipping column {c}: {ptype} not supported by {command}")
+                vals_parts = []
+                break
             values, validity = decode_column(pages)
-            n = len(validity) if validity is not None else len(values)
             vals_parts.append(values)
             valid_parts.append(
-                validity if validity is not None else np.ones(n, dtype=bool)
+                validity if validity is not None else np.ones(len(values), dtype=bool)
             )
-        if ptype is None:
+        if not vals_parts:
             continue
-        supported = ptype in (
-            "string", "binary", "int32", "int64", "float32", "float64", "bool",
-            "timestamp_us", "timestamp_ntz_us", "date32", "uuid", "float16",
-            "interval", "geometry",
-        ) or ptype.startswith(("decimal64[", "decimal_flba[", "fixed["))
-        if ptype.startswith("list<") or not supported:
-            print(f"skipping column {c}: {ptype} not supported by to-parquet")
-            continue
-        from .pages import _concat_ragged
-
         if ptype in RAGGED_TYPES:
             values = _concat_ragged(vals_parts)
         else:
             values = np.concatenate(vals_parts)
         validity = np.concatenate(valid_parts)
         n_rows = len(validity)
-        cols_out.append(
-            {
-                # geometry exports as plain BINARY (WKB); every other logical
-                # type keeps its annotation through the typed interop writer
-                "name": c,
-                "ptype": "binary" if ptype == "geometry" else ptype,
-                "codec": "plain",
-                "values": values,
-                "validity": None if validity.all() else validity,
-            }
-        )
+        cols_out.append({
+            "name": c,
+            "ptype": ptype,
+            "values": values,
+            "validity": None if validity.all() else validity,
+        })
+    return cols_out, n_rows
+
+
+def cmd_to_parquet(tbl, args):
+    """ConvertCommand analog (to standard PARQUET instead of Avro — the
+    interop target independent readers actually consume): decode the page
+    table and write a real .parquet via the physical interop writer, one
+    row group, readable by pyarrow/DuckDB."""
+    from .interop.parquet_writer import write_parquet
+
+    if not args.out:
+        sys.exit("--out required")
+    cols_out, n_rows = _export_columns(
+        tbl, _EXPORT_PTYPES | {"float16", "interval", "geometry"},
+        ("decimal64[", "decimal_flba[", "fixed["), "to-parquet",
+    )
+    for col in cols_out:
+        # geometry exports as plain BINARY (WKB); every other logical type
+        # keeps its annotation through the typed interop writer
+        if col["ptype"] == "geometry":
+            col["ptype"] = "binary"
+        col["codec"] = "plain"
     write_parquet(args.out, cols_out, n_rows, compression=args.to)
     print(f"wrote {n_rows} rows x {len(cols_out)} columns → {args.out}")
 
@@ -1252,52 +1275,10 @@ def cmd_to_avro(tbl, args):
     directly from the public Avro 1.11 spec). Supported: flat primitives +
     date/timestamp/decimal/uuid logical types, nullable as unions."""
     from .interop.avro import write_avro
-    from .pages import _concat_ragged
 
     if not args.out:
         sys.exit("--out required")
-    keys = sorted(
-        {(tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()) for i in range(tbl.num_rows)}
-    )
-    columns = sorted({tbl["column"][i].as_py() for i in range(tbl.num_rows)})
-    cols_out = []
-    n_rows = 0
-    for c in columns:
-        vals_parts, valid_parts, ptype = [], [], None
-        for split, batch in keys:
-            pages = _page_dicts(tbl, split, batch, c)
-            if not pages:
-                continue
-            ptype = next(p[0]["ptype"] for p in pages if p[0]["page"] >= 0)
-            values, validity = decode_column(pages)
-            n = len(validity) if validity is not None else len(values)
-            vals_parts.append(values)
-            valid_parts.append(
-                validity if validity is not None else np.ones(n, dtype=bool)
-            )
-        if ptype is None:
-            continue
-        supported = ptype in (
-            "string", "binary", "int32", "int64", "float32", "float64", "bool",
-            "timestamp_us", "timestamp_ntz_us", "date32", "uuid",
-        ) or ptype.startswith("decimal64[")
-        if not supported:
-            print(f"skipping column {c}: {ptype} not supported by to-avro")
-            continue
-        if ptype in RAGGED_TYPES:
-            values = _concat_ragged(vals_parts)
-        else:
-            values = np.concatenate(vals_parts)
-        validity = np.concatenate(valid_parts)
-        n_rows = len(validity)
-        cols_out.append(
-            {
-                "name": c,
-                "ptype": ptype,
-                "values": values,
-                "validity": None if validity.all() else validity,
-            }
-        )
+    cols_out, n_rows = _export_columns(tbl, _EXPORT_PTYPES, ("decimal64[",), "to-avro")
     write_avro(args.out, "pq_table", cols_out, n_rows,
                codec=("deflate" if args.to == "deflate" else "null"))
     print(f"wrote {n_rows} rows x {len(cols_out)} columns → {args.out} (avro)")
@@ -1311,57 +1292,13 @@ def cmd_to_protobuf(tbl, args):
     writer. Supported: flat primitives + date/timestamp/decimal/uuid
     (sint64 with comments), nullable as proto3 optional presence."""
     from .interop.protobuf import write_protobuf
-    from .pages import _concat_ragged
 
     if not args.out:
         sys.exit("--out required")
-    keys = sorted(
-        {(tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()) for i in range(tbl.num_rows)}
-    )
-    columns = sorted({tbl["column"][i].as_py() for i in range(tbl.num_rows)})
-    cols_out = []
-    n_rows = 0
-    for c in columns:
-        vals_parts, valid_parts, ptype = [], [], None
-        for split, batch in keys:
-            pages = _page_dicts(tbl, split, batch, c)
-            if not pages:
-                continue
-            ptype = next(p[0]["ptype"] for p in pages if p[0]["page"] >= 0)
-            values, validity = decode_column(pages)
-            n = len(validity) if validity is not None else len(values)
-            vals_parts.append(values)
-            valid_parts.append(
-                validity if validity is not None else np.ones(n, dtype=bool)
-            )
-        if ptype is None:
-            continue
-        supported = ptype in (
-            "string", "binary", "int32", "int64", "float32", "float64", "bool",
-            "timestamp_us", "timestamp_ntz_us", "date32", "uuid",
-        ) or ptype.startswith("decimal64[")
-        if not supported:
-            print(f"skipping column {c}: {ptype} not supported by to-protobuf")
-            continue
-        if ptype in RAGGED_TYPES:
-            values = _concat_ragged(vals_parts)
-        else:
-            values = np.concatenate(vals_parts)
-        validity = np.concatenate(valid_parts)
-        n_rows = len(validity)
-        cols_out.append(
-            {
-                "name": c,
-                "ptype": ptype,
-                "values": values,
-                "validity": None if validity.all() else validity,
-            }
-        )
+    cols_out, n_rows = _export_columns(tbl, _EXPORT_PTYPES, ("decimal64[",), "to-protobuf")
     schema_path = write_protobuf(args.out, "PqTable", cols_out, n_rows)
     print(f"wrote {n_rows} rows x {len(cols_out)} columns → {args.out} "
           f"(proto3 delimited; schema {schema_path})")
-
-
 
 
 def cmd_to_thrift(tbl, args):
@@ -1372,52 +1309,12 @@ def cmd_to_thrift(tbl, args):
     Supported: flat primitives + date/timestamp/decimal/uuid (i64/i32 with
     comments), nullable as thrift optional presence."""
     from .interop.thriftobj import write_thrift
-    from .pages import _concat_ragged
 
     if not args.out:
         sys.exit("--out required")
-    keys = sorted(
-        {(tbl["split_id"][i].as_py(), tbl["batch_id"][i].as_py()) for i in range(tbl.num_rows)}
+    cols_out, n_rows = _export_columns(
+        tbl, _EXPORT_PTYPES - {"float32"}, ("decimal64[",), "to-thrift"
     )
-    columns = sorted({tbl["column"][i].as_py() for i in range(tbl.num_rows)})
-    cols_out = []
-    n_rows = 0
-    for c in columns:
-        vals_parts, valid_parts, ptype = [], [], None
-        for split, batch in keys:
-            pages = _page_dicts(tbl, split, batch, c)
-            if not pages:
-                continue
-            ptype = next(p[0]["ptype"] for p in pages if p[0]["page"] >= 0)
-            values, validity = decode_column(pages)
-            n = len(validity) if validity is not None else len(values)
-            vals_parts.append(values)
-            valid_parts.append(
-                validity if validity is not None else np.ones(n, dtype=bool)
-            )
-        if ptype is None:
-            continue
-        supported = ptype in (
-            "string", "binary", "int32", "int64", "float64", "bool",
-            "timestamp_us", "timestamp_ntz_us", "date32", "uuid",
-        ) or ptype.startswith("decimal64[")
-        if not supported:
-            print(f"skipping column {c}: {ptype} not supported by to-thrift")
-            continue
-        if ptype in RAGGED_TYPES:
-            values = _concat_ragged(vals_parts)
-        else:
-            values = np.concatenate(vals_parts)
-        validity = np.concatenate(valid_parts)
-        n_rows = len(validity)
-        cols_out.append(
-            {
-                "name": c,
-                "ptype": ptype,
-                "values": values,
-                "validity": None if validity.all() else validity,
-            }
-        )
     schema_path = write_thrift(args.out, "PqTable", cols_out, n_rows)
     print(f"wrote {n_rows} rows x {len(cols_out)} columns -> {args.out} "
           f"(thrift compact; schema {schema_path})")

@@ -9,10 +9,17 @@ parquet-format "bit-packed, LSB-first" order used by the RLE/bit-packed hybrid
 bit *j* lands at global bit position ``i*width + j``; within each byte, bit 0
 is the least-significant bit.
 
-One kernel covers widths 0..64 — no generated code.
+Decoding works on groups of 8 values, which take exactly ``width`` bytes.
+For widths up to 57 every value's bits fit in the unaligned little-endian
+64-bit word that starts at its first byte, so one gather of those words, a
+shift by each lane's bit offset and a mask unpack every group of a stream at
+once (:func:`unpack_groups`; the groups may sit anywhere in the buffer and
+may each have their own width). Widths 58..64 expand to a bit matrix.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 
@@ -36,14 +43,74 @@ def pack(values: np.ndarray, width: int) -> bytes:
     return np.packbits(bits[:, :width].reshape(-1), bitorder="little").tobytes()
 
 
+_MASK = np.array([(1 << w) - 1 for w in range(65)], dtype=np.uint64)
+WORD_WIDTH_MAX = 57  # 7 bits of offset + 57 bits of value fill one 64-bit word
+
+
+@functools.lru_cache(maxsize=None)
+def _lane_tables(lanes: int) -> tuple[np.ndarray, np.ndarray]:
+    """(byte offset, bit shift) of lane j of a ``lanes``-value group packed
+    at width w, as ``(65, lanes)`` tables indexed by w."""
+    bits = np.arange(65, dtype=np.int64)[:, None] * np.arange(lanes, dtype=np.int64)
+    byte, shift = bits >> 3, (bits & 7).astype(np.uint64)
+    byte.flags.writeable = shift.flags.writeable = False
+    return byte, shift
+
+
 def unpack(data, width: int, count: int) -> np.ndarray:
     """Inverse of :func:`pack`. ``data`` may be longer than needed (padded
-    stream tail); exactly ``count`` values are returned as uint64."""
-    if width == 0:
+    stream tail); exactly ``count`` values are returned as uint64.
+    ``ValueError`` when ``data`` holds fewer than ``count`` values."""
+    if width == 0 or count == 0:
         return np.zeros(count, dtype=np.uint64)
-    if count == 0:
-        return np.zeros(0, dtype=np.uint64)
+    if width < 0 or width > 64:
+        raise ValueError(f"width out of range: {width}")
     raw = np.frombuffer(data, dtype=np.uint8, count=(count * width + 7) // 8)
+    groups = -(-count // 8)
+    return unpack_groups(raw, np.arange(0, groups * width, width), width).reshape(-1)[:count]
+
+
+def unpack_groups(raw: np.ndarray, starts: np.ndarray, width, lanes: int = 8) -> np.ndarray:
+    """Unpack groups of ``lanes`` values (a multiple of 8) out of the uint8
+    array ``raw``: group *k* starts at byte ``starts[k]`` and is packed at
+    ``width`` bits, an int or one int64 width per group. Returns a
+    ``(len(starts), lanes)`` uint64 array; ``ValueError`` for a width above
+    64. A group may run past the end of ``raw`` only in lanes the caller
+    drops: bytes past the end read as zero."""
+    wmax = width.max() if np.ndim(width) else width
+    if wmax > 64:
+        raise ValueError(f"bit width {wmax} above 64")
+    padded = np.zeros(len(raw) + 64, dtype=np.uint8)
+    padded[: len(raw)] = raw
+    if np.ndim(width) == 0 and width > WORD_WIDTH_MAX:
+        return _unpack_wide(padded, starts, width, lanes)
+    byte, shift = _lane_tables(lanes)
+    # the unaligned 64-bit word at every byte offset, as a strided view;
+    # ``take`` gathers from an aligned copy of it
+    words = np.ndarray((len(raw) + 57,), dtype="<u8", buffer=padded, strides=(1,))
+    if np.ndim(width):
+        out = words.take(starts[:, None] + byte.take(width, axis=0))
+        out >>= shift.take(width, axis=0)
+        out &= _MASK.take(width)[:, None]
+    else:
+        out = words.take(starts[:, None] + byte[width])
+        out >>= shift[width]
+        out &= _MASK[width]
+    if wmax > WORD_WIDTH_MAX:
+        for w in np.unique(width[width > WORD_WIDTH_MAX]):
+            rows = np.flatnonzero(width == w)
+            out[rows] = _unpack_wide(padded, starts[rows], int(w), lanes)
+    return out
+
+
+def _unpack_wide(padded: np.ndarray, starts: np.ndarray, width: int, lanes: int) -> np.ndarray:
+    """:func:`unpack_groups` for one width above ``WORD_WIDTH_MAX``."""
+    group_bytes = padded[starts[:, None] + np.arange(lanes * width // 8)].reshape(-1)
+    return _unpack_bits(group_bytes, width, lanes * len(starts)).reshape(-1, lanes)
+
+
+def _unpack_bits(raw: np.ndarray, width: int, count: int) -> np.ndarray:
+    """Any width: expand every value to 64 bits, then repack as uint64."""
     bits = np.unpackbits(raw, bitorder="little")[: count * width]
     full = np.zeros((count, 64), dtype=np.uint8)
     full[:, :width] = bits.reshape(count, width)

@@ -17,14 +17,16 @@ DeltaBinaryPackingValuesWriter.java:48-50):
 The final block's missing values are zero-padded; miniblocks past the data get
 width 0. All delta math is vectorized (``np.diff`` on int64 with wraparound);
 bit-packing of miniblocks is batched *per distinct width* so the Python loop
-runs over blocks (n/128) only for header assembly.
+runs over blocks (n/128) only for header assembly. The decoder's Python loop
+also runs over blocks only (one minDelta varint and one sum of width bytes
+each); a single gather then unpacks every miniblock at its own width.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .bitpack import pack, unpack
+from .bitpack import pack, unpack_groups
 from .varint import encode_uvarint, read_uvarint, zigzag_decode, zigzag_encode
 
 BLOCK = 128
@@ -133,14 +135,19 @@ def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
     (/root/reference/.../delta/DeltaBinaryPackingValuesReader.java:121,150).
     ``return_consumed=True`` also returns the byte position after the block
     — needed when a DELTA stream is FOLLOWED by payload in the same body
-    (parquet DELTA_LENGTH/DELTA_BYTE_ARRAY layouts)."""
+    (parquet DELTA_LENGTH/DELTA_BYTE_ARRAY layouts). ``ValueError`` when the
+    stream is cut short or its header is malformed.
+
+    Only the block headers are walked in Python: one minDelta varint per
+    block, and the sum of its width bytes finds the next block. One
+    :func:`unpack_groups` call then unpacks every miniblock at its own
+    width."""
     def _ret(arr, pos):
         return (arr, pos) if return_consumed else arr
 
     pos = 0
     block, pos = read_uvarint(buf, pos)
     nmini, pos = read_uvarint(buf, pos)
-    mini = block // nmini
     n, pos = read_uvarint(buf, pos)
     if n == 0:
         return _ret(np.zeros(0, dtype=dtype), pos)
@@ -148,54 +155,37 @@ def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
     first = zigzag_decode(zz)
     if n == 1:
         return _ret(np.array([first], dtype=np.int64).astype(dtype), pos)
+    mini = block // nmini if nmini else 0
+    if mini == 0 or mini * nmini != block or mini % 8:
+        raise ValueError(f"DELTA block of {block} values in {nmini} miniblocks")
 
     nd = n - 1
     nblocks = (nd + block - 1) // block
-    deltas = np.zeros(nblocks * block, dtype=np.int64)
-    # pass 1 (scalar, per block/miniblock HEADERS only): varints, width bytes,
-    # payload positions. pass 2 unpacks all miniblocks of one width in a
-    # single vectorized call and scatters them — the former per-miniblock
-    # unpack() paid numpy call overhead ~30x per 128-value block
-    min_deltas = np.zeros(nblocks, dtype=np.int64)
-    ent_pos: list[int] = []
-    ent_base: list[int] = []
-    ent_w: list[int] = []
+    # spec: miniblocks past the data carry NO body bytes, and readers must
+    # accept arbitrary width bytes for them
+    tail_minis = -(-(nd - (nblocks - 1) * block) // mini)
+    min_deltas, width_bytes, payload = [], [], []
     for b in range(nblocks):
         zz, pos = read_uvarint(buf, pos)
-        min_deltas[b] = zigzag_decode(zz)
-        widths = buf[pos : pos + nmini]
+        min_deltas.append(zigzag_decode(zz))
+        w = buf[pos : pos + nmini]
+        width_bytes.append(w)
         pos += nmini
-        base = b * block
-        for m in range(nmini):
-            if base + m * mini >= nd:
-                # spec: unneeded trailing miniblocks carry NO body bytes and
-                # readers must accept arbitrary width bytes for them
-                continue
-            w = widths[m]
-            if w:
-                ent_pos.append(pos)
-                ent_base.append(base + m * mini)
-                ent_w.append(w)
-                pos += mini * w // 8
-    if ent_w:
-        ew = np.array(ent_w)
-        eb = np.array(ent_base)
-        ep = np.array(ent_pos)
-        mv = memoryview(buf) if not isinstance(buf, memoryview) else buf
-        for w in np.unique(ew):
-            w = int(w)
-            sel = np.flatnonzero(ew == w)
-            nb = mini * w // 8
-            cat = b"".join(mv[int(p) : int(p) + nb] for p in ep[sel])
-            vals = unpack(cat, w, mini * len(sel)).view(np.int64).reshape(-1, mini)
-            dst = eb[sel][:, None] + np.arange(mini, dtype=np.int64)
-            deltas[dst.reshape(-1)] = vals.reshape(-1)
-    with np.errstate(over="ignore"):
-        # in-place broadcast add — no block-expanded np.repeat allocation
-        deltas.reshape(nblocks, block)[...] += min_deltas[:, None]
-        deltas = deltas[:nd]
-        out = np.zeros(n, dtype=np.int64)
-        out[0] = first
-        np.cumsum(deltas, out=out[1:])
-        out[1:] += first
+        payload.append(pos)
+        pos += sum(w if b + 1 < nblocks else w[:tail_minis]) * (mini // 8)
+    if pos > len(buf):
+        raise ValueError(f"DELTA stream of {len(buf)} bytes needs {pos}")
+
+    widths = np.frombuffer(b"".join(width_bytes), dtype=np.uint8).astype(np.int64)
+    widths[(nblocks - 1) * nmini + tail_minis :] = 0
+    sizes = widths.reshape(nblocks, nmini) * (mini // 8)
+    starts = sizes.cumsum(axis=1) - sizes + np.array(payload)[:, None]
+    raw = np.frombuffer(buf, dtype=np.uint8, count=pos)
+    deltas = unpack_groups(raw, starts.reshape(-1), widths, mini).view(np.int64)
+    # modular int64 arithmetic: NumPy integer arrays wrap without warning
+    deltas.reshape(nblocks, block)[...] += np.array(min_deltas, dtype=np.int64)[:, None]
+    out = np.empty(n, dtype=np.int64)
+    out[0] = first
+    deltas.reshape(-1)[:nd].cumsum(out=out[1:])
+    out[1:] += first
     return _ret(out.astype(dtype, copy=False), pos)

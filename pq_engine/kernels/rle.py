@@ -23,14 +23,17 @@ from vectorized run boundaries):
 * only the final group of the final run is zero-padded (:255-273).
 
 Run detection is ``np.flatnonzero(np.diff(values))`` — the Python loop below
-iterates over *runs*, never values.
+iterates over *runs*, never values. The decoder likewise walks only the run
+headers in Python; one gather unpacks every bit-packed group of the stream
+(the width is constant within a stream) and one ``np.repeat`` fills the RLE
+runs.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .bitpack import pack, unpack, width_for_max
+from .bitpack import pack, unpack_groups, width_for_max
 from .varint import encode_uvarint, read_uvarint
 
 _MAX_GROUPS_PER_RUN = 63  # 504 values (RunLengthBitPackingHybridEncoder.java:60-66)
@@ -102,34 +105,55 @@ def encode_hybrid(values: np.ndarray, width: int) -> bytes:
 
 
 def decode_hybrid(buf, width: int, count: int) -> np.ndarray:
-    """Decode exactly ``count`` values; returns uint64.
-    Mirrors RunLengthBitPackingHybridDecoder.readNext (:80-90) but materializes
-    whole runs vectorized instead of value-at-a-time."""
+    """Decode exactly ``count`` values; returns uint64. ``ValueError`` when
+    a run the count reaches is cut short.
+
+    Mirrors RunLengthBitPackingHybridDecoder.readNext (:80-90), but only the
+    run headers are walked in Python: every bit-packed group of the stream
+    is then unpacked by one :func:`unpack_groups` call, and the RLE runs are
+    filled by one ``np.repeat``."""
     if count == 0:
         return np.zeros(0, dtype=np.uint64)
     byte_w = (width + 7) // 8
-    parts: list[np.ndarray] = []
-    got = 0
-    pos = 0
+    takes: list[int] = []  # values each run gives, in stream order
+    kinds: list[bool] = []  # True for a bit-packed run
+    rle_values: list[int] = []
+    packed: list[tuple[int, int]] = []  # (payload byte, groups taken)
+    got = pos = 0
     while got < count:
         header, pos = read_uvarint(buf, pos)
         if header & 1:  # bit-packed run
-            groups = header >> 1
-            nvals = groups * 8
-            nbytes = groups * width
-            arr = unpack(buf[pos : pos + nbytes], width, nvals)
-            pos += nbytes
-            take = min(nvals, count - got)
-            parts.append(arr[:take])
-            got += take
+            take = min((header >> 1) * 8, count - got)
+            packed.append((pos, (take + 7) // 8))
+            pos += (header >> 1) * width
         else:  # rle run
-            run = header >> 1
-            value = int.from_bytes(bytes(buf[pos : pos + byte_w]), "little")
+            take = min(header >> 1, count - got)
+            rle_values.append(int.from_bytes(buf[pos : pos + byte_w], "little"))
             pos += byte_w
-            take = min(run, count - got)
-            parts.append(np.full(take, value, dtype=np.uint64))
-            got += take
-    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+        takes.append(take)
+        kinds.append(bool(header & 1))
+        got += take
+    if pos > len(buf):
+        raise ValueError(f"RLE/bit-packed stream of {len(buf)} bytes ends inside a run")
+    if not packed:
+        return np.repeat(np.array(rle_values, dtype=np.uint64), takes)
+    if len(packed) == 1:
+        (p, g), = packed
+        starts = p + np.arange(g) * width
+    else:
+        p, g = np.array(packed, dtype=np.int64).T
+        first = p - (np.cumsum(g) - g) * width  # each run's groups continue its first
+        starts = np.repeat(first, g) + np.arange(int(g.sum())) * width
+    vals = unpack_groups(np.frombuffer(buf, dtype=np.uint8, count=pos), starts, width).reshape(-1)
+    if not rle_values:
+        return vals[:count]
+    takes, kinds = np.array(takes), np.array(kinds)
+    is_packed = np.repeat(kinds, takes)
+    rle_fill = np.repeat(np.array(rle_values, dtype=np.uint64), takes[~kinds])
+    out = np.empty(count, dtype=np.uint64)
+    out[is_packed] = vals[: count - len(rle_fill)]
+    out[~is_packed] = rle_fill
+    return out
 
 
 def encode_hybrid_length_prefixed(values: np.ndarray, width: int) -> bytes:

@@ -28,16 +28,20 @@ def write_uvarint(value: int, out: bytearray) -> None:
 
 
 def read_uvarint(buf, pos: int) -> tuple[int, int]:
-    """Return (value, new_pos)."""
+    """Return (value, new_pos); ``ValueError`` when ``buf`` ends inside
+    the varint."""
     result = 0
     shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return result, pos
-        shift += 7
+    try:
+        while True:
+            b = buf[pos]
+            pos += 1
+            result |= (b & 0x7F) << shift
+            if not (b & 0x80):
+                return result, pos
+            shift += 7
+    except IndexError:
+        raise ValueError(f"varint runs past the end of a {len(buf)}-byte buffer") from None
 
 
 def zigzag_encode(v: int) -> int:

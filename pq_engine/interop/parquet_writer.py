@@ -102,7 +102,9 @@ def _annotate(se: "StructWriter", ptype: str) -> None:
 CODEC_ENUM = {None: 0, "none": 0, "snappy": 1, "gzip": 2, "zstd": 6}
 
 
-def _compress_body(body: bytes, compression: str | None) -> bytes:
+def _compress_body(body, compression: str | None):
+    """The page body as written: ``body`` itself, or pyarrow's compressed
+    Buffer of it (no copy into ``bytes``)."""
     if compression in (None, "none"):
         return body
     import pyarrow as pa
@@ -110,15 +112,22 @@ def _compress_body(body: bytes, compression: str | None) -> bytes:
     # pyarrow's codecs emit exactly the stream formats parquet expects
     # (raw snappy / gzip member / zstd frame) — same codecs its own parquet
     # writer uses
-    return bytes(pa.Codec(compression).compress(body))
+    return pa.Codec(compression).compress(body)
 
 
-def _encode_values(ptype: str, codec: str, vals):
-    """(encoding enum, data page value bytes) of one page's non-null values.
-    Dictionary chunks are factorized once per chunk by _write_flat_chunk."""
+def _encode_values(ptype: str, codec: str, vals, head=b""):
+    """(encoding enum, ``head`` + data page value bytes) of one page's
+    non-null values; ``head`` is a V1 page's definition levels, laid in
+    front of PLAIN strings without a copy of the values. Dictionary chunks
+    are factorized once per chunk by _write_flat_chunk."""
+    if ptype in ("string", "binary") and codec == "plain":
+        return ENC_PLAIN, plain.plain_bytes_after(head, vals)
+    enc, body = _encode_body(ptype, codec, vals)
+    return enc, (head + body if head else body)
+
+
+def _encode_body(ptype: str, codec: str, vals):
     if ptype in ("string", "binary"):
-        if codec == "plain":
-            return ENC_PLAIN, plain.encode_plain_bytes(vals)
         if codec == "dlba":
             return ENC_DLBA, deltastrings.encode_dlba(vals)
         if codec == "dba":
@@ -145,7 +154,7 @@ def _crc32_signed(body) -> int:
     default-on behavior)."""
     import zlib
 
-    c = zlib.crc32(bytes(body))
+    c = zlib.crc32(body)
     return c - (1 << 32) if c >= (1 << 31) else c
 
 
@@ -417,12 +426,17 @@ def _write_flat_chunk(out: bytearray, col: dict, n_rows: int,
         page = _slice_flat_col(col, r0, r1, n_rows)
         pv, pval = page["values"], page.get("validity")
         nv = len(pv.offsets) - 1 if isinstance(pv, RaggedBytes) else len(pv)
+        # V1 data page: [def levels (u32-prefixed RLE)] + values,
+        # compressed together; V2 keeps its levels out of the values
+        levels = (rle.encode_hybrid_length_prefixed(
+            np.asarray(pval).astype(np.uint64), 1)
+            if pval is not None and page_version != 2 else b"")
         if shared is not None:
-            body = dictionary.encode_dict_data_page(
+            body = levels + dictionary.encode_dict_data_page(
                 shared[0][vstart:vstart + nv], shared[1])
             enc = ENC_PLAIN_DICT
         else:
-            enc, body = _encode_values(ptype, codec, pv)
+            enc, body = _encode_values(ptype, codec, pv, levels)
         vstart += nv
         page_off = len(out)
         if page_version == 2:
@@ -442,18 +456,12 @@ def _write_flat_chunk(out: bytearray, col: dict, n_rows: int,
             out += comp_vals
             raw_total += len(dlv) + len(body)
         else:
-            # V1 data page: [def levels (u32-prefixed RLE)] + values,
-            # compressed together
-            levels = (rle.encode_hybrid_length_prefixed(
-                np.asarray(pval).astype(np.uint64), 1)
-                if pval is not None else b"")
-            page_body = levels + body
-            comp_body = _compress_body(page_body, compression)
+            comp_body = _compress_body(body, compression)
             out += _page_header(PAGE_DATA, r1 - r0, enc,
-                                len(page_body), len(comp_body),
+                                len(body), len(comp_body),
                                 body=comp_body)
             out += comp_body
-            raw_total += len(page_body)
+            raw_total += len(body)
         if index_out is None:
             continue  # no page index: skip the per-page min/max
         # PageLocation: offset, size incl. header, first_row_index (rg-rel.)

@@ -14,12 +14,11 @@ For widths up to 57 every value's bits fit in the unaligned little-endian
 64-bit word that starts at its first byte, so one gather of those words, a
 shift by each lane's bit offset and a mask unpack every group of a stream at
 once (:func:`unpack_groups`; the groups may sit anywhere in the buffer and
-may each have their own width). Widths 58..64 expand to a bit matrix.
+may each have their own width, so a DELTA miniblock is a run of groups).
+Widths 58..64 expand to a bit matrix.
 """
 
 from __future__ import annotations
-
-import functools
 
 import numpy as np
 
@@ -47,14 +46,16 @@ _MASK = np.array([(1 << w) - 1 for w in range(65)], dtype=np.uint64)
 WORD_WIDTH_MAX = 57  # 7 bits of offset + 57 bits of value fill one 64-bit word
 
 
-@functools.lru_cache(maxsize=None)
 def _lane_tables(lanes: int) -> tuple[np.ndarray, np.ndarray]:
     """(byte offset, bit shift) of lane j of a ``lanes``-value group packed
     at width w, as ``(65, lanes)`` tables indexed by w."""
     bits = np.arange(65, dtype=np.int64)[:, None] * np.arange(lanes, dtype=np.int64)
-    byte, shift = bits >> 3, (bits & 7).astype(np.uint64)
-    byte.flags.writeable = shift.flags.writeable = False
-    return byte, shift
+    return bits >> 3, (bits & 7).astype(np.uint64)
+
+
+# 8-value groups (the RLE/bit-packed hybrid) and 32-value groups (DELTA
+# miniblocks hold a multiple of 32 values)
+_LANE_TABLES = {lanes: _lane_tables(lanes) for lanes in (8, 32)}
 
 
 def unpack(data, width: int, count: int) -> np.ndarray:
@@ -71,8 +72,8 @@ def unpack(data, width: int, count: int) -> np.ndarray:
 
 
 def unpack_groups(raw: np.ndarray, starts: np.ndarray, width, lanes: int = 8) -> np.ndarray:
-    """Unpack groups of ``lanes`` values (a multiple of 8) out of the uint8
-    array ``raw``: group *k* starts at byte ``starts[k]`` and is packed at
+    """Unpack groups of ``lanes`` values (8 or 32) out of the uint8 array
+    ``raw``: group *k* starts at byte ``starts[k]`` and is packed at
     ``width`` bits, an int or one int64 width per group. Returns a
     ``(len(starts), lanes)`` uint64 array; ``ValueError`` for a width above
     64. A group may run past the end of ``raw`` only in lanes the caller
@@ -84,7 +85,7 @@ def unpack_groups(raw: np.ndarray, starts: np.ndarray, width, lanes: int = 8) ->
     padded[: len(raw)] = raw
     if np.ndim(width) == 0 and width > WORD_WIDTH_MAX:
         return _unpack_wide(padded, starts, width, lanes)
-    byte, shift = _lane_tables(lanes)
+    byte, shift = _LANE_TABLES[lanes]
     # the unaligned 64-bit word at every byte offset, as a strided view;
     # ``take`` gathers from an aligned copy of it
     words = np.ndarray((len(raw) + 57,), dtype="<u8", buffer=padded, strides=(1,))

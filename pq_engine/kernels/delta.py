@@ -19,7 +19,9 @@ width 0. All delta math is vectorized (``np.diff`` on int64 with wraparound);
 bit-packing of miniblocks is batched *per distinct width* so the Python loop
 runs over blocks (n/128) only for header assembly. The decoder's Python loop
 also runs over blocks only (one minDelta varint and one sum of width bytes
-each); a single gather then unpacks every miniblock at its own width.
+each); a single gather then unpacks every 32-value group the count reaches,
+at its miniblock's width. A header whose blocks are not a multiple of 128
+values, or its miniblocks of 32 (the spec's rules), raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -129,6 +131,14 @@ def encode_delta(values: np.ndarray) -> bytes:
     return bytes(out) + body.tobytes()
 
 
+def _first_counts(runs: int, size: int, total: int) -> np.ndarray:
+    """``runs`` counts of ``size``, the last one cut so they sum to
+    ``total``."""
+    counts = np.full(runs, size, dtype=np.int64)
+    counts[-1] = total - (runs - 1) * size
+    return counts
+
+
 def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
     """Decode a full page body (self-describing count). Mirrors
     DeltaBinaryPackingValuesReader.loadNewBlockToBuffer/unpackMiniBlock
@@ -140,8 +150,9 @@ def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
 
     Only the block headers are walked in Python: one minDelta varint per
     block, and the sum of its width bytes finds the next block. One
-    :func:`unpack_groups` call then unpacks every miniblock at its own
-    width."""
+    :func:`unpack_groups` call then unpacks every 32-value group the count
+    reaches, each at its miniblock's width, so the work and memory follow
+    the count and the stream length, not the block size of the header."""
     def _ret(arr, pos):
         return (arr, pos) if return_consumed else arr
 
@@ -156,7 +167,7 @@ def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
     if n == 1:
         return _ret(np.array([first], dtype=np.int64).astype(dtype), pos)
     mini = block // nmini if nmini else 0
-    if mini == 0 or mini * nmini != block or mini % 8:
+    if mini == 0 or mini * nmini != block or block % 128 or mini % 32:
         raise ValueError(f"DELTA block of {block} values in {nmini} miniblocks")
 
     nd = n - 1
@@ -164,26 +175,36 @@ def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
     # spec: miniblocks past the data carry NO body bytes, and readers must
     # accept arbitrary width bytes for them
     tail_minis = -(-(nd - (nblocks - 1) * block) // mini)
-    min_deltas, width_bytes, payload = [], [], []
+    min_deltas, width_bytes, skips = [], [], []
+    end = 0  # where the previous block's payload ended
     for b in range(nblocks):
         zz, pos = read_uvarint(buf, pos)
         min_deltas.append(zigzag_decode(zz))
         w = buf[pos : pos + nmini]
         width_bytes.append(w)
         pos += nmini
-        payload.append(pos)
+        skips.append(pos - end)  # bytes before the block's first group
         pos += sum(w if b + 1 < nblocks else w[:tail_minis]) * (mini // 8)
+        end = pos
     if pos > len(buf):
         raise ValueError(f"DELTA stream of {len(buf)} bytes needs {pos}")
 
-    widths = np.frombuffer(b"".join(width_bytes), dtype=np.uint8).astype(np.int64)
-    widths[(nblocks - 1) * nmini + tail_minis :] = 0
-    sizes = widths.reshape(nblocks, nmini) * (mini // 8)
-    starts = sizes.cumsum(axis=1) - sizes + np.array(payload)[:, None]
-    raw = np.frombuffer(buf, dtype=np.uint8, count=pos)
-    deltas = unpack_groups(raw, starts.reshape(-1), widths, mini).view(np.int64)
+    # every 32-value group the count reaches: the width of its miniblock,
+    # and its start, a running sum of the group sizes and the skips
+    used = (nblocks - 1) * nmini + tail_minis  # miniblocks the count reaches
+    groups = -(-nd // 32)
+    widths = np.frombuffer(b"".join(width_bytes), dtype=np.uint8)[:used].astype(np.int64)
+    widths = np.repeat(widths, _first_counts(used, mini // 32, groups))
+    step = np.empty(groups, dtype=np.int64)
+    step[0] = 0
+    step[1:] = widths[:-1] * 4
+    step[:: block // 32] += skips
+    starts = step.cumsum()
+    raw = np.frombuffer(buf, dtype=np.uint8, count=int(starts[-1] + widths[-1] * 4))
+    deltas = unpack_groups(raw, starts, widths, 32).view(np.int64)
     # modular int64 arithmetic: NumPy integer arrays wrap without warning
-    deltas.reshape(nblocks, block)[...] += np.array(min_deltas, dtype=np.int64)[:, None]
+    mins = np.array(min_deltas, dtype=np.int64)
+    deltas += np.repeat(mins, _first_counts(nblocks, block // 32, groups))[:, None]
     out = np.empty(n, dtype=np.int64)
     out[0] = first
     deltas.reshape(-1)[:nd].cumsum(out=out[1:])

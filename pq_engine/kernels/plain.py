@@ -66,22 +66,30 @@ def _prefix_starts(offsets: np.ndarray) -> np.ndarray:
 
 
 def encode_plain_bytes(col: RaggedBytes) -> bytes:
-    """u32 LE length + bytes per value (PlainValuesWriter.writeBytes).
+    """u32 LE length + bytes per value (PlainValuesWriter.writeBytes)."""
+    return plain_bytes_after(b"", col).tobytes()
+
+
+def plain_bytes_after(head, col: RaggedBytes) -> memoryview:
+    """``head`` followed by the PLAIN body of ``col``, built in one new
+    buffer and returned as a byte view of it: a V1 data page (levels, then
+    values) with no page-sized copy.
 
     Short values: record starts come from the offsets (value i's prefix
-    sits at ``4*i + offsets[i] - offsets[0]``), the 4 length bytes are
-    scattered to ``starts[:, None] + arange(4)`` and the payload fills the
-    remaining positions through one boolean mask. Long values (mean
-    length >= ``LONG_VALUE_BYTES``) are copied in one slice at a time
+    sits at ``4*i + offsets[i] - offsets[0]`` past ``head``), the 4 length
+    bytes are scattered to ``starts[:, None] + arange(4)`` and the payload
+    fills the remaining positions through one boolean mask. Long values
+    (mean length >= ``LONG_VALUE_BYTES``) are copied in one slice at a time
     instead. Neither builds a per-byte index array."""
-    n = len(col)
+    n, h = len(col), len(head)
     if n == 0:
-        return b""
+        return memoryview(bytes(head))
     offs = col.offsets
     o0, o1 = int(offs[0]), int(offs[-1])
     payload = o1 - o0
-    out = np.empty(payload + 4 * n, dtype=np.uint8)
-    starts = _prefix_starts(offs)
+    out = np.empty(h + payload + 4 * n, dtype=np.uint8)
+    out[:h] = np.frombuffer(head, dtype=np.uint8)
+    starts = _prefix_starts(offs) + h
     pp = starts[:, None] + np.arange(4)
     out[pp] = col.lengths.astype("<u4").view(np.uint8).reshape(n, 4)
     if payload >= LONG_VALUE_BYTES * n:
@@ -90,9 +98,10 @@ def encode_plain_bytes(col: RaggedBytes) -> bytes:
             dst[s : s + b - a] = src[a:b]
     elif payload:
         is_data = np.ones(len(out), dtype=bool)
+        is_data[:h] = False
         is_data[pp] = False
         out[is_data] = col.data[o0:o1]
-    return out.tobytes()
+    return memoryview(out)
 
 
 def decode_plain_bytes(buf, count: int) -> RaggedBytes:

@@ -137,13 +137,9 @@ def decode_hybrid(buf, width: int, count: int) -> np.ndarray:
         raise ValueError(f"RLE/bit-packed stream of {len(buf)} bytes ends inside a run")
     if not packed:
         return np.repeat(np.array(rle_values, dtype=np.uint64), takes)
-    if len(packed) == 1:
-        (p, g), = packed
-        starts = p + np.arange(g) * width
-    else:
-        p, g = np.array(packed, dtype=np.int64).T
-        first = p - (np.cumsum(g) - g) * width  # each run's groups continue its first
-        starts = np.repeat(first, g) + np.arange(int(g.sum())) * width
+    p, g = np.array(packed, dtype=np.int64).T
+    first = p - (np.cumsum(g) - g) * width  # each run's groups continue its first
+    starts = np.repeat(first, g) + np.arange(int(g.sum())) * width
     vals = unpack_groups(np.frombuffer(buf, dtype=np.uint8, count=pos), starts, width).reshape(-1)
     if not rle_values:
         return vals[:count]

@@ -248,3 +248,38 @@ def test_every_truncation_raises_value_error():
     for cut in range(1, len(hybrid)):
         with pytest.raises(ValueError):
             rle.decode_hybrid(hybrid[:-cut], 3, 1200)
+
+
+# ------------------------------------------------------- header geometry
+
+
+def _delta_header(block: int, nmini: int, n: int, first: int = 0) -> bytes:
+    return (encode_uvarint(block) + encode_uvarint(nmini) + encode_uvarint(n)
+            + encode_uvarint(zigzag_encode(first)))
+
+
+def test_huge_block_decodes_in_memory_of_the_count():
+    import tracemalloc
+
+    # one block of 2**30 values in one miniblock, holding a single delta at
+    # width 0: a valid stream of a few bytes whose header names a block far
+    # larger than its data
+    stream = _delta_header(1 << 30, 1, 2, first=7) + encode_uvarint(zigzag_encode(5)) + b"\x00"
+    tracemalloc.start()
+    try:
+        out = delta.decode_delta(stream)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out.tolist() == [7, 12]
+    assert peak < 1 << 20
+    # the same header with a non-zero width needs 2**27 payload bytes
+    with pytest.raises(ValueError):
+        delta.decode_delta(stream[:-1] + b"\x01" + bytes(64))
+
+
+@pytest.mark.parametrize("block,nmini", [(128, 16), (128, 8), (96, 1), (160, 5), (128, 3), (128, 0)])
+def test_block_geometry_outside_the_spec_raises(block, nmini):
+    stream = _delta_header(block, nmini, 3) + b"\x00" * (1 + max(nmini, 1)) + bytes(64)
+    with pytest.raises(ValueError):
+        delta.decode_delta(stream)

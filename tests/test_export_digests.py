@@ -1,7 +1,8 @@
 """Byte identity of ``pq to-parquet``: the sha256 of the file that
 ``cli.cmd_to_parquet`` writes is pinned for page tables of the sf0.01
 ``lineitem``/``events`` files (with blooms) and a seeded ``gen_webpages``
-slice, each under ``page_compression`` None and ``"zstd"``.
+slice, each under ``page_compression`` None and ``"zstd"``; the inputs and
+page tables are those of ``test_page_table_digests``.
 
 The export decodes every page of the table (DELTA, dictionary, RLE levels,
 DLBA, ...) and re-encodes it through the interop writer, so a change to a
@@ -13,17 +14,11 @@ import argparse
 import contextlib
 import hashlib
 import io
-import os
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
+from test_page_table_digests import page_table, source
 
 from pq_engine.cli import cmd_to_parquet
-from pq_engine.datagen import gen_webpages
-from pq_engine.pages import PAGE_BYTES, PAGE_ROWS
-from pq_engine.spark.engine import _codec_of, _encode_arrow_batch, arrow_type_to_ptype
-from tools.check_oracle import SF_DIR
 
 # (input, page_compression) -> sha256 of the exported .parquet
 PINNED = {
@@ -42,33 +37,11 @@ PINNED = {
 }
 
 
-def _page_table(name: str, page_compression, tmp_path) -> pa.Table:
-    """The page table ``encode_parquet_files`` would sink: one split per
-    row group, 65,536-row batches, blooms on the sf0.01 tables."""
-    if name == "webpages":
-        path = str(tmp_path / "webpages.parquet")
-        pq.write_table(gen_webpages(3_000, seed=7), path, row_group_size=1_500)
-        with_bloom = False
-    else:
-        path = f"{SF_DIR}/{name}.parquet"
-        if not os.path.exists(path):
-            pytest.skip(f"{path} not present")
-        with_bloom = True
-    pf = pq.ParquetFile(path)
-    cols = pf.schema_arrow.names
-    ptypes = {n: arrow_type_to_ptype(pf.schema_arrow.field(n).type) for n in cols}
-    return pa.Table.from_batches([
-        _encode_arrow_batch(batch, cols, ptypes, _codec_of("auto"), split, bi,
-                            PAGE_ROWS, PAGE_BYTES, page_compression, with_bloom)
-        for split in range(pf.metadata.num_row_groups)
-        for bi, batch in enumerate(pf.iter_batches(batch_size=65_536, row_groups=[split]))
-    ])
-
-
 @pytest.mark.parametrize("name,page_compression", list(PINNED))
 def test_export_digest(name, page_compression, tmp_path):
     out = tmp_path / "out.parquet"
-    tbl = _page_table(name, page_compression, tmp_path)
+    path, with_bloom = source(name, tmp_path)
+    tbl = page_table(path, page_compression, with_bloom)
     with contextlib.redirect_stdout(io.StringIO()):
         cmd_to_parquet(tbl, argparse.Namespace(out=str(out), to="zstd"))
     assert hashlib.sha256(out.read_bytes()).hexdigest() == PINNED[(name, page_compression)]

@@ -13,6 +13,7 @@ of one page fails here.
 import hashlib
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -42,7 +43,7 @@ PINNED = {
 }
 
 
-def _source(name: str, tmp_path) -> tuple[str, bool]:
+def source(name: str, tmp_path) -> tuple[str, bool]:
     """(parquet path, with_bloom) of one input."""
     if name == "webpages":
         path = str(tmp_path / "webpages.parquet")
@@ -55,20 +56,25 @@ def _source(name: str, tmp_path) -> tuple[str, bool]:
     return path, True
 
 
-def _page_table_digest(path: str, page_compression, with_bloom: bool) -> str:
+def page_table(path: str, page_compression, with_bloom: bool) -> pa.Table:
+    """The page table ``encode_parquet_files`` would sink for ``path``."""
     pf = pq.ParquetFile(path)
     schema = pf.schema_arrow
     cols = schema.names
     ptypes = {n: arrow_type_to_ptype(schema.field(n).type) for n in cols}
-    rows = []
-    for split in range(pf.metadata.num_row_groups):
+    return pa.Table.from_batches([
+        _encode_arrow_batch(batch, cols, ptypes, _codec_of("auto"), split, bi,
+                            PAGE_ROWS, PAGE_BYTES, page_compression, with_bloom)
+        for split in range(pf.metadata.num_row_groups)
         for bi, batch in enumerate(pf.iter_batches(batch_size=BATCH_ROWS, columns=cols,
-                                                   row_groups=[split])):
-            out = _encode_arrow_batch(batch, cols, ptypes, _codec_of("auto"), split, bi,
-                                      PAGE_ROWS, PAGE_BYTES, page_compression, with_bloom)
-            d = out.to_pydict()
-            rows += zip(d["split_id"], d["batch_id"], d["column"], d["page"], d["codec"],
-                        d["crc32"], d["data"])
+                                                   row_groups=[split]))
+    ])
+
+
+def _digest(tbl: pa.Table) -> str:
+    d = tbl.to_pydict()
+    rows = zip(d["split_id"], d["batch_id"], d["column"], d["page"], d["codec"],
+               d["crc32"], d["data"])
     h = hashlib.sha256()
     for split, bi, column, page, codec, crc, data in sorted(rows, key=lambda r: r[:4]):
         head = f"{split}|{bi}|{column}|{page}|{codec}|{crc}|{len(data)}|"
@@ -79,5 +85,6 @@ def _page_table_digest(path: str, page_compression, with_bloom: bool) -> str:
 
 @pytest.mark.parametrize("name,page_compression", list(PINNED))
 def test_page_table_digest(name, page_compression, tmp_path):
-    path, with_bloom = _source(name, tmp_path)
-    assert _page_table_digest(path, page_compression, with_bloom) == PINNED[(name, page_compression)]
+    path, with_bloom = source(name, tmp_path)
+    assert _digest(page_table(path, page_compression, with_bloom)) == PINNED[(name, page_compression)]
+

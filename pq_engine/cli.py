@@ -74,7 +74,8 @@ def _load(path):
     return tbl
 
 
-_PAGE_FIELDS = ("page", "codec", "ptype", "n_rows", "crc32", "compression")
+_PAGE_FIELDS = ("page", "codec", "ptype", "n_rows", "null_count", "crc32", "compression",
+                "min", "max")
 
 
 class _PageChunks:
@@ -1245,27 +1246,118 @@ def _export_columns(tbl, ptypes, prefixes, command) -> tuple[list[dict], int]:
     return cols_out, n_rows
 
 
+def _parquet_columns(tbl, chunks) -> list[dict]:
+    """``{name, ptype, optional}`` of every column ``to-parquet`` writes, in
+    ``chunks.columns`` order: optional iff a data page holds a null. A
+    column of a type parquet cannot carry here is reported and skipped."""
+    import pyarrow.compute as pc
+
+    data = tbl.filter(pc.greater_equal(tbl["page"], 0))
+    g = data.group_by("column").aggregate(
+        [("ptype", "min"), ("ptype", "count_distinct"), ("null_count", "max")]).to_pydict()
+    per = dict(zip(g["column"],
+                   zip(g["ptype_min"], g["ptype_count_distinct"], g["null_count_max"])))
+    out = []
+    for c in chunks.columns:
+        if c not in per:
+            continue
+        ptype, kinds, nulls = per[c]
+        if kinds > 1:
+            raise ValueError(f"column {c}: its chunks disagree on the ptype")
+        if ptype not in _EXPORT_PTYPES | {"float16", "interval", "geometry"} \
+                and not ptype.startswith(("decimal64[", "decimal_flba[", "fixed[")):
+            print(f"skipping column {c}: {ptype} not supported by to-parquet")
+            continue
+        # geometry exports as plain BINARY (WKB); every other logical type
+        # keeps its annotation through the typed interop writer
+        out.append({"name": c, "ptype": "binary" if ptype == "geometry" else ptype,
+                    "optional": nulls > 0})
+    return out
+
+
+def _parquet_chunk(out, col, pages, n_rows, compression, index, done):
+    """Write one column chunk of a row group: the engine pages as they are
+    (transcoded when their compression is not ``compression``), else, when
+    parquet cannot carry them, the decoded values re-encoded as PLAIN by
+    the interop writer. Counts the decision in ``done``."""
+    from .interop import parquet_writer as pw
+
+    why = pw.page_copy_refusal(pages)
+    if why is None:
+        same = all(m["compression"] == (compression or "none")
+                   for m, _ in pages if m["page"] != BLOOM_PAGE)
+        done["copied" if same else "transcoded"] += 1
+        return pw.copy_engine_chunk(out, col["name"], col["ptype"], pages, n_rows,
+                                    col["optional"], compression, index)
+    done[why] += 1
+    values, validity = decode_column(pages)
+    if col["optional"] and validity is None:
+        validity = np.ones(n_rows, dtype=bool)
+    spec = {"name": col["name"], "ptype": col["ptype"], "codec": "plain", "values": values,
+            "validity": validity if col["optional"] else None,
+            # the interop writer hashes values the way parquet readers probe
+            "bloom": any(m["page"] == BLOOM_PAGE for m, _ in pages)}
+    return pw._write_flat_chunk(out, spec, n_rows, compression, 1, n_rows, index)
+
+
 def cmd_to_parquet(tbl, args):
     """ConvertCommand analog (to standard PARQUET instead of Avro — the
-    interop target independent readers actually consume): decode the page
-    table and write a real .parquet via the physical interop writer, one
-    row group, readable by pyarrow/DuckDB."""
-    from .interop.parquet_writer import write_parquet
+    interop target independent readers actually consume), by page copy —
+    ParquetRewriter's rule (SURVEY §3.3): every (split_id, batch_id) chunk
+    becomes one row group, and each of its column chunks is written from
+    the engine's pages as they are, no value decoded: the dictionary page,
+    the data pages as V2 pages, the bloom row, and a ColumnIndex/OffsetIndex
+    from the page rows. A body in another compression than ``--to`` is
+    transcoded (decompressed, compressed again). A chunk parquet cannot
+    carry as it is (fsst, bss, bool rle, sealed pages) is decoded and
+    re-encoded as PLAIN. The summary line counts the column chunks copied,
+    transcoded and re-encoded, with the reason for each re-encode.
+
+    Every blob's engine CRC32 is checked before it is copied; a mismatch
+    raises ``IOError``. The file is written under a temporary name and
+    renamed at the end, so a failed export leaves nothing at ``--out``."""
+    import collections
+    import os
+
+    from .interop import parquet_writer as pw
 
     if not args.out:
         sys.exit("--out required")
-    cols_out, n_rows = _export_columns(
-        tbl, _EXPORT_PTYPES | {"float16", "interval", "geometry"},
-        ("decimal64[", "decimal_flba[", "fixed["), "to-parquet",
-    )
-    for col in cols_out:
-        # geometry exports as plain BINARY (WKB); every other logical type
-        # keeps its annotation through the typed interop writer
-        if col["ptype"] == "geometry":
-            col["ptype"] = "binary"
-        col["codec"] = "plain"
-    write_parquet(args.out, cols_out, n_rows, compression=args.to)
-    print(f"wrote {n_rows} rows x {len(cols_out)} columns → {args.out}")
+    chunks = _PageChunks(tbl)
+    columns = _parquet_columns(tbl, chunks)
+    out = bytearray(pw.MAGIC)
+    row_groups, index, done = [], [], collections.Counter()
+    total = 0
+    for split, batch in chunks.keys:
+        group, n_rows = [], None
+        for col in columns:
+            pages = chunks.pages(split, batch, col["name"])
+            n = sum(m["n_rows"] for m, _ in pages if m["page"] >= 0)
+            if n_rows is None:
+                n_rows = n
+            if n != n_rows:
+                raise ValueError(f"chunk ({split}, {batch}): column {col['name']} has "
+                                 f"{n} rows, not {n_rows}")
+            if n:
+                group.append(_parquet_chunk(out, col, pages, n, args.to, index, done))
+        if n_rows:
+            row_groups.append((group, n_rows))
+            total += n_rows
+    if index:
+        pw._emit_page_index(out, index)
+    tmp = f"{args.out}.tmp{os.getpid()}"
+    try:
+        with open(tmp, "wb") as f:
+            pw._finish_file(f, out, columns, total, row_groups)
+        os.replace(tmp, args.out)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    copied, transcoded = done.pop("copied", 0), done.pop("transcoded", 0)
+    why = ", ".join(f"{k} {v}" for k, v in sorted(done.items()))
+    print(f"wrote {total} rows x {len(columns)} columns in {len(row_groups)} row groups "
+          f"→ {args.out} (column chunks: {copied} copied, {transcoded} transcoded, "
+          f"{sum(done.values())} re-encoded{': ' + why if why else ''})")
 
 
 def cmd_to_avro(tbl, args):

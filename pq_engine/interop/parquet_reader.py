@@ -324,7 +324,7 @@ def _verify_crc(hdr: dict, body) -> None:
         return
     import zlib
 
-    if zlib.crc32(bytes(body)) & 0xFFFFFFFF != crc & 0xFFFFFFFF:
+    if zlib.crc32(body) & 0xFFFFFFFF != crc & 0xFFFFFFFF:
         raise ValueError(
             "page CRC32 mismatch (corrupt page body)")
 
@@ -351,6 +351,33 @@ def _read_chunk(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
     levels back in ``defs`` (None when the leaf is required at every level).
     ``pages`` (from an OffsetIndex) restricts decoding to the given
     (offset, n_rows) page subset — the readNextFilteredRowGroup analog."""
+    return _join_pages(_chunk_pages(buf, chunk, col, max_def, pages, dict_vals))
+
+
+def _join_pages(decoded) -> tuple:
+    """(values, validity|None, defs) of the per-page parts that
+    :func:`_chunk_pages` returned, of one chunk or of several."""
+    vals_parts, valid_parts, def_parts, any_nulls = decoded
+    if isinstance(vals_parts[0], RaggedBytes):
+        from ..pages import _concat_ragged
+
+        values = _concat_ragged(vals_parts)
+    else:
+        values = np.concatenate(vals_parts)
+    defs = np.concatenate(def_parts) if def_parts else None
+    if not any_nulls:
+        return values, None, defs
+    validity = np.concatenate(valid_parts)
+    # optional-but-dense chunks (pyarrow marks every column nullable)
+    # normalize to validity=None — the kernel convention
+    return values, None if validity.all() else validity, defs
+
+
+def _chunk_pages(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
+                 pages: list | None = None, dict_vals=None) -> tuple:
+    """Decode the pages of a non-repeated column chunk (see
+    :func:`_read_chunk`) -> (value parts, validity parts, level parts,
+    any nulls), one part per page, not yet joined."""
     if max_def is None:
         max_def = 1 if col["optional"] else 0
     width = max_def.bit_length()
@@ -373,12 +400,13 @@ def _read_chunk(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
                                           col["type_length"])
     vals_parts, valid_parts, def_parts = [], [], []
     any_nulls = False
+    view = memoryview(buf)  # page bodies are sliced out without a copy
     for pos, remaining in page_list:
         while remaining > 0:
             hdr, body_pos = read_struct(buf, pos)
             ptype = hdr[1]
             raw_size, comp_size = hdr[2], hdr[3]
-            body = buf[body_pos : body_pos + comp_size]
+            body = view[body_pos : body_pos + comp_size]
             if len(body) != comp_size:
                 raise ValueError("page body truncated")
             pos = body_pos + comp_size
@@ -448,19 +476,7 @@ def _read_chunk(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
             remaining -= n_vals
         if remaining != 0 and sequential:
             raise ValueError("chunk value count overran the footer's num_values")
-    if isinstance(vals_parts[0], RaggedBytes):
-        from ..pages import _concat_ragged
-
-        values = _concat_ragged(vals_parts)
-    else:
-        values = np.concatenate(vals_parts)
-    validity = np.concatenate(valid_parts)
-    defs = np.concatenate(def_parts) if def_parts else None
-    # optional-but-dense chunks (pyarrow marks every column nullable)
-    # normalize to validity=None — the kernel convention
-    if not any_nulls or validity.all():
-        return values, None, defs
-    return values, validity, defs
+    return vals_parts, valid_parts, def_parts, any_nulls
 
 
 def _canonical_def_lut(lo: int, eo: int) -> np.ndarray:
@@ -666,11 +682,15 @@ def read_parquet(path_or_buf, columns: list[str] | None = None):
             out[name] = ({"kind": "struct", "validity": sv,
                           "fields": fields}, None)
             continue
-        parts = [
-            _read_chunk(buf, _find_chunk(rg, [name]), col)
-            for rg in meta["row_groups"]
-        ]
-        values, validity, _ = _concat_chunk_parts(parts)
+        # the pages of every row group are joined once: no per-chunk copy
+        chunks = [_chunk_pages(buf, _find_chunk(rg, [name]), col)
+                  for rg in meta["row_groups"]]
+        if not chunks:
+            out[name] = (_empty_values(col), None)
+            continue
+        values, validity, _ = _join_pages((
+            [v for c in chunks for v in c[0]], [v for c in chunks for v in c[1]],
+            [], any(c[3] for c in chunks)))
         out[name] = (values, validity)
     return meta["schema"], out
 

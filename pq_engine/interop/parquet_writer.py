@@ -32,8 +32,8 @@ import numpy as np
 from ..kernels import bytestream, delta, deltastrings, dictionary, plain, rle
 from ..kernels.ragged import RaggedBytes
 from .format import (ENC_BSS, ENC_DBA, ENC_DELTA_BP, ENC_DLBA, ENC_PLAIN,
-                     ENC_PLAIN_DICT, ENC_RLE, PAGE_DATA, PAGE_DATA_V2,
-                     PAGE_DICT)
+                     ENC_PLAIN_DICT, ENC_RLE, ENC_RLE_DICT, PAGE_DATA,
+                     PAGE_DATA_V2, PAGE_DICT)
 from .thrift_compact import StructWriter
 
 MAGIC = b"PAR1"
@@ -147,14 +147,16 @@ def _encode_body(ptype: str, codec: str, vals):
     raise ValueError(f"unsupported {ptype}/{codec}")
 
 
-def _crc32_signed(body) -> int:
+def _crc32_signed(*parts) -> int:
     """PageHeader.crc (field 4): CRC32 over the page body bytes as
-    written, stored as a signed i32 exactly like parquet-mr's
-    (int) CRC32.getValue() (ParquetFileWriter.java:179 + pageWriteChecksum
-    default-on behavior)."""
+    written (``parts`` in order, not joined), stored as a signed i32
+    exactly like parquet-mr's (int) CRC32.getValue()
+    (ParquetFileWriter.java:179 + pageWriteChecksum default-on behavior)."""
     import zlib
 
-    c = zlib.crc32(body)
+    c = 0
+    for part in parts:
+        c = zlib.crc32(part, c)
     return c - (1 << 32) if c >= (1 << 31) else c
 
 
@@ -209,13 +211,50 @@ def _slice_flat_col(col: dict, r0: int, r1: int, n_rows: int) -> dict:
     return out
 
 
+def _column_meta(ptype: str, encodings, name: str, compression: str | None,
+                 n_rows: int, raw_total: int, pages_size: int, data_off: int,
+                 dict_off: int | None, statistics: StructWriter, enc_stats,
+                 bloom: tuple) -> StructWriter:
+    """ColumnMetaData of a flat chunk: fields 1-7 and 9, 11 (with a
+    dictionary page), 12 Statistics, 13 PageEncodingStats (what proves to a
+    DictionaryFilter-style reader that every data page is dict-encoded) and
+    14/15 (with a bloom filter)."""
+    meta = (
+        StructWriter()
+        .i32(1, _physical(ptype)[0])
+        .list_i32(2, sorted(set(encodings)))
+        .list_string(3, [name])
+        .i32(4, CODEC_ENUM[compression])
+        .i64(5, n_rows)
+        .i64(6, raw_total)
+        .i64(7, pages_size)
+        .i64(9, data_off)
+    )
+    if dict_off is not None:
+        meta.i64(11, dict_off)
+    meta.struct(12, statistics)
+    meta.list_struct(13, [
+        StructWriter().i32(1, pt).i32(2, e).i32(3, cnt)
+        for pt, e, cnt in enc_stats
+    ])
+    if bloom[0] is not None:
+        meta.i64(14, bloom[0]).i32(15, bloom[1])
+    return meta
+
+
+_STAT_DTYPE = {"int32": "<i4", "date32": "<i4", "int64": "<i8",
+               "timestamp_us": "<i8", "timestamp_ntz_us": "<i8",
+               "float32": "<f4", "float64": "<f8"}
+
+
 def _minmax_bytes(ptype: str, vals):
     """(min, max) of a non-empty value slice in the spec's plain
     little-endian (numerics) / raw-bytes (UTF8: unsigned lexicographic)
     serialized form — the TypeDefinedOrder bytes both chunk Statistics and
-    the ColumnIndex carry. None for types whose ordering needs signed FLBA
-    interpretation (decimal/int96, bool — declared scope) and for all-NaN
-    float slices (spec: NaN is ignored for stats)."""
+    the ColumnIndex carry; timestamps are signed INT64 bounds. None for
+    types whose ordering needs signed FLBA interpretation (decimal/int96,
+    bool — declared scope) and for all-NaN float slices (spec: NaN is
+    ignored for stats)."""
     if ptype in ("string", "binary"):
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -227,7 +266,7 @@ def _minmax_bytes(ptype: str, vals):
             [None, pa.py_buffer(vals.offsets), pa.py_buffer(vals.data)])
         mm = pc.min_max(arr)
         return mm["min"].as_py(), mm["max"].as_py()
-    if ptype in ("int32", "int64", "float32", "float64", "date32"):
+    if ptype in _STAT_DTYPE:
         a = np.asarray(vals)
         if a.dtype.kind == "f":
             ok = ~np.isnan(a)
@@ -451,7 +490,7 @@ def _write_flat_chunk(out: bytearray, col: dict, n_rows: int,
             comp_vals = _compress_body(body, compression)
             out += _page_header_v2(
                 r1 - r0, n_nulls, enc, len(dlv), len(body), len(comp_vals),
-                compression not in (None, "none"), body=dlv + comp_vals)
+                compression not in (None, "none"), body=(dlv, comp_vals))
             out += dlv
             out += comp_vals
             raw_total += len(dlv) + len(body)
@@ -476,31 +515,13 @@ def _write_flat_chunk(out: bytearray, col: dict, n_rows: int,
     encodings.append(enc)
     pages_size = len(out) - chunk_start  # pages only: blooms live after
     data_pt = PAGE_DATA_V2 if page_version == 2 else PAGE_DATA
-    # PageEncodingStats (field 13): what proves to a DictionaryFilter-style
-    # reader that every data page is dict-encoded
     enc_stats = ([(PAGE_DICT, ENC_PLAIN, 1)] if dict_off is not None else []) \
         + [(data_pt, enc, len(page_starts))]
-    bloom_off, bloom_len = _append_bloom(out, col, ptype, vals)
-    meta = (
-        StructWriter()
-        .i32(1, _physical(ptype)[0])
-        .list_i32(2, sorted(set(encodings)))
-        .list_string(3, [name])
-        .i32(4, CODEC_ENUM[compression])
-        .i64(5, n_rows)
-        .i64(6, raw_total)
-        .i64(7, pages_size)
-        .i64(9, data_off)
-    )
-    if dict_off is not None:
-        meta.i64(11, dict_off)
-    meta.struct(12, _chunk_statistics(ptype, vals, validity, n_rows))
-    meta.list_struct(13, [
-        StructWriter().i32(1, pt).i32(2, e).i32(3, cnt)
-        for pt, e, cnt in enc_stats
-    ])
-    if bloom_off is not None:
-        meta.i64(14, bloom_off).i32(15, bloom_len)
+    bloom = _append_bloom(out, col, ptype, vals)
+    meta = _column_meta(
+        ptype, encodings, name, compression, n_rows, raw_total, pages_size,
+        data_off, dict_off, _chunk_statistics(ptype, vals, validity, n_rows),
+        enc_stats, bloom)
     cc = StructWriter().i64(2, chunk_start).struct(3, meta)
     if index_out is not None:
         index_out.append({
@@ -511,8 +532,186 @@ def _write_flat_chunk(out: bytearray, col: dict, n_rows: int,
     return cc, len(out) - chunk_start
 
 
-_STAT_DTYPE = {"int32": "<i4", "date32": "<i4", "int64": "<i8",
-               "float32": "<f4", "float64": "<f8"}
+# ------------------------------------------------------ engine page copy
+
+# engine page codec -> encoding of the V2 data page that holds its body as
+# it is, per kernel type family. Not copied: fsst (no parquet encoding),
+# bool rle (the spec's RLE boolean body starts with a 4-byte length, the
+# engine's does not), bss (Spark's vectorized reader refuses
+# BYTE_STREAM_SPLIT; DuckDB 1.0 reads it for FLOAT/DOUBLE only) and
+# DELTA_BYTE_ARRAY over FIXED_LEN_BYTE_ARRAY.
+PAGE_COPY_ENCODING = {"plain": ENC_PLAIN, "dict": ENC_RLE_DICT,
+                      "delta": ENC_DELTA_BP, "dlba": ENC_DLBA, "dba": ENC_DBA}
+
+
+def _copy_codecs(kp: str) -> tuple:
+    if kp in ("string", "binary"):
+        return ("plain", "dict", "dlba", "dba")
+    if kp in ("int32", "int64", "date32", "timestamp_us", "timestamp_ntz_us"):
+        return ("plain", "dict", "delta")
+    if kp == "bool":
+        return ("plain",)
+    return ("plain", "dict")  # floats and the FLBA family
+
+
+# engine bloom rows hash each value's 8 little-endian bytes
+# (bloom.widen_u64), which is the spec's XxHash64 of the PLAIN encoding only
+# for 8-byte types; 4-byte values are widened first and strings/FLBA hash an
+# FNV-1a key, so a parquet reader would find present values absent
+_BLOOM_COPY_TYPES = ("int64", "timestamp_us", "timestamp_ntz_us", "float64")
+
+
+def page_copy_refusal(pages: list[tuple[dict, bytes]]) -> str | None:
+    """Why the engine pages of one flat chunk (``(meta, blob)`` pairs)
+    cannot be written as parquet pages as they are: ``aes-gcm`` for sealed
+    pages, else the codec of a data page that has no parquet encoding every
+    reader takes. None when they can."""
+    from ..pages import ENCRYPTED_SUFFIX, kernel_ptype
+
+    if any(m["compression"].endswith(ENCRYPTED_SUFFIX) for m, _ in pages):
+        return ENCRYPTED_SUFFIX.lstrip("+")
+    for m, _ in pages:
+        if m["page"] >= 0 and m["codec"] not in _copy_codecs(kernel_ptype(m["ptype"])):
+            return m["codec"]
+    return None
+
+
+def _engine_body(meta: dict, blob, compression: str):
+    """(definition levels or None, uncompressed body size, body as written
+    under ``compression``) of one engine page blob
+    (``[flag][u32 vlen + RLE levels][body]``), after its engine CRC32
+    matched: a copy never gives a corrupt blob a fresh, valid CRC. A body
+    in another compression is transcoded: decompressed and compressed
+    again, no value decoded."""
+    import zlib
+
+    from .. import compression as pagecomp
+    from ..pages import split_page_blob
+
+    if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
+        raise IOError(f"page {meta['page']} CRC mismatch")
+    mv = memoryview(blob)
+    pos = split_page_blob(blob)
+    levels = mv[5:pos] if blob[0] == 1 else None
+    body = mv[pos:]
+    if meta["compression"] == compression:
+        if compression == "none":
+            return levels, len(body), body
+        # the engine's pyarrow-codec body: u32 raw length + the raw stream
+        return levels, int.from_bytes(body[:4], "little"), body[4:]
+    raw = pagecomp.decompress(body, meta["compression"])
+    return levels, len(raw), _compress_body(raw, compression)
+
+
+def _row_stat(kp: str, s: str | None):
+    """Typed value of an engine page row's min/max (decimal strings,
+    float ``repr``, truncation-sound strings as UTF-8); None when the row
+    has none or the type's parquet order is not its value order here."""
+    if s is None or kp not in ("string", *_STAT_DTYPE):
+        return None
+    if kp == "string":
+        return s.encode()
+    if kp in ("float32", "float64"):
+        return None if s == "None" else float(s)  # all-NaN page
+    return int(s)
+
+
+def _stat_bytes(kp: str, v) -> bytes:
+    """A typed bound in the spec's serialized form (as _minmax_bytes)."""
+    return v if kp == "string" else np.array(v, _STAT_DTYPE[kp]).tobytes()
+
+
+def copy_engine_chunk(out: bytearray, name: str, ptype: str,
+                      pages: list[tuple[dict, bytes]], n_rows: int,
+                      optional: bool, compression: str | None,
+                      index_out: list):
+    """One flat column chunk written from the engine pages of one
+    (split_id, batch_id) chunk (``(meta, blob)`` in page order; see
+    :func:`page_copy_refusal` for what qualifies), no value decoded: the
+    dictionary page as a PLAIN dictionary page, each data page as a V2 page
+    (the blob's levels, uncompressed, then its compressed body), the bloom
+    row as the chunk's bloom filter (8-byte types only), and the
+    ColumnIndex/OffsetIndex entries into ``index_out`` from the page rows.
+    ``optional`` columns need levels on every page: a page stored without
+    them gets one all-defined RLE run. Returns (ColumnChunk writer, chunk
+    byte size), like :func:`_write_flat_chunk`."""
+    import collections
+
+    from ..pages import BLOOM_PAGE, DICT_PAGE, kernel_ptype
+
+    kp = kernel_ptype(ptype)
+    to = compression or "none"
+    chunk_start = len(out)
+    data_off = dict_off = bloom_bits = lo = hi = None
+    raw_total = nulls = first = 0
+    enc_stats = collections.Counter()
+    locs, null_pages, mins, maxs, null_counts = [], [], [], [], []
+    stats_ok = True
+    for meta, blob in pages:
+        if meta["page"] == BLOOM_PAGE:
+            bloom_bits = blob
+            continue
+        levels, raw_len, body = _engine_body(meta, blob, to)
+        if meta["page"] == DICT_PAGE:
+            dict_off = len(out)
+            out += _page_header(PAGE_DICT, meta["n_rows"], ENC_PLAIN, raw_len,
+                                len(body), body=body)
+            out += body
+            raw_total += raw_len
+            enc_stats[PAGE_DICT, ENC_PLAIN] += 1
+            continue
+        if meta["codec"] == "dict" and dict_off is None:
+            raise IOError(f"dict data page {meta['page']} without its chunk "
+                          "dictionary page")
+        n, nn = meta["n_rows"], meta["null_count"]
+        if not optional:
+            levels = b""
+        elif levels is None:
+            levels = rle.encode_hybrid(np.ones(n, dtype=np.uint64), 1)
+        enc = PAGE_COPY_ENCODING[meta["codec"]]
+        page_off = len(out)
+        if data_off is None:
+            data_off = page_off
+        out += _page_header_v2(n, nn, enc, len(levels), raw_len, len(body),
+                               to != "none", body=(levels, body))
+        out += levels
+        out += body
+        raw_total += len(levels) + raw_len
+        enc_stats[PAGE_DATA_V2, enc] += 1
+        nulls += nn
+        locs.append((page_off, len(out) - page_off, first))
+        first += n
+        null_pages.append(nn == n)
+        null_counts.append(nn)
+        mn, mx = _row_stat(kp, meta["min"]), _row_stat(kp, meta["max"])
+        if mn is None or mx is None:
+            stats_ok = stats_ok and nn == n
+            mins.append(b"")
+            maxs.append(b"")
+            continue
+        mins.append(_stat_bytes(kp, mn))
+        maxs.append(_stat_bytes(kp, mx))
+        lo = mn if lo is None else min(lo, mn)
+        hi = mx if hi is None else max(hi, mx)
+    pages_size = len(out) - chunk_start
+    bloom = (_emit_bloom(out, bloom_bits)
+             if bloom_bits is not None and kp in _BLOOM_COPY_TYPES else (None, None))
+    stats_ok = stats_ok and not all(null_pages)
+    statistics = StructWriter().i64(3, nulls)
+    if stats_ok:
+        statistics.binary(5, _stat_bytes(kp, hi)).binary(6, _stat_bytes(kp, lo))
+    encodings = [e for _, e in enc_stats] + ([ENC_RLE] if optional else [])
+    meta = _column_meta(
+        ptype, encodings, name, compression,
+        n_rows, raw_total, pages_size, data_off, dict_off, statistics,
+        [(pt, e, c) for (pt, e), c in enc_stats.items()], bloom)
+    cc = StructWriter().i64(2, chunk_start).struct(3, meta)
+    index_out.append({
+        "cc": cc, "locs": locs, "null_pages": null_pages, "mins": mins,
+        "maxs": maxs, "null_counts": null_counts, "ptype": kp,
+        "stats_ok": stats_ok,
+    })
+    return cc, len(out) - chunk_start
 
 
 def _boundary_order(e: dict):
@@ -588,7 +787,12 @@ def _append_bloom(out: bytearray, col: dict, ptype: str, vals):
 
     bf = bloomk.BlockSplitBloomFilter(bloomk.optimal_num_bytes(len(hashes)))
     bf.insert_hashes(np.asarray(hashes, dtype=np.uint64))
-    bits = bf.serialize()
+    return _emit_bloom(out, bf.serialize())
+
+
+def _emit_bloom(out: bytearray, bits) -> tuple[int, int]:
+    """BloomFilterHeader + the split-block bitset at the end of ``out``;
+    returns ColumnMetaData fields 14/15 (offset, length)."""
     hdr = (
         StructWriter()
         .i32(1, len(bits))  # numBytes (bitset only)
@@ -711,7 +915,7 @@ def _finish_file(fobj, out: bytearray, columns: list[dict],
         se = StructWriter().i32(1, pt)
         if tlen is not None:
             se.i32(2, tlen)
-        se.i32(3, 1 if col.get("validity") is not None else 0)
+        se.i32(3, 1 if col.get("optional", col.get("validity") is not None) else 0)
         se.string(4, col["name"])
         _annotate(se, col["ptype"])
         schema.append(se)
@@ -950,10 +1154,12 @@ def _write_map_chunks(out: bytearray, col: dict, n_rows: int,
 
 def _page_header_v2(n_values: int, n_nulls: int, enc: int, def_len: int,
                     raw_vals: int, comp_vals: int, is_compressed: bool,
-                    body=None) -> bytes:
+                    body=()) -> bytes:
     """PageHeader with DataHeaderV2 (parquet-format: num_values, num_nulls,
     num_rows, encoding, definition_levels_byte_length,
-    repetition_levels_byte_length, is_compressed)."""
+    repetition_levels_byte_length, is_compressed). ``body``: the page's
+    bytes as written, as a sequence of parts (levels, values) for the
+    CRC."""
     inner = (
         StructWriter()
         .i32(1, n_values)
@@ -972,6 +1178,6 @@ def _page_header_v2(n_values: int, n_nulls: int, enc: int, def_len: int,
         .i32(2, raw_size)
         .i32(3, comp_size)
     )
-    if body is not None:
-        hdr.i32(4, _crc32_signed(body))
+    if body:
+        hdr.i32(4, _crc32_signed(*body))
     return hdr.struct(8, inner).finish()

@@ -53,9 +53,10 @@ def _lane_tables(lanes: int) -> tuple[np.ndarray, np.ndarray]:
     return bits >> 3, (bits & 7).astype(np.uint64)
 
 
-# 8-value groups (the RLE/bit-packed hybrid) and 32-value groups (DELTA
-# miniblocks hold a multiple of 32 values)
-_LANE_TABLES = {lanes: _lane_tables(lanes) for lanes in (8, 32)}
+# 8-value groups (the RLE/bit-packed hybrid), 32-value groups (DELTA
+# miniblocks hold a multiple of 32 values) and 504-value groups (the
+# hybrid's longest bit-packed run, 63 groups of 8)
+_LANE_TABLES = {lanes: _lane_tables(lanes) for lanes in (8, 32, 504)}
 
 
 def unpack(data, width: int, count: int) -> np.ndarray:
@@ -72,8 +73,8 @@ def unpack(data, width: int, count: int) -> np.ndarray:
 
 
 def unpack_groups(raw: np.ndarray, starts: np.ndarray, width, lanes: int = 8) -> np.ndarray:
-    """Unpack groups of ``lanes`` values (8 or 32) out of the uint8 array
-    ``raw``: group *k* starts at byte ``starts[k]`` and is packed at
+    """Unpack groups of ``lanes`` values (8, 32 or 504) out of the uint8
+    array ``raw``: group *k* starts at byte ``starts[k]`` and is packed at
     ``width`` bits, an int or one int64 width per group. Returns a
     ``(len(starts), lanes)`` uint64 array; ``ValueError`` for a width above
     64. A group may run past the end of ``raw`` only in lanes the caller

@@ -15,10 +15,10 @@ all prefixes at once by comparing row i with row i-1 over a capped prefix
 window — prefixes longer than CAP are truncated (costs compression, never
 correctness; foreign writers' uncapped prefixes decode fine).
 
-Two layouts of the same pieces (DELTA_BINARY_PACKED heads + raw data):
-``encode_dlba``/``encode_dba`` write the parquet-spec page bodies; the
-engine's page blobs (``encode_delta_length``/``encode_delta_byte_array``)
-put a u32 LE byte length in front of each head.
+One layout: ``encode_dlba``/``encode_dba`` write the parquet-spec page
+bodies (each DELTA_BINARY_PACKED head is self-delimiting, so nothing frames
+it), and the engine's page blobs hold exactly these bodies — ``pq
+to-parquet`` copies them into parquet pages as they are.
 """
 
 from __future__ import annotations
@@ -32,18 +32,10 @@ PREFIX_CAP = 256  # longest shared prefix we exploit; avoids huge (n, maxlen) ma
 
 
 def _dlba_pieces(col: RaggedBytes) -> tuple:
-    """(DELTA head of the lengths, raw data). Layouts join the pieces once:
-    join reads the numpy buffer directly — one copy of the data, not two."""
+    """(DELTA head of the lengths, raw data). The encoders join the pieces
+    once: join reads the numpy buffer directly — one copy of the data, not
+    two."""
     return encode_delta(col.lengths.astype(np.int32)), col.data.data
-
-
-def _framed(pieces: tuple) -> bytes:
-    """Engine blob layout: each DELTA head behind its u32 LE byte length."""
-    *heads, data = pieces
-    parts = []
-    for h in heads:
-        parts += (len(h).to_bytes(4, "little"), h)
-    return b"".join([*parts, data])
 
 
 def _ragged(lengths: np.ndarray, buf, data_off: int, count: int) -> RaggedBytes:
@@ -64,16 +56,6 @@ def encode_dlba(col: RaggedBytes) -> bytes:
 def decode_dlba(buf, count: int) -> RaggedBytes:
     lengths, used = decode_delta(buf, np.int64, return_consumed=True)
     return _ragged(lengths, buf, used, count)
-
-
-def encode_delta_length(col: RaggedBytes) -> bytes:
-    return _framed(_dlba_pieces(col))
-
-
-def decode_delta_length(buf, count: int) -> RaggedBytes:
-    hlen = int.from_bytes(bytes(buf[:4]), "little")
-    lengths = decode_delta(memoryview(buf)[4 : 4 + hlen], np.int64)
-    return _ragged(lengths, buf, 4 + hlen, count)
 
 
 _POWERS64 = np.uint64(1) << np.arange(64, dtype=np.uint64)
@@ -107,9 +89,9 @@ def shared_prefix_lengths(col: RaggedBytes, cap: int = PREFIX_CAP) -> np.ndarray
     return out
 
 
-def _dba_pieces(col: RaggedBytes, cap: int) -> tuple:
+def _dba_pieces(col: RaggedBytes) -> tuple:
     """(DELTA head of the prefix lengths, *DLBA pieces of the suffixes)."""
-    prefixes = shared_prefix_lengths(col, cap)
+    prefixes = shared_prefix_lengths(col)
     suf_lens = col.lengths - prefixes
     # suffix bytes: for value i, bytes [offsets[i]+prefix[i], offsets[i+1])
     suf_off = np.zeros(len(col) + 1, dtype=np.int64)
@@ -125,22 +107,12 @@ def _dba_pieces(col: RaggedBytes, cap: int) -> tuple:
 def encode_dba(col: RaggedBytes) -> bytes:
     """parquet DELTA_BYTE_ARRAY page body: prefix lengths, then a
     DELTA_LENGTH_BYTE_ARRAY body of the suffixes."""
-    return b"".join(_dba_pieces(col, PREFIX_CAP))
+    return b"".join(_dba_pieces(col))
 
 
 def decode_dba(buf, count: int) -> RaggedBytes:
     prefixes, used = decode_delta(buf, np.int64, return_consumed=True)
     return _join_prefixes(prefixes[:count], decode_dlba(memoryview(buf)[used:], count))
-
-
-def encode_delta_byte_array(col: RaggedBytes, cap: int = PREFIX_CAP) -> bytes:
-    return _framed(_dba_pieces(col, cap))
-
-
-def decode_delta_byte_array(buf, count: int) -> RaggedBytes:
-    hlen = int.from_bytes(bytes(buf[:4]), "little")
-    prefixes = decode_delta(memoryview(buf)[4 : 4 + hlen], np.int64)[:count]
-    return _join_prefixes(prefixes, decode_delta_length(memoryview(buf)[4 + hlen :], count))
 
 
 def _join_prefixes(prefixes: np.ndarray, suffixes: RaggedBytes) -> RaggedBytes:

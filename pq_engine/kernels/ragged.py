@@ -197,7 +197,16 @@ class RaggedBytes:
         under ``LONG_TAKE_BYTES`` on average; slice memcpys for longer ones
         — the per-byte int64 index array costs 8x the payload in memory
         traffic)."""
-        lens = self.lengths[indices]
+        src_lens = self.lengths
+        if len(src_lens) and src_lens.min() == src_lens.max():
+            # one width for every value (a dictionary of codes or flags):
+            # gather whole rows, no per-byte index
+            w = int(src_lens[0])
+            rows = self.data[self.offsets[0] : self.offsets[-1]].reshape(-1, w) if w else \
+                np.zeros((len(self), 0), dtype=np.uint8)
+            return RaggedBytes(np.arange(len(indices) + 1, dtype=np.int64) * w,
+                               rows[indices].reshape(-1))
+        lens = src_lens[indices]
         out_off = np.zeros(len(indices) + 1, dtype=np.int64)
         np.cumsum(lens, out=out_off[1:])
         total = int(out_off[-1])

@@ -114,6 +114,9 @@ def decode_hybrid(buf, width: int, count: int) -> np.ndarray:
     filled by one ``np.repeat``."""
     if count == 0:
         return np.zeros(0, dtype=np.uint64)
+    vals = _decode_packed_runs(buf, width, count)
+    if vals is not None:
+        return vals
     byte_w = (width + 7) // 8
     takes: list[int] = []  # values each run gives, in stream order
     kinds: list[bool] = []  # True for a bit-packed run
@@ -150,6 +153,41 @@ def decode_hybrid(buf, width: int, count: int) -> np.ndarray:
     out[is_packed] = vals[: count - len(rle_fill)]
     out[~is_packed] = rle_fill
     return out
+
+
+_FULL_RUN_HEADER = (_MAX_GROUPS_PER_RUN << 1) | 1  # one varint byte, 0x7F
+_RUN_VALUES = 8 * _MAX_GROUPS_PER_RUN
+
+
+def _decode_packed_runs(buf, width: int, count: int):
+    """Fast path of :func:`decode_hybrid` for a stream that reaches
+    ``count`` through bit-packed runs alone, each of the writer's maximum 63
+    groups but the last (dictionary ids and other high-entropy streams):
+    the run headers are checked in one vectorized compare instead of walked,
+    and each run unpacks as one 504-value group. None when the stream is not
+    of that shape (then the general walk decodes it)."""
+    first = buf[0] if len(buf) else 0
+    if width == 0 or first >= 0x80 or not first & 1 or (first >> 1) * 8 < min(count, _RUN_VALUES):
+        return None  # the first header is no bit-packed run of 63 groups or to the count
+    run = 1 + _MAX_GROUPS_PER_RUN * width  # bytes of one full run
+    full, rest = divmod(count, _RUN_VALUES)
+    runs = full + (rest > 0)
+    heads = np.frombuffer(buf, dtype=np.uint8, count=min(len(buf), (runs - 1) * run + 1))[::run]
+    if len(heads) < runs or (heads[:full] != _FULL_RUN_HEADER).any():
+        return None
+    end = full * run
+    if rest:
+        last = int(heads[-1])
+        if not last & 1 or last >= 0x80 or (last >> 1) * 8 < rest:
+            return None
+        end = (runs - 1) * run + 1 + (last >> 1) * width
+    if end > len(buf):
+        return None
+    # the last run unpacks as a full one: zeros stand in for its missing groups
+    raw = np.zeros(runs * run, dtype=np.uint8)
+    raw[:end] = np.frombuffer(buf, dtype=np.uint8, count=end)
+    starts = np.arange(runs, dtype=np.int64) * run + 1
+    return unpack_groups(raw, starts, width, _RUN_VALUES).reshape(-1)[:count]
 
 
 def encode_hybrid_length_prefixed(values: np.ndarray, width: int) -> bytes:

@@ -160,7 +160,7 @@ def encode_list_column(
             chunk_codes, chunk_uniques = dictionary.factorize_numeric(col.child_values)
         if chunk_uniques is not None:
             dict_body = encode_dict_chunk_page(chunk_uniques, cp)
-            if len(dict_body) - 4 > DICT_PAGE_SIZE_THRESHOLD:
+            if len(dict_body) > DICT_PAGE_SIZE_THRESHOLD:
                 codec = _dict_fallback_codec(kp, page_compression)
                 chunk_codes = chunk_uniques = None
 
@@ -329,7 +329,7 @@ def decode_list_pages(
                 body = pagecomp.decompress(
                     memoryview(blob)[1:], meta.get("compression", "none")
                 )
-                dict_vals = decode_dict_chunk_page(body, meta["ptype"])
+                dict_vals = decode_dict_chunk_page(body, meta["ptype"], meta["n_rows"])
         elif meta["page"] >= 0:
             data_pages.append((meta, blob))
     pages = data_pages

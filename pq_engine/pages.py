@@ -18,6 +18,10 @@ ColumnIndexBuilder stats) onto vectorized slices of an Arrow batch:
 * dictionaries are per-CHUNK (one dict page at ``page = -2`` shared by all
   of the chunk's data pages), matching ColumnWriterBase.finalizeColumnChunk;
   a dict page over 1 MiB falls the chunk back to its non-dict codec.
+* value bodies are parquet page bodies as they are: PLAIN, RLE_DICTIONARY
+  ids, DELTA_BINARY_PACKED, DELTA_LENGTH_BYTE_ARRAY, DELTA_BYTE_ARRAY, and
+  the dictionary page is its PLAIN uniques (their count is the row's
+  ``n_rows``), so ``pq to-parquet`` copies them into parquet V2 pages.
 * the PLAIN safety rail (FallbackValuesWriter.isCompressionSatisfying
   :81-92): any codec output >= the PLAIN encoding of the same values is
   discarded for PLAIN.
@@ -95,9 +99,9 @@ def _encode_values(codec: str, ptype: str, vals, fsst_table=None) -> bytes:
         if codec == "plain":
             return plain.encode_plain_bytes(vals)
         if codec == "dlba":
-            return deltastrings.encode_delta_length(vals)
+            return deltastrings.encode_dlba(vals)
         if codec == "dba":
-            return deltastrings.encode_delta_byte_array(vals)
+            return deltastrings.encode_dba(vals)
         if codec == "fsst":
             if fsst_table is not None:
                 # chunk-level symbol table (like the chunk dictionary page):
@@ -113,7 +117,7 @@ def _encode_values(codec: str, ptype: str, vals, fsst_table=None) -> bytes:
         if codec == "bss":
             return fixedlen.encode_bss_fixed(vals)
         if codec == "dba":  # FLBA supports DELTA_BYTE_ARRAY in the spec
-            return deltastrings.encode_delta_byte_array(_fixed_to_ragged(vals))
+            return deltastrings.encode_dba(_fixed_to_ragged(vals))
     raise ValueError(f"codec {codec!r} unsupported for ptype {ptype!r}")
 
 
@@ -144,9 +148,9 @@ def _decode_values(codec: str, ptype: str, buf, count: int):
         if codec == "plain":
             return plain.decode_plain_bytes(buf, count)
         if codec == "dlba":
-            return deltastrings.decode_delta_length(buf, count)
+            return deltastrings.decode_dlba(buf, count)
         if codec == "dba":
-            return deltastrings.decode_delta_byte_array(buf, count)
+            return deltastrings.decode_dba(buf, count)
         if codec == "fsst":
             return fsst.decode_fsst(buf)
     if ptype.startswith("fixed["):
@@ -158,7 +162,7 @@ def _decode_values(codec: str, ptype: str, buf, count: int):
         if codec == "bss":
             return fixedlen.decode_bss_fixed(buf, k, count)
         if codec == "dba":
-            return _ragged_to_fixed(deltastrings.decode_delta_byte_array(buf, count), k)
+            return _ragged_to_fixed(deltastrings.decode_dba(buf, count), k)
     raise ValueError(f"codec {codec!r} unsupported for ptype {ptype!r}")
 
 
@@ -171,30 +175,29 @@ DICT_PAGE = -2  # manifest `page` value of the chunk dictionary page
 
 
 def encode_dict_chunk_page(uniques, ptype: str) -> bytes:
-    """Body of the chunk dictionary page: u32 count + PLAIN uniques
-    (DictionaryPage semantics: toDictPageAndClose → PLAIN values)."""
+    """Body of the chunk dictionary page: the PLAIN uniques, a parquet
+    dictionary page body as it is (DictionaryPage semantics:
+    toDictPageAndClose → PLAIN values). The count is the row's ``n_rows``."""
     kp = kernel_ptype(ptype)
     if kp in RAGGED_TYPES:
-        dpage = dictionary.encode_dict_page_bytes(uniques)
-    elif kp.startswith("fixed["):
+        return dictionary.encode_dict_page_bytes(uniques)
+    if kp.startswith("fixed["):
         from .kernels.fixedlen import encode_plain_fixed
 
-        dpage = encode_plain_fixed(uniques)
-    else:
-        dpage = dictionary.encode_dict_page_numeric(uniques)
-    return len(uniques).to_bytes(4, "little") + dpage
+        return encode_plain_fixed(uniques)
+    return dictionary.encode_dict_page_numeric(uniques)
 
 
-def decode_dict_chunk_page(buf, ptype: str):
+def decode_dict_chunk_page(buf, ptype: str, count: int):
+    """The ``count`` uniques of a chunk dictionary page body."""
     ptype = kernel_ptype(ptype)
-    nuniq = int.from_bytes(bytes(buf[:4]), "little")
     if ptype in RAGGED_TYPES:
-        return dictionary.decode_dict_page_bytes(memoryview(buf)[4:], nuniq)
+        return dictionary.decode_dict_page_bytes(buf, count)
     if ptype.startswith("fixed["):
         from .kernels.fixedlen import decode_plain_fixed
 
-        return decode_plain_fixed(memoryview(buf)[4:], int(ptype[6:-1]), nuniq)
-    return dictionary.decode_dict_page_numeric(memoryview(buf)[4:], _NUMERIC[ptype], nuniq)
+        return decode_plain_fixed(buf, int(ptype[6:-1]), count)
+    return dictionary.decode_dict_page_numeric(buf, _NUMERIC[ptype], count)
 
 
 def _dict_fallback_codec(ptype: str, page_compression: str | None) -> str:
@@ -382,7 +385,7 @@ def encode_column(
             chunk_codes, chunk_uniques = dictionary.factorize_numeric(values)
         if chunk_uniques is not None:
             dict_body = encode_dict_chunk_page(chunk_uniques, ptype)
-            if len(dict_body) - 4 > DICT_PAGE_SIZE_THRESHOLD:
+            if len(dict_body) > DICT_PAGE_SIZE_THRESHOLD:
                 # dict-size fallback (ParquetProperties.java:51, 1 MiB)
                 codec = _dict_fallback_codec(kp, page_compression)
                 chunk_codes = chunk_uniques = None
@@ -730,7 +733,7 @@ def decode_column(pages: list[tuple[dict, bytes]], ptype: str | None = None):
             if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
                 raise IOError("dictionary page CRC mismatch")
             body = pagecomp.decompress(memoryview(blob)[1:], meta.get("compression", "none"))
-            dict_vals = decode_dict_chunk_page(body, meta["ptype"])
+            dict_vals = decode_dict_chunk_page(body, meta["ptype"], meta["n_rows"])
         elif meta["codec"] == "bloom" or meta["page"] < 0:
             continue  # index rows carry no values
         else:

@@ -1135,8 +1135,8 @@ def index_rows(pages_df: DataFrame, columns, index_columns=None, extra=()) -> pa
     data = F.when(F.col("page") < 0, F.col("data")) if index_columns else F.lit(None).cast("binary")
     return (
         pages_df.filter(wanted)
-        .select("split_id", "batch_id", "column", "page", "codec", "ptype", "compression",
-                data.alias("data"), *extra)
+        .select("split_id", "batch_id", "column", "page", "codec", "ptype", "n_rows",
+                "compression", data.alias("data"), *extra)
         .toArrow()
     )
 
@@ -1153,12 +1153,14 @@ def _probe_list(value) -> list:
     return list(value) if isinstance(value, (list, tuple, set)) else [value]
 
 
-def _dict_holds_any(blob: bytes, compression: str, ptype: str, values: list) -> bool:
+def _dict_holds_any(blob: bytes, compression: str, ptype: str, count: int,
+                    values: list) -> bool:
     from ..compression import decompress
     from ..kernels.fixedlen import value_to_fixed
     from ..pages import _NUMERIC, decode_dict_chunk_page, kernel_ptype
 
-    uniques = decode_dict_chunk_page(decompress(blob[1:], compression), ptype)  # no validity stream
+    # no validity stream; the row's n_rows is the dictionary's size
+    uniques = decode_dict_chunk_page(decompress(blob[1:], compression), ptype, count)
     kp = kernel_ptype(ptype)
     if kp.startswith("fixed["):
         return len(uniques) > 0 and any(
@@ -1186,12 +1188,12 @@ def dictionary_disproved(meta: pa.Table, column: str, value) -> set:
     decided = set(chunk_keys(data.filter(pc.not_equal(data["codec"], "dict"))))
     dicts = _column_rows(meta, column, DICT_PAGE)
     out = set()
-    for key, blob, comp, ptype in zip(
-        chunk_keys(dicts), dicts["data"].to_pylist(),
-        dicts["compression"].to_pylist(), dicts["ptype"].to_pylist(),
+    for key, blob, comp, ptype, count in zip(
+        chunk_keys(dicts), dicts["data"].to_pylist(), dicts["compression"].to_pylist(),
+        dicts["ptype"].to_pylist(), dicts["n_rows"].to_pylist(),
     ):
         if key not in decided and not comp.endswith(ENCRYPTED_SUFFIX) \
-                and not _dict_holds_any(blob, comp, ptype, values):
+                and not _dict_holds_any(blob, comp, ptype, count, values):
             out.add(key)
         decided.add(key)  # a chunk's first dictionary row decides
     return out

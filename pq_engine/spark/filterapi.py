@@ -228,6 +228,8 @@ def filter_pages(pages: DataFrame, pred: Pred) -> DataFrame:
     driver: per data page of a probed column one stats-level boolean per
     leaf (Catalyst evaluates it), plus the dictionary/bloom rows of
     eq/in/contains columns."""
+    import pyarrow.compute as pc
+
     from .engine import bloom_disproved, chunk_keys, dictionary_disproved, index_rows, select_chunks
 
     # one projected column per distinct Leaf: a tree may hold one twice (a | a)
@@ -262,7 +264,13 @@ def filter_pages(pages: DataFrame, pred: Pred) -> DataFrame:
         return keys
 
     keys = kept(pred)
-    return pages if keys is None else select_chunks(pages, keys)
+    if keys is None:
+        return pages
+    # keeping every chunk of the probed columns filters nothing: a literal
+    # list of every key would only cost the data scan its parsing
+    if keys and keys == set(chunk_keys(meta.filter(pc.greater_equal(meta["page"], 0)))):
+        return pages
+    return select_chunks(pages, keys)
 
 
 def residual_expr(p: Pred) -> Column:

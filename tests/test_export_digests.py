@@ -4,10 +4,12 @@
 slice, each under ``page_compression`` None and ``"zstd"``; the inputs and
 page tables are those of ``test_page_table_digests``.
 
-The export decodes every page of the table (DELTA, dictionary, RLE levels,
-DLBA, ...) and re-encodes it through the interop writer, so a change to a
-decoder or to the page-table grouping that moves one value, or one row of
-one chunk, fails here.
+The export copies the engine's pages into one row group per chunk (page
+headers, levels, statistics, page index and blooms built from the page
+rows) and decodes and re-encodes only the chunks parquet cannot carry as
+they are (``fsst`` in the uncompressed webpages table), so a change to the
+page copy, to those decoders or to the page-table grouping that moves one
+byte of the file fails here.
 """
 
 import argparse
@@ -23,17 +25,17 @@ from pq_engine.cli import cmd_to_parquet
 # (input, page_compression) -> sha256 of the exported .parquet
 PINNED = {
     ("lineitem", None):
-        "d1ce56fcf58ff08e97be77cea167269ddb530b6bba59c9bf5ec5d5e641788ea2",
+        "90fa17f2cff7827aa863cb7eae7831d47ddff92c74e5d8499151c02f709303fe",
     ("lineitem", "zstd"):
-        "d1ce56fcf58ff08e97be77cea167269ddb530b6bba59c9bf5ec5d5e641788ea2",
+        "90fa17f2cff7827aa863cb7eae7831d47ddff92c74e5d8499151c02f709303fe",
     ("events", None):
-        "efe428a79f263603d8c2e57b5c788813c77d4593d6e878acb1ef86c2072d0f36",
+        "fb48555e2f879be6a55dd0e4f8f060125b6b79bea1b597cdee8b865d9d242d99",
     ("events", "zstd"):
-        "efe428a79f263603d8c2e57b5c788813c77d4593d6e878acb1ef86c2072d0f36",
+        "fb48555e2f879be6a55dd0e4f8f060125b6b79bea1b597cdee8b865d9d242d99",
     ("webpages", None):
-        "f523e20f9cd96445e30e5670ee04274d40bb3eb52b1f7a924e0f01ec2017f0b4",
+        "8c730866bc814c424a7b83dd1d01d4259f7969eac0bb534c45f165af99370b42",
     ("webpages", "zstd"):
-        "f523e20f9cd96445e30e5670ee04274d40bb3eb52b1f7a924e0f01ec2017f0b4",
+        "609e8eee91bf3f90cfd9c791ce3f9c4f2bfa3affe4ed456fee93e3f9012ed51b",
 }
 
 

@@ -94,6 +94,17 @@ def test_udp_stats_and_row_level(table):
         ~pred
 
 
+def test_stats_only_filter_keeping_every_chunk_is_no_filter(table):
+    df, pages = table
+    # every chunk has a score >= 0: the stats level keeps them all, and the
+    # page table comes back without a filter listing every chunk key
+    pred = P.udp("score", stats_keep=F.col("max").cast("double") >= 0.0,
+                 row=F.col("score") >= 0.0)
+    kept = _check_exact(df, pages, pred)
+    assert "4294967296" not in kept._jdf.queryExecution().analyzed().toString()
+    assert kept.count() == pages.count()
+
+
 def test_never_always():
     assert P.in_("c", []).kind == "never"
     assert P.notin("c", []).kind == "always"

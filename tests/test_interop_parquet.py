@@ -507,6 +507,29 @@ def test_multi_row_group_stats_and_pruning(tmp_path):
     assert len(full) == n and full["k"][150] == "k-0001"
 
 
+@pytest.mark.parametrize("ptype", ["timestamp_us", "timestamp_ntz_us"])
+def test_timestamp_chunk_statistics(tmp_path, ptype):
+    """Timestamps carry signed INT64 min/max: pyarrow's row-group
+    statistics equal the min/max pyarrow computes over each band, also
+    across the sign (pre-1970 values) and with the page index on."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    rng = np.random.default_rng(11)
+    n = 3000
+    ts = rng.integers(-(10**15), 2 * 10**15, size=n).astype(np.int64)
+    path = str(tmp_path / "ts.parquet")
+    write_parquet(path, [{"name": "t", "ptype": ptype, "codec": "delta", "values": ts}],
+                  n, row_group_size=1000, data_page_rows=250)
+    pf = papq.ParquetFile(path)
+    col = pf.read()["t"]
+    for rg in range(pf.metadata.num_row_groups):
+        st = pf.metadata.row_group(rg).column(0).statistics
+        band = col.slice(rg * 1000, 1000)
+        assert st.has_min_max
+        assert (st.min, st.max) == (pc.min(band).as_py(), pc.max(band).as_py())
+
+
 def test_row_group_size_nested_raises_and_edge_bands(tmp_path):
     from pq_engine.nested import ListColumn
 

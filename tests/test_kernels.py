@@ -385,15 +385,13 @@ def test_bss_fixed():
 
 def _rt_dlba(values):
     col = RaggedBytes.from_pylist(values)
-    out = deltastrings.decode_delta_length(deltastrings.encode_delta_length(col), len(col))
+    out = deltastrings.decode_dlba(deltastrings.encode_dlba(col), len(col))
     assert out == col
 
 
 def _rt_dba(values):
     col = RaggedBytes.from_pylist(values)
-    out = deltastrings.decode_delta_byte_array(
-        deltastrings.encode_delta_byte_array(col), len(col)
-    )
+    out = deltastrings.decode_dba(deltastrings.encode_dba(col), len(col))
     assert out == col
     return col
 
@@ -412,7 +410,7 @@ def test_delta_byte_array_sorted_urls():
         f"https://example{i % 50}.com/path/{i}/page".encode() for i in range(2000)
     )
     col = _rt_dba(urls)
-    enc = deltastrings.encode_delta_byte_array(col)
+    enc = deltastrings.encode_dba(col)
     raw = int(col.lengths.sum())
     assert len(enc) < raw * 0.7  # prefix sharing must pay off on sorted urls
 
@@ -434,16 +432,11 @@ def test_delta_byte_array_prefix_cap():
 @pytest.mark.parametrize("prefixes", [[0, 5], [3, 0]])
 def test_delta_byte_array_rejects_impossible_prefix(prefixes):
     # the value borrows more bytes than its predecessor has (prefix[0] has
-    # no predecessor) — both layouts share the check
+    # no predecessor)
     pre = delta.encode_delta(np.array(prefixes, np.int32))
     suf = delta.encode_delta(np.array([2, 1], np.int32))
-    spec = pre + suf + b"abc"
-    framed = b"".join((len(pre).to_bytes(4, "little"), pre,
-                       len(suf).to_bytes(4, "little"), suf, b"abc"))
     with pytest.raises(ValueError, match="prefix longer"):
-        deltastrings.decode_dba(spec, 2)
-    with pytest.raises(ValueError, match="prefix longer"):
-        deltastrings.decode_delta_byte_array(framed, 2)
+        deltastrings.decode_dba(pre + suf + b"abc", 2)
 
 
 def test_delta_length_rejects_negative_length():
@@ -452,15 +445,18 @@ def test_delta_length_rejects_negative_length():
         deltastrings.decode_dlba(body, 2)
 
 
-def test_delta_string_layouts_share_pieces():
+def test_delta_string_engine_body_is_spec_body():
+    from pq_engine import pages
+
     col = RaggedBytes.from_pylist([b"parquet-mr", b"parquet", b"", b"parquet-x"])
-    assert deltastrings.decode_dlba(deltastrings.encode_dlba(col), len(col)) == col
-    assert deltastrings.decode_dba(deltastrings.encode_dba(col), len(col)) == col
-    # engine blob = spec body with a u32 length in front of each DELTA head
+    # DLBA = DELTA head of the lengths, then the raw bytes; no framing
     lens = delta.encode_delta(col.lengths.astype(np.int32))
     assert deltastrings.encode_dlba(col) == lens + col.data.tobytes()
-    assert deltastrings.encode_delta_length(col) == (
-        len(lens).to_bytes(4, "little") + deltastrings.encode_dlba(col))
+    # the engine's page bodies are the parquet page bodies
+    for codec, enc in (("dlba", deltastrings.encode_dlba), ("dba", deltastrings.encode_dba)):
+        body = pages._encode_values(codec, "string", col)
+        assert body == enc(col)
+        assert pages._decode_values(codec, "string", body, len(col)) == col
 
 
 def test_shared_prefix_lengths():

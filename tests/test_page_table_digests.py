@@ -29,17 +29,17 @@ WEBPAGES_ROW_GROUP = 1_500
 # (input, page_compression) -> sha256 of its page table
 PINNED = {
     ("lineitem", None):
-        "4ee98ac699c0b29e81c53f2660813aa89fc8a982f4919480e083eab202fa95a4",
+        "70764cd4381b647af895d6cbe4583775977048d5a9110e16f524e02e2948a551",
     ("lineitem", "zstd"):
-        "41a9fd14937de9cb118e4abdcce9f524e0349e70dff7e95d8ceb6cab997c0076",
+        "b92c7d36228508f51ce6633c7260ba1bede453ae6a71609c5d23c86efc6c37b2",
     ("events", None):
-        "b222eafd691bab1b51d204314d1d4ccb67730741f64976bf567b5fc796b0e0e4",
+        "bd8fef57d87d06391fe912cba1baaa335f4e9c7f525f4604a8e434e9c6a286b0",
     ("events", "zstd"):
-        "49d2f8567daa1a267d72f76bfb0e135e11d71da52137ce5219dae90f1b5f4211",
+        "3c0160aaf87b525783451c327cbac0b901e4c12dc280a9e412024efab98337f4",
     ("webpages", None):
-        "42acd6d2fb372ab0f618777bb92d59afd71ddea9536a0cc26ba030b6e0d134e7",
+        "11a1db0185c6705f23b2f1378c5ce150d610149c74d843dc2aa71ac2a8802ec8",
     ("webpages", "zstd"):
-        "cc0969441fe96483d71264bfbae747a6cff8bdb534a58506df4fcf060f67165d",
+        "f854071e465916649b588124a2be2b82bc331ccd885a6897a712dbdc5859817d",
 }
 
 

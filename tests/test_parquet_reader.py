@@ -587,6 +587,21 @@ def test_page_crc_write_and_verify(tmp_path):
         read_parquet_pandas(bytes(buf2))
 
 
+def test_page_crc_checks_a_memoryview_body():
+    """The CRC check hashes the body buffer it is given, without a copy:
+    one flipped bit in a memoryview body still fails it."""
+    import zlib
+
+    from pq_engine.interop.parquet_reader import _verify_crc
+
+    body = bytearray(b"page body " * 100)
+    hdr = {4: zlib.crc32(body)}
+    _verify_crc(hdr, memoryview(body))
+    body[517] ^= 0x08
+    with pytest.raises(ValueError, match="CRC32 mismatch"):
+        _verify_crc(hdr, memoryview(body)[0:])
+
+
 # --------------------------------------------------------------------------
 # predicate-first filtered reads: the predicate's columns are decoded first,
 # the other columns only over the pages that hold a matching row

@@ -10,12 +10,7 @@ from hypothesis import given, settings, strategies as st
 from pq_engine import pages
 from pq_engine.interop.parquet_writer import _minmax_bytes
 from pq_engine.kernels import delta, fsst, plain, rle
-from pq_engine.kernels.deltastrings import (
-    decode_dba,
-    decode_delta_byte_array,
-    encode_delta_byte_array,
-    encode_dlba,
-)
+from pq_engine.kernels.deltastrings import decode_dba, encode_dba, encode_dlba
 from pq_engine.kernels.ragged import RaggedBytes
 
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
@@ -41,7 +36,7 @@ def test_rle_roundtrip_any_small_ints(xs, width):
 @given(st.lists(st.binary(max_size=40), max_size=120))
 def test_delta_byte_array_roundtrip_any_bytes(vals):
     col = RaggedBytes.from_pylist(vals)
-    assert decode_delta_byte_array(encode_delta_byte_array(col), len(col)) == col
+    assert decode_dba(encode_dba(col), len(col)) == col
 
 
 @settings(max_examples=60, deadline=None)

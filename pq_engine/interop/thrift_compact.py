@@ -193,8 +193,9 @@ def read_struct(buf, pos: int = 0):
 
 
 def _read_value(buf, pos, ctype):
-    import struct as _s
-
+    if CT_I16 <= ctype <= CT_I64:  # the common case first: page headers are ints
+        z, pos = _read_uvar(buf, pos)
+        return _unzig(z), pos
     if ctype == CT_BOOL_TRUE:
         return True, pos
     if ctype == CT_BOOL_FALSE:
@@ -202,10 +203,9 @@ def _read_value(buf, pos, ctype):
     if ctype == CT_BYTE:
         v = buf[pos]
         return (v - 256 if v >= 128 else v), pos + 1
-    if ctype in (CT_I16, CT_I32, CT_I64):
-        z, pos = _read_uvar(buf, pos)
-        return _unzig(z), pos
     if ctype == CT_DOUBLE:
+        import struct as _s
+
         return _s.unpack_from("<d", buf, pos)[0], pos + 8
     if ctype == CT_BINARY:
         ln, pos = _read_uvar(buf, pos)

@@ -1275,31 +1275,6 @@ def _parquet_columns(tbl, chunks) -> list[dict]:
     return out
 
 
-def _parquet_chunk(out, col, pages, n_rows, compression, index, done):
-    """Write one column chunk of a row group: the engine pages as they are
-    (transcoded when their compression is not ``compression``), else, when
-    parquet cannot carry them, the decoded values re-encoded as PLAIN by
-    the interop writer. Counts the decision in ``done``."""
-    from .interop import parquet_writer as pw
-
-    why = pw.page_copy_refusal(pages)
-    if why is None:
-        same = all(m["compression"] == (compression or "none")
-                   for m, _ in pages if m["page"] != BLOOM_PAGE)
-        done["copied" if same else "transcoded"] += 1
-        return pw.copy_engine_chunk(out, col["name"], col["ptype"], pages, n_rows,
-                                    col["optional"], compression, index)
-    done[why] += 1
-    values, validity = decode_column(pages)
-    if col["optional"] and validity is None:
-        validity = np.ones(n_rows, dtype=bool)
-    spec = {"name": col["name"], "ptype": col["ptype"], "codec": "plain", "values": values,
-            "validity": validity if col["optional"] else None,
-            # the interop writer hashes values the way parquet readers probe
-            "bloom": any(m["page"] == BLOOM_PAGE for m, _ in pages)}
-    return pw._write_flat_chunk(out, spec, n_rows, compression, 1, n_rows, index)
-
-
 def cmd_to_parquet(tbl, args):
     """ConvertCommand analog (to standard PARQUET instead of Avro — the
     interop target independent readers actually consume), by page copy —
@@ -1315,47 +1290,20 @@ def cmd_to_parquet(tbl, args):
 
     Every blob's engine CRC32 is checked before it is copied; a mismatch
     raises ``IOError``. The file is written under a temporary name and
-    renamed at the end, so a failed export leaves nothing at ``--out``."""
-    import collections
-    import os
-
-    from .interop import parquet_writer as pw
+    renamed at the end, so a failed export leaves nothing at ``--out``
+    (:func:`~pq_engine.interop.parquet_writer.write_engine_pages`)."""
+    from .interop.parquet_writer import write_engine_pages
 
     if not args.out:
         sys.exit("--out required")
     chunks = _PageChunks(tbl)
     columns = _parquet_columns(tbl, chunks)
-    out = bytearray(pw.MAGIC)
-    row_groups, index, done = [], [], collections.Counter()
-    total = 0
-    for split, batch in chunks.keys:
-        group, n_rows = [], None
-        for col in columns:
-            pages = chunks.pages(split, batch, col["name"])
-            n = sum(m["n_rows"] for m, _ in pages if m["page"] >= 0)
-            if n_rows is None:
-                n_rows = n
-            if n != n_rows:
-                raise ValueError(f"chunk ({split}, {batch}): column {col['name']} has "
-                                 f"{n} rows, not {n_rows}")
-            if n:
-                group.append(_parquet_chunk(out, col, pages, n, args.to, index, done))
-        if n_rows:
-            row_groups.append((group, n_rows))
-            total += n_rows
-    if index:
-        pw._emit_page_index(out, index)
-    tmp = f"{args.out}.tmp{os.getpid()}"
-    try:
-        with open(tmp, "wb") as f:
-            pw._finish_file(f, out, columns, total, row_groups)
-        os.replace(tmp, args.out)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
-    copied, transcoded = done.pop("copied", 0), done.pop("transcoded", 0)
+    groups = ({c["name"]: chunks.pages(split, batch, c["name"]) for c in columns}
+              for split, batch in chunks.keys)
+    total, n_groups, done = write_engine_pages(args.out, groups, columns, args.to)
+    copied, transcoded = done.pop("copied"), done.pop("transcoded")
     why = ", ".join(f"{k} {v}" for k, v in sorted(done.items()))
-    print(f"wrote {total} rows x {len(columns)} columns in {len(row_groups)} row groups "
+    print(f"wrote {total} rows x {len(columns)} columns in {n_groups} row groups "
           f"→ {args.out} (column chunks: {copied} copied, {transcoded} transcoded, "
           f"{sum(done.values())} re-encoded{': ' + why if why else ''})")
 

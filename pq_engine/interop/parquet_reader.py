@@ -398,9 +398,8 @@ def _chunk_pages(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
             body = buf[body_pos : body_pos + hdr[3]]
             dict_vals = _decode_dict_page(hdr, body, chunk, phys,
                                           col["type_length"])
-    vals_parts, valid_parts, def_parts = [], [], []
-    any_nulls = False
     view = memoryview(buf)  # page bodies are sliced out without a copy
+    data_pages = []  # [values, encoding, value body, levels stream, V2 num_nulls]
     for pos, remaining in page_list:
         while remaining > 0:
             hdr, body_pos = read_struct(buf, pos)
@@ -417,24 +416,13 @@ def _chunk_pages(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
                 continue
             if ptype == PAGE_DATA:
                 dh = hdr[5]
-                n_vals, enc = dh[1], dh[2]
-                raw = _decompress(body, chunk["codec"], raw_size)
-                off = 0
+                n_vals, enc, n_nulls = dh[1], dh[2], None
+                raw = memoryview(_decompress(body, chunk["codec"], raw_size))
+                levels = None
                 if max_def:
-                    levels, used = rle.decode_hybrid_length_prefixed(
-                        memoryview(raw)[:], width, n_vals
-                    )
-                    validity = levels == max_def
-                    off = used
-                    any_nulls = True
-                else:
-                    levels = None
-                    validity = np.ones(n_vals, dtype=bool)
-                count = int(validity.sum())
-                values = _decode_values(
-                    enc, memoryview(raw)[off:], phys, count,
-                    col["type_length"], dict_vals,
-                )
+                    # V1 levels: a u32 byte length, then the hybrid stream
+                    blen = int.from_bytes(raw[:4], "little")
+                    levels, raw = raw[4 : 4 + blen], raw[4 + blen :]
             elif ptype == PAGE_DATA_V2:
                 dh = hdr[8]
                 n_vals, n_nulls, enc = dh[1], dh[2], dh[4]
@@ -444,39 +432,70 @@ def _chunk_pages(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
                     raise ValueError(
                         "repetition levels on a non-repeated column"
                     )
-                is_comp = dh.get(7, True)
-                levels_raw = body[:def_len]
-                vals_body = body[def_len:]
-                if is_comp:
-                    vals_body = _decompress(
-                        vals_body, chunk["codec"], raw_size - def_len
-                    )
-                if max_def and def_len:
-                    levels = rle.decode_hybrid(levels_raw, width, n_vals)
-                    validity = levels == max_def
-                    any_nulls = True
-                else:
-                    levels = None
-                    validity = np.ones(n_vals, dtype=bool)
-                count = n_vals - n_nulls
-                if count != int(validity.sum()):
-                    raise ValueError("v2 page num_nulls disagrees with def levels")
-                values = _decode_values(
-                    enc, vals_body, phys, count, col["type_length"], dict_vals,
-                )
+                levels = body[:def_len] if max_def and def_len else None
+                raw = body[def_len:]
+                if dh.get(7, True):
+                    raw = _decompress(raw, chunk["codec"], raw_size - def_len)
             else:
                 raise ValueError(f"unsupported page type {ptype}")
-            vals_parts.append(values)
-            valid_parts.append(validity)
-            if max_def:
-                def_parts.append(
-                    levels if levels is not None
-                    else np.full(n_vals, max_def, dtype=np.uint64)
-                )
+            data_pages.append((n_vals, enc, raw, levels, n_nulls))
             remaining -= n_vals
         if remaining != 0 and sequential:
             raise ValueError("chunk value count overran the footer's num_values")
-    return vals_parts, valid_parts, def_parts, any_nulls
+    # the level streams of every page at once, then one validity per page
+    streams = [(lv, n) for n, _, _, lv, _ in data_pages if lv is not None]
+    levels = rle.decode_hybrid_many(streams, width) if streams else None
+    valid_parts, def_parts, counts = [], [], []
+    o = 0
+    for n_vals, _, _, lv, n_nulls in data_pages:
+        if lv is None:
+            validity = np.ones(n_vals, dtype=bool)
+            count = n_vals
+            if max_def:
+                def_parts.append(np.full(n_vals, max_def, dtype=np.uint64))
+        else:
+            page_levels = levels[o : o + n_vals]
+            o += n_vals
+            validity = page_levels == max_def
+            count = np.count_nonzero(validity)
+            def_parts.append(page_levels)
+        if n_nulls is not None and n_vals - n_nulls != count:
+            raise ValueError("v2 page num_nulls disagrees with def levels")
+        valid_parts.append(validity)
+        counts.append(count)
+    # the values of every run of pages of one encoding at once
+    vals_parts = []
+    i = 0
+    while i < len(data_pages):
+        j = i + 1
+        while j < len(data_pages) and data_pages[j][1] == data_pages[i][1]:
+            j += 1
+        vals_parts += _decode_pages(data_pages[i][1], [p[2] for p in data_pages[i:j]],
+                                    phys, counts[i:j], col["type_length"], dict_vals)
+        i = j
+    return vals_parts, valid_parts, def_parts, bool(streams)
+
+
+def _decode_pages(enc: int, bodies: list, phys: str, counts: list, type_length,
+                  dict_vals) -> list:
+    """Value parts of consecutive data pages of one encoding. The streams
+    of DELTA_BINARY_PACKED pages, the lengths of DELTA_LENGTH_BYTE_ARRAY
+    pages and the ids of dictionary pages of one bit width decode together;
+    byte-array values stay views of their pages, joined once per column."""
+    if enc == ENC_DELTA_BP:
+        return [delta.decode_delta_many(bodies, _NUMDT[phys])[0]]
+    if enc == ENC_DLBA:
+        return deltastrings.decode_dlba_many(bodies, counts)
+    widths = {b[0] for b in bodies if len(b)}
+    if enc in (ENC_PLAIN_DICT, ENC_RLE_DICT) and len(widths) == 1:
+        if dict_vals is None:
+            raise ValueError("dictionary-encoded page before dictionary page")
+        ids = rle.decode_hybrid_many(
+            [(memoryview(b)[1:], c) for b, c in zip(bodies, counts)], widths.pop()
+        ).view(np.int64)
+        return [dict_vals.take(ids) if isinstance(dict_vals, RaggedBytes) else dict_vals[ids]]
+    return [_decode_values(enc, b, phys, c, type_length, dict_vals)
+            for b, c in zip(bodies, counts)]
 
 
 def _canonical_def_lut(lo: int, eo: int) -> np.ndarray:

@@ -561,7 +561,7 @@ def _copy_codecs(kp: str) -> tuple:
 _BLOOM_COPY_TYPES = ("int64", "timestamp_us", "timestamp_ntz_us", "float64")
 
 
-def page_copy_refusal(pages: list[tuple[dict, bytes]]) -> str | None:
+def _page_copy_refusal(pages: list[tuple[dict, bytes]]) -> str | None:
     """Why the engine pages of one flat chunk (``(meta, blob)`` pairs)
     cannot be written as parquet pages as they are: ``aes-gcm`` for sealed
     pages, else the codec of a data page that has no parquet encoding every
@@ -621,13 +621,13 @@ def _stat_bytes(kp: str, v) -> bytes:
     return v if kp == "string" else np.array(v, _STAT_DTYPE[kp]).tobytes()
 
 
-def copy_engine_chunk(out: bytearray, name: str, ptype: str,
+def _copy_engine_chunk(out: bytearray, name: str, ptype: str,
                       pages: list[tuple[dict, bytes]], n_rows: int,
                       optional: bool, compression: str | None,
                       index_out: list):
     """One flat column chunk written from the engine pages of one
     (split_id, batch_id) chunk (``(meta, blob)`` in page order; see
-    :func:`page_copy_refusal` for what qualifies), no value decoded: the
+    :func:`_page_copy_refusal` for what qualifies), no value decoded: the
     dictionary page as a PLAIN dictionary page, each data page as a V2 page
     (the blob's levels, uncompressed, then its compressed body), the bloom
     row as the chunk's bloom filter (8-byte types only), and the
@@ -712,6 +712,77 @@ def copy_engine_chunk(out: bytearray, name: str, ptype: str,
         "stats_ok": stats_ok,
     })
     return cc, len(out) - chunk_start
+
+
+def write_engine_pages(path: str, row_groups, columns: list[dict],
+                       compression: str | None) -> tuple[int, int, dict]:
+    """Write a parquet file at ``path`` from engine pages by page copy —
+    ParquetRewriter's rule (SURVEY §3.3). ``row_groups`` yields one
+    ``{column name: [(meta, blob)] in page order}`` per row group;
+    ``columns`` are ``{name, ptype, optional}`` in file order. Each column
+    chunk is written by :func:`_copy_engine_chunk`, its bodies transcoded
+    when their compression is not ``compression``; a chunk parquet cannot
+    carry as it is is decoded and re-encoded as PLAIN by
+    :func:`_write_flat_chunk`. Every chunk of a row group must hold its
+    rows (``ValueError`` otherwise).
+
+    The file is written under a temporary name and renamed at the end, so
+    a failure (a blob that fails its engine CRC32 raises ``IOError``)
+    leaves nothing at ``path``. Returns (rows, row groups, column chunks
+    per decision: ``copied``, ``transcoded`` and the reason of each
+    re-encode)."""
+    import collections
+    import os
+
+    from ..pages import BLOOM_PAGE, decode_column
+
+    out = bytearray(MAGIC)
+    groups, index, done = [], [], collections.Counter({"copied": 0, "transcoded": 0})
+    total = 0
+    for group in row_groups:
+        chunks, n_rows = [], None
+        for col in columns:
+            pages = group[col["name"]]
+            n = sum(m["n_rows"] for m, _ in pages if m["page"] >= 0)
+            if n_rows is None:
+                n_rows = n
+            if n != n_rows:
+                raise ValueError(f"column {col['name']} has {n} rows in a row group "
+                                 f"of {n_rows}")
+            if not n:
+                continue
+            why = _page_copy_refusal(pages)
+            if why is None:
+                same = all(m["compression"] == (compression or "none")
+                           for m, _ in pages if m["page"] != BLOOM_PAGE)
+                done["copied" if same else "transcoded"] += 1
+                chunks.append(_copy_engine_chunk(
+                    out, col["name"], col["ptype"], pages, n, col["optional"],
+                    compression, index))
+                continue
+            done[why] += 1
+            values, validity = decode_column(pages)
+            if col["optional"] and validity is None:
+                validity = np.ones(n, dtype=bool)
+            spec = {"name": col["name"], "ptype": col["ptype"], "codec": "plain",
+                    "values": values, "validity": validity if col["optional"] else None,
+                    # the interop writer hashes values the way parquet readers probe
+                    "bloom": any(m["page"] == BLOOM_PAGE for m, _ in pages)}
+            chunks.append(_write_flat_chunk(out, spec, n, compression, 1, n, index))
+        if n_rows:
+            groups.append((chunks, n_rows))
+            total += n_rows
+    if index:
+        _emit_page_index(out, index)
+    tmp = f"{path}.tmp{os.getpid()}"
+    try:
+        with open(tmp, "wb") as f:
+            _finish_file(f, out, columns, total, groups)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return total, len(groups), done
 
 
 def _boundary_order(e: dict):

@@ -20,7 +20,8 @@ bit-packing of miniblocks is batched *per distinct width* so the Python loop
 runs over blocks (n/128) only for header assembly. The decoder's Python loop
 also runs over blocks only (one minDelta varint and one sum of width bytes
 each); a single gather then unpacks every 32-value group the count reaches,
-at its miniblock's width. A header whose blocks are not a multiple of 128
+at its miniblock's width, for all the pages of a chunk at once
+(``decode_delta_many``). A header whose blocks are not a multiple of 128
 values, or its miniblocks of 32 (the spec's rules), raises ``ValueError``.
 """
 
@@ -140,73 +141,137 @@ def _first_counts(runs: int, size: int, total: int) -> np.ndarray:
 
 
 def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
-    """Decode a full page body (self-describing count). Mirrors
+    """Decode a full page body (self-describing count). ``return_consumed=True``
+    also returns the byte position after the stream — needed when a DELTA
+    stream is FOLLOWED by payload in the same body (parquet DELTA_LENGTH/
+    DELTA_BYTE_ARRAY layouts). ``ValueError`` when the stream is cut short or
+    its header is malformed (see :func:`decode_delta_many`)."""
+    out, spans = decode_delta_many([buf], dtype)
+    return (out, spans[0][1]) if return_consumed else out
+
+
+def decode_delta_many(bufs, dtype=np.int64) -> tuple[np.ndarray, list[tuple[int, int]]]:
+    """The values of several streams (the pages of a column chunk), one
+    after another, and (count, byte position after it) of each. Mirrors
     DeltaBinaryPackingValuesReader.loadNewBlockToBuffer/unpackMiniBlock
     (/root/reference/.../delta/DeltaBinaryPackingValuesReader.java:121,150).
-    ``return_consumed=True`` also returns the byte position after the block
-    — needed when a DELTA stream is FOLLOWED by payload in the same body
-    (parquet DELTA_LENGTH/DELTA_BYTE_ARRAY layouts). ``ValueError`` when the
-    stream is cut short or its header is malformed.
 
-    Only the block headers are walked in Python: one minDelta varint per
-    block, and the sum of its width bytes finds the next block. One
-    :func:`unpack_groups` call then unpacks every 32-value group the count
-    reaches, each at its miniblock's width, so the work and memory follow
-    the count and the stream length, not the block size of the header."""
-    def _ret(arr, pos):
-        return (arr, pos) if return_consumed else arr
+    Only the block headers are walked in Python (:func:`_walk`: one
+    minDelta varint and one sum of width bytes each). One
+    :func:`unpack_groups` call then unpacks every 32-value group the counts
+    reach, each at its miniblock's width (:func:`_deltas`), so the work and
+    memory follow the counts and the stream lengths, not the block size of
+    a header, and a chunk's pages cost the NumPy calls of one stream."""
+    walks = [_walk(buf) for buf in bufs]
+    out = np.empty(sum(w[0] for w in walks), dtype=np.int64)
+    # the deltas of every run of streams that share one block geometry
+    deltas, i = {}, 0
+    while i < len(walks):
+        j = i + 1
+        while j < len(walks) and walks[j][4] == walks[i][4]:
+            j += 1
+        if walks[i][4] is not None:
+            deltas.update(_deltas(bufs[i:j], walks[i:j], i))
+        i = j
+    o = 0
+    for k, (n, first, _, _, geo, _) in enumerate(walks):
+        if n:
+            out[o] = first
+        if geo is not None:
+            # modular int64 arithmetic: NumPy integer arrays wrap silently
+            deltas[k].cumsum(out=out[o + 1 : o + n])
+            out[o + 1 : o + n] += first
+        o += n
+    return out.astype(dtype, copy=False), [(w[0], w[5]) for w in walks]
 
+
+def _walk(buf) -> tuple:
+    """(count, first value, each block's minDelta and where its width bytes
+    start, (block size, miniblocks) or None for fewer than 2 values, end) of
+    one stream, walking its block headers only: the sum of the width bytes
+    of the miniblocks the count reaches finds the next block."""
     pos = 0
     block, pos = read_uvarint(buf, pos)
     nmini, pos = read_uvarint(buf, pos)
     n, pos = read_uvarint(buf, pos)
-    if n == 0:
-        return _ret(np.zeros(0, dtype=dtype), pos)
-    zz, pos = read_uvarint(buf, pos)
-    first = zigzag_decode(zz)
-    if n == 1:
-        return _ret(np.array([first], dtype=np.int64).astype(dtype), pos)
+    first = 0
+    if n:
+        zz, pos = read_uvarint(buf, pos)
+        first = zigzag_decode(zz)
+    if n < 2:
+        return n, first, [], [], None, pos
     mini = block // nmini if nmini else 0
     if mini == 0 or mini * nmini != block or block % 128 or mini % 32:
         raise ValueError(f"DELTA block of {block} values in {nmini} miniblocks")
-
     nd = n - 1
     nblocks = (nd + block - 1) // block
     # spec: miniblocks past the data carry NO body bytes, and readers must
     # accept arbitrary width bytes for them
     tail_minis = -(-(nd - (nblocks - 1) * block) // mini)
-    min_deltas, width_bytes, skips = [], [], []
-    end = 0  # where the previous block's payload ended
-    for b in range(nblocks):
-        zz, pos = read_uvarint(buf, pos)
-        min_deltas.append(zigzag_decode(zz))
-        w = buf[pos : pos + nmini]
-        width_bytes.append(w)
-        pos += nmini
-        skips.append(pos - end)  # bytes before the block's first group
-        pos += sum(w if b + 1 < nblocks else w[:tail_minis]) * (mini // 8)
-        end = pos
+    group_bytes = mini // 8  # payload bytes per bit of width
+    mins, wstarts = [], []
+    try:
+        for b in range(nblocks):
+            zz = buf[pos]  # the minDelta zigzag varint, read inline
+            pos += 1
+            if zz > 127:
+                zz &= 0x7F
+                shift = 7
+                while True:
+                    c = buf[pos]
+                    pos += 1
+                    zz |= (c & 0x7F) << shift
+                    if c < 128:
+                        break
+                    shift += 7
+            mins.append((zz >> 1) ^ -(zz & 1))
+            wstarts.append(pos)
+            pos += nmini
+            minis = nmini if b + 1 < nblocks else tail_minis
+            pos += sum(buf[pos - nmini : pos - nmini + minis]) * group_bytes
+    except IndexError:
+        raise ValueError(f"DELTA stream of {len(buf)} bytes ends inside a block header") from None
     if pos > len(buf):
         raise ValueError(f"DELTA stream of {len(buf)} bytes needs {pos}")
+    return n, first, mins, wstarts, (block, nmini), pos
 
-    # every 32-value group the count reaches: the width of its miniblock,
-    # and its start, a running sum of the group sizes and the skips
-    used = (nblocks - 1) * nmini + tail_minis  # miniblocks the count reaches
-    groups = -(-nd // 32)
-    widths = np.frombuffer(b"".join(width_bytes), dtype=np.uint8)[:used].astype(np.int64)
-    widths = np.repeat(widths, _first_counts(used, mini // 32, groups))
-    step = np.empty(groups, dtype=np.int64)
-    step[0] = 0
-    step[1:] = widths[:-1] * 4
-    step[:: block // 32] += skips
-    starts = step.cumsum()
-    raw = np.frombuffer(buf, dtype=np.uint8, count=int(starts[-1] + widths[-1] * 4))
-    deltas = unpack_groups(raw, starts, widths, 32).view(np.int64)
-    # modular int64 arithmetic: NumPy integer arrays wrap without warning
-    mins = np.array(min_deltas, dtype=np.int64)
-    deltas += np.repeat(mins, _first_counts(nblocks, block // 32, groups))[:, None]
-    out = np.empty(n, dtype=np.int64)
-    out[0] = first
-    deltas.reshape(-1)[:nd].cumsum(out=out[1:])
-    out[1:] += first
-    return _ret(out.astype(dtype, copy=False), pos)
+
+def _deltas(bufs, walks, k0: int) -> dict:
+    """``{stream index: its n-1 deltas}`` for streams of one block geometry
+    (``walks`` from :func:`_walk`; ``k0`` is the first one's index), every
+    group of them unpacked by one :func:`unpack_groups` call. The groups of
+    a last block past its stream's count get width 0 (no payload) and their
+    values are dropped."""
+    block, nmini = walks[0][4]
+    per_mini, per_block = block // nmini // 32, block // 32  # groups
+    if len(walks) == 1:
+        raw = np.frombuffer(bufs[0], dtype=np.uint8, count=walks[0][5])
+        wstart = np.array(walks[0][3], dtype=np.int64)
+        mins = np.array(walks[0][2], dtype=np.int64)
+    else:
+        raw = np.frombuffer(b"".join(buf[: w[5]] for buf, w in zip(bufs, walks)), dtype=np.uint8)
+        bases = np.cumsum([0] + [w[5] for w in walks[:-1]]).tolist()
+        wstart = np.array([p + b for w, b in zip(walks, bases) for p in w[3]], dtype=np.int64)
+        mins = np.array([m for w in walks for m in w[2]], dtype=np.int64)
+    # (block, group): its miniblock's width, 0 past the stream's count, and
+    # its start: the block's payload, then the groups before it. Blocks are
+    # laid out as wide as the widest a count reaches, not as the header's
+    # block size: memory follows the counts
+    nblocks = [len(w[2]) for w in walks]
+    last = np.cumsum(nblocks) - 1
+    reach = np.array([-(-(w[0] - 1) // 32) - (nb - 1) * per_block
+                      for w, nb in zip(walks, nblocks)])
+    lanes = np.arange(per_block if max(nblocks) > 1 else int(reach.max()))
+    widths = raw.take(wstart[:, None] + lanes // per_mini).astype(np.int64)
+    widths[last] *= lanes < reach[:, None]
+    step = widths * 4
+    starts = (wstart + nmini)[:, None] + step.cumsum(axis=1) - step
+    deltas = unpack_groups(raw, starts.reshape(-1), widths.reshape(-1), 32).reshape(len(wstart), -1)
+    deltas = deltas.view(np.int64)
+    deltas += mins[:, None]
+    flat = deltas.reshape(-1)
+    out, b0, stride = {}, 0, 32 * len(lanes)
+    for i, (w, nb) in enumerate(zip(walks, nblocks)):
+        out[k0 + i] = flat[b0 * stride : b0 * stride + w[0] - 1]
+        b0 += nb
+    return out

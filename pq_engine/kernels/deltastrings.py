@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .delta import decode_delta, encode_delta
+from .delta import decode_delta, decode_delta_many, encode_delta
 from .ragged import RaggedBytes, padded_words
 
 PREFIX_CAP = 256  # longest shared prefix we exploit; avoids huge (n, maxlen) matrices
@@ -38,15 +38,6 @@ def _dlba_pieces(col: RaggedBytes) -> tuple:
     return encode_delta(col.lengths.astype(np.int32)), col.data.data
 
 
-def _ragged(lengths: np.ndarray, buf, data_off: int, count: int) -> RaggedBytes:
-    if count and lengths[:count].min() < 0:
-        raise ValueError("DELTA_LENGTH_BYTE_ARRAY: negative value length")
-    offsets = np.zeros(count + 1, dtype=np.int64)
-    np.cumsum(lengths[:count], out=offsets[1:])
-    data = np.frombuffer(buf, dtype=np.uint8, count=int(offsets[-1]), offset=data_off)
-    return RaggedBytes(offsets, data)
-
-
 def encode_dlba(col: RaggedBytes) -> bytes:
     """parquet DELTA_LENGTH_BYTE_ARRAY page body (self-describing: no
     length prefix in front of the lengths stream)."""
@@ -54,8 +45,27 @@ def encode_dlba(col: RaggedBytes) -> bytes:
 
 
 def decode_dlba(buf, count: int) -> RaggedBytes:
-    lengths, used = decode_delta(buf, np.int64, return_consumed=True)
-    return _ragged(lengths, buf, used, count)
+    return decode_dlba_many([buf], [count])[0]
+
+
+def decode_dlba_many(bufs, counts) -> list[RaggedBytes]:
+    """The ``counts[i]`` values of each body in ``bufs`` (the pages of a
+    column chunk), each as a view of its body: every lengths stream is
+    decoded by one :func:`decode_delta_many` call."""
+    lengths, spans = decode_delta_many(bufs, np.int64)
+    firsts = np.cumsum([0] + [n for n, _ in spans]).tolist()
+    if any(n < c for (n, _), c in zip(spans, counts)):
+        raise ValueError("DELTA_LENGTH_BYTE_ARRAY: fewer lengths than values")
+    if len(lengths) and lengths.min() < 0:
+        raise ValueError("DELTA_LENGTH_BYTE_ARRAY: negative value length")
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    out = []
+    for buf, (_, end), f, c in zip(bufs, spans, firsts, counts):
+        page = offsets[f : f + c + 1] - offsets[f]
+        out.append(RaggedBytes(page, np.frombuffer(buf, dtype=np.uint8, count=int(page[-1]),
+                                                   offset=end)))
+    return out
 
 
 _POWERS64 = np.uint64(1) << np.arange(64, dtype=np.uint64)

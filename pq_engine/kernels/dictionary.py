@@ -110,7 +110,7 @@ def encode_dict_data_page(codes: np.ndarray, max_id: int) -> bytes:
 
 def decode_dict_data_page(buf, count: int) -> np.ndarray:
     width = buf[0]
-    return decode_hybrid(memoryview(buf)[1:], width, count).astype(np.int64)
+    return decode_hybrid(memoryview(buf)[1:], width, count).view(np.int64)
 
 
 def encode_dict_page_numeric(uniques: np.ndarray) -> bytes:

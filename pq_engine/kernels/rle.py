@@ -106,88 +106,70 @@ def encode_hybrid(values: np.ndarray, width: int) -> bytes:
 
 def decode_hybrid(buf, width: int, count: int) -> np.ndarray:
     """Decode exactly ``count`` values; returns uint64. ``ValueError`` when
-    a run the count reaches is cut short.
+    a run the count reaches is cut short (see :func:`decode_hybrid_many`)."""
+    return decode_hybrid_many([(buf, count)], width)
+
+
+def decode_hybrid_many(streams, width: int) -> np.ndarray:
+    """The values of several streams of one ``width``, ``(buf, count)``
+    each (the level or id streams of a column chunk's pages), one after
+    another as uint64. ``ValueError`` when a run a count reaches is cut
+    short.
 
     Mirrors RunLengthBitPackingHybridDecoder.readNext (:80-90), but only the
-    run headers are walked in Python: every bit-packed group of the stream
+    run headers are walked in Python: every bit-packed group of every stream
     is then unpacked by one :func:`unpack_groups` call, and the RLE runs are
-    filled by one ``np.repeat``."""
-    if count == 0:
-        return np.zeros(0, dtype=np.uint64)
-    vals = _decode_packed_runs(buf, width, count)
-    if vals is not None:
-        return vals
+    filled by one ``np.repeat``, so a chunk's pages cost the NumPy calls of
+    one stream."""
     byte_w = (width + 7) // 8
     takes: list[int] = []  # values each run gives, in stream order
     kinds: list[bool] = []  # True for a bit-packed run
-    rle_values: list[int] = []
-    packed: list[tuple[int, int]] = []  # (payload byte, groups taken)
-    got = pos = 0
-    while got < count:
-        header, pos = read_uvarint(buf, pos)
-        if header & 1:  # bit-packed run
-            take = min((header >> 1) * 8, count - got)
-            packed.append((pos, (take + 7) // 8))
-            pos += (header >> 1) * width
-        else:  # rle run
-            take = min(header >> 1, count - got)
-            rle_values.append(int.from_bytes(buf[pos : pos + byte_w], "little"))
-            pos += byte_w
-        takes.append(take)
-        kinds.append(bool(header & 1))
-        got += take
-    if pos > len(buf):
-        raise ValueError(f"RLE/bit-packed stream of {len(buf)} bytes ends inside a run")
+    run_values: list[int] = []  # an RLE run's value, 0 for a bit-packed run
+    packed: list[tuple[int, int]] = []  # (payload byte in ``joined``, groups taken)
+    joined = []  # the bytes of every stream, up to its end
+    base = 0
+    for buf, count in streams:
+        got = pos = 0
+        while got < count:
+            header, pos = read_uvarint(buf, pos)
+            if header & 1:  # bit-packed run
+                take = min((header >> 1) * 8, count - got)
+                packed.append((base + pos, (take + 7) // 8))
+                pos += (header >> 1) * width
+                run_values.append(0)
+            else:  # rle run
+                take = min(header >> 1, count - got)
+                run_values.append(int.from_bytes(buf[pos : pos + byte_w], "little"))
+                pos += byte_w
+            takes.append(take)
+            kinds.append(bool(header & 1))
+            got += take
+        if pos > len(buf):
+            raise ValueError(f"RLE/bit-packed stream of {len(buf)} bytes ends inside a run")
+        joined.append(buf[:pos])
+        base += pos
     if not packed:
-        return np.repeat(np.array(rle_values, dtype=np.uint64), takes)
+        return np.repeat(np.array(run_values, dtype=np.uint64), takes)
     p, g = np.array(packed, dtype=np.int64).T
     first = p - (np.cumsum(g) - g) * width  # each run's groups continue its first
     starts = np.repeat(first, g) + np.arange(int(g.sum())) * width
-    vals = unpack_groups(np.frombuffer(buf, dtype=np.uint8, count=pos), starts, width).reshape(-1)
-    if not rle_values:
-        return vals[:count]
-    takes, kinds = np.array(takes), np.array(kinds)
-    is_packed = np.repeat(kinds, takes)
-    rle_fill = np.repeat(np.array(rle_values, dtype=np.uint64), takes[~kinds])
-    out = np.empty(count, dtype=np.uint64)
-    out[is_packed] = vals[: count - len(rle_fill)]
-    out[~is_packed] = rle_fill
+    raw = np.frombuffer(buf, dtype=np.uint8, count=pos) if len(joined) == 1 else \
+        np.frombuffer(b"".join(joined), dtype=np.uint8)
+    vals = unpack_groups(raw, starts, width).reshape(-1)
+    takes = np.array(takes)
+    is_packed = np.array(kinds)
+    t = takes[is_packed]
+    extra = g * 8 - t  # padding values of a run the count cut short
+    if extra[:-1].any():  # within the streams: keep what each run gives
+        vals = vals[np.repeat(8 * (np.cumsum(g) - g) - (np.cumsum(t) - t), t)
+                    + np.arange(int(t.sum()))]
+    elif extra[-1]:
+        vals = vals[: len(vals) - int(extra[-1])]
+    if is_packed.all():
+        return vals
+    out = np.repeat(np.array(run_values, dtype=np.uint64), takes)
+    out[np.repeat(is_packed, takes)] = vals
     return out
-
-
-_FULL_RUN_HEADER = (_MAX_GROUPS_PER_RUN << 1) | 1  # one varint byte, 0x7F
-_RUN_VALUES = 8 * _MAX_GROUPS_PER_RUN
-
-
-def _decode_packed_runs(buf, width: int, count: int):
-    """Fast path of :func:`decode_hybrid` for a stream that reaches
-    ``count`` through bit-packed runs alone, each of the writer's maximum 63
-    groups but the last (dictionary ids and other high-entropy streams):
-    the run headers are checked in one vectorized compare instead of walked,
-    and each run unpacks as one 504-value group. None when the stream is not
-    of that shape (then the general walk decodes it)."""
-    first = buf[0] if len(buf) else 0
-    if width == 0 or first >= 0x80 or not first & 1 or (first >> 1) * 8 < min(count, _RUN_VALUES):
-        return None  # the first header is no bit-packed run of 63 groups or to the count
-    run = 1 + _MAX_GROUPS_PER_RUN * width  # bytes of one full run
-    full, rest = divmod(count, _RUN_VALUES)
-    runs = full + (rest > 0)
-    heads = np.frombuffer(buf, dtype=np.uint8, count=min(len(buf), (runs - 1) * run + 1))[::run]
-    if len(heads) < runs or (heads[:full] != _FULL_RUN_HEADER).any():
-        return None
-    end = full * run
-    if rest:
-        last = int(heads[-1])
-        if not last & 1 or last >= 0x80 or (last >> 1) * 8 < rest:
-            return None
-        end = (runs - 1) * run + 1 + (last >> 1) * width
-    if end > len(buf):
-        return None
-    # the last run unpacks as a full one: zeros stand in for its missing groups
-    raw = np.zeros(runs * run, dtype=np.uint8)
-    raw[:end] = np.frombuffer(buf, dtype=np.uint8, count=end)
-    starts = np.arange(runs, dtype=np.int64) * run + 1
-    return unpack_groups(raw, starts, width, _RUN_VALUES).reshape(-1)[:count]
 
 
 def encode_hybrid_length_prefixed(values: np.ndarray, width: int) -> bytes:

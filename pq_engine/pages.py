@@ -189,11 +189,23 @@ def encode_dict_chunk_page(uniques, ptype: str) -> bytes:
 
 
 def decode_dict_chunk_page(buf, ptype: str, count: int):
-    """The ``count`` uniques of a chunk dictionary page body."""
+    """The ``count`` uniques of a chunk dictionary page body. ``ValueError``
+    unless the body is exactly those uniques: a body with more bytes (such
+    as a page of the older layout, a u32 count in front of the uniques)
+    would otherwise decode to shifted values under a matching CRC."""
     ptype = kernel_ptype(ptype)
     if ptype in RAGGED_TYPES:
-        return dictionary.decode_dict_page_bytes(buf, count)
-    if ptype.startswith("fixed["):
+        uniques = dictionary.decode_dict_page_bytes(buf, count)
+        size = 4 * count + int(uniques.offsets[-1] - uniques.offsets[0])
+    else:
+        fixed = ptype.startswith("fixed[")
+        size = count * (int(ptype[6:-1]) if fixed else np.dtype(_NUMERIC[ptype]).itemsize)
+    if size != len(buf):
+        raise ValueError(f"dictionary page of {len(buf)} bytes does not hold exactly "
+                         f"{count} {ptype} values ({size} bytes)")
+    if ptype in RAGGED_TYPES:
+        return uniques
+    if fixed:
         from .kernels.fixedlen import decode_plain_fixed
 
         return decode_plain_fixed(buf, int(ptype[6:-1]), count)

@@ -185,6 +185,38 @@ def test_decode_delta_matches_spec(stream, trailing):
     assert out.tolist() == expected
 
 
+@settings(max_examples=100, deadline=None)
+@given(st.integers(0, 64).flatmap(
+    lambda w: st.tuples(st.just(w), st.lists(hybrid_streams(w), min_size=1, max_size=4))))
+def test_decode_hybrid_many_is_each_stream_in_turn(case):
+    # a chunk's pages decode together: counts may cut any stream mid-run
+    width, streams = case
+    out = rle.decode_hybrid_many(streams, width)
+    assert out.tolist() == [v for s, c in streams for v in ref_hybrid(s, width, c)]
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(delta_streams(), min_size=1, max_size=4))
+def test_decode_delta_many_is_each_stream_in_turn(streams):
+    # streams of several block geometries, and of 0 or 1 values
+    out, spans = delta.decode_delta_many(streams)
+    refs = [ref_delta(s) for s in streams]
+    assert out.tolist() == [v for vals, _ in refs for v in vals]
+    assert spans == [(len(vals), used) for vals, used in refs]
+
+
+def test_decode_dlba_many_is_each_body_in_turn():
+    from pq_engine.kernels import deltastrings
+    from pq_engine.kernels.ragged import RaggedBytes
+
+    rng = np.random.default_rng(7)
+    cols = [RaggedBytes.from_pylist([bytes(rng.integers(0, 256, int(k), dtype=np.uint8))
+                                     for k in rng.integers(0, 40, n)]) for n in (1, 0, 300, 129)]
+    bodies = [deltastrings.encode_dlba(c) + b"tail" for c in cols]
+    got = deltastrings.decode_dlba_many(bodies, [len(c) for c in cols])
+    assert [g.to_pylist() for g in got] == [c.to_pylist() for c in cols]
+
+
 def test_decode_delta_min_delta_wraparound():
     # deltas of both signs at the int64 extremes: minDelta = -2**63 and the
     # stored values need all 64 bits

@@ -149,6 +149,25 @@ def test_plain_string_overrun_raises_value_error():
         pages.decode_column([(meta, bytes(bad))])
 
 
+@pytest.mark.parametrize("ptype,values", [
+    ("int64", np.array([7, 3, 7, 9] * 50, dtype=np.int64)),
+    ("float64", np.array([0.5, 2.0, 0.5] * 70)),
+    ("string", RaggedBytes.from_pylist([b"en", b"de", b"fr"] * 70)),
+])
+def test_older_dictionary_page_layout_raises(ptype, values):
+    """A dictionary page of the older layout (u32 count, then the PLAIN
+    uniques) under a matching CRC raises ValueError instead of decoding to
+    shifted values."""
+    out = pages.encode_column(values, ptype, codec="dict")
+    i = next(i for i, (m, _) in enumerate(out) if m["page"] == pages.DICT_PAGE)
+    meta, blob = out[i]
+    assert meta["compression"] == "none"
+    older = blob[:1] + meta["n_rows"].to_bytes(4, "little") + blob[1:]
+    out[i] = (dict(meta, crc32=zlib.crc32(older)), older)
+    with pytest.raises(ValueError):
+        pages.decode_column(out)
+
+
 def test_empty_column():
     out = _roundtrip(np.zeros(0, dtype=np.int64), "int64")
     assert out == []

@@ -757,49 +757,76 @@ def decode_column(pages: list[tuple[dict, bytes]], ptype: str | None = None):
         from .nested import decode_list_pages
 
         return decode_list_pages(pages, pages[0][0]["ptype"], dict_vals), None
-    vals_parts = []
-    valid_parts = []
-    any_nulls = False
+    # every page checked and decompressed first; then the validity streams
+    # of all pages, and the values of each run of pages of one codec, decode
+    # together (one NumPy pass for a chunk's pages, not one per page)
+    levels, bodies = [], []
     for meta, blob in pages:
         if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
             raise IOError(f"page {meta['page']} CRC mismatch")
-        has_validity = blob[0] == 1
         pos = 1
+        if blob[0] == 1:  # [1][u32 length][RLE validity] before the body
+            blen = int.from_bytes(blob[1:5], "little")
+            levels.append((memoryview(blob)[5 : 5 + blen], meta["n_rows"]))
+            pos = 5 + blen
+        else:
+            levels.append(None)
+        bodies.append(pagecomp.decompress(memoryview(blob)[pos:], meta.get("compression", "none")))
+    streams = [lv for lv in levels if lv is not None]
+    flags = rle.decode_hybrid_many(streams, 1).astype(bool) if streams else None
+    valid_parts, counts, o = [], [], 0
+    for (meta, _), lv in zip(pages, levels):
         n_rows = meta["n_rows"]
-        if has_validity:
-            v, consumed = rle.decode_hybrid_length_prefixed(
-                memoryview(blob)[1:], 1, n_rows
-            )
-            validity = v.astype(bool)
-            pos += consumed
-            any_nulls = True
-        else:
+        if lv is None:
             validity = np.ones(n_rows, dtype=bool)
-        body = pagecomp.decompress(memoryview(blob)[pos:], meta.get("compression", "none"))
-        count = int(validity.sum())
-        if meta["codec"] == "dict":
-            if dict_vals is None:
-                raise IOError(
-                    f"dict data page {meta['page']} without its chunk dictionary "
-                    "page — pass the page = -2 row through to decode"
-                )
-            ids = dictionary.decode_dict_data_page(body, count)
-            part = (
-                dict_vals.take(ids)
-                if kernel_ptype(meta["ptype"]) in RAGGED_TYPES
-                else dict_vals[ids]
-            )
-            vals_parts.append(part)
         else:
-            vals_parts.append(_decode_values(meta["codec"], meta["ptype"], body, count))
+            validity = flags[o : o + n_rows]
+            o += n_rows
         valid_parts.append(validity)
+        counts.append(np.count_nonzero(validity))
+    vals_parts = []
+    i = 0
+    while i < len(pages):
+        j = i + 1
+        while j < len(pages) and pages[j][0]["codec"] == pages[i][0]["codec"]:
+            j += 1
+        vals_parts += _decode_run(pages[i:j], bodies[i:j], counts[i:j], dict_vals)
+        i = j
     ptype = pages[0][0]["ptype"] if pages else "int64"
     if kernel_ptype(ptype) in RAGGED_TYPES:
         all_vals = _concat_ragged(vals_parts)
     else:
         all_vals = np.concatenate(vals_parts) if vals_parts else np.zeros(0)
     validity = np.concatenate(valid_parts) if valid_parts else np.zeros(0, bool)
-    return all_vals, (validity if any_nulls else None)
+    return all_vals, (validity if streams else None)
+
+
+def _decode_run(pages, bodies, counts, dict_vals) -> list:
+    """Value parts of consecutive data pages of one codec: the streams of
+    ``delta`` pages, the lengths of ``dlba`` pages and the ids of ``dict``
+    pages of one bit width decode together; other codecs page by page."""
+    meta = pages[0][0]
+    codec, kp = meta["codec"], kernel_ptype(meta["ptype"])
+    if codec == "delta" and kp in _NUMERIC:
+        return [delta.decode_delta_many(bodies, _NUMERIC[kp])[0]]
+    if codec == "dlba" and kp in RAGGED_TYPES:
+        return deltastrings.decode_dlba_many(bodies, counts)
+    if codec == "dict":
+        if dict_vals is None:
+            raise IOError(
+                f"dict data page {meta['page']} without its chunk dictionary "
+                "page — pass the page = -2 row through to decode"
+            )
+        widths = {b[0] for b in bodies if len(b)}
+        if len(widths) == 1:
+            ids = rle.decode_hybrid_many(
+                [(memoryview(b)[1:], c) for b, c in zip(bodies, counts)], widths.pop()
+            ).view(np.int64)
+        else:
+            ids = np.concatenate([dictionary.decode_dict_data_page(b, c)
+                                  for b, c in zip(bodies, counts)])
+        return [dict_vals.take(ids) if kp in RAGGED_TYPES else dict_vals[ids]]
+    return [_decode_values(codec, m["ptype"], b, c) for (m, _), b, c in zip(pages, bodies, counts)]
 
 
 def _concat_ragged(parts: list[RaggedBytes]) -> RaggedBytes:

@@ -732,7 +732,7 @@ def cmd_from_parquet(args):
 
     import pyarrow as pa
 
-    from .interop.parquet_reader import read_parquet
+    from .interop.parquet_reader import _kernel_ptype, read_parquet
     from .pages import encode_column
 
     if not args.out:
@@ -743,24 +743,17 @@ def cmd_from_parquet(args):
     for c in schema:
         name = c["name"]
         values, validity = data[name]
-        phys = c["physical"]
-        if phys == "byte_array":
-            pt = "string" if c.get("converted") == 0 else "binary"
-        elif phys == "flba":
-            pt = f"fixed[{c['type_length']}]"
-        elif phys == "int96":
-            pt = "fixed[12]"
-        else:
-            pt = phys
+        if c.get("group"):
+            print(f"skipping column {name}: nested {c['group']} group import "
+                  "unsupported by from-parquet (flat + LIST only)")
+            continue
+        leaf = c["element"] if c.get("list") else c
+        pt = "string" if leaf.get("converted") == 0 else _kernel_ptype(leaf)
         if c.get("list"):
             from .nested import encode_list_column
 
             rows += _rebuild_rows(None, 0, 0, name,
                                   encode_list_column(values, f"list<{pt}>"), None)
-            continue
-        if c.get("group"):
-            print(f"skipping column {name}: nested {c['group']} group import "
-                  "unsupported by from-parquet (flat + LIST only)")
             continue
         rows += _rebuild_rows(None, 0, 0, name,
                               encode_column(values, pt, validity=validity), None)

@@ -4,8 +4,12 @@ The interop WRITER proved our page bytes by letting pyarrow/DuckDB decode
 them; this module proves the reverse: files written by EXTERNAL writers
 (pyarrow, DuckDB, parquet-java, our own interop writer) decode through our
 NumPy kernels with no parquet library in the loop. Footer and page headers
-parse via the generic compact-thrift reader (thrift_compact.read_struct);
-values decode with the same kernels the engine encodes with.
+parse via the generic compact-thrift reader (thrift_compact.read_struct).
+Values decode through the engine's own value decoder: each data page's
+encoding maps to an engine page codec (``_ENGINE_CODEC``, the inverse of
+the export's ``PAGE_COPY_ENCODING``) and a chunk's pages go through
+``pages.decode_runs``, dictionary pages through
+``pages.decode_dict_chunk_page``; only the level streams are read here.
 
 Reference shape: ParquetFileReader.java (footer walk, chunk page streams,
 readNextFilteredRowGroup :1140-1268) + ParquetMetadataConverter.java
@@ -45,11 +49,13 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..kernels import bytestream, delta, deltastrings, dictionary, fixedlen, plain, rle
+from ..kernels import rle
 from ..kernels.ragged import RaggedBytes
-from .format import (ENC_BSS, ENC_DBA, ENC_DELTA_BP, ENC_DLBA, ENC_PLAIN,
-                     ENC_PLAIN_DICT, ENC_RLE, ENC_RLE_DICT, PAGE_DATA,
+from ..pages import (_NUMERIC, decode_column, decode_dict_chunk_page, decode_runs,
+                     join_values, page_levels)
+from .format import (ENC_BSS, ENC_PLAIN_DICT, ENC_RLE, ENC_RLE_DICT, PAGE_DATA,
                      PAGE_DATA_V2, PAGE_DICT)
+from .parquet_writer import PAGE_COPY_ENCODING
 from .thrift_compact import read_struct
 
 MAGIC = b"PAR1"
@@ -58,8 +64,6 @@ _PHYS = {0: "bool", 1: "int32", 2: "int64", 3: "int96", 4: "float32",
          5: "float64", 6: "byte_array", 7: "flba"}
 _CODEC = {0: "none", 1: "snappy", 2: "gzip", 4: "lz4", 5: "brotli",
           6: "zstd", 7: "lz4_raw"}
-_NUMDT = {"int32": np.int32, "int64": np.int64,
-          "float32": np.float32, "float64": np.float64}
 
 
 def _leaf(se: dict) -> dict:
@@ -106,10 +110,11 @@ def _decoding_guard(fn):
 def read_footer(buf: bytes) -> dict:
     """Parse FileMetaData -> {num_rows, schema: [col dicts], row_groups}.
 
-    Schema entries are flat leaves, ``list`` columns (with ``optional`` /
-    ``element_optional`` flags — max_def is DERIVED from these, never
-    assumed), ``group: "map"`` columns (key/value leaf dicts) or
-    ``group: "struct"`` columns (children leaf list)."""
+    Schema entries are flat leaves, ``list`` columns (an ``optional`` flag
+    and the ``element`` leaf dict, whose own flag gives the element's
+    optionality — max_def is DERIVED from these, never assumed),
+    ``group: "map"`` columns (key/value leaf dicts) or ``group: "struct"``
+    columns (children leaf list)."""
     if buf[:4] != MAGIC or buf[-4:] != MAGIC:
         raise ValueError("not a parquet file (magic)")
     flen = int.from_bytes(buf[-8:-4], "little")
@@ -152,16 +157,12 @@ def parse_footer_bytes(fbytes: bytes, md_overrides: dict | None = None
                 and schema_elems[i + 1].get(5) == 1
                 and not schema_elems[i + 2].get(5)           # leaf element
             ):
-                el = schema_elems[i + 2]
                 cols.append({
                     "name": name,
                     "list": True,
                     "mid": schema_elems[i + 1][4].decode(),
-                    "physical": _PHYS[el[1]],
-                    "type_length": el.get(2),
                     "optional": se.get(3, 0) == 1,
-                    "element_optional": el.get(3, 0) == 1,
-                    "converted": el.get(6),
+                    "element": _leaf(schema_elems[i + 2]),
                 })
                 i += 3
                 continue
@@ -280,38 +281,29 @@ def _decompress(body, codec: str, raw_size: int):
     return out
 
 
-def _decode_values(enc: int, body, phys: str, count: int, type_length,
-                   dict_vals):
-    if enc in (ENC_PLAIN_DICT, ENC_RLE_DICT):
-        if dict_vals is None:
-            raise ValueError("dictionary-encoded page before dictionary page")
-        ids = dictionary.decode_dict_data_page(body, count)
-        return dict_vals.take(ids) if isinstance(dict_vals, RaggedBytes) \
-            else dict_vals[ids]
-    if enc == ENC_PLAIN:
-        if phys == "bool":
-            return plain.decode_plain_bool(body, count)
-        if phys == "byte_array":
-            return plain.decode_plain_bytes(body, count)
-        if phys == "flba":
-            return fixedlen.decode_plain_fixed(body, type_length, count)
-        if phys == "int96":
-            return fixedlen.decode_plain_fixed(body, 12, count)
-        return plain.decode_plain_numeric(body, _NUMDT[phys], count)
-    if enc == ENC_RLE and phys == "bool":
-        # bool RLE pages carry a u32 length prefix then the hybrid stream
-        return rle.decode_hybrid(memoryview(body)[4:], 1, count).astype(bool)
-    if enc == ENC_DELTA_BP:
-        return delta.decode_delta(body, _NUMDT[phys])
-    if enc == ENC_BSS:
-        if phys == "flba":
-            return fixedlen.decode_bss_fixed(body, type_length, count)
-        return bytestream.decode_bss(body, _NUMDT[phys], count)
-    if enc == ENC_DLBA:
-        return deltastrings.decode_dlba(body, count)
-    if enc == ENC_DBA:
-        return deltastrings.decode_dba(body, count)
-    raise ValueError(f"unsupported encoding {enc} for {phys}")
+# parquet encoding -> engine page codec: the inverse of the export's
+# PAGE_COPY_ENCODING, plus the encodings the export never writes
+_ENGINE_CODEC = {enc: codec for codec, enc in PAGE_COPY_ENCODING.items()}
+_ENGINE_CODEC.update({ENC_PLAIN_DICT: "dict", ENC_BSS: "bss"})
+
+
+def _kernel_ptype(leaf: dict) -> str:
+    """The engine kernel type that decodes a leaf's physical type."""
+    phys = leaf["physical"]
+    if phys == "flba":
+        return f"fixed[{leaf['type_length']}]"
+    return {"byte_array": "binary", "int96": "fixed[12]"}.get(phys, phys)
+
+
+def _engine_page(enc: int, kp: str, body) -> tuple:
+    """(engine codec, value body) of a data page of parquet encoding
+    ``enc``: its values then decode through ``pages.decode_runs``."""
+    if enc == ENC_RLE and kp == "bool":
+        # the spec's RLE boolean body is the engine's after a u32 length
+        return "rle", memoryview(body)[4:]
+    if enc not in _ENGINE_CODEC:
+        raise ValueError(f"unsupported encoding {enc} for {kp}")
+    return _ENGINE_CODEC[enc], body
 
 
 def _verify_crc(hdr: dict, body) -> None:
@@ -329,17 +321,11 @@ def _verify_crc(hdr: dict, body) -> None:
             "page CRC32 mismatch (corrupt page body)")
 
 
-def _decode_dict_page(hdr, body, chunk, phys, type_length):
-    dh = hdr[7]
-    n_dict = dh[1]
+def _dict_page(hdr: dict, body, chunk: dict, kp: str):
+    """The values of a dictionary page from its header and stored body;
+    ``ValueError`` unless the body holds exactly the header's count."""
     raw = _decompress(body, chunk["codec"], hdr[2])
-    if phys == "byte_array":
-        return plain.decode_plain_bytes(raw, n_dict)
-    if phys == "flba":
-        return fixedlen.decode_plain_fixed(raw, type_length, n_dict)
-    if phys == "int96":
-        return fixedlen.decode_plain_fixed(raw, 12, n_dict)
-    return plain.decode_plain_numeric(raw, _NUMDT[phys], n_dict)
+    return decode_dict_chunk_page(raw, kp, hdr[7][1])
 
 
 def _read_chunk(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
@@ -351,19 +337,15 @@ def _read_chunk(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
     levels back in ``defs`` (None when the leaf is required at every level).
     ``pages`` (from an OffsetIndex) restricts decoding to the given
     (offset, n_rows) page subset — the readNextFilteredRowGroup analog."""
-    return _join_pages(_chunk_pages(buf, chunk, col, max_def, pages, dict_vals))
+    return _join_pages(_chunk_pages(buf, chunk, col, max_def, pages, dict_vals),
+                       _kernel_ptype(col))
 
 
-def _join_pages(decoded) -> tuple:
+def _join_pages(decoded, kp: str) -> tuple:
     """(values, validity|None, defs) of the per-page parts that
     :func:`_chunk_pages` returned, of one chunk or of several."""
     vals_parts, valid_parts, def_parts, any_nulls = decoded
-    if isinstance(vals_parts[0], RaggedBytes):
-        from ..pages import _concat_ragged
-
-        values = _concat_ragged(vals_parts)
-    else:
-        values = np.concatenate(vals_parts)
+    values = join_values(vals_parts, kp)
     defs = np.concatenate(def_parts) if def_parts else None
     if not any_nulls:
         return values, None, defs
@@ -373,129 +355,96 @@ def _join_pages(decoded) -> tuple:
     return values, None if validity.all() else validity, defs
 
 
-def _chunk_pages(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
-                 pages: list | None = None, dict_vals=None) -> tuple:
-    """Decode the pages of a non-repeated column chunk (see
-    :func:`_read_chunk`) -> (value parts, validity parts, level parts,
-    any nulls), one part per page, not yet joined."""
-    if max_def is None:
-        max_def = 1 if col["optional"] else 0
-    width = max_def.bit_length()
-    phys = col["physical"]
+def _walk_pages(buf: bytes, chunk: dict, kp: str, max_rep: int, max_def: int,
+                pages: list | None = None, dict_vals=None) -> tuple:
+    """Parse, CRC-check and decompress the pages of a column chunk ->
+    (dictionary values | None, [(engine codec, value body, level entries,
+    repetition stream, definition stream, V2 num_nulls)]), a level stream
+    None where the column has no such levels or a V2 page stores none.
+    ``pages`` (offset, n_rows) restricts the walk to those pages."""
     if pages is None:
         start = chunk["data_off"]
         if chunk["dict_off"] is not None:
             start = min(start, chunk["dict_off"])
-        page_list = [(start, chunk["num_values"])]
-        sequential = True
+        page_list, sequential = [(start, chunk["num_values"])], True
     else:
-        page_list = pages
-        sequential = False
+        page_list, sequential = pages, False
         if dict_vals is None and chunk["dict_off"] is not None:
             hdr, body_pos = read_struct(buf, chunk["dict_off"])
             if hdr[1] != PAGE_DICT:
                 raise ValueError("dictionary_page_offset points at non-dict page")
-            body = buf[body_pos : body_pos + hdr[3]]
-            dict_vals = _decode_dict_page(hdr, body, chunk, phys,
-                                          col["type_length"])
+            dict_vals = _dict_page(hdr, buf[body_pos : body_pos + hdr[3]], chunk, kp)
     view = memoryview(buf)  # page bodies are sliced out without a copy
-    data_pages = []  # [values, encoding, value body, levels stream, V2 num_nulls]
+    out = []
     for pos, remaining in page_list:
         while remaining > 0:
             hdr, body_pos = read_struct(buf, pos)
-            ptype = hdr[1]
-            raw_size, comp_size = hdr[2], hdr[3]
+            ptype, raw_size, comp_size = hdr[1], hdr[2], hdr[3]
             body = view[body_pos : body_pos + comp_size]
             if len(body) != comp_size:
                 raise ValueError("page body truncated")
             pos = body_pos + comp_size
             _verify_crc(hdr, body)
             if ptype == PAGE_DICT:
-                dict_vals = _decode_dict_page(hdr, body, chunk, phys,
-                                              col["type_length"])
+                dict_vals = _dict_page(hdr, body, chunk, kp)
                 continue
             if ptype == PAGE_DATA:
                 dh = hdr[5]
                 n_vals, enc, n_nulls = dh[1], dh[2], None
                 raw = memoryview(_decompress(body, chunk["codec"], raw_size))
-                levels = None
-                if max_def:
-                    # V1 levels: a u32 byte length, then the hybrid stream
-                    blen = int.from_bytes(raw[:4], "little")
-                    levels, raw = raw[4 : 4 + blen], raw[4 + blen :]
+                levels = []
+                for max_level in (max_rep, max_def):
+                    # V1: each level stream after its u32 byte length
+                    if not max_level:
+                        levels.append(None)
+                        continue
+                    end = 4 + int.from_bytes(raw[:4], "little")
+                    levels.append(raw[4:end])
+                    raw = raw[end:]
             elif ptype == PAGE_DATA_V2:
                 dh = hdr[8]
                 n_vals, n_nulls, enc = dh[1], dh[2], dh[4]
-                def_len = dh[5]
-                rep_len = dh[6]
-                if rep_len:
-                    raise ValueError(
-                        "repetition levels on a non-repeated column"
-                    )
-                levels = body[:def_len] if max_def and def_len else None
-                raw = body[def_len:]
+                def_len, rep_len = dh[5], dh[6]
+                if rep_len and not max_rep:
+                    raise ValueError("repetition levels on a non-repeated column")
+                # a flat column's V2 page may store no definition levels
+                levels = [body[:rep_len] if max_rep else None,
+                          body[rep_len : rep_len + def_len]
+                          if max_def and (def_len or max_rep) else None]
+                raw = body[rep_len + def_len :]
                 if dh.get(7, True):
-                    raw = _decompress(raw, chunk["codec"], raw_size - def_len)
+                    raw = _decompress(raw, chunk["codec"], raw_size - rep_len - def_len)
             else:
                 raise ValueError(f"unsupported page type {ptype}")
-            data_pages.append((n_vals, enc, raw, levels, n_nulls))
+            out.append((*_engine_page(enc, kp, raw), n_vals, *levels, n_nulls))
             remaining -= n_vals
         if remaining != 0 and sequential:
             raise ValueError("chunk value count overran the footer's num_values")
-    # the level streams of every page at once, then one validity per page
-    streams = [(lv, n) for n, _, _, lv, _ in data_pages if lv is not None]
-    levels = rle.decode_hybrid_many(streams, width) if streams else None
-    valid_parts, def_parts, counts = [], [], []
-    o = 0
-    for n_vals, _, _, lv, n_nulls in data_pages:
-        if lv is None:
-            validity = np.ones(n_vals, dtype=bool)
-            count = n_vals
-            if max_def:
-                def_parts.append(np.full(n_vals, max_def, dtype=np.uint64))
-        else:
-            page_levels = levels[o : o + n_vals]
-            o += n_vals
-            validity = page_levels == max_def
-            count = np.count_nonzero(validity)
-            def_parts.append(page_levels)
+    return dict_vals, out
+
+
+def _chunk_pages(buf: bytes, chunk: dict, col: dict, max_def: int | None = None,
+                 pages: list | None = None, dict_vals=None) -> tuple:
+    """Decode the pages of a non-repeated column chunk (see
+    :func:`_read_chunk`) -> (value parts, validity parts, level parts,
+    any nulls), not yet joined: the level streams of every page decode
+    together, then the values of every run of pages of one codec."""
+    if max_def is None:
+        max_def = 1 if col["optional"] else 0
+    kp = _kernel_ptype(col)
+    dict_vals, data_pages = _walk_pages(buf, chunk, kp, 0, max_def, pages, dict_vals)
+    levels = page_levels([(p[4], p[2]) for p in data_pages], max_def)
+    valid_parts, def_parts, runs = [], [], []
+    for (codec, body, n_vals, _, _, n_nulls), (validity, count, defs) in zip(data_pages, levels):
         if n_nulls is not None and n_vals - n_nulls != count:
             raise ValueError("v2 page num_nulls disagrees with def levels")
+        if max_def:
+            def_parts.append(defs if defs is not None
+                             else np.full(n_vals, max_def, dtype=np.uint64))
         valid_parts.append(validity)
-        counts.append(count)
-    # the values of every run of pages of one encoding at once
-    vals_parts = []
-    i = 0
-    while i < len(data_pages):
-        j = i + 1
-        while j < len(data_pages) and data_pages[j][1] == data_pages[i][1]:
-            j += 1
-        vals_parts += _decode_pages(data_pages[i][1], [p[2] for p in data_pages[i:j]],
-                                    phys, counts[i:j], col["type_length"], dict_vals)
-        i = j
-    return vals_parts, valid_parts, def_parts, bool(streams)
-
-
-def _decode_pages(enc: int, bodies: list, phys: str, counts: list, type_length,
-                  dict_vals) -> list:
-    """Value parts of consecutive data pages of one encoding. The streams
-    of DELTA_BINARY_PACKED pages, the lengths of DELTA_LENGTH_BYTE_ARRAY
-    pages and the ids of dictionary pages of one bit width decode together;
-    byte-array values stay views of their pages, joined once per column."""
-    if enc == ENC_DELTA_BP:
-        return [delta.decode_delta_many(bodies, _NUMDT[phys])[0]]
-    if enc == ENC_DLBA:
-        return deltastrings.decode_dlba_many(bodies, counts)
-    widths = {b[0] for b in bodies if len(b)}
-    if enc in (ENC_PLAIN_DICT, ENC_RLE_DICT) and len(widths) == 1:
-        if dict_vals is None:
-            raise ValueError("dictionary-encoded page before dictionary page")
-        ids = rle.decode_hybrid_many(
-            [(memoryview(b)[1:], c) for b, c in zip(bodies, counts)], widths.pop()
-        ).view(np.int64)
-        return [dict_vals.take(ids) if isinstance(dict_vals, RaggedBytes) else dict_vals[ids]]
-    return [_decode_values(enc, b, phys, c, type_length, dict_vals)
-            for b, c in zip(bodies, counts)]
+        runs.append((codec, body, count))
+    any_nulls = any(p[4] is not None for p in data_pages)
+    return decode_runs(runs, kp, dict_vals), valid_parts, def_parts, any_nulls
 
 
 def _canonical_def_lut(lo: int, eo: int) -> np.ndarray:
@@ -523,76 +472,15 @@ def _read_replevel_chunk(buf: bytes, chunk: dict, leaf: dict, lo: int,
     COMPUTED as lo+1+eo and file levels are mapped to the canonical
     alphabet before inversion — required list groups / required elements
     decode correctly (the r5 ADVICE fix: nothing here assumes max_def 3)."""
-    from ..nested import ListColumn, levels_to_structure
+    from ..nested import list_column
 
     max_def = lo + 1 + eo
-    dwidth = max_def.bit_length()
-    lut = _canonical_def_lut(lo, eo)
-    start = chunk["data_off"]
-    if chunk["dict_off"] is not None:
-        start = min(start, chunk["dict_off"])
-    pos = start
-    remaining = chunk["num_values"]  # LEVEL entries
-    phys = leaf["physical"]
-    dict_vals = None
-    rep_parts, def_parts, val_parts = [], [], []
-    while remaining > 0:
-        hdr, body_pos = read_struct(buf, pos)
-        ptype_pg = hdr[1]
-        raw_size, comp_size = hdr[2], hdr[3]
-        body = buf[body_pos : body_pos + comp_size]
-        pos = body_pos + comp_size
-        _verify_crc(hdr, body)
-        if ptype_pg == PAGE_DICT:
-            dict_vals = _decode_dict_page(hdr, body, chunk, phys,
-                                          leaf["type_length"])
-            continue
-        if ptype_pg == PAGE_DATA:
-            dh = hdr[5]
-            n_lv, enc = dh[1], dh[2]
-            raw = _decompress(body, chunk["codec"], raw_size)
-            rep, used_r = rle.decode_hybrid_length_prefixed(
-                memoryview(raw)[:], 1, n_lv
-            )
-            dfl, used_d = rle.decode_hybrid_length_prefixed(
-                memoryview(raw)[used_r:], dwidth, n_lv
-            )
-            vals_body = memoryview(raw)[used_r + used_d:]
-        elif ptype_pg == PAGE_DATA_V2:
-            dh = hdr[8]
-            n_lv, enc = dh[1], dh[4]
-            def_len, rep_len = dh[5], dh[6]
-            rep = rle.decode_hybrid(body[:rep_len], 1, n_lv)
-            dfl = rle.decode_hybrid(body[rep_len : rep_len + def_len], dwidth, n_lv)
-            vals_body = body[rep_len + def_len:]
-            if dh.get(7, True):
-                vals_body = _decompress(
-                    vals_body, chunk["codec"], raw_size - rep_len - def_len
-                )
-        else:
-            raise ValueError(f"unsupported page type {ptype_pg}")
-        count = int((dfl == max_def).sum())
-        values = _decode_values(
-            enc, vals_body, phys, count, leaf["type_length"], dict_vals
-        )
-        rep_parts.append(rep)
-        def_parts.append(lut[dfl.astype(np.int64)])
-        val_parts.append(values)
-        remaining -= n_lv
-    if remaining != 0:
-        raise ValueError("repeated chunk level count overran num_values")
-    rep = np.concatenate(rep_parts)
-    dfl = np.concatenate(def_parts)
-    if isinstance(val_parts[0], RaggedBytes):
-        from ..pages import _concat_ragged
-
-        child = _concat_ragged(val_parts)
-    else:
-        child = np.concatenate(val_parts)
-    lens, list_validity, child_validity = levels_to_structure(rep, dfl)
-    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    return ListColumn(offsets, list_validity, child, child_validity)
+    kp = _kernel_ptype(leaf)
+    dict_vals, data_pages = _walk_pages(buf, chunk, kp, 1, max_def)
+    rep = rle.decode_hybrid_many([(p[3], p[2]) for p in data_pages], 1)
+    dfl = rle.decode_hybrid_many([(p[4], p[2]) for p in data_pages], max_def.bit_length())
+    dfl = _canonical_def_lut(lo, eo)[dfl.astype(np.int64)]
+    return list_column(rep, dfl, [p[:3] for p in data_pages], kp, dict_vals)
 
 
 def _find_chunk(rg: dict, path: list[str]) -> dict:
@@ -645,11 +533,9 @@ def read_parquet(path_or_buf, columns: list[str] | None = None):
         col = by_name[name]
         if col.get("list"):
             lo = 1 if col["optional"] else 0
-            eo = 1 if col["element_optional"] else 0
-            leaf = {"physical": col["physical"],
-                    "type_length": col["type_length"]}
+            eo = 1 if col["element"]["optional"] else 0
             lists = [
-                _read_replevel_chunk(buf, _find_chunk(rg, [name]), leaf, lo, eo)
+                _read_replevel_chunk(buf, _find_chunk(rg, [name]), col["element"], lo, eo)
                 for rg in meta["row_groups"]
             ]
             out[name] = (_concat_list_columns(lists), None)
@@ -704,12 +590,9 @@ def read_parquet(path_or_buf, columns: list[str] | None = None):
         # the pages of every row group are joined once: no per-chunk copy
         chunks = [_chunk_pages(buf, _find_chunk(rg, [name]), col)
                   for rg in meta["row_groups"]]
-        if not chunks:
-            out[name] = (_empty_values(col), None)
-            continue
         values, validity, _ = _join_pages((
             [v for c in chunks for v in c[0]], [v for c in chunks for v in c[1]],
-            [], any(c[3] for c in chunks)))
+            [], any(c[3] for c in chunks)), _kernel_ptype(col))
         out[name] = (values, validity)
     return meta["schema"], out
 
@@ -885,9 +768,7 @@ def _arrow_flat(values, validity, leaf):
 def _arrow_list(lc, col):
     import pyarrow as pa
 
-    leaf = {"physical": col["physical"], "type_length": col.get("type_length"),
-            "converted": col.get("converted")}
-    child = _arrow_flat(lc.child_values, lc.child_validity, leaf)
+    child = _arrow_flat(lc.child_values, lc.child_validity, col["element"])
     vbm, nulls = _validity_buffers(lc.list_validity)
     offsets = np.ascontiguousarray(lc.offsets, dtype=np.int64)
     return pa.Array.from_buffers(
@@ -981,8 +862,8 @@ def _stats_value(raw, leaf):
     phys = leaf["physical"]
     if phys == "bool":
         return bool(raw[0])
-    if phys in _NUMDT:
-        return _NUMDT[phys](np.frombuffer(raw, dtype=_NUMDT[phys])[0])
+    if phys in _NUMERIC:
+        return _NUMERIC[phys](np.frombuffer(raw, dtype=_NUMERIC[phys])[0])
     if phys in ("byte_array", "flba"):
         # UTF8 min/max are unsigned lexicographic — python bytes compare
         # matches exactly
@@ -1095,8 +976,7 @@ def _rg_dict_can_match(pred, rg, by_name, buf, report, crypto=None):
         hdr, _ = read_struct(hb)
     if hdr[1] != PAGE_DICT:
         return True
-    dvals = _decode_dict_page(hdr, body, chunk, leaf["physical"],
-                              leaf["type_length"])
+    dvals = _dict_page(hdr, body, chunk, _kernel_ptype(leaf))
     if getattr(dvals, "ndim", 1) == 2:
         return True  # FLBA dictionary: comparison unsupported here
     report["dicts_probed"] = report.get("dicts_probed", 0) + 1
@@ -1571,8 +1451,7 @@ def read_parquet_filtered(path_or_buf, predicate,
             (v, val, None) for (v, val) in acc[name]
         ]
         if not parts:
-            leaf = by_name[name]
-            out[name] = (_empty_values(leaf), None)
+            out[name] = (decode_column([], _kernel_ptype(by_name[name]))[0], None)
             continue
         values, validity, _ = _concat_chunk_parts(parts)
         out[name] = (values, validity)
@@ -1580,19 +1459,6 @@ def read_parquet_filtered(path_or_buf, predicate,
         report["modules_decrypted"] = crypto.modules_decrypted
         report["modules_total"] = crypto.count_modules()
     return meta["schema"], out, report
-
-
-def _empty_values(leaf):
-    phys = leaf["physical"]
-    if phys == "byte_array":
-        return RaggedBytes(np.zeros(1, dtype=np.int64),
-                           np.zeros(0, dtype=np.uint8))
-    if phys == "bool":
-        return np.zeros(0, dtype=bool)
-    if phys in _NUMDT:
-        return np.zeros(0, dtype=_NUMDT[phys])
-    k = leaf.get("type_length") or 12
-    return np.zeros((0, k), dtype=np.uint8)
 
 
 def read_parquet_filtered_pandas(path_or_buf, predicate,

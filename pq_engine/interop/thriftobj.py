@@ -65,11 +65,6 @@ def _zigzag16(v: int) -> int:
     return (v << 1) ^ (v >> 15)
 
 
-def _long_header(fid: int, ctype: int) -> bytes:
-    # long form: type nibble with zero delta nibble, then zigzag varint fid
-    return bytes([ctype]) + _scalar_uvarint(_zigzag16(fid))
-
-
 # ---------------------------------------------------------------- schema
 
 

@@ -132,14 +132,6 @@ def encode_delta(values: np.ndarray) -> bytes:
     return bytes(out) + body.tobytes()
 
 
-def _first_counts(runs: int, size: int, total: int) -> np.ndarray:
-    """``runs`` counts of ``size``, the last one cut so they sum to
-    ``total``."""
-    counts = np.full(runs, size, dtype=np.int64)
-    counts[-1] = total - (runs - 1) * size
-    return counts
-
-
 def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):
     """Decode a full page body (self-describing count). ``return_consumed=True``
     also returns the byte position after the stream — needed when a DELTA

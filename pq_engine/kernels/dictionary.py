@@ -82,13 +82,6 @@ def factorize_bytes(col: RaggedBytes) -> tuple[np.ndarray, RaggedBytes]:
     return codes.astype(np.int64), RaggedBytes.from_pylist(list(uniques))
 
 
-def _factorize_first_index(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """factorize returning (codes, index-of-first-occurrence) in first-seen order."""
-    codes, _ = pd.factorize(keys, use_na_sentinel=False)
-    codes = codes.astype(np.int64)
-    return codes, _first_index_from_codes(codes)
-
-
 def _first_index_from_codes(codes: np.ndarray) -> np.ndarray:
     """Index of the first occurrence of each code (codes are first-seen
     ordered, so first[k] is increasing)."""

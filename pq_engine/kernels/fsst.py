@@ -177,17 +177,6 @@ class SymbolTable:
         return SymbolTable(symbols), pos
 
 
-def _window_keys(data: np.ndarray) -> np.ndarray:
-    """u64 little-endian view of data[pos:pos+8] for every pos (zero-padded tail)."""
-    n = len(data)
-    padded = np.zeros(n + MAX_SYM_LEN, dtype=np.uint8)
-    padded[:n] = data
-    keys = np.zeros(n, dtype=np.uint64)
-    for k in range(MAX_SYM_LEN):
-        keys |= padded[k : k + n].astype(np.uint64) << np.uint64(8 * k)
-    return keys
-
-
 def _orbit(step: np.ndarray, starts: np.ndarray, n: int) -> np.ndarray:
     """Positions visited by repeatedly applying pos += step[pos] from each
     start (pointer doubling: O(n log n) vectorized, no per-token loop)."""

@@ -23,10 +23,6 @@ def encode_uvarint(value: int) -> bytes:
             return bytes(out)
 
 
-def write_uvarint(value: int, out: bytearray) -> None:
-    out += encode_uvarint(value)
-
-
 def read_uvarint(buf, pos: int) -> tuple[int, int]:
     """Return (value, new_pos); ``ValueError`` when ``buf`` ends inside
     the varint."""

@@ -312,77 +312,47 @@ def _slice_child(values, cp: str, v0: int, v1: int):
 def decode_list_pages(
     pages: list[tuple[dict, bytes]], ptype: str, dict_vals=None
 ) -> ListColumn:
-    from .kernels import dictionary
-    from .pages import RAGGED_TYPES, _decode_values, kernel_ptype
+    """Decode the pages of a LIST chunk; the chunk dictionary page (page =
+    -2) may be among them, or its values passed as ``dict_vals``."""
+    from .pages import _dict_page_values
 
-    cp = child_ptype(ptype)
-    # accept a raw page list: pull the chunk dictionary page (page = -2) out
-    # ourselves when the caller didn't (decode_column passes dict_vals)
-    data_pages = []
+    reps, defs, runs = [], [], []
     for meta, blob in pages:
         if meta["codec"] == "dictpage":
             if dict_vals is None:
-                if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
-                    raise IOError("dictionary page CRC mismatch")
-                from .pages import decode_dict_chunk_page
-
-                body = pagecomp.decompress(
-                    memoryview(blob)[1:], meta.get("compression", "none")
-                )
-                dict_vals = decode_dict_chunk_page(body, meta["ptype"], meta["n_rows"])
-        elif meta["page"] >= 0:
-            data_pages.append((meta, blob))
-    pages = data_pages
-    lens_parts, lv_parts, cv_parts, val_parts = [], [], [], []
-    any_null_list = any_null_elem = False
-    for meta, blob in pages:
+                dict_vals = _dict_page_values(meta, blob)
+            continue
+        if meta["page"] < 0:
+            continue
         if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
             raise IOError(f"list page {meta['page']} CRC mismatch")
         assert blob[0] == 2, "not a list page"
         n_entries = int.from_bytes(blob[1:5], "little")
-        mv = memoryview(blob)[5:]
-        rep, used1 = rle.decode_hybrid_length_prefixed(mv, 2, n_entries)
-        dfl, used2 = rle.decode_hybrid_length_prefixed(mv[used1:], 2, n_entries)
-        body = pagecomp.decompress(mv[used1 + used2 :], meta.get("compression", "none"))
-        lens, lv, cv = levels_to_structure(rep, dfl)
-        n_vals = int((dfl == 3).sum())
-        if meta["codec"] == "dict":
-            if dict_vals is None:
-                raise IOError(
-                    f"dict list page {meta['page']} without its chunk "
-                    "dictionary page — pass the page = -2 row through to decode"
-                )
-            ids = dictionary.decode_dict_data_page(body, n_vals)
-            vals = (
-                dict_vals.take(ids)
-                if kernel_ptype(cp) in RAGGED_TYPES
-                else dict_vals[ids]
-            )
-        else:
-            vals = _decode_values(meta["codec"], cp, body, n_vals)
-        lens_parts.append(lens)
-        lv_parts.append(
-            lv if lv is not None else np.ones(meta["n_rows"], dtype=bool)
-        )
-        any_null_list |= lv is not None
-        n_elems = int(lens.sum())
-        cv_parts.append(cv if cv is not None else np.ones(n_elems, dtype=bool))
-        any_null_elem |= cv is not None
-        val_parts.append(vals)
-    lens = np.concatenate(lens_parts) if lens_parts else np.zeros(0, np.int64)
+        mv, pos = memoryview(blob), 5
+        for streams in (reps, defs):
+            end = pos + 4 + int.from_bytes(mv[pos : pos + 4], "little")
+            streams.append((mv[pos + 4 : end], n_entries))
+            pos = end
+        body = pagecomp.decompress(mv[pos:], meta.get("compression", "none"))
+        runs.append((meta["codec"], body, n_entries))
+    return list_column(rle.decode_hybrid_many(reps, 2), rle.decode_hybrid_many(defs, 2),
+                       runs, child_ptype(ptype), dict_vals)
+
+
+def list_column(rep: np.ndarray, dfl: np.ndarray, pages: list, cp: str,
+                dict_vals=None) -> ListColumn:
+    """A LIST chunk from its repetition and canonical definition levels
+    (0..3, see :func:`levels_to_structure`), the levels of every page
+    joined, and its data pages as ``(codec, value body, level entries)``;
+    the values of all pages decode through ``pages.decode_runs``."""
+    from .pages import decode_runs, join_values
+
+    runs, o = [], 0
+    for codec, body, n in pages:
+        runs.append((codec, body, int(np.count_nonzero(dfl[o : o + n] == 3))))
+        o += n
+    child = join_values(decode_runs(runs, cp, dict_vals), cp)
+    lens, list_validity, child_validity = levels_to_structure(rep, dfl)
     offsets = np.zeros(len(lens) + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
-    from .pages import RAGGED_TYPES, _concat_ragged
-
-    if cp in RAGGED_TYPES:
-        child_values = _concat_ragged(val_parts)
-    else:
-        child_values = (
-            np.concatenate(val_parts) if val_parts else np.zeros(0)
-        )
-    return ListColumn(
-        offsets,
-        np.concatenate(lv_parts) if any_null_list else None,
-        child_values,
-        np.concatenate(cv_parts) if any_null_elem else None,
-    )
+    return ListColumn(offsets, list_validity, child, child_validity)

@@ -25,6 +25,11 @@ ColumnIndexBuilder stats) onto vectorized slices of an Arrow batch:
 * the PLAIN safety rail (FallbackValuesWriter.isCompressionSatisfying
   :81-92): any codec output >= the PLAIN encoding of the same values is
   discarded for PLAIN.
+* ``decode_runs`` is the one place a codec meets its value kernel (one
+  ValuesReader per encoding, Encoding.java:62-256): ``decode_column``,
+  ``nested.decode_list_pages`` and the interop reader's flat and repeated
+  page walkers all hand it a chunk's ``(codec, body, count)`` list, and
+  the flat walkers share ``page_levels``.
 """
 
 from __future__ import annotations
@@ -742,10 +747,7 @@ def decode_column(pages: list[tuple[dict, bytes]], ptype: str | None = None):
     data_pages = []
     for meta, blob in pages:
         if meta["codec"] == "dictpage":
-            if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
-                raise IOError("dictionary page CRC mismatch")
-            body = pagecomp.decompress(memoryview(blob)[1:], meta.get("compression", "none"))
-            dict_vals = decode_dict_chunk_page(body, meta["ptype"], meta["n_rows"])
+            dict_vals = _dict_page_values(meta, blob)
         elif meta["codec"] == "bloom" or meta["page"] < 0:
             continue  # index rows carry no values
         else:
@@ -753,80 +755,105 @@ def decode_column(pages: list[tuple[dict, bytes]], ptype: str | None = None):
     pages = data_pages
     if not pages:
         return decode_column([], ptype)
-    if pages[0][0]["ptype"].startswith("list<"):
+    ptype = pages[0][0]["ptype"]
+    if ptype.startswith("list<"):
         from .nested import decode_list_pages
 
-        return decode_list_pages(pages, pages[0][0]["ptype"], dict_vals), None
+        return decode_list_pages(pages, ptype, dict_vals), None
     # every page checked and decompressed first; then the validity streams
     # of all pages, and the values of each run of pages of one codec, decode
     # together (one NumPy pass for a chunk's pages, not one per page)
-    levels, bodies = [], []
+    streams, bodies = [], []
     for meta, blob in pages:
         if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
             raise IOError(f"page {meta['page']} CRC mismatch")
-        pos = 1
+        pos, stream = 1, None
         if blob[0] == 1:  # [1][u32 length][RLE validity] before the body
-            blen = int.from_bytes(blob[1:5], "little")
-            levels.append((memoryview(blob)[5 : 5 + blen], meta["n_rows"]))
-            pos = 5 + blen
-        else:
-            levels.append(None)
+            pos = 5 + int.from_bytes(blob[1:5], "little")
+            stream = memoryview(blob)[5:pos]
+        streams.append((stream, meta["n_rows"]))
         bodies.append(pagecomp.decompress(memoryview(blob)[pos:], meta.get("compression", "none")))
-    streams = [lv for lv in levels if lv is not None]
-    flags = rle.decode_hybrid_many(streams, 1).astype(bool) if streams else None
-    valid_parts, counts, o = [], [], 0
-    for (meta, _), lv in zip(pages, levels):
-        n_rows = meta["n_rows"]
-        if lv is None:
-            validity = np.ones(n_rows, dtype=bool)
-        else:
-            validity = flags[o : o + n_rows]
-            o += n_rows
-        valid_parts.append(validity)
-        counts.append(np.count_nonzero(validity))
-    vals_parts = []
-    i = 0
+    levels = page_levels(streams, 1)
+    runs = [(m["codec"], b, count) for (m, _), b, (_, count, _) in zip(pages, bodies, levels)]
+    values = join_values(decode_runs(runs, ptype, dict_vals), ptype)
+    if all(s is None for s, _ in streams):
+        return values, None
+    return values, np.concatenate([validity for validity, _, _ in levels])
+
+
+def _dict_page_values(meta: dict, blob: bytes):
+    """The uniques of a chunk dictionary page row, CRC-checked."""
+    if zlib.crc32(blob) & 0xFFFFFFFF != meta["crc32"]:
+        raise IOError("dictionary page CRC mismatch")
+    body = pagecomp.decompress(memoryview(blob)[1:], meta.get("compression", "none"))
+    return decode_dict_chunk_page(body, meta["ptype"], meta["n_rows"])
+
+
+def page_levels(streams: list, max_def: int) -> list:
+    """(validity, value count, definition levels) of each page of a flat
+    chunk. ``streams`` holds per page (level stream, row count), the stream
+    None where the page stores none (every row holds a value; its levels are
+    then None too). Every stream decodes in one call; a row holds a value
+    where its level is ``max_def`` (1 for the engine's validity streams)."""
+    present = [s for s in streams if s[0] is not None]
+    decoded = rle.decode_hybrid_many(present, max_def.bit_length()) if present else None
+    out, o = [], 0
+    for stream, n in streams:
+        if stream is None:
+            out.append((np.ones(n, dtype=bool), n, None))
+            continue
+        levels = decoded[o : o + n]
+        o += n
+        validity = levels == max_def
+        out.append((validity, int(np.count_nonzero(validity)), levels))
+    return out
+
+
+def decode_runs(pages: list, ptype: str, dict_vals=None) -> list:
+    """Value parts of a chunk's data pages, given in page order as
+    ``(codec, value body, value count)``: the one place a codec meets its
+    value kernel, for engine pages and parquet pages alike. A run of pages
+    of one codec decodes together where a kernel takes many streams (the
+    streams of ``delta`` pages, the lengths of ``dlba`` pages, the ids of
+    ``dict`` pages of one bit width); other codecs go page by page."""
+    kp = kernel_ptype(ptype)
+    parts, i = [], 0
     while i < len(pages):
+        codec = pages[i][0]
         j = i + 1
-        while j < len(pages) and pages[j][0]["codec"] == pages[i][0]["codec"]:
+        while j < len(pages) and pages[j][0] == codec:
             j += 1
-        vals_parts += _decode_run(pages[i:j], bodies[i:j], counts[i:j], dict_vals)
-        i = j
-    ptype = pages[0][0]["ptype"] if pages else "int64"
-    if kernel_ptype(ptype) in RAGGED_TYPES:
-        all_vals = _concat_ragged(vals_parts)
-    else:
-        all_vals = np.concatenate(vals_parts) if vals_parts else np.zeros(0)
-    validity = np.concatenate(valid_parts) if valid_parts else np.zeros(0, bool)
-    return all_vals, (validity if streams else None)
-
-
-def _decode_run(pages, bodies, counts, dict_vals) -> list:
-    """Value parts of consecutive data pages of one codec: the streams of
-    ``delta`` pages, the lengths of ``dlba`` pages and the ids of ``dict``
-    pages of one bit width decode together; other codecs page by page."""
-    meta = pages[0][0]
-    codec, kp = meta["codec"], kernel_ptype(meta["ptype"])
-    if codec == "delta" and kp in _NUMERIC:
-        return [delta.decode_delta_many(bodies, _NUMERIC[kp])[0]]
-    if codec == "dlba" and kp in RAGGED_TYPES:
-        return deltastrings.decode_dlba_many(bodies, counts)
-    if codec == "dict":
-        if dict_vals is None:
-            raise IOError(
-                f"dict data page {meta['page']} without its chunk dictionary "
-                "page — pass the page = -2 row through to decode"
-            )
-        widths = {b[0] for b in bodies if len(b)}
-        if len(widths) == 1:
-            ids = rle.decode_hybrid_many(
-                [(memoryview(b)[1:], c) for b, c in zip(bodies, counts)], widths.pop()
-            ).view(np.int64)
+        bodies = [p[1] for p in pages[i:j]]
+        counts = [p[2] for p in pages[i:j]]
+        if codec == "delta" and kp in _NUMERIC:
+            parts.append(delta.decode_delta_many(bodies, _NUMERIC[kp])[0])
+        elif codec == "dlba" and kp in RAGGED_TYPES:
+            parts += deltastrings.decode_dlba_many(bodies, counts)
+        elif codec == "dict":
+            if dict_vals is None:
+                raise IOError("dictionary-encoded data page without its dictionary "
+                              "page (a page = -2 row in the page table)")
+            widths = {b[0] for b in bodies if len(b)}
+            if len(widths) == 1:
+                ids = rle.decode_hybrid_many(
+                    [(memoryview(b)[1:], c) for b, c in zip(bodies, counts)], widths.pop()
+                ).view(np.int64)
+            else:
+                ids = np.concatenate([dictionary.decode_dict_data_page(b, c)
+                                      for b, c in zip(bodies, counts)])
+            parts.append(dict_vals.take(ids) if kp in RAGGED_TYPES else dict_vals[ids])
         else:
-            ids = np.concatenate([dictionary.decode_dict_data_page(b, c)
-                                  for b, c in zip(bodies, counts)])
-        return [dict_vals.take(ids) if kp in RAGGED_TYPES else dict_vals[ids]]
-    return [_decode_values(codec, m["ptype"], b, c) for (m, _), b, c in zip(pages, bodies, counts)]
+            parts += [_decode_values(codec, kp, b, c) for b, c in zip(bodies, counts)]
+        i = j
+    return parts
+
+
+def join_values(parts: list, ptype: str):
+    """One value array of the value parts of one chunk, or of several."""
+    kp = kernel_ptype(ptype)
+    if kp in RAGGED_TYPES:
+        return _concat_ragged(parts)
+    return np.concatenate(parts) if parts else decode_column([], kp)[0]
 
 
 def _concat_ragged(parts: list[RaggedBytes]) -> RaggedBytes:

@@ -206,22 +206,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", n_hashes: int = 64
     return df.withColumn("sig", sig_udf(F.col(text_col)))
 
 
-def _cap_buckets(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
-    """Drop LSH buckets with more than ``cap`` members before a bucket
-    self-join. An uncapped hot bucket (boilerplate / giant near-dup cluster)
-    costs O(B²) candidate rows — the one shape that does NOT survive a 100 TB
-    corpus. Dropped buckets are by definition dense near-dup clusters, which
-    exact dedup (hash-group) already collapses more cheaply; the recall loss
-    is confined to those clusters and is deliberate. The window count shuffles
-    on the same key the join needs, so AQE reuses the exchange."""
-    if cap is None:
-        return df
-    from pyspark.sql import Window as W
-
-    n = F.count(F.lit(1)).over(W.partitionBy(*keys))
-    return df.withColumn("__bn", n).filter(F.col("__bn") <= cap).drop("__bn")
-
-
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                       n_hashes: int = 64, bands: int = 16, threshold: float = 0.5,
                       shingle_k: int = 5, bucket_cap: int | None = 200,
@@ -229,8 +213,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     """Near-dup candidate pairs via banding, then signature-level Jaccard
     estimate. Returns (id_a, id_b, sim_est) with id_a < id_b, sim_est >=
     threshold. Shuffle key = (band, band-hash bucket): bounded cardinality,
-    hot buckets capped (``bucket_cap``, see _cap_buckets) so a web-scale
-    boilerplate cluster can't explode the candidate join."""
+    buckets with more than ``bucket_cap`` members dropped so a web-scale
+    boilerplate cluster can't explode the candidate join (a dropped bucket
+    is a dense near-dup cluster, which exact dedup already collapses)."""
     rows_per_band = n_hashes // bands
     sigs = minhash_signatures(df, text_col, n_hashes, shingle_k,
                               row_counter=row_counter).select(
@@ -276,8 +261,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
     # candidate pairs per bucket via ONE aggregation: collect each bucket's
-    # member ids (bounded by bucket_cap — same drop-hot-buckets rail as
-    # _cap_buckets) and expand the in-bucket pairs with array lambdas.
+    # member ids (hot buckets over bucket_cap dropped) and expand the
+    # in-bucket pairs with array lambdas.
     # Replaces the window-count + bucket self-join (two exchanges over the
     # banded frame) with a single groupBy exchange producing the identical
     # candidate set: for members x != y exactly one (least, greatest) pair,

@@ -126,7 +126,7 @@ def embedding_cosine_neardup(df: DataFrame, threshold: float = 0.95,
     """Embedding near-duplicate pairs: bucket join on hyperplane signature,
     exact cosine verify, keep pairs >= threshold. ``bucket_cap`` bounds any
     one bucket's contribution (a hot bucket is O(B²) in the self-join — the
-    same rail as the MinHash banding join, dedup._cap_buckets)."""
+    same rail as the MinHash banding join's ``bucket_cap``)."""
     if dim is None:
         dim = embedding_dim(df, emb_col)
     b = hyperplane_buckets(df, emb_col, n_planes, dim, seed).select(

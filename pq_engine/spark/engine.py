@@ -230,6 +230,11 @@ def _arrow_to_values(arr: pa.Array, ptype: str):
         return fl.interval_to_fixed(m, d, ms), validity
     if ptype.startswith("fixed["):
         k = int(ptype[6:-1])
+        if arr.type == pa.binary(k):
+            # the data buffer read at the array's offset, as for decimal64:
+            # pyarrow 16 crashes casting a sliced FixedSizeBinary array
+            data = np.frombuffer(arr.buffers()[1], dtype=np.uint8)
+            return data[arr.offset * k : (arr.offset + len(arr)) * k].reshape(-1, k), validity
         rb = RaggedBytes.from_arrow(arr.cast(pa.binary()))
         if len(rb) and not (rb.lengths == k).all():
             raise ValueError(f"fixed[{k}] column has values of other lengths")

@@ -118,6 +118,36 @@ def test_fixed_dict_chunk_page_shared():
     assert np.array_equal(v2, vals)
 
 
+_SLICED_FIXED = """
+import sys
+import numpy as np, pyarrow as pa
+from pq_engine.spark.engine import _arrow_to_values
+nulls = sys.argv[1] == "nulls"
+rows = [None if nulls and i % 5 == 0 else bytes([i % 251]) * 16 for i in range(50_000)]
+arr = pa.array(rows, pa.binary(16)).slice(30_000)
+values, validity = _arrow_to_values(arr, "fixed[16]")
+want = [r for r in rows[30_000:] if r is not None]
+assert values.shape == (len(want), 16)
+assert [bytes(v) for v in values] == want
+assert (validity is not None) == nulls
+"""
+
+
+@pytest.mark.parametrize("nulls", ["nulls", "dense"])
+def test_sliced_fixed_column_to_values(nulls):
+    """A ``fixed_size_binary`` array with a non-zero offset (a table split
+    by ``to_batches``) converts to the values of its own rows. Run in a
+    child process: casting such an array crashes pyarrow 16."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    r = subprocess.run([sys.executable, "-c", _SLICED_FIXED, nulls],
+                       cwd=Path(__file__).resolve().parents[1],
+                       capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, (r.returncode, r.stderr[-2000:])
+
+
 # ------------------------------------------------------------------ spark e2e
 
 

@@ -4,6 +4,7 @@ multi row group, nulls), DuckDB, and our own interop writer all decode
 through the NumPy kernels with no parquet library in the loop."""
 
 import tempfile
+from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
@@ -165,6 +166,114 @@ def test_malformed_delta_byte_array_page_rejected(tmp_path):
         read_parquet(str(p))
 
 
+def _logical(t):
+    """An Arrow type with offset widths and list field names dropped:
+    ``to_arrow`` returns large strings and lists, pyarrow small ones."""
+    if pa.types.is_large_string(t):
+        return pa.string()
+    if pa.types.is_large_binary(t):
+        return pa.binary()
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return pa.list_(_logical(t.value_type))
+    return t
+
+
+def _assert_reads_as_pyarrow(path):
+    """``to_arrow`` gives pyarrow's values and logical types, column by
+    column."""
+    from pq_engine.interop.parquet_reader import to_arrow
+
+    ours, theirs = to_arrow(path), pq.read_table(path)
+    assert ours.column_names == theirs.column_names
+    for name in theirs.column_names:
+        got, want = ours[name], theirs[name]
+        assert _logical(got.type) == _logical(want.type), name
+        assert got.to_pylist() == want.to_pylist(), name
+
+
+@pytest.mark.parametrize("nulls", [False, True])
+@pytest.mark.parametrize("page_version", ["1.0", "2.0"])
+def test_fixed_len_delta_byte_array(page_version, nulls, tmp_path):
+    """DELTA_BYTE_ARRAY over FIXED_LEN_BYTE_ARRAY: a ``binary(4)`` and a
+    ``decimal128(20,2)`` column read back as their own types, not as raw
+    variable-length bytes."""
+    n = 2000
+    keep = [not (nulls and i % 7 == 0) for i in range(n)]
+    tbl = pa.table({
+        "b4": pa.array([(i % 300).to_bytes(4, "big") if k else None
+                        for i, k in enumerate(keep)], pa.binary(4)),
+        "dec": pa.array([Decimal(i * 7919 - 5000) / 100 if k else None
+                         for i, k in enumerate(keep)], pa.decimal128(20, 2)),
+    })
+    p = str(tmp_path / "flba_dba.parquet")
+    pq.write_table(tbl, p, use_dictionary=False, data_page_version=page_version,
+                   column_encoding={"b4": "DELTA_BYTE_ARRAY", "dec": "DELTA_BYTE_ARRAY"},
+                   data_page_size=1024, write_batch_size=256)
+    md = pq.ParquetFile(p).metadata.row_group(0)
+    assert all("DELTA_BYTE_ARRAY" in md.column(i).encodings for i in range(2))
+    _assert_reads_as_pyarrow(p)
+
+
+@pytest.mark.parametrize("encoding", ["PLAIN", "RLE_DICTIONARY", "DELTA_BYTE_ARRAY",
+                                      "BYTE_STREAM_SPLIT"])
+def test_list_of_decimal_keeps_its_annotation(encoding, tmp_path):
+    """LIST elements carry their DECIMAL precision and scale: a
+    ``list<decimal128(20,2)>`` column reads back as decimals."""
+    rows = [[Decimal(i * 131 - 900) / 100] * (i % 4) if i % 9 else None
+            for i in range(600)]
+    tbl = pa.table({"v": pa.array(rows, pa.list_(pa.decimal128(20, 2)))})
+    p = str(tmp_path / "list_dec.parquet")
+    kw = (dict(use_dictionary=True) if encoding == "RLE_DICTIONARY" else
+          dict(use_dictionary=False, column_encoding={"v.list.element": encoding}))
+    pq.write_table(tbl, p, data_page_size=512, write_batch_size=64, **kw)
+    _assert_reads_as_pyarrow(p)
+
+
+_MATRIX_TYPES = {  # physical type -> (Arrow type, value of row i)
+    "bool": (pa.bool_(), lambda i: i % 3 == 0),
+    "int32": (pa.int32(), lambda i: (i * 7919) % 1000 - 500),
+    "int64": (pa.int64(), lambda i: i * 1_000_003 - 7),
+    "float": (pa.float32(), lambda i: i / 4),
+    "double": (pa.float64(), lambda i: i / 3),
+    "string": (pa.string(), lambda i: f"s{i % 37}"),
+    "binary4": (pa.binary(4), lambda i: (i % 50).to_bytes(4, "big")),
+    "decimal": (pa.decimal128(20, 2), lambda i: Decimal(i * 1234567 - 100000) / 100),
+}
+
+
+@pytest.mark.parametrize("nested", [False, True], ids=["flat", "list"])
+@pytest.mark.parametrize("nullable", [False, True], ids=["required", "nullable"])
+@pytest.mark.parametrize("page_version", ["1.0", "2.0"])
+@pytest.mark.parametrize("encoding", [
+    "PLAIN", "RLE_DICTIONARY", "DELTA_BINARY_PACKED", "DELTA_LENGTH_BYTE_ARRAY",
+    "DELTA_BYTE_ARRAY", "BYTE_STREAM_SPLIT", "RLE"])
+@pytest.mark.parametrize("kind", list(_MATRIX_TYPES))
+def test_encoding_matrix_matches_pyarrow(kind, encoding, page_version, nullable,
+                                         nested, tmp_path):
+    """Every encoding pyarrow writes for each physical type, on small pages
+    of both versions, required and nullable, flat and as LIST elements:
+    the one value decoder (``pages.decode_runs``) reads what pyarrow reads."""
+    typ, value = _MATRIX_TYPES[kind]
+    vals = [None if nullable and i % 7 == 0 else value(i) for i in range(300)]
+    if nested:
+        arr = pa.array([None if nullable and i % 11 == 0 else vals[i : i + i % 4]
+                        for i in range(300)],
+                       pa.list_(pa.field("element", typ, nullable)))
+    else:
+        arr = pa.array(vals, typ)
+    tbl = pa.table([arr], schema=pa.schema([pa.field("c", arr.type, nullable)]))
+    p = str(tmp_path / "m.parquet")
+    kw = (dict(use_dictionary=True) if encoding == "RLE_DICTIONARY" else
+          dict(use_dictionary=False,
+               column_encoding={"c.list.element" if nested else "c": encoding}))
+    try:
+        pq.write_table(tbl, p, data_page_version=page_version, data_page_size=512,
+                       write_batch_size=64, **kw)
+    except (pa.ArrowException, OSError, ValueError) as e:
+        pytest.skip(f"pyarrow does not write {encoding} for {kind}: {e}")
+    _assert_reads_as_pyarrow(p)
+
+
 def test_driver_testdata_matches_duckdb():
     import duckdb
 
@@ -217,6 +326,30 @@ def test_cli_from_parquet_import(tmp_path):
         capture_output=True, text=True, timeout=120, cwd="/root/repo",
     )
     assert r2.returncode == 0 and "records=500" in r2.stdout, r2.stdout
+
+
+def test_cli_from_parquet_list_and_map(tmp_path, capsys):
+    """from-parquet imports a LIST column through its element leaf and
+    skips a MAP group with a message, not a KeyError."""
+    from argparse import Namespace
+
+    from pq_engine.cli import _load, _PageChunks, cmd_from_parquet
+    from pq_engine.pages import decode_column
+
+    src = str(tmp_path / "nested.parquet")
+    pq.write_table(pa.table({
+        "tags": pa.array([["a", "bb"], None, []] * 10, pa.list_(pa.string())),
+        "m": pa.array([[("k", 1)], None, []] * 10, pa.map_(pa.string(), pa.int64())),
+    }), src)
+    cmd_from_parquet(Namespace(path=src, out=str(tmp_path / "pages")))
+    assert "skipping column m" in capsys.readouterr().out
+    chunks = _PageChunks(_load(str(tmp_path / "pages")))
+    assert chunks.columns == ["tags"]
+    (split, batch), = chunks.keys
+    lists, _ = decode_column(chunks.pages(split, batch, "tags"))
+    assert np.diff(lists.offsets).tolist() == [2, 0, 0] * 10
+    assert lists.list_validity.tolist() == [True, False, True] * 10
+    assert lists.child_values.to_pylist() == [b"a", b"bb"] * 10
 
 
 # ------------------------------------------------------------ property test

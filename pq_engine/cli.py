@@ -56,7 +56,8 @@ import sys
 import numpy as np
 import pyarrow.dataset as ds
 
-from .pages import BLOOM_PAGE, RAGGED_TYPES, RAW_COPY_PAGES, ROWRANGES_PAGE, decode_column
+from . import pagetable
+from .pages import BLOOM_PAGE, RAGGED_TYPES, decode_column
 
 
 def _load(path):
@@ -72,62 +73,6 @@ def _load(path):
             pc.cast(tbl["column"], pa.string()),
         )
     return tbl
-
-
-_PAGE_FIELDS = ("page", "codec", "ptype", "n_rows", "null_count", "crc32", "compression",
-                "min", "max")
-
-
-class _PageChunks:
-    """The page table grouped once: one stable sort of its chunk rows
-    (data, dictionary and bloom pages: ``page >= -2``; ``decode_column``
-    skips the bloom rows) by (column, split_id, batch_id, page), sliced per
-    chunk. ``columns`` and ``keys`` are the sorted distinct columns and
-    (split_id, batch_id) pairs of the whole table. Page bodies are
-    materialised one chunk at a time, when :meth:`pages` asks for them."""
-
-    def __init__(self, tbl):
-        import pyarrow.compute as pc
-
-        split = tbl["split_id"].to_numpy()
-        batch = tbl["batch_id"].to_numpy()
-        self.columns = sorted(pc.unique(tbl["column"]).to_pylist())
-        self.keys = sorted(set(zip(split.tolist(), batch.tolist())))
-        keep = np.flatnonzero(tbl["page"].to_numpy() >= -2)
-        by = ["column", "split_id", "batch_id", "page"]
-        heads = tbl.select(by).take(keep)
-        order = pc.sort_indices(heads, sort_keys=[(k, "ascending") for k in by]).to_numpy()
-        self._rows = keep[order]
-        heads = heads.take(order)
-        new = np.zeros(len(order), dtype=bool)
-        new[:1] = True
-        for k in by[:3]:
-            new[1:] |= pc.not_equal(heads[k][1:], heads[k][:-1]).to_numpy()
-        starts = np.flatnonzero(new)
-        ends = [*starts[1:].tolist(), len(order)]
-        heads = heads.take(starts)
-        chunk_keys = zip(*(heads[k].to_pylist() for k in by[:3]))
-        self._slices = dict(zip(chunk_keys, zip(starts.tolist(), ends)))
-        self._tbl = tbl
-
-    def chunk(self, split, batch, column):
-        """One chunk's rows of the page table, in page order, cut out as
-        zero-copy slices, one per run of consecutive rows (``Table.take``
-        would first concatenate every chunk of the table)."""
-        import pyarrow as pa
-
-        a, b = self._slices.get((column, split, batch), (0, 0))
-        rows = self._rows[a:b]
-        if not len(rows):
-            return self._tbl.slice(0, 0)
-        runs = np.split(rows, np.flatnonzero(np.diff(rows) != 1) + 1)
-        return pa.concat_tables(self._tbl.slice(r[0], len(r)) for r in runs)
-
-    def pages(self, split, batch, column) -> list[tuple[dict, bytes]]:
-        """One chunk's ``(meta, body)`` pages, in page order."""
-        sub = self.chunk(split, batch, column).select([*_PAGE_FIELDS, "data"]).to_pydict()
-        bodies = sub.pop("data")
-        return [(dict(zip(_PAGE_FIELDS, meta)), body) for *meta, body in zip(*sub.values(), bodies)]
 
 
 def cmd_meta(tbl, args):
@@ -174,7 +119,7 @@ def cmd_stats(tbl, args):
 
 
 def cmd_dictionary(tbl, args):
-    pages = _PageChunks(tbl).pages(args.split, args.batch, args.column)
+    pages = pagetable.Chunks(tbl).pages(args.split, args.batch, args.column)
     if not pages:
         sys.exit(f"no pages for column {args.column}")
     values, _ = decode_column(pages)
@@ -187,7 +132,7 @@ def cmd_dictionary(tbl, args):
 
 
 def cmd_cat(tbl, args):
-    chunks = _PageChunks(tbl)
+    chunks = pagetable.Chunks(tbl)
     columns = chunks.columns
     emitted = 0
     for split, batch in chunks.keys:
@@ -218,7 +163,7 @@ def cmd_scan(tbl, args):
     """ScanCommand analog: decode everything, count records, xor checksums."""
     import zlib as _z
 
-    chunks = _PageChunks(tbl)
+    chunks = pagetable.Chunks(tbl)
     keys, columns = chunks.keys, chunks.columns
     rows = 0
     crc = 0
@@ -416,114 +361,53 @@ def cmd_prune(tbl, args):
     print(f"kept {out.num_rows} of {tbl.num_rows} page rows → {args.out}")
 
 
-def _rebuild_rows(tbl, split, batch, column, new_pages, template_row):
-    rows = []
-    for meta, blob in new_pages:
-        rows.append(
-            {
-                "split_id": split, "batch_id": batch, "column": column,
-                "page": meta["page"], "codec": meta["codec"], "ptype": meta["ptype"],
-                "first_row": meta.get("first_row", -1), "n_rows": meta["n_rows"],
-                "null_count": meta["null_count"], "raw_bytes": meta["raw_bytes"],
-                "encoded_bytes": meta["encoded_bytes"], "crc32": meta["crc32"],
-                "compression": meta["compression"], "min": meta["min"],
-                "max": meta["max"], "ndv": meta["ndv"], "data": blob,
-            }
-        )
-    return rows
-
-
-def cmd_mask(tbl, args):
-    """MaskingCommand analog (hash|nullify), local NumPy path."""
+def _mask(tbl, column, mode):
+    """``tbl`` with ``column`` masked in process, by the rewrite functions
+    ``spark/rewrite.py`` runs: nullified, or each value replaced by its md5
+    hex. A hash of a column that is not string/binary exits."""
     import hashlib
-    import os
 
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .kernels import rle
-    from .kernels.ragged import RaggedBytes
-    from .pages import encode_column
+    if mode == "nullify":
+        return pagetable.nullify(tbl, column)
+    try:
+        values = pagetable.mask_values(tbl, column)
+    except TypeError as e:
+        sys.exit(str(e))
+    # hashlib per value: each iteration is ONE OpenSSL C call — a
+    # vectorized NumPy MD5 (64 sequential rounds over u32 lane arrays)
+    # measured ~19x slower and was removed. The distributed rewrite hashes
+    # JVM-side (rewrite.mask_hash, F.md5) between the same two halves.
+    digests = pa.array([None if v is None else hashlib.md5(v).hexdigest()
+                        for v in values["v"].to_pylist()], pa.string())
+    masked = pagetable.masked_pages(values.set_column(3, "v", digests), column)
+    rest = tbl.filter(pc.not_equal(tbl["column"], column))
+    return pa.concat_tables([rest, masked.select(rest.schema.names).cast(rest.schema)])
+
+
+def cmd_mask(tbl, args):
+    """MaskingCommand analog (hash|nullify), in process."""
+    import os
 
     if not args.column or not args.out:
         sys.exit("--column and --out required")
     os.makedirs(args.out, exist_ok=True)
-    rest = tbl.filter(pc.not_equal(tbl["column"], args.column))
-    chunks = _PageChunks(tbl)
-    new_rows = []
-    for split, batch in chunks.keys:
-        pages = chunks.pages(split, batch, args.column)
-        if not pages:
-            continue
-        data_pages = [p for p in pages if p[0]["page"] >= 0]
-        if args.mode == "hash" and data_pages and data_pages[0][0]["ptype"] not in (
-            "string", "binary"
-        ):
-            sys.exit(
-                f"mask --mode hash requires a string/binary column; "
-                f"{args.column!r} is {data_pages[0][0]['ptype']} (use --mode nullify)"
-            )
-        values, validity = decode_column(pages)
-        if args.mode == "nullify":
-            import zlib as _z
-
-            n = len(validity) if validity is not None else len(values)
-            blob = bytes([1]) + rle.encode_hybrid_length_prefixed(
-                np.zeros(n, dtype=np.uint64), 1
-            )
-            new_rows += _rebuild_rows(
-                tbl, split, batch, args.column,
-                [({"page": 0, "codec": "plain", "ptype": pages[0][0]["ptype"],
-                   "first_row": 0, "n_rows": n, "null_count": n, "raw_bytes": 0,
-                   "encoded_bytes": len(blob), "crc32": _z.crc32(blob) & 0xFFFFFFFF,
-                   "compression": "none", "min": None, "max": None, "ndv": 0}, blob)],
-                None,
-            )
-        else:
-            # hashlib per value: each iteration is ONE OpenSSL C call —
-            # a vectorized NumPy MD5 (64 sequential rounds over u32 lane
-            # arrays) measured ~19x slower and was removed. The
-            # distributed rewrite path hashes JVM-side (rewrite.mask_hash,
-            # F.md5) — this local tool takes the fastest in-process option.
-            hashed = RaggedBytes.from_pylist(
-                [hashlib.md5(v).hexdigest().encode() for v in values.to_pylist()]
-            )
-            out_pages = encode_column(hashed, "string", validity=validity)
-            new_rows += _rebuild_rows(tbl, split, batch, args.column, out_pages, None)
-    masked = pa.Table.from_pylist(new_rows, schema=tbl.schema) if new_rows else tbl.slice(0, 0)
-    _write_pages(pa.concat_tables([rest, masked]), args.out)
+    _write_pages(_mask(tbl, args.column, args.mode), args.out)
     print(f"masked column {args.column} ({args.mode}) → {args.out}")
 
 
 def cmd_trans_compression(tbl, args):
-    """TransCompressionCommand analog: re-compress page bodies locally."""
+    """TransCompressionCommand analog: re-compress page bodies in process
+    (a corrupt page raises ``IOError`` instead of getting a new CRC)."""
     import os
-    import zlib as _z
-
-    import pyarrow as pa
-
-    from .compression import compress as _pc_, decompress as _pd_
 
     if not args.out:
         sys.exit("--out required")
     os.makedirs(args.out, exist_ok=True)
-    to_label = args.to or "none"
-    rows = tbl.to_pylist()
-    for r in rows:
-        if r["compression"] == to_label or r["page"] in (*RAW_COPY_PAGES, ROWRANGES_PAGE):
-            continue
-        blob = bytes(r["data"])
-        from .pages import split_page_blob
-
-        pos = split_page_blob(blob)  # handles flat, validity AND list layouts
-        body = _pc_(_pd_(blob[pos:], r["compression"]), to_label)
-        nb = blob[:pos] + body
-        r.update(
-            data=nb, encoded_bytes=len(nb), compression=to_label,
-            crc32=_z.crc32(nb) & 0xFFFFFFFF,
-        )
-    _write_pages(pa.Table.from_pylist(rows, schema=tbl.schema), args.out)
-    print(f"transcoded to {to_label} → {args.out}")
+    _write_pages(pagetable.transcode(tbl, args.to), args.out)
+    print(f"transcoded to {args.to or 'none'} → {args.out}")
 
 
 def cmd_from_csv(args):
@@ -543,7 +427,7 @@ def cmd_from_csv(args):
         pa.string(): "string", pa.int64(): "int64", pa.int32(): "int32",
         pa.float64(): "float64", pa.float32(): "float32", pa.bool_(): "bool",
     }
-    rows = []
+    columns = []
     for name in src.column_names:
         arr = src[name].combine_chunks()
         pt = ptype_of.get(arr.type)
@@ -560,9 +444,8 @@ def cmd_from_csv(args):
             values = np.asarray(dense)
         else:
             values = np.asarray(dense)
-        rows += _rebuild_rows(None, 0, 0, name, encode_column(values, pt, validity=validity), None)
-    tbl = pa.Table.from_pylist(rows)
-    _write_pages(tbl, args.out)
+        columns.append((name, encode_column(values, pt, validity=validity)))
+    _write_pages(pa.Table.from_batches([pagetable.page_rows(0, 0, columns)]), args.out)
     print(f"encoded {len(src)} csv rows, {len(src.column_names)} columns → {args.out}")
 
 
@@ -581,7 +464,7 @@ def cmd_from_avro(args):
         sys.exit("--out required")
     os.makedirs(args.out, exist_ok=True)
     schema, records = read_avro(args.path)
-    rows = []
+    columns = []
     n = len(records)
     for fld in schema["fields"]:
         name = fld["name"]
@@ -619,10 +502,8 @@ def cmd_from_avro(args):
         else:
             print(f"skipping field {name}: avro type {t!r} unsupported")
             continue
-        rows += _rebuild_rows(None, 0, 0, name,
-                              encode_column(values, pt, validity=validity), None)
-    tbl = pa.Table.from_pylist(rows)
-    _write_pages(tbl, args.out)
+        columns.append((name, encode_column(values, pt, validity=validity)))
+    _write_pages(pa.Table.from_batches([pagetable.page_rows(0, 0, columns)]), args.out)
     print(f"encoded {n} avro records, {len(schema['fields'])} fields → {args.out}")
 
 
@@ -642,7 +523,7 @@ def cmd_from_protobuf(args):
         sys.exit("--out required")
     os.makedirs(args.out, exist_ok=True)
     name, fields, records = read_protobuf(args.path)
-    rows = []
+    columns = []
     n = len(records)
     for fld in fields:
         col, pt_proto = fld["name"], fld["proto_type"]
@@ -669,10 +550,8 @@ def cmd_from_protobuf(args):
         else:
             print(f"skipping field {col}: proto type {pt_proto!r} unsupported")
             continue
-        rows += _rebuild_rows(None, 0, 0, col,
-                              encode_column(values, pt, validity=validity), None)
-    tbl = pa.Table.from_pylist(rows)
-    _write_pages(tbl, args.out)
+        columns.append((col, encode_column(values, pt, validity=validity)))
+    _write_pages(pa.Table.from_batches([pagetable.page_rows(0, 0, columns)]), args.out)
     print(f"encoded {n} protobuf records ({name}), {len(fields)} fields → {args.out}")
 
 
@@ -692,7 +571,7 @@ def cmd_from_thrift(args):
         sys.exit("--out required")
     os.makedirs(args.out, exist_ok=True)
     name, fields, records = read_thrift(args.path)
-    rows = []
+    columns = []
     n = len(records)
     for fld in fields:
         col, tt = fld["name"], fld["thrift_type"]
@@ -717,10 +596,8 @@ def cmd_from_thrift(args):
         else:
             print(f"skipping field {col}: thrift type {tt!r} unsupported")
             continue
-        rows += _rebuild_rows(None, 0, 0, col,
-                              encode_column(values, pt, validity=validity), None)
-    tbl = pa.Table.from_pylist(rows)
-    _write_pages(tbl, args.out)
+        columns.append((col, encode_column(values, pt, validity=validity)))
+    _write_pages(pa.Table.from_batches([pagetable.page_rows(0, 0, columns)]), args.out)
     print(f"encoded {n} thrift records ({name}), {len(fields)} fields → {args.out}")
 
 
@@ -739,7 +616,7 @@ def cmd_from_parquet(args):
         sys.exit("--out required")
     os.makedirs(args.out, exist_ok=True)
     schema, data = read_parquet(args.path)
-    rows = []
+    columns = []
     for c in schema:
         name = c["name"]
         values, validity = data[name]
@@ -752,13 +629,10 @@ def cmd_from_parquet(args):
         if c.get("list"):
             from .nested import encode_list_column
 
-            rows += _rebuild_rows(None, 0, 0, name,
-                                  encode_list_column(values, f"list<{pt}>"), None)
+            columns.append((name, encode_list_column(values, f"list<{pt}>")))
             continue
-        rows += _rebuild_rows(None, 0, 0, name,
-                              encode_column(values, pt, validity=validity), None)
-    tbl = pa.Table.from_pylist(rows)
-    _write_pages(tbl, args.out)
+        columns.append((name, encode_column(values, pt, validity=validity)))
+    _write_pages(pa.Table.from_batches([pagetable.page_rows(0, 0, columns)]), args.out)
     print(f"encoded {len(schema)} columns from external parquet → {args.out}")
 
 
@@ -1075,7 +949,7 @@ def cmd_check_stats(tbl, args):
     import pyarrow.compute as pc
 
     bad = 0
-    chunks = _PageChunks(tbl)
+    chunks = pagetable.Chunks(tbl)
     for split, batch in chunks.keys:
         for c in chunks.columns:
             pages = chunks.pages(split, batch, c)
@@ -1124,9 +998,11 @@ def cmd_check_stats(tbl, args):
 
 
 def cmd_rewrite(tbl, args):
-    """RewriteCommand analog (RewriteOptions: prune + mask + transcode in
-    one pass): --columns keeps, --mask-column/--mode masks, --to
-    re-compresses — applied in the reference's order."""
+    """RewriteCommand analog (RewriteOptions: prune + mask + rename +
+    transcode in one pass, on the table in memory): --columns keeps,
+    --mask-column/--mode masks, --rename renames, --to re-compresses —
+    applied in the reference's order, by the rewrite functions
+    ``spark/rewrite.py`` runs."""
     import os
 
     import pyarrow.compute as pc
@@ -1138,31 +1014,14 @@ def cmd_rewrite(tbl, args):
         keep = [c.strip() for c in args.columns.split(",") if c.strip()]
         tbl = tbl.filter(pc.is_in(tbl["column"], value_set=__import__("pyarrow").array(keep)))
     if args.mask_column:
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as td:
-            ns = argparse.Namespace(**vars(args))
-            ns.column = args.mask_column
-            ns.out = td + "/masked"
-            os.makedirs(ns.out, exist_ok=True)
-            cmd_mask(tbl, ns)
-            tbl = _load(ns.out)
+        tbl = _mask(tbl, args.mask_column, args.mode)
     if getattr(args, "rename", None):
-        mapping = dict(kv.split("=", 1) for kv in args.rename.split(","))
-        names = set(tbl["column"].to_pylist())
-        missing = set(mapping) - names
-        if missing:
-            sys.exit(f"rename of absent column(s): {sorted(missing)}")
-        clash = set(mapping.values()) & (names - set(mapping))
-        if clash or len(set(mapping.values())) != len(mapping):
-            sys.exit("rename targets collide")
-        import pyarrow as pa
-
-        renamed = pa.array([mapping.get(c, c) for c in tbl["column"].to_pylist()])
-        tbl = tbl.set_column(tbl.schema.get_field_index("column"), "column", renamed)
+        try:
+            tbl = pagetable.rename(tbl, dict(kv.split("=", 1) for kv in args.rename.split(",")))
+        except ValueError as e:
+            sys.exit(str(e))
     if args.to:
-        cmd_trans_compression(tbl, args)
-        return
+        tbl = pagetable.transcode(tbl, args.to)
     _write_pages(tbl, args.out)
     print(f"rewrote {tbl.num_rows} page rows → {args.out}")
 
@@ -1204,7 +1063,7 @@ def _export_columns(tbl, ptypes, prefixes, command) -> tuple[list[dict], int]:
     ``ptypes`` nor starts with one of ``prefixes`` is reported and skipped."""
     from .pages import _concat_ragged
 
-    chunks = _PageChunks(tbl)
+    chunks = pagetable.Chunks(tbl)
     cols_out, n_rows = [], 0
     for c in chunks.columns:
         vals_parts, valid_parts = [], []
@@ -1289,7 +1148,7 @@ def cmd_to_parquet(tbl, args):
 
     if not args.out:
         sys.exit("--out required")
-    chunks = _PageChunks(tbl)
+    chunks = pagetable.Chunks(tbl)
     columns = _parquet_columns(tbl, chunks)
     groups = ({c["name"]: chunks.pages(split, batch, c["name"]) for c in columns}
               for split, batch in chunks.keys)

@@ -826,7 +826,13 @@ def decode_runs(pages: list, ptype: str, dict_vals=None) -> list:
         bodies = [p[1] for p in pages[i:j]]
         counts = [p[2] for p in pages[i:j]]
         if codec == "delta" and kp in _NUMERIC:
-            parts.append(delta.decode_delta_many(bodies, _NUMERIC[kp])[0])
+            values, spans = delta.decode_delta_many(bodies, _NUMERIC[kp])
+            # the CRC covers only the body: a stream that holds more or
+            # fewer values than its page counts must not pass
+            if [n for n, _ in spans] != counts:
+                raise ValueError("DELTA_BINARY_PACKED page holds another number of "
+                                 "values than its page counts")
+            parts.append(values)
         elif codec == "dlba" and kp in RAGGED_TYPES:
             parts += deltastrings.decode_dlba_many(bodies, counts)
         elif codec == "dict":

@@ -25,8 +25,9 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..kernels.ragged import RaggedBytes
+from .. import pagetable
 from ..memtune import tune_allocator
+from ..pagetable import _arrow_to_values, _values_to_arrow
 from ..pages import (
     BLOOM_PAGE,
     DICT_PAGE,
@@ -63,29 +64,6 @@ PAGE_SCHEMA = T.StructType(
         T.StructField("data", T.BinaryType(), False),
     ]
 )
-
-_PAGE_ARROW = pa.schema(
-    [
-        ("split_id", pa.int32()),
-        ("batch_id", pa.int32()),
-        ("column", pa.string()),
-        ("page", pa.int32()),
-        ("codec", pa.string()),
-        ("ptype", pa.string()),
-        ("first_row", pa.int64()),
-        ("n_rows", pa.int64()),
-        ("null_count", pa.int64()),
-        ("raw_bytes", pa.int64()),
-        ("encoded_bytes", pa.int64()),
-        ("crc32", pa.int64()),
-        ("compression", pa.string()),
-        ("min", pa.string()),
-        ("max", pa.string()),
-        ("ndv", pa.int64()),
-        ("data", pa.large_binary()),
-    ]
-)
-
 
 def spark_type_to_ptype(dt: T.DataType) -> str:
     if isinstance(dt, T.ArrayType):
@@ -158,211 +136,6 @@ def ptype_to_spark_type(ptype: str) -> T.DataType:
     }[ptype]
 
 
-# ---------------------------------------------------------------- arrow <-> kernels
-
-
-def _arrow_to_values(arr: pa.Array, ptype: str):
-    """Split an Arrow array into (non-null values in kernel form, validity|None)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if ptype.startswith("list<"):
-        import pyarrow.compute as pc
-
-        from ..nested import ListColumn, child_ptype
-
-        cp = child_ptype(ptype)
-        lv = np.asarray(arr.is_valid()) if arr.null_count else None
-        lens = np.asarray(pc.list_value_length(arr).fill_null(0)).astype(np.int64)
-        offsets = np.zeros(len(arr) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        child = pc.list_flatten(arr)  # valid lists' elements, element nulls kept
-        cvals, cvalid = _arrow_to_values(child, cp)
-        return ListColumn(offsets, lv, cvals, cvalid), None
-    if ptype in RAGGED_TYPES or ptype in ("geometry", "geography"):  # WKB binary
-        # nullable fast path: compacts offsets without copying the data
-        # buffer when null slots are empty (drop_null copies the whole column)
-        return RaggedBytes.from_arrow_nullable(
-            arr.cast(pa.binary()) if ptype in ("geometry", "geography") else arr
-        )
-    validity = None
-    if arr.null_count:
-        validity = np.asarray(arr.is_valid())
-        arr = arr.drop_null()
-    if ptype in ("timestamp_us", "timestamp_ntz_us"):
-        ts = arr.cast(pa.timestamp("us"))
-        vals = np.asarray(ts.cast(pa.int64()))
-        return vals.astype(np.int64, copy=False), validity
-    if ptype == "date32":
-        return np.asarray(arr.cast(pa.int32())), validity
-    if ptype.startswith("decimal64["):
-        # decimal128 storage IS the unscaled int128 LE; precision <= 18 fits
-        # the low word (sign carried by two's complement)
-        words = np.frombuffer(arr.buffers()[1], dtype="<u8").reshape(-1, 2)
-        lo = words[arr.offset : arr.offset + len(arr), 0]
-        return lo.view(np.int64).astype(np.int64), validity
-    if ptype.startswith("decimal_flba["):
-        from ..kernels import fixedlen as fl
-
-        p, _ = map(int, ptype[13:-1].split(","))
-        raw = np.frombuffer(arr.buffers()[1], dtype=np.uint8).reshape(-1, 16)
-        rows = raw[arr.offset : arr.offset + len(arr)]
-        return fl.decimal128_to_fixed(rows, fl.decimal_byte_width(p)), validity
-    if ptype == "uuid":
-        from ..kernels import fixedlen as fl
-
-        rb = RaggedBytes.from_arrow(arr.cast(pa.string()))
-        if len(rb) and not (rb.lengths == 36).all():
-            raise ValueError("uuid column values must be canonical 36-char form")
-        return fl.uuid_strings_to_fixed(rb.data.reshape(-1, 36)), validity
-    if ptype == "float16":
-        from ..kernels import fixedlen as fl
-
-        return fl.float32_to_fixed16(np.asarray(arr.cast(pa.float32()))), validity
-    if ptype == "int96_ts":
-        from ..kernels import fixedlen as fl
-
-        us = np.asarray(arr.cast(pa.timestamp("us")).cast(pa.int64()))
-        return fl.us_to_int96(us.astype(np.int64)), validity
-    if ptype == "interval":
-        from ..kernels import fixedlen as fl
-
-        m, d, ms = (np.asarray(c.cast(pa.int32())) for c in arr.flatten())
-        return fl.interval_to_fixed(m, d, ms), validity
-    if ptype.startswith("fixed["):
-        k = int(ptype[6:-1])
-        if arr.type == pa.binary(k):
-            # the data buffer read at the array's offset, as for decimal64:
-            # pyarrow 16 crashes casting a sliced FixedSizeBinary array
-            data = np.frombuffer(arr.buffers()[1], dtype=np.uint8)
-            return data[arr.offset * k : (arr.offset + len(arr)) * k].reshape(-1, k), validity
-        rb = RaggedBytes.from_arrow(arr.cast(pa.binary()))
-        if len(rb) and not (rb.lengths == k).all():
-            raise ValueError(f"fixed[{k}] column has values of other lengths")
-        return rb.data.reshape(-1, k), validity
-    if ptype == "bool":
-        return np.asarray(arr), validity
-    np_dtype = {"int32": np.int32, "int64": np.int64, "float32": np.float32, "float64": np.float64}[ptype]
-    return np.asarray(arr).astype(np_dtype, copy=False), validity
-
-
-def _values_to_arrow(values, validity, ptype: str) -> pa.Array:
-    if ptype.startswith("list<"):
-        from ..nested import child_ptype
-
-        cp = child_ptype(ptype)
-        child_arr = _values_to_arrow(values.child_values, values.child_validity, cp)
-        offsets = pa.array(values.offsets.astype(np.int32), pa.int32())
-        if values.list_validity is None:
-            return pa.ListArray.from_arrays(offsets, child_arr)
-        return pa.ListArray.from_arrays(
-            offsets, child_arr, mask=pa.array(~values.list_validity)
-        )
-    if ptype in RAGGED_TYPES or ptype in ("geometry", "geography"):
-        dense = values.to_arrow(large=False, binary=(ptype != "string"))
-    elif ptype in ("timestamp_us", "timestamp_ntz_us"):
-        dense = pa.array(values.astype("datetime64[us]"))
-    elif ptype == "date32":
-        dense = pa.array(values.astype(np.int32, copy=False)).cast(pa.date32())
-    elif ptype.startswith("decimal64["):
-        p, sc = map(int, ptype[10:-1].split(","))
-        v = values.astype(np.int64)
-        words = np.zeros((len(v), 2), dtype=np.uint64)
-        words[:, 0] = v.view(np.uint64)
-        words[:, 1] = np.where(v < 0, np.uint64(0xFFFFFFFFFFFFFFFF), np.uint64(0))
-        dense = pa.Array.from_buffers(
-            pa.decimal128(p, sc), len(v), [None, pa.py_buffer(words.tobytes())]
-        )
-    elif ptype.startswith("decimal_flba["):
-        from ..kernels import fixedlen as fl
-
-        p, sc = map(int, ptype[13:-1].split(","))
-        le = fl.fixed_to_decimal128(values)
-        dense = pa.Array.from_buffers(
-            pa.decimal128(p, sc), len(values), [None, pa.py_buffer(le.tobytes())]
-        )
-    elif ptype == "uuid":
-        from ..kernels import fixedlen as fl
-
-        chars = fl.fixed_to_uuid_strings(values)
-        dense = RaggedBytes(
-            np.arange(len(values) + 1, dtype=np.int64) * 36, chars.reshape(-1)
-        ).to_arrow()
-    elif ptype == "float16":
-        from ..kernels import fixedlen as fl
-
-        dense = pa.array(fl.fixed16_to_float32(values))
-    elif ptype == "int96_ts":
-        from ..kernels import fixedlen as fl
-
-        dense = pa.array(fl.int96_to_us(values).astype("datetime64[us]"))
-    elif ptype == "interval":
-        from ..kernels import fixedlen as fl
-
-        m, d, ms = fl.fixed_to_interval(values)
-        dense = pa.StructArray.from_arrays(
-            [pa.array(m), pa.array(d), pa.array(ms)],
-            names=["months", "days", "millis"],
-        )
-    elif ptype.startswith("fixed["):
-        k = int(ptype[6:-1])
-        dense = RaggedBytes(
-            np.arange(len(values) + 1, dtype=np.int64) * k, values.reshape(-1)
-        ).to_arrow(binary=True)
-    else:
-        dense = pa.array(values)
-    if validity is None:
-        return dense
-    # re-expand nulls. Fast paths build the nullable array directly from
-    # buffers — null slots are empty/zero and the validity bitmap is attached
-    # — instead of the old take + if_else pair, which copied the whole column
-    # TWICE (for a blob column that was most of the decode wall):
-    #   - binary/string: null slots get zero-length offsets; the data buffer
-    #     is reused untouched (dense values are already in row order), so
-    #     the dense offsets must start at 0
-    #   - fixed-width primitives: one scatter of the dense rows into a
-    #     zeroed full-length buffer
-    n = len(validity)
-    if len(dense) == 0:
-        return pa.nulls(n, dense.type)
-    import pyarrow.types as pt
-
-    t = dense.type
-    nnz = len(dense)
-    vbuf = pa.py_buffer(np.packbits(validity, bitorder="little"))
-    bufs = dense.buffers()
-    if (
-        (pt.is_binary(t) or pt.is_string(t))
-        and dense.offset == 0
-        and np.frombuffer(bufs[1], dtype=np.int32, count=1)[0] == 0
-    ):
-        off32 = np.frombuffer(bufs[1], dtype=np.int32, count=nnz + 1)
-        new_lens = np.zeros(n, dtype=np.int32)
-        new_lens[validity] = np.diff(off32)
-        new_off = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(new_lens, out=new_off[1:])
-        return pa.Array.from_buffers(
-            t, n, [vbuf, pa.py_buffer(new_off), bufs[2]], null_count=n - nnz
-        )
-    if (
-        pt.is_primitive(t)
-        and not pt.is_boolean(t)
-        and t.bit_width % 8 == 0
-        and dense.offset == 0
-    ):
-        item = t.bit_width // 8
-        src = np.frombuffer(bufs[1], dtype=np.uint8, count=nnz * item)
-        out = np.zeros(n * item, dtype=np.uint8)
-        out.reshape(n, item)[validity] = src.reshape(nnz, item)
-        return pa.Array.from_buffers(
-            t, n, [vbuf, pa.py_buffer(out)], null_count=n - nnz
-        )
-    idx = np.full(n, -1, dtype=np.int64)
-    idx[validity] = np.arange(nnz, dtype=np.int64)
-    mask = pa.array(validity)
-    taken = dense.take(pa.array(np.maximum(idx, 0)))
-    return pa.compute.if_else(mask, taken, pa.nulls(n, dense.type))
-
-
 # ---------------------------------------------------------------- encode
 
 
@@ -416,16 +189,12 @@ def _encode_arrow_batch(
     """Encode one Arrow batch into page-table rows — the worker-side core
     shared by encode_table (JVM-fed batches) and encode_parquet_files
     (worker-side parquet reads)."""
-    rows = {k: [] for k in (
-        "split_id", "batch_id", "column", "page", "codec", "ptype",
-        "first_row", "n_rows",
-        "null_count", "raw_bytes", "encoded_bytes", "crc32", "compression",
-        "min", "max", "ndv", "data",
-    )}
+    columns = []
     for name in cols:
         ptype = ptypes[name]
         arr = batch.column(batch.schema.get_field_index(name))
         values, validity = _arrow_to_values(arr, ptype)
+        pages = []
         if with_bloom:
             keys = _bloom_keys(values, ptype)
             if keys is not None and len(keys):
@@ -439,24 +208,14 @@ def _encode_arrow_batch(
                 bf = BlockSplitBloomFilter(optimal_num_bytes(ndv, 0.01))
                 bf.insert_u64(keys)
                 blob = bf.serialize()
-                rows["split_id"].append(split)
-                rows["batch_id"].append(bi)
-                rows["column"].append(name)
-                rows["page"].append(BLOOM_PAGE)  # chunk-index row, not a data page
-                rows["codec"].append("bloom")
-                rows["ptype"].append(ptype)
-                rows["first_row"].append(-1)
-                rows["n_rows"].append(len(keys))
-                rows["null_count"].append(0)
-                rows["raw_bytes"].append(0)
-                rows["encoded_bytes"].append(len(blob))
-                rows["crc32"].append(0)
-                rows["compression"].append("none")
-                rows["min"].append(None)
-                rows["max"].append(None)
-                rows["ndv"].append(-1)
-                rows["data"].append(blob)
-        for meta, blob in encode_column(
+                # a chunk-index row, not a data page
+                pages.append(({
+                    "page": BLOOM_PAGE, "codec": "bloom", "ptype": ptype, "first_row": -1,
+                    "n_rows": len(keys), "null_count": 0, "raw_bytes": 0,
+                    "encoded_bytes": len(blob), "crc32": 0, "compression": "none",
+                    "min": None, "max": None, "ndv": -1,
+                }, blob))
+        pages += encode_column(
             values,
             ptype,
             validity=validity,
@@ -464,25 +223,9 @@ def _encode_arrow_batch(
             page_rows=page_rows,
             page_bytes=page_bytes,
             page_compression=page_compression,
-        ):
-            rows["split_id"].append(split)
-            rows["batch_id"].append(bi)
-            rows["column"].append(name)
-            rows["page"].append(meta["page"])
-            rows["codec"].append(meta["codec"])
-            rows["ptype"].append(meta["ptype"])
-            rows["first_row"].append(meta["first_row"])
-            rows["n_rows"].append(meta["n_rows"])
-            rows["null_count"].append(meta["null_count"])
-            rows["raw_bytes"].append(meta["raw_bytes"])
-            rows["encoded_bytes"].append(meta["encoded_bytes"])
-            rows["crc32"].append(meta["crc32"])
-            rows["compression"].append(meta["compression"])
-            rows["min"].append(meta["min"])
-            rows["max"].append(meta["max"])
-            rows["ndv"].append(meta["ndv"])
-            rows["data"].append(blob)
-    return pa.RecordBatch.from_pydict(rows, schema=_PAGE_ARROW)
+        )
+        columns.append((name, pages))
+    return pagetable.page_rows(split, bi, columns)
 
 
 def _codec_of(codec):
@@ -912,13 +655,10 @@ def decode_table(
         # page-level pruning): rows kept = AND over probe columns of the
         # union of that column's ranges — ColumnIndexFilter.calculateRowRanges
         # semantics (/root/reference/parquet-hadoop/.../ColumnIndexFilter.java:58-77)
-        rr = tbl.filter(pc.equal(tbl["page"], ROWRANGES_PAGE))
+        rr = tbl.filter(pc.equal(tbl["page"], ROWRANGES_PAGE)).to_pydict()
         range_groups = {}
-        for i in range(rr.num_rows):
-            fr = rr["first_row"][i].as_py()
-            range_groups.setdefault(rr["column"][i].as_py(), []).append(
-                (fr, fr + rr["n_rows"][i].as_py())
-            )
+        for c, fr, n in zip(rr["column"], rr["first_row"], rr["n_rows"]):
+            range_groups.setdefault(c, []).append((fr, fr + n))
 
         def keep_mask(row_idx):
             keep = np.ones(len(row_idx), dtype=bool)
@@ -930,31 +670,15 @@ def decode_table(
                 keep &= (j >= 0) & (row_idx < his[np.maximum(j, 0)])
             return keep
 
+        chunks = pagetable.Chunks(tbl)
+        [(split, batch)] = chunks.keys  # one group is one chunk key
         arrays = []
         for name in cols:
-            # page >= DICT_PAGE keeps the chunk dictionary page; bloom index
-            # rows are skipped inside decode_column
-            sub = tbl.filter(
-                pc.and_(pc.equal(tbl["column"], name), pc.greater_equal(tbl["page"], DICT_PAGE))
-            ).sort_by("page")
-            pages = [
-                (
-                    {
-                        "page": sub["page"][i].as_py(),
-                        "codec": sub["codec"][i].as_py(),
-                        "ptype": sub["ptype"][i].as_py(),
-                        "n_rows": sub["n_rows"][i].as_py(),
-                        "crc32": sub["crc32"][i].as_py(),
-                        "compression": sub["compression"][i].as_py(),
-                    },
-                    sub["data"][i].as_py(),
-                )
-                for i in range(sub.num_rows)
-            ]
-            values, validity = decode_column(pages, ptypes[name])
+            values, validity = decode_column(chunks.pages(split, batch, name), ptypes[name])
             arr = _values_to_arrow(values, validity, ptypes[name])
             if range_groups:
                 # global row index of each decoded row, from the offset index
+                sub = chunks.chunk(split, batch, name)
                 data = sub.filter(pc.greater_equal(sub["page"], 0))
                 frs = np.asarray(data["first_row"])
                 nrs = np.asarray(data["n_rows"])

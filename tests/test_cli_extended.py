@@ -120,11 +120,11 @@ def test_from_csv_cli(capsys, spark):
 def _encode_local(values, ptype, codec="auto", page_rows=100):
     import pyarrow as pa
 
-    from pq_engine.cli import _rebuild_rows
     from pq_engine.pages import encode_column
+    from pq_engine.pagetable import page_rows as build_rows
 
-    rows = _rebuild_rows(None, 0, 0, "c", encode_column(values, ptype, codec=codec, page_rows=page_rows), None)
-    return pa.Table.from_pylist(rows)
+    pages = encode_column(values, ptype, codec=codec, page_rows=page_rows)
+    return pa.Table.from_batches([build_rows(0, 0, [("c", pages)])])
 
 
 def test_boundary_order_persisted_and_binary_search(capsys):
@@ -208,17 +208,17 @@ def test_cli_rewrite_and_to_parquet(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pq_engine.cli import _rebuild_rows
     from pq_engine.kernels.ragged import RaggedBytes
     from pq_engine.pages import encode_column
+    from pq_engine.pagetable import page_rows
 
     texts = RaggedBytes.from_pylist([b"doc-%d" % (i % 9) for i in range(500)])
     ids = np.arange(500, dtype=np.int64)
-    rows = _rebuild_rows(None, 0, 0, "text", encode_column(texts, "string"), None)
-    rows += _rebuild_rows(None, 0, 0, "doc_id", encode_column(ids, "int64"), None)
+    rows = page_rows(0, 0, [("text", encode_column(texts, "string")),
+                            ("doc_id", encode_column(ids, "int64"))])
     src = tmp_path / "pages"
     src.mkdir()
-    pq.write_table(pa.Table.from_pylist(rows), str(src / "part-0.parquet"))
+    pq.write_table(pa.Table.from_batches([rows]), str(src / "part-0.parquet"))
 
     out = tmp_path / "rewritten"
     r = subprocess.run(
@@ -276,9 +276,9 @@ def test_cli_to_parquet_typed_columns(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pq_engine.cli import _rebuild_rows
     from pq_engine.kernels.fixedlen import interval_to_fixed, uuid_strings_to_fixed
     from pq_engine.pages import encode_column
+    from pq_engine.pagetable import page_rows
 
     n = 100
     uuids = [f"{i:08x}-1234-5678-9abc-def012345678" for i in range(n)]
@@ -289,12 +289,12 @@ def test_cli_to_parquet_typed_columns(tmp_path):
         np.arange(n, dtype=np.int32), np.zeros(n, np.int32), np.full(n, 9, np.int32)
     )
     dec = np.arange(n, dtype=np.int64) * 25  # decimal(10,2) unscaled
-    rows = _rebuild_rows(None, 0, 0, "u", encode_column(uuid_rows, "uuid"), None)
-    rows += _rebuild_rows(None, 0, 0, "iv", encode_column(iv_rows, "interval"), None)
-    rows += _rebuild_rows(None, 0, 0, "d", encode_column(dec, "decimal64[10,2]"), None)
+    rows = page_rows(0, 0, [("u", encode_column(uuid_rows, "uuid")),
+                            ("iv", encode_column(iv_rows, "interval")),
+                            ("d", encode_column(dec, "decimal64[10,2]"))])
     src = tmp_path / "pages"
     src.mkdir()
-    pq.write_table(pa.Table.from_pylist(rows), str(src / "part-0.parquet"))
+    pq.write_table(pa.Table.from_batches([rows]), str(src / "part-0.parquet"))
     conv = tmp_path / "typed.parquet"
     r = subprocess.run(
         [sys.executable, "-m", "pq_engine.cli", "to-parquet", str(src),

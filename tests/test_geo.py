@@ -75,12 +75,12 @@ def test_cli_geospatial_stats(tmp_path, capsys):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pq_engine.cli import _rebuild_rows, cmd_geospatial_stats
+    from pq_engine.cli import cmd_geospatial_stats
     from pq_engine.pages import encode_column
+    from pq_engine.pagetable import page_rows
 
     col = points_to_wkb(np.array([1.0, 5.0]), np.array([2.0, 3.0]))
-    rows = _rebuild_rows(None, 0, 0, "geom", encode_column(col, "geometry"), None)
-    tbl = pa.Table.from_pylist(rows)
+    tbl = pa.Table.from_batches([page_rows(0, 0, [("geom", encode_column(col, "geometry"))])])
 
     class A:
         column = None

@@ -325,3 +325,13 @@ def test_decompressed_body_reads_like_bytes(codec):
     out = compression.decompress(compression.compress(body, codec), codec)
     assert len(out) == len(body) and bytes(out) == body
     assert out[255] == 255 and list(out[250:256]) == list(range(250, 256))
+
+
+def test_delta_page_with_more_values_than_its_row_rejected():
+    """A 60-value DELTA page whose row claims 50 values: the CRC covers
+    only ``data``, so the stream's own count is checked against the row."""
+    out = pages.encode_column(np.arange(60, dtype=np.int64) * 7, "int64", codec="delta")
+    assert [m["codec"] for m, _ in _data(out)] == ["delta"]
+    out = [({**m, "n_rows": 50} if m["page"] >= 0 else m, b) for m, b in out]
+    with pytest.raises(ValueError, match="DELTA_BINARY_PACKED"):
+        pages.decode_column(out)

@@ -166,6 +166,27 @@ def test_malformed_delta_byte_array_page_rejected(tmp_path):
         read_parquet(str(p))
 
 
+def test_delta_page_with_more_values_than_its_header_rejected(tmp_path):
+    """A required int64 column of 50 rows whose one V1 page (no CRC, as
+    pyarrow writes by default) holds a 60-value DELTA_BINARY_PACKED body:
+    the stream's count must match the page's, not give 60 rows."""
+    p = tmp_path / "delta.parquet"
+    pq.write_table(
+        pa.table([pa.array(np.arange(50), pa.int64())],
+                 schema=pa.schema([pa.field("x", pa.int64(), nullable=False)])),
+        p, use_dictionary=False, column_encoding={"x": "DELTA_BINARY_PACKED"},
+        data_page_version="1.0", compression="none", write_statistics=False)
+    # header: block size 256, 4 miniblocks, 50 values, first value 0, then
+    # min delta 1 and all-zero widths: the count is one byte, 0x32 -> 0x3c
+    buf = p.read_bytes()
+    head = b"\x80\x02\x04\x32\x00\x02"
+    assert buf.count(head) == 1
+    p.write_bytes(buf.replace(head, b"\x80\x02\x04\x3c\x00\x02"))
+    assert pq.read_table(p).num_rows == 50
+    with pytest.raises(ValueError, match="DELTA_BINARY_PACKED"):
+        read_parquet(str(p))
+
+
 def _logical(t):
     """An Arrow type with offset widths and list field names dropped:
     ``to_arrow`` returns large strings and lists, pyarrow small ones."""
@@ -333,8 +354,9 @@ def test_cli_from_parquet_list_and_map(tmp_path, capsys):
     skips a MAP group with a message, not a KeyError."""
     from argparse import Namespace
 
-    from pq_engine.cli import _load, _PageChunks, cmd_from_parquet
+    from pq_engine.cli import _load, cmd_from_parquet
     from pq_engine.pages import decode_column
+    from pq_engine.pagetable import Chunks
 
     src = str(tmp_path / "nested.parquet")
     pq.write_table(pa.table({
@@ -343,7 +365,7 @@ def test_cli_from_parquet_list_and_map(tmp_path, capsys):
     }), src)
     cmd_from_parquet(Namespace(path=src, out=str(tmp_path / "pages")))
     assert "skipping column m" in capsys.readouterr().out
-    chunks = _PageChunks(_load(str(tmp_path / "pages")))
+    chunks = Chunks(_load(str(tmp_path / "pages")))
     assert chunks.columns == ["tags"]
     (split, batch), = chunks.keys
     lists, _ = decode_column(chunks.pages(split, batch, "tags"))

@@ -61,3 +61,25 @@ def test_lineage_antijoin_broadcasts(spark, pages_path):
     )
     plan = _plan(joined)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+
+
+@pytest.mark.parametrize("rewrite, exchanges", [
+    ("transcode_compression", 0), ("mask_nullify", 0), ("encrypt_pages", 0),
+    ("decrypt_pages", 0), ("mask_hash", 2),
+])
+def test_rewrites_shuffle_only_to_hash(spark, pages_path, rewrite, exchanges):
+    """The page-row rewrites run as one map over the page table; only
+    mask-hash, whose md5 runs between a chunk's decode and its re-encode,
+    groups (twice)."""
+    from pq_engine.spark import crypto, rewrite as rw
+
+    pages = spark.read.parquet(pages_path)
+    if rewrite in ("encrypt_pages", "decrypt_pages"):
+        if not crypto.available():
+            pytest.skip("AES-GCM backend not available")
+        q = getattr(crypto, rewrite)(pages, {"text": bytes(16)})
+    elif rewrite == "transcode_compression":
+        q = rw.transcode_compression(pages, "zstd")
+    else:
+        q = getattr(rw, rewrite)(pages, "url")
+    assert _plan(q).count("Exchange") <= exchanges

@@ -311,12 +311,13 @@ def test_check_stats_nan_pages(capsys):
     import numpy as np
     import pyarrow as pa
 
-    from pq_engine.cli import _rebuild_rows, cmd_check_stats
+    from pq_engine.cli import cmd_check_stats
     from pq_engine.pages import encode_column
+    from pq_engine.pagetable import page_rows
 
     vals = np.array([1.0, 2.0, np.nan, 3.0] * 50, dtype=np.float64)
-    rows = _rebuild_rows(None, 0, 0, "f", encode_column(vals, "float64", page_rows=40), None)
-    cmd_check_stats(pa.Table.from_pylist(rows), None)
+    rows = page_rows(0, 0, [("f", encode_column(vals, "float64", page_rows=40))])
+    cmd_check_stats(pa.Table.from_batches([rows]), None)
     assert "stats OK" in capsys.readouterr().out
 
 

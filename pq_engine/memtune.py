@@ -12,6 +12,12 @@ the Spark engine also sets ``MALLOC_MMAP_THRESHOLD_`` etc. via ``executorEnv``
 so Python workers start tuned). Set ``PQ_ENGINE_NO_MALLOC_TUNE=1`` to opt out
 of the malloc settings; the zipimport guard below stays on, since it changes no
 allocation and only skips a re-parse.
+
+The Python workers' environment also sets ``ARROW_DEFAULT_MEMORY_POOL=system``
+(``spark/session.get_spark``), so pyarrow's buffers in a worker — the encode
+task's source read above all — come from this tuned glibc heap instead of
+jemalloc. The driver process keeps jemalloc. See ``spark/session.py`` for why
+that pool and the single-threaded source read stay together.
 """
 
 from __future__ import annotations

@@ -172,13 +172,17 @@ def transcode(tbl: pa.Table, to: str | None) -> pa.Table:
     index rows are copied as they are; any other page is CRC-checked, its
     body decompressed and compressed again, its levels and values never
     decoded. Dictionary pages share the data pages' framing and transcode
-    with them."""
+    with them. A sealed page (:func:`encrypt`) raises ``ValueError``: its
+    body is ciphertext, to be decrypted first."""
     to = to or "none"
-    page, comp, crc, size, data = (
-        tbl[k].to_pylist() for k in ("page", "compression", "crc32", "encoded_bytes", "data"))
+    column, page, comp, crc, size, data = (tbl[k].to_pylist() for k in (
+        "column", "page", "compression", "crc32", "encoded_bytes", "data"))
     for i, p in enumerate(page):
         if comp[i] == to or p in (*RAW_COPY_PAGES, ROWRANGES_PAGE):
             continue
+        if comp[i].endswith(ENCRYPTED_SUFFIX):
+            raise ValueError(f"column {column[i]!r} is encrypted: decrypt it before "
+                             f"changing its compression")
         blob = _checked(p, crc[i], data[i])
         pos = split_page_blob(blob)  # handles flat, validity AND list layouts
         data[i] = blob[:pos] + compress(decompress(blob[pos:], comp[i]), to)
@@ -298,8 +302,9 @@ def decrypt(tbl: pa.Table, keys: dict[str, bytes], aad_prefix: bytes = b"") -> p
             mn[i], mx[i], ndv[i] = json.loads(pt[4 : 4 + hlen])
             data[i] = pt[4 + hlen :]
         size[i] = len(data[i])
-        # the plaintext CRC, recomputed after authentication
-        crc[i] = _crc32(data[i])
+        # the plaintext CRC, recomputed after authentication; bloom rows
+        # carry the engine's 0 (see _checked)
+        crc[i] = 0 if page[i] == BLOOM_PAGE else _crc32(data[i])
         comp[i] = comp[i][: -len(ENCRYPTED_SUFFIX)]
     return _replace(tbl, data=data, compression=comp, encoded_bytes=size, crc32=crc,
                     min=mn, max=mx, ndv=ndv)

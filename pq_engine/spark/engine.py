@@ -538,8 +538,17 @@ def encode_parquet_files(
                 bi_lo = int(b.column(3)[row].as_py())
                 bi_hi = int(b.column(4)[row].as_py())
                 pf = _pq.ParquetFile(path)
+                # One thread: a Spark task is one core, and pyarrow's pool
+                # per worker would oversubscribe the cores. Keep this with
+                # get_spark's system memory pool for workers: each alone
+                # made encode slower. On 4 cores, perfbench webpages
+                # encode_mbps over three seeds was 1409-1492 with neither,
+                # 1233-1297 with use_threads=False alone, 1160-1189 with
+                # the system pool alone, 1588-1677 with both (session.py).
                 for bi, batch in enumerate(
-                    pf.iter_batches(batch_size=batch_rows, columns=cols, row_groups=[rg])
+                    pf.iter_batches(
+                        batch_size=batch_rows, columns=cols, row_groups=[rg], use_threads=False
+                    )
                 ):
                     if bi < bi_lo:
                         continue
@@ -619,6 +628,40 @@ def table_ptypes(df: DataFrame, columns: list[str] | None = None) -> dict[str, s
     }
 
 
+_RETURN_BATCH_BYTES = 8 << 20
+
+
+def _bounded_batches(tbl: pa.Table) -> pa.Table:
+    """``tbl`` cut into record batches of at most ``_RETURN_BATCH_BYTES``
+    each, rows and order kept; a batch is larger only when it is one row
+    larger than that. Rows per batch come from the table's ``nbytes``, and a
+    slice still over the bound (rows of uneven size) is halved until it
+    fits. A table under the bound is returned as it is.
+
+    pyspark hands the JVM each batch of a returned table as one Arrow
+    message. A decoded 25k-row ``webpages`` chunk is ~100 MB; on 4 cores, 8
+    such tasks into a noop sink took 0.296 s as one batch per task and
+    0.209-0.212 s as 4-25 batches per task."""
+    bound = _RETURN_BATCH_BYTES
+    if tbl.nbytes <= bound:
+        return tbl
+    step = max(1, tbl.num_rows * bound // tbl.nbytes)
+    out = []
+
+    def add(b: pa.RecordBatch) -> None:
+        if b.num_rows > 1 and b.nbytes > bound:
+            half = b.num_rows // 2
+            add(b.slice(0, half))
+            add(b.slice(half))
+        else:
+            out.append(b)
+
+    for batch in tbl.to_batches():
+        for lo in range(0, batch.num_rows, step):
+            add(batch.slice(lo, step))
+    return pa.Table.from_batches(out, schema=tbl.schema)
+
+
 def decode_table(
     pages_df: DataFrame,
     column_order: list[str] | None = None,
@@ -688,7 +731,7 @@ def decode_table(
                 )
                 arr = arr.filter(pa.array(keep_mask(row_idx)))
             arrays.append(arr.cast(arrow_schema.field(name).type))
-        return pa.table(arrays, schema=arrow_schema)
+        return _bounded_batches(pa.table(arrays, schema=arrow_schema))
 
     return (
         pages_df.groupBy("split_id", "batch_id")

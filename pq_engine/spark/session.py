@@ -5,6 +5,18 @@ Local mode is a stand-in for a multi-executor cluster: parallelism scales with
 page-fault-expensive hosts (see memtune.py) — Python UDF workers inherit them
 at exec time.
 
+Python workers also get ``ARROW_DEFAULT_MEMORY_POOL=system``, and the encode
+task reads its source with ``iter_batches(use_threads=False)`` (one task is
+one core): pyarrow's source read then allocates from glibc's warm heap under
+those malloc settings, on one thread. The two halves win only together:
+each alone made encode slower. On a 4-core host, ``perfbench`` ``webpages``
+``encode_mbps`` over the same three seeds was 1409-1492 with neither,
+1160-1189 with the system pool alone, 1233-1297 with ``use_threads=False``
+alone, and 1588-1677 with both. The pool is set for the workers only, not
+in the driver's environment: the in-process paths (``pq to-parquet``, the
+interop reader) keep pyarrow's jemalloc pool, where a process-wide system
+pool raised the ``parquet_file`` workload's RSS by about 100 MB.
+
 Shuffle sizing: an AQE-coalescible shuffle starts from
 ``32 × shuffle_partitions`` hash partitions, and AQE merges neighbours up to
 ``input bytes / defaultParallelism`` each (``parallelismFirst``, Spark's
@@ -96,6 +108,8 @@ def get_spark(
     for k, v in _MALLOC_ENV.items():
         b = b.config(f"spark.executorEnv.{k}", v)
         os.environ.setdefault(k, v)
+    # workers only, see the module docstring
+    b = b.config("spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL", "system")
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -13,10 +13,11 @@ from pyspark.sql import functions as F
 
 from pq_engine.cli import _load, cmd_mask, cmd_trans_compression
 from pq_engine.datagen import webpages_df
-from pq_engine.pages import decode_column, encode_column
+from pq_engine import pagetable
+from pq_engine.pages import BLOOM_PAGE, PAGE_BYTES, PAGE_ROWS, decode_column, encode_column
 from pq_engine.pagetable import Chunks, page_rows
 from pq_engine.spark import crypto
-from pq_engine.spark.engine import PAGE_SCHEMA, encode_table
+from pq_engine.spark.engine import PAGE_SCHEMA, _encode_arrow_batch, encode_table
 from pq_engine.spark.rewrite import mask_hash, mask_nullify, transcode_compression
 
 KEY = bytes(range(16))
@@ -95,3 +96,28 @@ def test_encrypt_refuses_a_corrupt_page(spark, tmp_path):
     pages = spark.read.parquet(_corrupt_pages(tmp_path))
     with pytest.raises(Exception, match="page 0 CRC mismatch"):
         crypto.encrypt_pages(pages, {"c": KEY}).collect()
+
+
+def _int64_chunk_with_bloom() -> pa.Table:
+    """The page rows of one 1,000-row int64 chunk, bloom row included."""
+    batch = pa.record_batch({"c": np.arange(1000, dtype=np.int64)})
+    rows = _encode_arrow_batch(batch, ["c"], {"c": "int64"}, lambda c: "auto", 0, 0,
+                               PAGE_ROWS, PAGE_BYTES, "zstd", True)
+    tbl = pa.Table.from_batches([rows])
+    assert BLOOM_PAGE in tbl["page"].to_pylist()
+    return tbl
+
+
+@pytest.mark.skipif(not crypto.available(), reason="AES-GCM backend not available")
+def test_transcode_refuses_a_sealed_page():
+    sealed = pagetable.encrypt(_int64_chunk_with_bloom(), {"c": KEY})
+    with pytest.raises(ValueError, match="column 'c' is encrypted: decrypt it"):
+        pagetable.transcode(sealed, "zlib")
+
+
+@pytest.mark.skipif(not crypto.available(), reason="AES-GCM backend not available")
+def test_decrypt_gives_back_every_field_of_every_row():
+    """Bloom rows included: they carry crc32 0 before sealing and after."""
+    tbl = _int64_chunk_with_bloom()
+    back = pagetable.decrypt(pagetable.encrypt(tbl, {"c": KEY}), {"c": KEY})
+    assert back.to_pylist() == tbl.to_pylist()

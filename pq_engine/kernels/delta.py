@@ -15,12 +15,15 @@ DeltaBinaryPackingValuesWriter.java:48-50):
     stored[i]   := delta[i] - minDelta            (>= 0 within a block, :104-106)
 
 The final block's missing values are zero-padded; miniblocks past the data get
-width 0. All delta math is vectorized (``np.diff`` on int64 with wraparound);
-bit-packing of miniblocks is batched *per distinct width* so the Python loop
-runs over blocks (n/128) only for header assembly. The decoder's Python loop
-also runs over blocks only (one minDelta varint and one sum of width bytes
-each); a single gather then unpacks every 32-value group the count reaches,
-at its miniblock's width, for all the pages of a chunk at once
+width 0. The encoder takes all the streams of a column chunk (its pages) at
+once (``encode_delta_many``): their blocks share one matrix, so the delta
+math (int64 with wraparound), the block minimums, the miniblock widths and
+the block headers are a few NumPy calls for the chunk, and bit-packing is
+batched *per distinct width* across every page's miniblocks; Python touches
+a stream only for its header and its slices. The decoder's Python loop runs
+over blocks only (one minDelta varint and one sum of width bytes each); a
+single gather then unpacks every 32-value group the count reaches, at its
+miniblock's width, for all the pages of a chunk at once
 (``decode_delta_many``). A header whose blocks are not a multiple of 128
 values, or its miniblocks of 32 (the spec's rules), raises ``ValueError``.
 """
@@ -30,7 +33,14 @@ from __future__ import annotations
 import numpy as np
 
 from .bitpack import pack, unpack_groups
-from .varint import encode_uvarint, read_uvarint, zigzag_decode, zigzag_encode
+from .varint import (
+    encode_uvarint,
+    put_uvarints,
+    read_uvarint,
+    uvarint_sizes,
+    zigzag_decode,
+    zigzag_encode,
+)
 
 BLOCK = 128
 MINIBLOCKS = 4
@@ -39,89 +49,93 @@ MINI = BLOCK // MINIBLOCKS  # 32
 _POWERS64 = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
 
+_HEAD = encode_uvarint(BLOCK) + encode_uvarint(MINIBLOCKS)
+_INT64_MAX = np.iinfo(np.int64).max
+
+
 def encode_delta(values: np.ndarray) -> bytes:
     """Encode an int32/int64 array. Returns the full page body."""
-    v = np.asarray(values)
-    if v.dtype not in (np.dtype(np.int32), np.dtype(np.int64)):
-        raise TypeError(f"delta codec expects int32/int64, got {v.dtype}")
-    n = len(v)
-    out = bytearray()
-    out += encode_uvarint(BLOCK)
-    out += encode_uvarint(MINIBLOCKS)
-    out += encode_uvarint(n)
-    if n == 0:
-        return bytes(out)
-    v64 = v.astype(np.int64, copy=False)
-    first = int(v64[0])
-    out += encode_uvarint(zigzag_encode(first))
-    if n == 1:
-        return bytes(out)
+    return encode_delta_many([values])[0]
 
-    with np.errstate(over="ignore"):
-        deltas = np.subtract(v64[1:], v64[:-1], dtype=np.int64)  # modular wrap ok
-    nd = len(deltas)
-    nblocks = (nd + BLOCK - 1) // BLOCK
-    padded = np.zeros(nblocks * BLOCK, dtype=np.int64)
-    padded[:nd] = deltas
 
+def encode_delta_many(streams) -> list[bytes]:
+    """The body of each int32/int64 array in ``streams`` (the pages of a
+    column chunk), byte for byte what each would get alone. Mirrors
+    DeltaBinaryPackingValuesWriterForLong.writeLong/flushBlockBuffer
+    (/root/reference/.../delta/DeltaBinaryPackingValuesWriterForLong.java).
+
+    The blocks of every stream are laid out one after another in one
+    ``(blocks, 128)`` matrix: one ``min``, one subtraction, one width
+    search and one bit-packing call per distinct width serve the whole
+    chunk, and one output buffer holds every block. Python touches each
+    stream only for its header, its deltas (one subtraction into its rows)
+    and its output slice."""
+    arrays = []
+    for values in streams:
+        v = np.asarray(values)
+        if v.dtype not in (np.dtype(np.int32), np.dtype(np.int64)):
+            raise TypeError(f"delta codec expects int32/int64, got {v.dtype}")
+        arrays.append(v)
+    heads, spans, nblocks = [], [], 0  # spans: (stream, first block, deltas)
+    for k, v in enumerate(arrays):
+        n = len(v)
+        head = _HEAD + encode_uvarint(n)
+        if n:
+            head += encode_uvarint(zigzag_encode(int(v[0])))
+        heads.append(head)
+        if n > 1:
+            spans.append((k, nblocks, n - 1))
+            nblocks += -(-(n - 1) // BLOCK)
+    if not spans:
+        return heads
+    padded = np.empty(nblocks * BLOCK, dtype=np.int64)
+    for k, b0, nd in spans:
+        v = arrays[k]
+        np.subtract(v[1:], v[:-1], out=padded[b0 * BLOCK : b0 * BLOCK + nd], dtype=np.int64)
     blocks = padded.reshape(nblocks, BLOCK)
-    # per-block minDelta over REAL deltas only (pad values must not win the
-    # min). Only the LAST block can hold pad slots: full blocks take a plain
-    # row min, the last block's min is computed over its real slice alone —
-    # no O(n) index mask / where passes.
+    # only the last block of a stream holds pad slots: they must not win its
+    # minDelta (filled with the int64 maximum), and they pack as 0
+    ends = np.array([b0 * BLOCK + nd for _, b0, nd in spans], dtype=np.int64)
+    last = (ends - 1) // BLOCK
+    pad = np.arange(BLOCK) >= (ends - last * BLOCK)[:, None]
+    keep = pad[:, -1]
+    last, pad = last[keep], pad[keep]
+    if len(last):
+        rows = blocks[last]
+        rows[pad] = _INT64_MAX
+        blocks[last] = rows
     min_delta = blocks.min(axis=1)
-    last_start = (nblocks - 1) * BLOCK
-    if nd < nblocks * BLOCK:
-        min_delta[-1] = deltas[last_start:].min()
-    with np.errstate(over="ignore"):
-        adj = np.subtract(blocks, min_delta[:, None], dtype=np.int64)
-    flat = adj.reshape(-1)
-    flat[nd:] = 0  # pad slots pack as 0
-    adj = adj.view(np.uint64)
+    adj = np.subtract(blocks, min_delta[:, None], dtype=np.int64)  # modular wrap ok
+    if len(last):
+        rows = adj[last]
+        rows[pad] = 0
+        adj[last] = rows
+    flat_minis = adj.view(np.uint64).reshape(-1, MINI)
+    # width per miniblock = bit_length of its max — exact via searchsorted
+    # against the 64 powers of two (float log2 would be inexact past 2^53);
+    # a miniblock past the data holds only pad slots, so its width is 0
+    flat_widths = np.searchsorted(_POWERS64, flat_minis.max(axis=1), side="right")
+    widths = flat_widths.reshape(nblocks, MINIBLOCKS)
 
-    minis = adj.reshape(nblocks, MINIBLOCKS, MINI)
-    # width per miniblock = bit_length of max value — exact via searchsorted
-    # against the 64 powers of two (float log2 would be inexact past 2^53)
-    maxes = minis.max(axis=2)
-    powers = _POWERS64
-    widths = np.searchsorted(powers, maxes.reshape(-1), side="right").reshape(
-        nblocks, MINIBLOCKS
-    ).astype(np.int64)
-    # miniblocks fully past the data: width 0 (first index past the data
-    # rounds up to a miniblock boundary; all later miniblocks carry no body)
-    first_past = (nd + MINI - 1) // MINI
-    widths.reshape(-1)[first_past:] = 0
-
-    # ---- fully vectorized output assembly (byte-identical layout): per-block
-    # varint(zigzag(minDelta)) + width bytes + per-width packed payloads are
-    # scattered into one output buffer — no per-block Python byte shuffling
-    flat_minis = minis.reshape(-1, MINI)
-    flat_widths = widths.reshape(-1)
-    pl = flat_widths * MINI // 8  # payload bytes per miniblock (width 0 -> 0)
-    with np.errstate(over="ignore"):
-        zz = ((min_delta << np.int64(1)) ^ (min_delta >> np.int64(63))).view(np.uint64)
-    nbits = np.searchsorted(powers, zz, side="right")
-    vlen = np.maximum(1, (nbits + 6) // 7).astype(np.int64)
-    vmax = int(vlen.max())
+    # ---- output assembly: per-block varint(zigzag(minDelta)) + width bytes
+    # + per-width packed payloads are scattered into one output buffer, every
+    # stream's blocks one after another
+    pl = flat_widths * (MINI // 8)  # payload bytes per miniblock (width 0 -> 0)
+    zz = ((min_delta << np.int64(1)) ^ (min_delta >> np.int64(63))).view(np.uint64)
+    vlen = uvarint_sizes(zz)
     blk_pl = pl.reshape(nblocks, MINIBLOCKS)
     blk_total = vlen + MINIBLOCKS + blk_pl.sum(axis=1)
-    blk_off = np.zeros(nblocks, dtype=np.int64)
-    np.cumsum(blk_total[:-1], out=blk_off[1:])
-    body = np.zeros(int(blk_total.sum()), dtype=np.uint8)
-    for j in range(vmax):
-        rows = np.flatnonzero(vlen > j)
-        byte = ((zz[rows] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (vlen[rows] > j + 1).astype(np.uint8) << 7
-        body[blk_off[rows] + j] = byte | cont
-    wmat = widths.astype(np.uint8)
-    for m in range(MINIBLOCKS):
-        body[blk_off + vlen + m] = wmat[:, m]
+    blk_off = np.zeros(nblocks + 1, dtype=np.int64)
+    np.cumsum(blk_total, out=blk_off[1:])
+    body = np.empty(int(blk_off[-1]), dtype=np.uint8)
+    blk_off = blk_off[:-1]
+    put_uvarints(body, blk_off, zz, vlen)
+    wstart = blk_off + vlen
+    body[wstart[:, None] + np.arange(MINIBLOCKS)] = widths
     wcum = np.zeros((nblocks, MINIBLOCKS), dtype=np.int64)
     np.cumsum(blk_pl[:, :-1], axis=1, out=wcum[:, 1:])
-    mini_off = (blk_off + vlen + MINIBLOCKS)[:, None] + wcum
-    mini_off = mini_off.reshape(-1)
-    for w in np.unique(flat_widths):
-        w = int(w)
+    mini_off = ((wstart + MINIBLOCKS)[:, None] + wcum).reshape(-1)
+    for w in np.unique(flat_widths).tolist():
         if w == 0:
             continue
         idx = np.flatnonzero(flat_widths == w)
@@ -129,7 +143,10 @@ def encode_delta(values: np.ndarray) -> bytes:
         per = MINI * w // 8
         dst = mini_off[idx][:, None] + np.arange(per, dtype=np.int64)
         body[dst.reshape(-1)] = blob
-    return bytes(out) + body.tobytes()
+    cuts = blk_off.tolist() + [len(body)]
+    for k, b0, nd in spans:
+        heads[k] += body[cuts[b0] : cuts[b0 - (-nd // BLOCK)]].tobytes()
+    return heads
 
 
 def decode_delta(buf, dtype=np.int64, return_consumed: bool = False):

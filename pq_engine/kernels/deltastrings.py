@@ -18,30 +18,28 @@ correctness; foreign writers' uncapped prefixes decode fine).
 One layout: ``encode_dlba``/``encode_dba`` write the parquet-spec page
 bodies (each DELTA_BINARY_PACKED head is self-delimiting, so nothing frames
 it), and the engine's page blobs hold exactly these bodies — ``pq
-to-parquet`` copies them into parquet pages as they are.
+to-parquet`` copies them into parquet pages as they are. The engine's page
+pass (``pages.encode_runs``) builds the same bodies for all the pages of a
+chunk at once: ``dba_streams`` splits the chunk's values at its page starts,
+and every page's heads go through one ``encode_delta_many`` call.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .delta import decode_delta, decode_delta_many, encode_delta
+from .delta import decode_delta, decode_delta_many, encode_delta, encode_delta_many
 from .ragged import RaggedBytes, padded_words
 
 PREFIX_CAP = 256  # longest shared prefix we exploit; avoids huge (n, maxlen) matrices
 
 
-def _dlba_pieces(col: RaggedBytes) -> tuple:
-    """(DELTA head of the lengths, raw data). The encoders join the pieces
-    once: join reads the numpy buffer directly — one copy of the data, not
-    two."""
-    return encode_delta(col.lengths.astype(np.int32)), col.data.data
-
-
 def encode_dlba(col: RaggedBytes) -> bytes:
     """parquet DELTA_LENGTH_BYTE_ARRAY page body (self-describing: no
-    length prefix in front of the lengths stream)."""
-    return b"".join(_dlba_pieces(col))
+    length prefix in front of the lengths stream). ``join`` reads the numpy
+    buffer directly — one copy of the data, not two."""
+    data = col.data[int(col.offsets[0]) : int(col.offsets[-1])]
+    return b"".join((encode_delta(col.lengths), data))
 
 
 def decode_dlba(buf, count: int) -> RaggedBytes:
@@ -99,25 +97,42 @@ def shared_prefix_lengths(col: RaggedBytes, cap: int = PREFIX_CAP) -> np.ndarray
     return out
 
 
-def _dba_pieces(col: RaggedBytes) -> tuple:
-    """(DELTA head of the prefix lengths, *DLBA pieces of the suffixes)."""
-    prefixes = shared_prefix_lengths(col)
-    suf_lens = col.lengths - prefixes
-    # suffix bytes: for value i, bytes [offsets[i]+prefix[i], offsets[i+1])
-    suf_off = np.zeros(len(col) + 1, dtype=np.int64)
-    np.cumsum(suf_lens, out=suf_off[1:])
-    total = int(suf_off[-1])
-    gather = np.repeat(col.offsets[:-1] + prefixes - suf_off[:-1], suf_lens) + np.arange(
-        total, dtype=np.int64
-    )
-    suffixes = RaggedBytes(suf_off, col.data[gather])
-    return (encode_delta(prefixes.astype(np.int32)), *_dlba_pieces(suffixes))
+PREFIX_WINDOW = 1 << 14  # values per shared_prefix_lengths call in dba_streams
+
+
+def dba_streams(col: RaggedBytes, firsts=(0,)) -> tuple[np.ndarray, RaggedBytes]:
+    """(shared-prefix lengths, suffixes) of the values of ``col``, as
+    DELTA_BYTE_ARRAY stores them: each value against the one before it,
+    except the values at ``firsts`` (the first value of each page), whose
+    prefix is 0. The prefixes are found ``PREFIX_WINDOW`` values at a time,
+    so the word matrices follow the window, not the chunk; the suffix bytes
+    are the bytes no prefix covers, picked by one mask over the data."""
+    n = len(col)
+    prefixes = np.empty(n, dtype=np.int64)
+    for a in range(0, n, PREFIX_WINDOW):
+        lo, b = max(a - 1, 0), min(a + PREFIX_WINDOW, n)
+        prefixes[a:b] = shared_prefix_lengths(RaggedBytes(col.offsets[lo : b + 1], col.data))[a - lo :]
+    prefixes[[f for f in firsts if f < n]] = 0
+    suf_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(col.lengths - prefixes, out=suf_off[1:])
+    o0 = int(col.offsets[0])
+    data = col.data[o0 : int(col.offsets[-1])]
+    # -1 where a prefix starts, +1 where it ends: the running sum is -1
+    # inside a prefix (prefixes never overlap, and their starts and their
+    # ends are each distinct)
+    starts = col.offsets[:-1][prefixes > 0] - o0
+    edges = np.zeros(len(data) + 1, dtype=np.int8)
+    edges[starts] = -1
+    edges[starts + prefixes[prefixes > 0]] += 1
+    suffix = np.cumsum(edges[:-1], dtype=np.int8) == 0
+    return prefixes, RaggedBytes(suf_off, data[suffix])
 
 
 def encode_dba(col: RaggedBytes) -> bytes:
     """parquet DELTA_BYTE_ARRAY page body: prefix lengths, then a
     DELTA_LENGTH_BYTE_ARRAY body of the suffixes."""
-    return b"".join(_dba_pieces(col))
+    prefixes, suffixes = dba_streams(col)
+    return b"".join((*encode_delta_many([prefixes, suffixes.lengths]), suffixes.data))
 
 
 def decode_dba(buf, count: int) -> RaggedBytes:

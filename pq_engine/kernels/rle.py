@@ -22,11 +22,13 @@ from vectorized run boundaries):
   buffering 8-value groups);
 * only the final group of the final run is zero-padded (:255-273).
 
-Run detection is ``np.flatnonzero(np.diff(values))`` — the Python loop below
-iterates over *runs*, never values. The decoder likewise walks only the run
-headers in Python; one gather unpacks every bit-packed group of the stream
-(the width is constant within a stream) and one ``np.repeat`` fills the RLE
-runs.
+The encoder takes all the streams of one width in a column chunk at once
+(``encode_hybrid_many``): run detection is one comparison of neighbours over
+every stream, the Python loop iterates over the *runs of 8 or more*, never
+values, and one ``pack`` call and one output buffer serve every stream. The
+decoder likewise walks only the run headers in Python; one gather unpacks
+every bit-packed group of every stream (the width is constant within a
+stream) and one ``np.repeat`` fills the RLE runs.
 """
 
 from __future__ import annotations
@@ -34,74 +36,113 @@ from __future__ import annotations
 import numpy as np
 
 from .bitpack import pack, unpack_groups, width_for_max
-from .varint import encode_uvarint, read_uvarint
+from .varint import encode_uvarint, put_uvarints, read_uvarint, uvarint_sizes
 
 _MAX_GROUPS_PER_RUN = 63  # 504 values (RunLengthBitPackingHybridEncoder.java:60-66)
 
 
-def _emit_rle(value: int, count: int, width: int, out: bytearray) -> None:
-    out += encode_uvarint(count << 1)
-    out += int(value).to_bytes((width + 7) // 8, "little")
-
-
-def _emit_packed(values: np.ndarray, width: int, out: bytearray, *, final: bool) -> None:
-    """Emit bit-packed run(s) for ``values``. If not ``final`` the length must be
-    a multiple of 8; if final the last group is zero-padded."""
-    n = len(values)
-    if n == 0:
-        return
-    if n % 8:
-        if not final:
-            raise AssertionError("mid-stream packed span not group-aligned")
-        padded = np.zeros(n + (-n) % 8, dtype=np.uint64)
-        padded[:n] = values
-        values = padded
-        n = len(values)
-    # ONE pack call for the whole span, sliced per <=63-group run: runs split
-    # at 8-value group boundaries, which are byte boundaries in the packed
-    # stream (8 values * width bits = width bytes), so slices of the span's
-    # packed bytes are identical to per-run pack() output
-    groups = n // 8
-    blob = pack(values, width)
-    start = 0
-    while groups > 0:
-        g = min(groups, _MAX_GROUPS_PER_RUN)
-        out += encode_uvarint((g << 1) | 1)
-        out += blob[start : start + g * width]
-        start += g * width
-        groups -= g
-    return
-
-
 def encode_hybrid(values: np.ndarray, width: int) -> bytes:
     """Encode non-negative ints (< 2**width) into the hybrid grammar."""
-    n = len(values)
-    out = bytearray()
-    if n == 0:
-        return bytes(out)
-    v = np.ascontiguousarray(values, dtype=np.uint64)
+    return encode_hybrid_many([values], width)[0]
+
+
+def encode_hybrid_many(streams, width: int) -> list[bytes]:
+    """The hybrid stream of each array of non-negative ints (< 2**width) in
+    ``streams`` (the level or id streams of a column chunk's pages), byte
+    for byte what each would get alone.
+
+    Runs are found for all streams at once (a value change or a stream
+    start opens one); the Python loop then walks only the runs of 8 or more
+    to place the rle-runs (the borrow of the policy above makes each choice
+    depend on the one before). Every bit-packed value of every stream is
+    packed by one :func:`pack` call, and the run headers, RLE values and
+    packed payloads are scattered into one output buffer."""
+    arrays = [np.ascontiguousarray(v, dtype=np.uint64) for v in streams]
+    ns = [len(v) for v in arrays]
     if width == 0:
         # single value 0 repeated n times: one rle-run, zero-byte value
-        out += encode_uvarint(n << 1)
-        return bytes(out)
+        return [encode_uvarint(n << 1) if n else b"" for n in ns]
+    total = sum(ns)
+    if total == 0:
+        return [b""] * len(arrays)
+    v = arrays[0] if len(arrays) == 1 else np.concatenate(arrays)
+    ends = np.cumsum(ns)
+    opens = np.empty(total, dtype=bool)
+    opens[0] = True
+    np.not_equal(v[1:], v[:-1], out=opens[1:])
+    opens[(ends - ns)[np.array(ns) > 0]] = True
+    run_start = np.flatnonzero(opens)
+    run_len = np.diff(run_start, append=total)
+    long = run_len >= 8
 
-    change = np.flatnonzero(v[1:] != v[:-1]) + 1
-    starts = np.concatenate(([0], change)).astype(np.int64)
-    ends = np.concatenate((change, [n])).astype(np.int64)
-    lengths = ends - starts
-
-    seg_start = 0  # start of the pending bit-packed span
-    for idx in np.flatnonzero(lengths >= 8):
-        s = int(starts[idx])
-        run_len = int(lengths[idx])
-        borrow = (-(s - seg_start)) % 8
-        if run_len - borrow < 8:
+    # segments in stream order: (first value, values, 1 for an rle-run);
+    # seg_end[k] counts the segments of streams 0..k
+    segs, seg_end = [], []
+    ends = ends.tolist()
+    k = seg_start = 0
+    for s, n in zip(run_start[long].tolist(), run_len[long].tolist()):
+        while s >= ends[k]:  # the runs of stream k are done: its final span
+            if ends[k] > seg_start:
+                segs.append((seg_start, ends[k] - seg_start, 0))
+            seg_end.append(len(segs))
+            seg_start = ends[k]
+            k += 1
+        borrow = (seg_start - s) % 8
+        if n - borrow < 8:
             continue  # too short after alignment borrow — absorb into packed span
-        _emit_packed(v[seg_start : s + borrow], width, out, final=False)
-        _emit_rle(int(v[s]), run_len - borrow, width, out)
-        seg_start = s + run_len
-    _emit_packed(v[seg_start:], width, out, final=True)
-    return bytes(out)
+        if s + borrow > seg_start:
+            segs.append((seg_start, s + borrow - seg_start, 0))
+        segs.append((s + borrow, n - borrow, 1))
+        seg_start = s + n
+    for end in ends[k:]:
+        if end > seg_start:
+            segs.append((seg_start, end - seg_start, 0))
+        seg_end.append(len(segs))
+        seg_start = end
+    pos, count, is_rle = np.array(segs, dtype=np.int64).T
+    is_rle = is_rle.astype(bool)
+
+    # bit-packed spans: every group of 8 (a span's last group zero-padded)
+    # packed at once; runs split the span every 63 groups
+    groups = np.where(is_rle, 0, -(-count // 8))
+    pieces = np.where(is_rle, 1, -(-groups // _MAX_GROUPS_PER_RUN))
+    packed = ~is_rle
+    p_pos, p_len, p_groups = pos[packed], count[packed], groups[packed]
+    if len(p_pos) == 1 and p_len[0] % 8 == 0:
+        payload = v[p_pos[0] : p_pos[0] + p_len[0]]
+    else:
+        p_first = np.cumsum(p_groups) * 8 - p_groups * 8
+        payload = np.zeros(int(p_groups.sum()) * 8, dtype=np.uint64)
+        real = np.arange(int(p_len.sum())) + np.repeat(p_first - (np.cumsum(p_len) - p_len), p_len)
+        payload[real] = v[real + np.repeat(p_pos - p_first, p_len)]
+    blob = np.frombuffer(pack(payload, width), dtype=np.uint8)
+
+    # one piece per rle-run and per bit-packed run of at most 63 groups
+    seg = np.repeat(np.arange(len(pos)), pieces)
+    nth = np.arange(len(seg)) - np.repeat(np.cumsum(pieces) - pieces, pieces)
+    rle_piece = is_rle[seg]
+    run_groups = np.minimum(groups[seg] - nth * _MAX_GROUPS_PER_RUN, _MAX_GROUPS_PER_RUN)
+    header = np.where(rle_piece, count[seg] << 1, (run_groups << 1) | 1).astype(np.uint64)
+    vlen = uvarint_sizes(header)
+    byte_w = (width + 7) // 8
+    plen = np.where(rle_piece, byte_w, run_groups * width)
+    off = np.zeros(len(seg) + 1, dtype=np.int64)
+    np.cumsum(vlen + plen, out=off[1:])
+    out = np.empty(int(off[-1]), dtype=np.uint8)
+    put_uvarints(out, off[:-1], header, vlen)
+    value_at = off[:-1] + vlen
+    rows = np.flatnonzero(rle_piece)
+    value = v[pos[seg[rows]]]
+    for j in range(byte_w):
+        out[value_at[rows] + j] = (value >> np.uint64(8 * j)) & np.uint64(0xFF)
+    rows = np.flatnonzero(~rle_piece)
+    p_plen = plen[rows]
+    out[np.repeat(value_at[rows] - (np.cumsum(p_plen) - p_plen), p_plen)
+        + np.arange(len(blob))] = blob
+    piece_end = np.zeros(len(pieces) + 1, dtype=np.int64)
+    np.cumsum(pieces, out=piece_end[1:])
+    cuts = [0] + off[piece_end[seg_end]].tolist()
+    return [out[a:b].tobytes() for a, b in zip(cuts, cuts[1:])]
 
 
 def decode_hybrid(buf, width: int, count: int) -> np.ndarray:
@@ -196,7 +237,9 @@ def decode_bool_rle(buf, count: int) -> np.ndarray:
 
 __all__ = [
     "encode_hybrid",
+    "encode_hybrid_many",
     "decode_hybrid",
+    "decode_hybrid_many",
     "encode_hybrid_length_prefixed",
     "decode_hybrid_length_prefixed",
     "encode_bool_rle",

@@ -2,10 +2,16 @@
 
 Reference semantics: /root/reference/parquet-common/src/main/java/org/apache/parquet/
 bytes/BytesUtils.java:226 (writeUnsignedVarInt) and :242-243 (zigzag).
-Headers are one-per-run / one-per-block, so scalar Python here is not a hot path.
+The encoders write the headers of every run or block of a column chunk at
+once (:func:`uvarint_sizes`, :func:`put_uvarints`); the decoders read them
+one at a time (:func:`read_uvarint`).
 """
 
 from __future__ import annotations
+
+import numpy as np
+
+_POWERS64 = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
 
 def encode_uvarint(value: int) -> bytes:
@@ -48,3 +54,20 @@ def zigzag_encode(v: int) -> int:
 
 def zigzag_decode(u: int) -> int:
     return (u >> 1) ^ -(u & 1)
+
+
+def uvarint_sizes(values: np.ndarray) -> np.ndarray:
+    """Bytes of the ULEB128 of each uint64 in ``values`` (1 for 0), found
+    by a search against the powers of two: float log2 is inexact past 2^53."""
+    return np.maximum(1, (np.searchsorted(_POWERS64, values, side="right") + 6) // 7)
+
+
+def put_uvarints(out: np.ndarray, at: np.ndarray, values: np.ndarray, sizes: np.ndarray) -> None:
+    """Write the ULEB128 of each uint64 ``values[i]`` (``sizes[i]`` bytes,
+    from :func:`uvarint_sizes`) into the uint8 array ``out`` at ``at[i]``,
+    all of them in one scatter."""
+    lanes = np.arange(int(sizes.max(initial=0)))
+    groups = (values[:, None] >> (lanes * 7).astype(np.uint64)) & np.uint64(0x7F)
+    groups |= (lanes < sizes[:, None] - 1).astype(np.uint64) << np.uint64(7)
+    inside = lanes < sizes[:, None]
+    out[(at[:, None] + lanes)[inside]] = groups[inside]

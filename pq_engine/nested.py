@@ -112,24 +112,31 @@ def encode_list_column(
     """Page-slice and encode a LIST column. Blob layout per page:
     [flag=2][u32 rep_len][rep RLE w2][u32 def_len][def RLE w2][value body],
     levels uncompressed (V2 framing), value body compressed."""
-    from .kernels import dictionary
+    from .kernels import dictionary, fsst
     from .pages import (
         DICT_PAGE,
+        RAGGED_TYPES,
         _dict_fallback_codec,
-        _encode_values,
+        _page_stats,
         _plain_size,
+        _sizestats_row,
+        _slice_values,
         encode_dict_chunk_page,
+        encode_runs,
         kernel_ptype,
     )
-    from .stats import DICT_PAGE_SIZE_THRESHOLD, choose_codec, numeric_stats, ragged_stats
+    from .stats import (
+        DICT_PAGE_SIZE_THRESHOLD,
+        choose_codec,
+        fixed_stats,
+        numeric_stats,
+        ragged_stats,
+    )
 
     cp = child_ptype(ptype)
     kp = kernel_ptype(cp)
     n = len(col)
     if codec == "auto":
-        from .pages import RAGGED_TYPES
-        from .stats import fixed_stats
-
         if kp in RAGGED_TYPES:
             st = ragged_stats(col.child_values, text_metrics=page_compression is None)
         elif kp.startswith("fixed["):
@@ -146,8 +153,6 @@ def encode_list_column(
     # 1 MiB dict-size fallback rail as the flat path.
     chunk_codes = chunk_uniques = None
     if codec == "dict":
-        from .pages import RAGGED_TYPES
-
         if kp == "bool":
             codec = "rle"
         elif kp in RAGGED_TYPES:
@@ -166,12 +171,9 @@ def encode_list_column(
 
     lens = col.lengths
     # chunk-level FSST symbol table for list children (see pages.py)
-    from .pages import RAGGED_TYPES as _RT0
-    from .kernels import fsst as _fsst
-
     fsst_table = (
-        _fsst.build_table(col.child_values)
-        if codec == "fsst" and kp in _RT0 and len(col.child_values)
+        fsst.build_table(col.child_values)
+        if codec == "fsst" and kp in RAGGED_TYPES and len(col.child_values)
         else None
     )
     # value index (non-null element count) at each element position
@@ -201,55 +203,47 @@ def encode_list_column(
                 blob,
             )
         )
-    from .pages import RAGGED_TYPES as _RT, _sizestats_row
-
+    # the chunk's levels, and every page's levels and value body in one pass
+    rep, dfl = build_levels(lens, col.list_validity, col.child_validity)
+    e_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.maximum(lens, 1), out=e_off[1:])
+    rows = list(range(0, n, page_rows)) + [n] if n else []
+    ebounds = e_off[rows].tolist()
+    vbounds = col.offsets[rows] if col.child_validity is None else vcum[col.offsets[rows]]
+    vbounds = vbounds.tolist()
+    levels = [(lv, 2) for a, b in zip(ebounds, ebounds[1:]) for lv in (rep[a:b], dfl[a:b])]
+    bodies, level_streams = encode_runs(
+        codec, cp, col.child_values if chunk_codes is None else chunk_codes, vbounds, levels,
+        0 if chunk_uniques is None else len(chunk_uniques), fsst_table)
     page_sizestats = []  # per-page SizeStatistics (PARQUET-2261 page lists)
-    for pi, r0 in enumerate(range(0, max(n, 1), page_rows)):
-        r1 = min(r0 + page_rows, n)
-        if r1 <= r0:
-            break
+    for pi, body in enumerate(bodies):
+        r0, r1 = rows[pi], rows[pi + 1]
         plens = lens[r0:r1]
         lv = None if col.list_validity is None else col.list_validity[r0:r1]
         e0, e1 = int(col.offsets[r0]), int(col.offsets[r1])
         cv = None if col.child_validity is None else col.child_validity[e0:e1]
-        if col.child_validity is None:
-            v0, v1 = e0, e1
-        else:
-            v0, v1 = int(vcum[e0]), int(vcum[e1])
-        vals = _slice_child(col.child_values, cp, v0, v1)
-        rep, dfl = build_levels(plens, lv, cv)
-        rep_b = rle.encode_hybrid_length_prefixed(rep, 2)
-        def_b = rle.encode_hybrid_length_prefixed(dfl, 2)
-        if chunk_codes is not None:
-            body = dictionary.encode_dict_data_page(
-                chunk_codes[v0:v1], max(len(chunk_uniques) - 1, 0)
-            )
-        else:
-            body = _encode_values(codec, cp, vals, fsst_table)
+        vals = _slice_values(col.child_values, cp, vbounds[pi], vbounds[pi + 1])
         body = pagecomp.compress(body, page_compression)
-        blob = (
-            bytes([2])
-            + len(rep).to_bytes(4, "little")
-            + rep_b
-            + def_b
-            + body
-        )
+        blob = b"".join((
+            b"\x02",
+            (ebounds[pi + 1] - ebounds[pi]).to_bytes(4, "little"),
+            *(len(lvl).to_bytes(4, "little") + lvl for lvl in level_streams[2 * pi : 2 * pi + 2]),
+            body,
+        ))
         # ELEMENT-level min/max/ndv (stats over the page's non-null child
         # values — ColumnIndex semantics for repeated fields: stats are over
         # values, not records), enabling contains(eq) pushdown on list
         # columns; null_count stays the LIST null count (def-level 0)
-        from .pages import _page_stats
-
         est = _page_stats(cp, vals, 0)
         p_null_lists = int((~lv).sum()) if lv is not None else 0
         p_empty = int((plens == 0).sum()) - p_null_lists
         p_null_elems = int((~cv).sum()) if cv is not None else 0
-        p_elems = int(plens.sum())
-        p_entries = int(np.maximum(plens, 1).sum())
+        p_elems = e1 - e0
+        p_entries = ebounds[pi + 1] - ebounds[pi]
         page_sizestats.append(
             {
                 "page": pi,
-                "unencoded_bytes": int(len(vals.data)) if kp in _RT else None,
+                "unencoded_bytes": int(len(vals.data)) if kp in RAGGED_TYPES else None,
                 "rep_hist": [r1 - r0, p_entries - (r1 - r0)],
                 "def_hist": [p_null_lists, p_empty, p_null_elems,
                              p_elems - p_null_elems],
@@ -261,7 +255,7 @@ def encode_list_column(
             "ptype": ptype,
             "first_row": r0,
             "n_rows": r1 - r0,
-            "null_count": int((~lv).sum()) if lv is not None else 0,
+            "null_count": p_null_lists,
             "raw_bytes": _plain_size(cp, vals) + 4 * (r1 - r0),
             "encoded_bytes": len(blob),
             "crc32": zlib.crc32(blob) & 0xFFFFFFFF,
@@ -287,7 +281,7 @@ def encode_list_column(
         _sizestats_row(
             ptype,
             unencoded=(
-                int(len(col.child_values.data)) if kp in _RT else None
+                int(len(col.child_values.data)) if kp in RAGGED_TYPES else None
             ),
             rep_hist=[n, entries - n],
             def_hist=[null_lists, empty_lists, null_elems, elem_total - null_elems],
@@ -295,18 +289,6 @@ def encode_list_column(
         )
     )
     return out
-
-
-def _slice_child(values, cp: str, v0: int, v1: int):
-    from .kernels.ragged import RaggedBytes
-    from .pages import RAGGED_TYPES, kernel_ptype
-
-    if kernel_ptype(cp) in RAGGED_TYPES:
-        return RaggedBytes(
-            values.offsets[v0 : v1 + 1] - values.offsets[v0],
-            values.data[values.offsets[v0] : values.offsets[v1]],
-        )
-    return values[v0:v1]
 
 
 def decode_list_pages(

@@ -25,11 +25,17 @@ ColumnIndexBuilder stats) onto vectorized slices of an Arrow batch:
 * the PLAIN safety rail (FallbackValuesWriter.isCompressionSatisfying
   :81-92): any codec output >= the PLAIN encoding of the same values is
   discarded for PLAIN.
-* ``decode_runs`` is the one place a codec meets its value kernel (one
-  ValuesReader per encoding, Encoding.java:62-256): ``decode_column``,
-  ``nested.decode_list_pages`` and the interop reader's flat and repeated
-  page walkers all hand it a chunk's ``(codec, body, count)`` list, and
-  the flat walkers share ``page_levels``.
+* ``encode_runs`` and ``decode_runs`` are the one place a codec meets its
+  value kernel (one ValuesWriter/ValuesReader per encoding,
+  Encoding.java:62-256). ``encode_column`` and ``nested.encode_list_column``
+  hand ``encode_runs`` a chunk's values, page bounds and level streams; it
+  returns every page's value body and level stream in one pass (the DELTA
+  streams of all pages in one ``encode_delta_many`` call, the hybrid
+  streams in one ``encode_hybrid_many`` call per bit width), and the page
+  loops keep only the PLAIN rail, compression, CRC, stats and metadata.
+  ``decode_column``, ``nested.decode_list_pages`` and the interop reader's
+  flat and repeated page walkers all hand ``decode_runs`` a chunk's
+  ``(codec, body, count)`` list, and the flat walkers share ``page_levels``.
 """
 
 from __future__ import annotations
@@ -40,6 +46,7 @@ import numpy as np
 
 from . import compression as pagecomp
 from .kernels import bytestream, delta, deltastrings, dictionary, fsst, plain, rle
+from .kernels.bitpack import width_for_max
 from .kernels.ragged import RaggedBytes
 from .stats import DICT_PAGE_SIZE_THRESHOLD, choose_codec, numeric_stats, ragged_stats
 
@@ -169,6 +176,66 @@ def _decode_values(codec: str, ptype: str, buf, count: int):
         if codec == "dba":
             return _ragged_to_fixed(deltastrings.decode_dba(buf, count), k)
     raise ValueError(f"codec {codec!r} unsupported for ptype {ptype!r}")
+
+
+def encode_runs(codec: str, ptype: str, values, bounds, levels=(), n_dict: int = 0,
+                fsst_table=None) -> tuple[list, list]:
+    """(value body of each data page, each level stream) of a column
+    chunk: the twin of :func:`decode_runs`, the one place a codec meets its
+    value kernel on the write side. ``values`` are the chunk's non-null
+    values in kernel form, or for ``dict`` its dictionary ids into
+    ``n_dict`` uniques; page i holds ``values[bounds[i]:bounds[i+1]]``.
+    ``levels`` holds ``(levels, bit width)`` streams, each returned as its
+    RLE/bit-packed hybrid.
+
+    Every DELTA stream of the chunk (``delta`` values, ``dlba`` lengths,
+    ``dba`` prefixes and suffix lengths) is encoded by one
+    ``delta.encode_delta_many`` call, and every hybrid stream (levels,
+    ``dict`` ids, ``rle`` booleans) by one ``rle.encode_hybrid_many`` call
+    per bit width; the other codecs encode each page's slice."""
+    kp = kernel_ptype(ptype)
+    pages = list(zip(bounds[:-1], bounds[1:]))
+    hybrid: dict[int, list] = {}  # bit width -> its streams, levels first
+    for stream, width in levels:
+        hybrid.setdefault(width, []).append(stream)
+    deltas, tails = [], []  # DELTA streams; the bytes after them, per page
+    ids = None  # (bit width, dict width byte) of pages of hybrid ids
+    if codec == "dict" or (codec == "rle" and kp == "bool"):
+        width = width_for_max(max(n_dict - 1, 0)) if codec == "dict" else 1
+        ids = width, bytes([width]) if codec == "dict" else b""
+        first = len(hybrid.setdefault(width, []))
+        flat = values.astype(np.uint64)
+        hybrid[width] += [flat[a:b] for a, b in pages]
+    elif codec == "delta" and kp in _NUMERIC and values.dtype.kind == "i":
+        deltas = [values[a:b] for a, b in pages]
+        tails = [b""] * len(pages)
+    elif codec == "dlba" and kp in RAGGED_TYPES:
+        deltas = [values.lengths[a:b] for a, b in pages]
+        o = values.offsets
+        tails = [values.data[o[a] : o[b]] for a, b in pages]
+    elif codec == "dba" and (kp in RAGGED_TYPES or kp.startswith("fixed[")):
+        col = values if kp in RAGGED_TYPES else _fixed_to_ragged(values)
+        prefixes, suffixes = deltastrings.dba_streams(col, bounds[:-1])
+        for a, b in pages:
+            deltas += [prefixes[a:b], suffixes.lengths[a:b]]
+        o = suffixes.offsets
+        tails = [suffixes.data[o[a] : o[b]] for a, b in pages]
+    coded = {w: rle.encode_hybrid_many(streams, w) for w, streams in hybrid.items()}
+    seen = dict.fromkeys(coded, 0)
+    level_streams = []
+    for _, w in levels:
+        level_streams.append(coded[w][seen[w]])
+        seen[w] += 1
+    if ids is not None:
+        width, head = ids
+        return [head + body for body in coded[width][first:]], level_streams
+    if tails:
+        heads = delta.encode_delta_many(deltas)
+        per = len(deltas) // len(tails)  # DELTA streams per page
+        return [b"".join((*heads[i * per : (i + 1) * per], tail))
+                for i, tail in enumerate(tails)], level_streams
+    return [_encode_values(codec, ptype, _slice_values(values, ptype, a, b), fsst_table)
+            for a, b in pages], level_streams
 
 
 # ------------------------------------------------------------ chunk dict
@@ -442,20 +509,25 @@ def encode_column(
         if codec == "fsst" and kp in RAGGED_TYPES and len(values)
         else None
     )
-    vpos = 0  # position in the values (non-null) domain
+    # value bounds of the pages (nulls occupy rows but not values), then
+    # every page's value body and validity stream in one pass
+    if validity is None:
+        vbounds, levels = bounds, ()
+    else:
+        vcum = np.zeros(n_rows + 1, dtype=np.int64)
+        np.cumsum(validity, out=vcum[1:])
+        vbounds = vcum[bounds].tolist()
+        flags = validity.astype(np.uint64)
+        levels = [(flags[r0:r1], 1) for r0, r1 in zip(bounds, bounds[1:])]
+    bodies, level_streams = encode_runs(
+        codec, ptype, values if chunk_codes is None else chunk_codes, vbounds, levels,
+        0 if chunk_uniques is None else len(chunk_uniques), fsst_table)
     page_sizestats = []  # per-page SizeStatistics (PARQUET-2261 page lists)
-    for pi in range(len(bounds) - 1):
+    for pi, body in enumerate(bodies):
         r0, r1 = bounds[pi], bounds[pi + 1]
-        if validity is not None:
-            pv = validity[r0:r1]
-            nnull = int((~pv).sum())
-            v0, v1 = vpos, vpos + (r1 - r0 - nnull)
-        else:
-            pv = None
-            nnull = 0
-            v0, v1 = r0, r1
+        v0, v1 = vbounds[pi], vbounds[pi + 1]
+        nnull = (r1 - r0) - (v1 - v0)
         vals = _slice_values(values, ptype, v0, v1)
-        vpos = v1
         page_sizestats.append(
             {
                 "page": pi,
@@ -464,24 +536,18 @@ def encode_column(
                 "def_hist": [nnull, r1 - r0 - nnull],
             }
         )
-
-        if chunk_codes is not None:
-            body = dictionary.encode_dict_data_page(
-                chunk_codes[v0:v1], max(len(chunk_uniques) - 1, 0)
-            )
-        else:
-            body = _encode_values(codec, ptype, vals, fsst_table)
         page_codec = codec
         plain_sz = _plain_size(kp, vals)
         if codec not in ("plain", "dict") and len(body) >= plain_sz and kp != "bool":
             body = _encode_values("plain", ptype, vals)
             page_codec = "plain"
 
-        header = bytearray([1 if pv is not None else 0])
-        if pv is not None:
-            header += rle.encode_hybrid_length_prefixed(pv.astype(np.uint64), 1)
-        body = pagecomp.compress(body, page_compression)
-        blob = bytes(header) + body
+        if validity is None:
+            header = b"\x00"
+        else:
+            stream = level_streams[pi]
+            header = b"\x01" + len(stream).to_bytes(4, "little") + stream
+        blob = header + pagecomp.compress(body, page_compression)
 
         meta = {
             "page": pi,

@@ -1,11 +1,18 @@
 """The bit-unpacking decoders against scalar decoders written from the
-parquet-format spec.
+parquet-format spec, and the batched encoders against themselves one stream
+at a time.
 
 Streams are built here from the grammar, not by the engine's encoders, so
 they cover what a foreign writer may legally emit: mixed RLE and bit-packed
 runs, a ``count`` shorter than the stream, arbitrary padding bits, DELTA
 widths wider than needed, any block/miniblock geometry, arbitrary width bytes
 on miniblocks past the data, and minDeltas that wrap int64.
+
+The encoders encode a column chunk's streams together
+(``encode_delta_many``, ``encode_hybrid_many``, ``pages.encode_runs``): each
+stream must come out byte for byte as it does alone, decode back through the
+spec references and the ``decode_*_many`` kernels, and each page body as
+the page's own slice would encode.
 """
 
 import numpy as np
@@ -315,3 +322,147 @@ def test_block_geometry_outside_the_spec_raises(block, nmini):
     stream = _delta_header(block, nmini, 3) + b"\x00" * (1 + max(nmini, 1)) + bytes(64)
     with pytest.raises(ValueError):
         delta.decode_delta(stream)
+
+
+# ------------------------------------------------------- batched encoders
+
+EDGE_SIZES = [0, 1, 2, 7, 8, 9, 127, 128, 129, 257, 504, 505, 1100]
+
+
+@st.composite
+def int_arrays(draw):
+    """An int32/int64 array of an edge size: small values, a sorted run,
+    the type's extremes (deltas that wrap) or one constant."""
+    n = draw(st.sampled_from(EDGE_SIZES))
+    dtype = draw(st.sampled_from([np.int32, np.int64]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    kind = draw(st.sampled_from(["small", "sorted", "extreme", "constant"]))
+    info = np.iinfo(dtype)
+    if kind == "small":
+        v = rng.integers(-1000, 1000, n)
+    elif kind == "sorted":
+        v = np.cumsum(rng.integers(0, 1 << 20, n))
+    elif kind == "extreme":
+        v = rng.choice(np.array([info.min, info.max, 0, -1, 1], dtype=np.int64), n)
+    else:
+        v = np.full(n, rng.integers(-5, 5))
+    return v.astype(dtype)
+
+
+def level_array(rng, width: int, n: int, kind: str) -> np.ndarray:
+    """``n`` values below 2**width: random, in runs of 1-20, one constant,
+    or a sparse mask of the largest value."""
+    hi = (1 << width) - 1
+    if kind == "random":
+        return rng.integers(0, hi, n, dtype=np.uint64, endpoint=True)
+    if kind == "runs":
+        vals = rng.integers(0, hi, n // 3 + 1, dtype=np.uint64, endpoint=True)
+        return np.repeat(vals, rng.integers(1, 21, len(vals)))[:n]
+    if kind == "constant":
+        return np.full(n, rng.integers(0, hi, dtype=np.uint64, endpoint=True), np.uint64)
+    return (rng.random(n) < 0.05).astype(np.uint64) * np.uint64(hi)
+
+
+@st.composite
+def level_arrays(draw, width):
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    n = draw(st.sampled_from(EDGE_SIZES))
+    return level_array(rng, width, n, draw(st.sampled_from(["random", "runs", "constant", "sparse"])))
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(int_arrays(), max_size=6))
+def test_encode_delta_many_is_each_stream_in_turn(streams):
+    bodies = delta.encode_delta_many(streams)
+    assert bodies == [delta.encode_delta(s) for s in streams]
+    for s, body in zip(streams, bodies):
+        assert ref_delta(body) == (s.tolist(), len(body))
+    if streams:
+        out, spans = delta.decode_delta_many(bodies)
+        assert out.tolist() == [v for s in streams for v in s.tolist()]
+        assert spans == [(len(s), len(b)) for s, b in zip(streams, bodies)]
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.integers(0, 64).flatmap(
+    lambda w: st.tuples(st.just(w), st.lists(level_arrays(w), max_size=5))))
+def test_encode_hybrid_many_is_each_stream_in_turn(case):
+    width, streams = case
+    bodies = rle.encode_hybrid_many(streams, width)
+    assert bodies == [rle.encode_hybrid(s, width) for s in streams]
+    for s, body in zip(streams, bodies):
+        assert ref_hybrid(body, width, len(s)) == s.tolist()
+    if streams:
+        out = rle.decode_hybrid_many([(b, len(s)) for s, b in zip(streams, bodies)], width)
+        assert out.tolist() == [v for s in streams for v in s.tolist()]
+
+
+@pytest.mark.parametrize("width", range(65))
+def test_encode_hybrid_many_every_width(width):
+    # every width, every edge size and every kind, as one batch and alone
+    rng = np.random.default_rng(width)
+    streams = [level_array(rng, width, n, kind) for n in EDGE_SIZES
+               for kind in ("random", "runs", "constant", "sparse")]
+    bodies = rle.encode_hybrid_many(streams, width)
+    assert bodies == [rle.encode_hybrid_many([s], width)[0] for s in streams]
+    out = rle.decode_hybrid_many([(b, len(s)) for s, b in zip(streams, bodies)], width)
+    assert out.tolist() == [v for s in streams for v in s.tolist()]
+
+
+def test_encode_delta_of_int64_extremes():
+    # deltas of +-(2**64 - 1) wrap, and minDelta is -2**63
+    v = np.array([2**63 - 1, -(2**63)] * 70 + [0, -1, 2**63 - 1], dtype=np.int64)
+    streams = [v, v[:1], v[:0], v[:128], v[:129], v[::-1]]
+    bodies = delta.encode_delta_many(streams)
+    assert bodies == [delta.encode_delta(s) for s in streams]
+    out, _ = delta.decode_delta_many(bodies)
+    np.testing.assert_array_equal(out, np.concatenate(streams))
+
+
+def _runs_cases():
+    from pq_engine.kernels.ragged import RaggedBytes
+
+    rng = np.random.default_rng(15)
+    words = [b"", b"a", b"ab", b"abc", b"https://example.com/", b"https://example.com/a"]
+    strings = RaggedBytes.from_pylist([words[i] + bytes(rng.integers(97, 100, int(k), dtype=np.uint8))
+                                       for i, k in zip(rng.integers(0, 6, 900), rng.integers(0, 9, 900))])
+    return [
+        ("delta", "int64", rng.integers(-(2**62), 2**62, 900)),
+        ("delta", "int32", rng.integers(-1000, 1000, 900).astype(np.int32)),
+        ("delta", "timestamp_us", np.cumsum(rng.integers(0, 10**6, 900))),
+        ("dlba", "string", strings),
+        ("dba", "string", strings),
+        ("dba", "fixed[4]", rng.integers(0, 3, (900, 4), dtype=np.uint8)),
+        ("rle", "bool", rng.random(900) < 0.2),
+        ("plain", "float64", rng.normal(size=900)),
+        ("bss", "float32", rng.normal(size=900).astype(np.float32)),
+        ("plain", "string", strings),
+        ("fsst", "string", strings),
+    ]
+
+
+@pytest.mark.parametrize("codec,ptype,values", _runs_cases(),
+                         ids=[f"{c}-{p}" for c, p, _ in _runs_cases()])
+def test_encode_runs_is_each_page_in_turn(codec, ptype, values):
+    from pq_engine import pages
+
+    # pages of 0, 1, 127, 128 and 129 values, and one of the rest
+    bounds = [0, 0, 1, 128, 256, 385, 385, 900]
+    levels = [((np.arange(b - a) % 3 == 0).astype(np.uint64), 1) for a, b in zip(bounds, bounds[1:])]
+    levels.insert(2, (np.arange(40, dtype=np.uint64) % 4, 2))
+    bodies, streams = pages.encode_runs(codec, ptype, values, bounds, levels)
+    each = [pages._encode_values(codec, ptype, pages._slice_values(values, ptype, a, b))
+            for a, b in zip(bounds, bounds[1:])]
+    assert [bytes(b) for b in bodies] == each
+    assert streams == [rle.encode_hybrid(lv, w) for lv, w in levels]
+
+
+def test_encode_runs_dictionary_ids():
+    from pq_engine import pages
+    from pq_engine.kernels import dictionary
+
+    codes = np.random.default_rng(3).integers(0, 37, 900)
+    bounds = [0, 0, 1, 128, 256, 385, 900]
+    bodies, _ = pages.encode_runs("dict", "string", codes, bounds, n_dict=37)
+    assert bodies == [dictionary.encode_dict_data_page(codes[a:b], 36)
+                      for a, b in zip(bounds, bounds[1:])]

@@ -9,8 +9,10 @@ parquet-format "bit-packed, LSB-first" order used by the RLE/bit-packed hybrid
 bit *j* lands at global bit position ``i*width + j``; within each byte, bit 0
 is the least-significant bit.
 
-Decoding works on groups of 8 values, which take exactly ``width`` bytes.
-For widths up to 57 every value's bits fit in the unaligned little-endian
+Both directions work on groups of 8 values, which take exactly ``width``
+bytes. Encoding builds each group's little-endian 64-bit words with one
+shift-and-or per lane (:func:`pack`), never a bit per byte. Decoding:
+for widths up to 57 every value's bits fit in the unaligned little-endian
 64-bit word that starts at its first byte, so one gather of those words, a
 shift by each lane's bit offset and a mask unpack every group of a stream at
 once (:func:`unpack_groups`; the groups may sit anywhere in the buffer and
@@ -26,7 +28,13 @@ import numpy as np
 def pack(values: np.ndarray, width: int) -> bytes:
     """Bit-pack ``values`` at ``width`` bits each. ``len(values)`` must be a
     multiple of 8 (callers zero-pad the final group, mirroring
-    RunLengthBitPackingHybridEncoder.java:255-273)."""
+    RunLengthBitPackingHybridEncoder.java:255-273).
+
+    A group of 8 values packs into ``width`` bytes, so into ``ceil(width/8)``
+    little-endian 64-bit words: lane j's bits start at group bit ``j*width``,
+    in one word or across two. Eight shift-and-or passes over the groups
+    (one per lane, two where the lane spans words) build every word, and the
+    first ``width`` bytes of each group's words are the packed group."""
     n = len(values)
     if width == 0 or n == 0:
         return b""
@@ -34,12 +42,14 @@ def pack(values: np.ndarray, width: int) -> bytes:
         raise ValueError(f"pack() needs a multiple of 8 values, got {n}")
     if width < 0 or width > 64:
         raise ValueError(f"width out of range: {width}")
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    # little-endian u64 bytes unpacked LSB-first give bit j of value i at
-    # column j; keep the low ``width`` columns and re-pack — identical stream
-    # to the former per-bit shift matrix at a fraction of the traffic
-    bits = np.unpackbits(v.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
-    return np.packbits(bits[:, :width].reshape(-1), bitorder="little").tobytes()
+    lanes = np.ascontiguousarray(values, dtype=np.uint64).reshape(-1, 8)
+    words = np.zeros((len(lanes), -(-width // 8)), dtype=np.uint64)
+    for j in range(8):
+        word, shift = divmod(j * width, 64)
+        words[:, word] |= lanes[:, j] << np.uint64(shift)
+        if shift + width > 64:
+            words[:, word + 1] |= lanes[:, j] >> np.uint64(64 - shift)
+    return words.view(np.uint8)[:, :width].tobytes()
 
 
 _MASK = np.array([(1 << w) - 1 for w in range(65)], dtype=np.uint64)

@@ -75,73 +75,69 @@ def encode_hybrid_many(streams, width: int) -> list[bytes]:
     run_len = np.diff(run_start, append=total)
     long = run_len >= 8
 
-    # segments in stream order: (first value, values, 1 for an rle-run);
-    # seg_end[k] counts the segments of streams 0..k
-    segs, seg_end = [], []
+    # the rle-runs: (first value, values) of each; the bit-packed spans are
+    # the rest of each stream, so the loop only walks the runs of 8 or more
+    rle_at, rle_len = [], []
     ends = ends.tolist()
     k = seg_start = 0
     for s, n in zip(run_start[long].tolist(), run_len[long].tolist()):
-        while s >= ends[k]:  # the runs of stream k are done: its final span
-            if ends[k] > seg_start:
-                segs.append((seg_start, ends[k] - seg_start, 0))
-            seg_end.append(len(segs))
+        while s >= ends[k]:  # a new stream starts its first span
             seg_start = ends[k]
             k += 1
         borrow = (seg_start - s) % 8
         if n - borrow < 8:
             continue  # too short after alignment borrow — absorb into packed span
-        if s + borrow > seg_start:
-            segs.append((seg_start, s + borrow - seg_start, 0))
-        segs.append((s + borrow, n - borrow, 1))
+        rle_at.append(s + borrow)
+        rle_len.append(n - borrow)
         seg_start = s + n
-    for end in ends[k:]:
-        if end > seg_start:
-            segs.append((seg_start, end - seg_start, 0))
-        seg_end.append(len(segs))
-        seg_start = end
-    pos, count, is_rle = np.array(segs, dtype=np.int64).T
-    is_rle = is_rle.astype(bool)
-
-    # bit-packed spans: every group of 8 (a span's last group zero-padded)
-    # packed at once; runs split the span every 63 groups
-    groups = np.where(is_rle, 0, -(-count // 8))
-    pieces = np.where(is_rle, 1, -(-groups // _MAX_GROUPS_PER_RUN))
-    packed = ~is_rle
-    p_pos, p_len, p_groups = pos[packed], count[packed], groups[packed]
-    if len(p_pos) == 1 and p_len[0] % 8 == 0:
-        payload = v[p_pos[0] : p_pos[0] + p_len[0]]
-    else:
-        p_first = np.cumsum(p_groups) * 8 - p_groups * 8
-        payload = np.zeros(int(p_groups.sum()) * 8, dtype=np.uint64)
-        real = np.arange(int(p_len.sum())) + np.repeat(p_first - (np.cumsum(p_len) - p_len), p_len)
-        payload[real] = v[real + np.repeat(p_pos - p_first, p_len)]
-    blob = np.frombuffer(pack(payload, width), dtype=np.uint8)
-
-    # one piece per rle-run and per bit-packed run of at most 63 groups
-    seg = np.repeat(np.arange(len(pos)), pieces)
-    nth = np.arange(len(seg)) - np.repeat(np.cumsum(pieces) - pieces, pieces)
-    rle_piece = is_rle[seg]
+    # every segment, in stream order: the rle-runs and the spans between
+    # them and the stream ends; a span is cut into runs of at most 63 groups
+    rle_at, rle_len = np.array([rle_at, rle_len], dtype=np.int64).reshape(2, -1)
+    edges = np.unique(np.concatenate(([0], ends, rle_at, rle_at + rle_len)))
+    seg_at, seg_len = edges[:-1], np.diff(edges)
+    seg_rle = np.zeros(len(seg_at), dtype=bool)
+    seg_rle[np.searchsorted(seg_at, rle_at)] = True
+    groups = np.where(seg_rle, 0, -(-seg_len // 8))
+    runs = np.where(seg_rle, 1, -(-groups // _MAX_GROUPS_PER_RUN))
+    seg = np.repeat(np.arange(len(seg_at)), runs)
+    nth = np.arange(len(seg)) - np.repeat(np.cumsum(runs) - runs, runs)
+    is_rle = seg_rle[seg]
+    at = seg_at[seg] + nth * (8 * _MAX_GROUPS_PER_RUN)  # each run's first value
     run_groups = np.minimum(groups[seg] - nth * _MAX_GROUPS_PER_RUN, _MAX_GROUPS_PER_RUN)
-    header = np.where(rle_piece, count[seg] << 1, (run_groups << 1) | 1).astype(np.uint64)
-    vlen = uvarint_sizes(header)
+    header = np.where(is_rle, seg_len[seg] << 1, (run_groups << 1) | 1)
+    spans = np.flatnonzero(~seg_rle)
+    piece_end = np.searchsorted(at, ends).tolist()
     byte_w = (width + 7) // 8
-    plen = np.where(rle_piece, byte_w, run_groups * width)
+    vlen = uvarint_sizes(header.view(np.uint64))
+    plen = np.where(is_rle, byte_w, (header >> 1) * width)
     off = np.zeros(len(seg) + 1, dtype=np.int64)
     np.cumsum(vlen + plen, out=off[1:])
     out = np.empty(int(off[-1]), dtype=np.uint8)
-    put_uvarints(out, off[:-1], header, vlen)
+    put_uvarints(out, off[:-1], header.view(np.uint64), vlen)
     value_at = off[:-1] + vlen
-    rows = np.flatnonzero(rle_piece)
-    value = v[pos[seg[rows]]]
-    for j in range(byte_w):
-        out[value_at[rows] + j] = (value >> np.uint64(8 * j)) & np.uint64(0xFF)
-    rows = np.flatnonzero(~rle_piece)
-    p_plen = plen[rows]
-    out[np.repeat(value_at[rows] - (np.cumsum(p_plen) - p_plen), p_plen)
-        + np.arange(len(blob))] = blob
-    piece_end = np.zeros(len(pieces) + 1, dtype=np.int64)
-    np.cumsum(pieces, out=piece_end[1:])
-    cuts = [0] + off[piece_end[seg_end]].tolist()
+    if is_rle.any():
+        rows = np.flatnonzero(is_rle)
+        value = v[at[rows]]
+        for j in range(byte_w):
+            out[value_at[rows] + j] = (value >> np.uint64(8 * j)) & np.uint64(0xFF)
+    if len(spans):
+        # every bit-packed value of every span (a span's last group
+        # zero-padded) packed at once, then each run's bytes to its place
+        p_pos, p_len = seg_at[spans], seg_len[spans]
+        if len(spans) == 1 and p_len[0] % 8 == 0:
+            payload = v[p_pos[0] : p_pos[0] + p_len[0]]
+        else:
+            p_first = np.cumsum(groups[spans] * 8)
+            payload = np.zeros(int(p_first[-1]), dtype=np.uint64)
+            p_first -= groups[spans] * 8
+            real = np.arange(int(p_len.sum())) + np.repeat(p_first - (np.cumsum(p_len) - p_len), p_len)
+            payload[real] = v[real + np.repeat(p_pos - p_first, p_len)]
+        blob = np.frombuffer(pack(payload, width), dtype=np.uint8)
+        rows = np.flatnonzero(~is_rle)
+        p_plen = plen[rows]
+        out[np.repeat(value_at[rows] - (np.cumsum(p_plen) - p_plen), p_plen)
+            + np.arange(len(blob))] = blob
+    cuts = [0] + off[piece_end].tolist()
     return [out[a:b].tobytes() for a, b in zip(cuts, cuts[1:])]
 
 

@@ -199,10 +199,10 @@ def encode_runs(codec: str, ptype: str, values, bounds, levels=(), n_dict: int =
     for stream, width in levels:
         hybrid.setdefault(width, []).append(stream)
     deltas, tails = [], []  # DELTA streams; the bytes after them, per page
-    ids = None  # (bit width, dict width byte) of pages of hybrid ids
+    head = None  # what precedes the hybrid ids of a page: dict's width byte
     if codec == "dict" or (codec == "rle" and kp == "bool"):
         width = width_for_max(max(n_dict - 1, 0)) if codec == "dict" else 1
-        ids = width, bytes([width]) if codec == "dict" else b""
+        head = bytes([width]) if codec == "dict" else b""
         first = len(hybrid.setdefault(width, []))
         flat = values.astype(np.uint64)
         hybrid[width] += [flat[a:b] for a, b in pages]
@@ -226,8 +226,7 @@ def encode_runs(codec: str, ptype: str, values, bounds, levels=(), n_dict: int =
     for _, w in levels:
         level_streams.append(coded[w][seen[w]])
         seen[w] += 1
-    if ids is not None:
-        width, head = ids
+    if head is not None:
         return [head + body for body in coded[width][first:]], level_streams
     if tails:
         heads = delta.encode_delta_many(deltas)

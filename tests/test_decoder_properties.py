@@ -165,6 +165,14 @@ def test_unpack_matches_spec(width, count, data):
     assert out.tolist() == ref_unpack(raw, width, count)
 
 
+@settings(max_examples=200, deadline=None)
+@given(st.integers(0, 64), st.integers(0, 40), st.data())
+def test_pack_matches_spec(width, groups, data):
+    vals = data.draw(st.lists(st.integers(0, (1 << width) - 1), min_size=8 * groups,
+                              max_size=8 * groups))
+    assert bitpack.pack(np.array(vals, dtype=np.uint64), width) == ref_pack(vals, width)
+
+
 @pytest.mark.parametrize("width", [58, 61, 64])
 def test_unpack_wide_widths_match_spec(width):
     rng = np.random.default_rng(width)

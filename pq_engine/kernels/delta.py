@@ -47,8 +47,6 @@ MINIBLOCKS = 4
 MINI = BLOCK // MINIBLOCKS  # 32
 
 _POWERS64 = np.uint64(1) << np.arange(64, dtype=np.uint64)
-
-
 _HEAD = encode_uvarint(BLOCK) + encode_uvarint(MINIBLOCKS)
 _INT64_MAX = np.iinfo(np.int64).max
 
@@ -61,8 +59,8 @@ def encode_delta(values: np.ndarray) -> bytes:
 def encode_delta_many(streams) -> list[bytes]:
     """The body of each int32/int64 array in ``streams`` (the pages of a
     column chunk), byte for byte what each would get alone. Mirrors
-    DeltaBinaryPackingValuesWriterForLong.writeLong/flushBlockBuffer
-    (/root/reference/.../delta/DeltaBinaryPackingValuesWriterForLong.java).
+    parquet-column's DeltaBinaryPackingValuesWriterForLong
+    (writeLong/flushBlockBuffer).
 
     The blocks of every stream are laid out one after another in one
     ``(blocks, 128)`` matrix: one ``min``, one subtraction, one width

@@ -179,20 +179,23 @@ def _decode_values(codec: str, ptype: str, buf, count: int):
 
 
 def encode_runs(codec: str, ptype: str, values, bounds, levels=(), n_dict: int = 0,
-                fsst_table=None) -> tuple[list, list]:
-    """(value body of each data page, each level stream) of a column
-    chunk: the twin of :func:`decode_runs`, the one place a codec meets its
-    value kernel on the write side. ``values`` are the chunk's non-null
-    values in kernel form, or for ``dict`` its dictionary ids into
-    ``n_dict`` uniques; page i holds ``values[bounds[i]:bounds[i+1]]``.
-    ``levels`` holds ``(levels, bit width)`` streams, each returned as its
-    RLE/bit-packed hybrid.
+                fsst_table=None) -> tuple:
+    """(value bodies of the data pages, level streams) of a column chunk:
+    the twin of :func:`decode_runs`, the one place a codec meets its value
+    kernel on the write side. ``values`` are the chunk's non-null values in
+    kernel form, or for ``dict`` its dictionary ids into ``n_dict`` uniques;
+    page i holds ``values[bounds[i]:bounds[i+1]]``. ``levels`` holds
+    ``(levels, bit width)`` streams, each returned as its RLE/bit-packed
+    hybrid, in a list.
 
     Every DELTA stream of the chunk (``delta`` values, ``dlba`` lengths,
     ``dba`` prefixes and suffix lengths) is encoded by one
     ``delta.encode_delta_many`` call, and every hybrid stream (levels,
     ``dict`` ids, ``rle`` booleans) by one ``rle.encode_hybrid_many`` call
-    per bit width; the other codecs encode each page's slice."""
+    per bit width, before this returns; the other codecs encode each page's
+    slice. The bodies come as an iterator that joins (or encodes) each page
+    when it is reached, so a caller that compresses one page before taking
+    the next holds one page body at a time, not a chunk's worth."""
     kp = kernel_ptype(ptype)
     pages = list(zip(bounds[:-1], bounds[1:]))
     hybrid: dict[int, list] = {}  # bit width -> its streams, levels first
@@ -227,14 +230,14 @@ def encode_runs(codec: str, ptype: str, values, bounds, levels=(), n_dict: int =
         level_streams.append(coded[w][seen[w]])
         seen[w] += 1
     if head is not None:
-        return [head + body for body in coded[width][first:]], level_streams
+        return (head + body for body in coded[width][first:]), level_streams
     if tails:
         heads = delta.encode_delta_many(deltas)
         per = len(deltas) // len(tails)  # DELTA streams per page
-        return [b"".join((*heads[i * per : (i + 1) * per], tail))
-                for i, tail in enumerate(tails)], level_streams
-    return [_encode_values(codec, ptype, _slice_values(values, ptype, a, b), fsst_table)
-            for a, b in pages], level_streams
+        return (b"".join((*heads[i * per : (i + 1) * per], tail))
+                for i, tail in enumerate(tails)), level_streams
+    return (_encode_values(codec, ptype, _slice_values(values, ptype, a, b), fsst_table)
+            for a, b in pages), level_streams
 
 
 # ------------------------------------------------------------ chunk dict

@@ -472,5 +472,5 @@ def test_encode_runs_dictionary_ids():
     codes = np.random.default_rng(3).integers(0, 37, 900)
     bounds = [0, 0, 1, 128, 256, 385, 900]
     bodies, _ = pages.encode_runs("dict", "string", codes, bounds, n_dict=37)
-    assert bodies == [dictionary.encode_dict_data_page(codes[a:b], 36)
+    assert list(bodies) == [dictionary.encode_dict_data_page(codes[a:b], 36)
                       for a, b in zip(bounds, bounds[1:])]

@@ -120,10 +120,11 @@ def dba_streams(col: RaggedBytes, firsts=(0,)) -> tuple[np.ndarray, RaggedBytes]
     # -1 where a prefix starts, +1 where it ends: the running sum is -1
     # inside a prefix (prefixes never overlap, and their starts and their
     # ends are each distinct)
-    starts = col.offsets[:-1][prefixes > 0] - o0
+    shared = prefixes > 0
+    starts = col.offsets[:-1][shared] - o0
     edges = np.zeros(len(data) + 1, dtype=np.int8)
     edges[starts] = -1
-    edges[starts + prefixes[prefixes > 0]] += 1
+    edges[starts + prefixes[shared]] += 1
     suffix = np.cumsum(edges[:-1], dtype=np.int8) == 0
     return prefixes, RaggedBytes(suf_off, data[suffix])
 

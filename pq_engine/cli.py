@@ -57,7 +57,7 @@ import numpy as np
 import pyarrow.dataset as ds
 
 from . import pagetable
-from .pages import BLOOM_PAGE, RAGGED_TYPES, decode_column
+from .pages import BLOOM_PAGE, COLINDEX_PAGE, GEO_PAGE, RAGGED_TYPES, SIZESTATS_PAGE, decode_column
 
 
 def _load(path):
@@ -197,11 +197,12 @@ def cmd_column_size(tbl, args):
 
 def _persisted_orders(tbl, column) -> dict:
     """(split, batch) → boundary order from the persisted column-index rows
-    (page = -4, written at encode time — ColumnIndexBuilder persistence)."""
+    (``COLINDEX_PAGE``, written at encode time — ColumnIndexBuilder
+    persistence)."""
     import pyarrow.compute as pc
 
     rows = tbl.filter(
-        pc.and_(pc.equal(tbl["column"], column), pc.equal(tbl["page"], -4))
+        pc.and_(pc.equal(tbl["column"], column), pc.equal(tbl["page"], COLINDEX_PAGE))
     )
     return {
         (rows["split_id"][i].as_py(), rows["batch_id"][i].as_py()): rows["min"][i].as_py()
@@ -257,7 +258,7 @@ def locate_value_pages(mins, maxs, value, order: str) -> list[int]:
 def cmd_column_index(tbl, args):
     """ShowColumnIndexCommand analog: per-page min/max/nulls + first-row
     offset index + boundary order per chunk. The order is READ from the
-    persisted page = -4 column-index row when present (r2 judge #9) and only
+    persisted ``COLINDEX_PAGE`` column-index row when present (r2 judge #9) and only
     derived for tables written before persistence existed. With --value,
     prints the candidate pages for a point lookup — binary search on
     ASCENDING/DESCENDING chunks, linear scan otherwise."""
@@ -303,10 +304,11 @@ def cmd_column_index(tbl, args):
 
 def cmd_bloom_filter(tbl, args):
     """ShowBloomFilterCommand analog: list bloom index rows; with --value,
-    probe membership per chunk."""
+    probe membership per chunk. A row of the earlier hash scheme may hold
+    any value; a row that fails its CRC raises ``IOError``."""
     import pyarrow.compute as pc
 
-    from .kernels.bloom import BlockSplitBloomFilter, key_for_value
+    from .kernels.bloom import BlockSplitBloomFilter, literal_hash
 
     if not args.column:
         sys.exit("--column required")
@@ -318,15 +320,18 @@ def cmd_bloom_filter(tbl, args):
         return
     for i in range(sub.num_rows):
         blob = sub["data"][i].as_py()
-        bf = BlockSplitBloomFilter.deserialize(blob)
+        bits = pagetable.bloom_bits(sub["codec"][i].as_py(), sub["crc32"][i].as_py(), blob)
         line = (
             f"split={sub['split_id'][i].as_py()} batch={sub['batch_id'][i].as_py()} "
-            f"bytes={len(blob)} blocks={bf.num_blocks} keys={sub['n_rows'][i].as_py()}"
+            f"bytes={len(blob)} blocks={len(blob) // 32} keys={sub['n_rows'][i].as_py()}"
         )
         if args.value is not None:
-            key = key_for_value(_parse_value(args.value, sub["ptype"][i].as_py()),
-                                sub["ptype"][i].as_py())
-            hit = bool(bf.contains_u64(np.array([key], dtype=np.uint64))[0])
+            hit = bits is None
+            if not hit:
+                ptype = sub["ptype"][i].as_py()
+                h = literal_hash(_parse_value(args.value, ptype), ptype)
+                hit = bool(BlockSplitBloomFilter.deserialize(bits).contains_hashes(
+                    np.array([h], dtype=np.uint64))[0])
             line += f" maybe_contains({args.value})={hit}"
         print(line)
 
@@ -900,13 +905,13 @@ def cmd_size_stats(tbl, args):
             f"{int(np.median(sizes)):8d} {int(sizes.max()):8d} "
             f"{int(rows.mean()):8d}"
         )
-    # persisted SizeStatistics rows (page = -6): unencoded byte-array bytes
+    # persisted SizeStatistics rows (SIZESTATS_PAGE): unencoded byte-array bytes
     # + rep/def level histograms, summed across chunks
     import json as _json
 
     agg: dict = {}
     for i in range(tbl.num_rows):
-        if tbl["page"][i].as_py() != -6 or tbl["min"][i].as_py() is None:
+        if tbl["page"][i].as_py() != SIZESTATS_PAGE or tbl["min"][i].as_py() is None:
             continue
         c = tbl["column"][i].as_py()
         s = _json.loads(tbl["min"][i].as_py())
@@ -928,7 +933,7 @@ def cmd_size_stats(tbl, args):
         # page, as OffsetIndexBuilder / ColumnIndexBuilder record them)
         print("\nSizeStatistics per page:")
         for i in range(tbl.num_rows):
-            if tbl["page"][i].as_py() != -6 or tbl["min"][i].as_py() is None:
+            if tbl["page"][i].as_py() != SIZESTATS_PAGE or tbl["min"][i].as_py() is None:
                 continue
             s = _json.loads(tbl["min"][i].as_py())
             for p in s.get("pages") or []:
@@ -1028,12 +1033,12 @@ def cmd_rewrite(tbl, args):
 
 def cmd_geospatial_stats(tbl, args):
     """ShowGeospatialStatisticsCommand analog: per-chunk WKB-Point bounding
-    boxes from the persisted page = -5 geostats rows (GeospatialStatistics)."""
+    boxes from the persisted ``GEO_PAGE`` geostats rows (GeospatialStatistics)."""
     import json
 
     import pyarrow.compute as pc
 
-    rows = tbl.filter(pc.equal(tbl["page"], -5))
+    rows = tbl.filter(pc.equal(tbl["page"], GEO_PAGE))
     if args.column:
         rows = rows.filter(pc.equal(rows["column"], args.column))
     if rows.num_rows == 0:

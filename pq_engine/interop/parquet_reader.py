@@ -986,29 +986,6 @@ def _rg_dict_can_match(pred, rg, by_name, buf, report, crypto=None):
     return bool(_cmp_numeric(op, dvals, val).any())
 
 
-def _bloom_hash_literal(leaf, val):
-    """XxHash64 of the predicate literal's PLAIN encoding, or None when the
-    column's type has no bloom support here."""
-    import struct as _s
-
-    from ..kernels.bloom import xxhash64_bytes
-
-    phys = leaf["physical"]
-    if phys == "byte_array":
-        b = val.encode("utf-8") if isinstance(val, str) else bytes(val)
-    elif phys == "int64":
-        b = _s.pack("<q", int(val))
-    elif phys == "int32":
-        b = _s.pack("<i", int(val))
-    elif phys == "float64":
-        b = _s.pack("<d", float(val))
-    elif phys == "float32":
-        b = _s.pack("<f", float(val))
-    else:
-        return None
-    return xxhash64_bytes(b)
-
-
 def _rg_bloom_can_match(pred, rg, by_name, buf, report, crypto=None):
     """L3 for external files: probe the chunk's split-block bloom filter
     for eq literals — the BloomFilterReader / readBloomFilter analog
@@ -1045,10 +1022,14 @@ def _rg_bloom_can_match(pred, rg, by_name, buf, report, crypto=None):
     if 1 not in hdr.get(2, {1: {}}) or 1 not in hdr.get(3, {1: {}}) \
             or 1 not in hdr.get(4, {1: {}}):
         return True  # unknown algorithm/hash/codec: cannot disprove
-    h = _bloom_hash_literal(by_name[name], val)
+    from ..kernels.bloom import BlockSplitBloomFilter, literal_hash
+
+    try:
+        h = literal_hash(val, _kernel_ptype(by_name[name]))
+    except ValueError:  # an FLBA literal of another width
+        return True
     if h is None:
         return True
-    from ..kernels.bloom import BlockSplitBloomFilter
 
     bf = BlockSplitBloomFilter.deserialize(bits[: hdr[1]])
     report["blooms_probed"] = report.get("blooms_probed", 0) + 1

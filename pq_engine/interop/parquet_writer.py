@@ -517,7 +517,7 @@ def _write_flat_chunk(out: bytearray, col: dict, n_rows: int,
     data_pt = PAGE_DATA_V2 if page_version == 2 else PAGE_DATA
     enc_stats = ([(PAGE_DICT, ENC_PLAIN, 1)] if dict_off is not None else []) \
         + [(data_pt, enc, len(page_starts))]
-    bloom = _append_bloom(out, col, ptype, vals)
+    bloom = _append_bloom(out, col, vals)
     meta = _column_meta(
         ptype, encodings, name, compression, n_rows, raw_total, pages_size,
         data_off, dict_off, _chunk_statistics(ptype, vals, validity, n_rows),
@@ -552,13 +552,6 @@ def _copy_codecs(kp: str) -> tuple:
     if kp == "bool":
         return ("plain",)
     return ("plain", "dict")  # floats and the FLBA family
-
-
-# engine bloom rows hash each value's 8 little-endian bytes
-# (bloom.widen_u64), which is the spec's XxHash64 of the PLAIN encoding only
-# for 8-byte types; 4-byte values are widened first and strings/FLBA hash an
-# FNV-1a key, so a parquet reader would find present values absent
-_BLOOM_COPY_TYPES = ("int64", "timestamp_us", "timestamp_ntz_us", "float64")
 
 
 def _page_copy_refusal(pages: list[tuple[dict, bytes]]) -> str | None:
@@ -630,13 +623,15 @@ def _copy_engine_chunk(out: bytearray, name: str, ptype: str,
     :func:`_page_copy_refusal` for what qualifies), no value decoded: the
     dictionary page as a PLAIN dictionary page, each data page as a V2 page
     (the blob's levels, uncompressed, then its compressed body), the bloom
-    row as the chunk's bloom filter (8-byte types only), and the
+    row, CRC-checked, as the chunk's bloom filter (a row of the earlier
+    hash scheme is left out: see ``pagetable.bloom_bits``), and the
     ColumnIndex/OffsetIndex entries into ``index_out`` from the page rows.
     ``optional`` columns need levels on every page: a page stored without
     them gets one all-defined RLE run. Returns (ColumnChunk writer, chunk
     byte size), like :func:`_write_flat_chunk`."""
     import collections
 
+    from .. import pagetable
     from ..pages import BLOOM_PAGE, DICT_PAGE, kernel_ptype
 
     kp = kernel_ptype(ptype)
@@ -649,7 +644,7 @@ def _copy_engine_chunk(out: bytearray, name: str, ptype: str,
     stats_ok = True
     for meta, blob in pages:
         if meta["page"] == BLOOM_PAGE:
-            bloom_bits = blob
+            bloom_bits = pagetable.bloom_bits(meta["codec"], meta["crc32"], blob)
             continue
         levels, raw_len, body = _engine_body(meta, blob, to)
         if meta["page"] == DICT_PAGE:
@@ -694,8 +689,7 @@ def _copy_engine_chunk(out: bytearray, name: str, ptype: str,
         lo = mn if lo is None else min(lo, mn)
         hi = mx if hi is None else max(hi, mx)
     pages_size = len(out) - chunk_start
-    bloom = (_emit_bloom(out, bloom_bits)
-             if bloom_bits is not None and kp in _BLOOM_COPY_TYPES else (None, None))
+    bloom = (None, None) if bloom_bits is None else _emit_bloom(out, bloom_bits)
     stats_ok = stats_ok and not all(null_pages)
     statistics = StructWriter().i64(3, nulls)
     if stats_ok:
@@ -844,20 +838,22 @@ def _emit_page_index(out: bytearray, entries: list[dict]) -> None:
             cc.i64(6, e["ci_span"][0]).i32(7, e["ci_span"][1])
 
 
-def _append_bloom(out: bytearray, col: dict, ptype: str, vals):
+def _append_bloom(out: bytearray, col: dict, vals):
     """Split-block bloom filter (r6): BloomFilterHeader thrift + bitset,
     placed after the chunk's pages, referenced by ColumnMetaData fields
     14/15 (BloomFilterReader / ParquetFileWriter.addBloomFilter analog).
-    Values hashed over their PLAIN encodings with XxHash64."""
+    Values hashed over their PLAIN encodings with XxHash64, the filter
+    sized to their distinct count."""
     if not col.get("bloom"):
-        return None, None
-    hashes = _bloom_hashes_for(ptype, vals)
-    if hashes is None or not len(hashes):
         return None, None
     from ..kernels import bloom as bloomk
 
+    hashes = bloomk.plain_hashes(vals)
+    if hashes is None or not len(hashes):
+        return None, None
+    hashes = np.unique(hashes)
     bf = bloomk.BlockSplitBloomFilter(bloomk.optimal_num_bytes(len(hashes)))
-    bf.insert_hashes(np.asarray(hashes, dtype=np.uint64))
+    bf.insert_hashes(hashes)
     return _emit_bloom(out, bf.serialize())
 
 
@@ -876,33 +872,6 @@ def _emit_bloom(out: bytearray, bits) -> tuple[int, int]:
     out += hdr
     out += bits
     return bloom_off, len(hdr) + len(bits)
-
-
-def _bloom_hashes_for(ptype, vals):
-    """XxHash64 of each DISTINCT value's plain encoding (what parquet's
-    split-block bloom stores). None for types without bloom support here
-    (bool, FLBA family)."""
-    from ..kernels import bloom as bloomk
-
-    if isinstance(vals, RaggedBytes):
-        data = vals.data.tobytes()
-        offs = vals.offsets
-        seen = set()
-        hs = []
-        for i in range(len(offs) - 1):
-            b = data[offs[i] : offs[i + 1]]
-            if b not in seen:
-                seen.add(b)
-                hs.append(bloomk.xxhash64_bytes(b))
-        return np.array(hs, dtype=np.uint64)
-    a = np.asarray(vals)
-    if a.ndim != 1 or a.dtype.itemsize not in (4, 8):
-        return None
-    u = np.unique(a)
-    if a.dtype.itemsize == 8:
-        return bloomk.xxhash64_u64(u.view(np.uint64))
-    return np.array(
-        [bloomk.xxhash64_bytes(v.tobytes()) for v in u], dtype=np.uint64)
 
 
 def _finish_file(fobj, out: bytearray, columns: list[dict],

@@ -1,14 +1,19 @@
 """Split-block bloom filter (parquet-format BloomFilterHeader semantics).
 
-Reference: /root/reference/parquet-column/.../values/bloomfilter/
-BlockSplitBloomFilter.java:72-301 — 32-byte blocks of 8 uint32 words; each
-inserted value sets ONE bit per word, chosen by the 8 SALT constants (:84);
-the block index is the top 32 bits of xxHash64(value) scaled by the block
-count ("block index = (h >> 32) * numBlocks >> 32"). optimalNumOfBits per
-:theory. XxHash64 (seed 0) vectorized in NumPy over 8-byte-key batches;
-variable-length byte values are pre-hashed to u64 keys.
+Reference: parquet-column's BlockSplitBloomFilter.java:72-301 — 32-byte
+blocks of 8 uint32 words; each inserted value sets ONE bit per word, chosen
+by the 8 SALT constants (:84); the block index is the top 32 bits of
+xxHash64(value) scaled by the block count ("block index = (h >> 32) *
+numBlocks >> 32"). optimalNumOfBits per :theory.
 
-Everything is batch-vectorized: insert/contains take arrays, not scalars.
+The one hash is the spec's: XxHash64 (seed 0) of each value's PLAIN bytes —
+a string or binary value's bytes (no length prefix), a 4- or 8-byte
+number's little-endian bytes, a FIXED_LEN_BYTE_ARRAY value's k bytes.
+:func:`plain_hashes` hashes a column, batch-vectorized over rows;
+:func:`literal_hash` hashes one probe value through the reference
+:func:`xxhash64_bytes`. Engine bloom rows, their probes, the parquet
+writer and the parquet reader all hash through these two, so an engine
+bloom row is a parquet bloom filter as it is.
 """
 
 from __future__ import annotations
@@ -28,26 +33,132 @@ _P2 = np.uint64(0xC2B2AE3D27D4EB4F)
 _P3 = np.uint64(0x165667B19E3779F9)
 _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
+# the four stripe accumulators' seeds: seed + P1 + P2, seed + P2, seed, seed - P1
+_V0 = np.array([0x60EA27EEADC0B5D6, 0xC2B2AE3D27D4EB4F, 0, 0x61C8864E7A143579],
+               dtype=np.uint64)
+_LANES = np.arange(0, 32, 8)
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
     return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
 
 
-def xxhash64_u64(keys: np.ndarray, seed: int = 0) -> np.ndarray:
-    """Vectorized XxHash64 of 8-byte little-endian keys (the shape parquet
-    hashes fixed-width values in; XxHash.java delegates to the same core)."""
-    k = keys.astype(np.uint64, copy=False)
-    h = np.uint64(seed) + _P5 + np.uint64(8)
-    k1 = _rotl(k * _P2, 31) * _P1
-    h = h ^ k1
-    h = _rotl(h, 27) * _P1 + _P4
+def _words(data: np.ndarray, width: int) -> np.ndarray:
+    """The unaligned little-endian ``width``-byte word at every byte offset
+    of ``data`` that has ``width`` bytes after it, as a strided view."""
+    return np.ndarray((max(len(data) - width + 1, 0),), dtype=f"<u{width}",
+                      buffer=data, strides=(1,))
+
+
+def _stripes(w8: np.ndarray, pos: np.ndarray, stripes: np.ndarray) -> np.ndarray:
+    """XXH64's four accumulators run over ``stripes[i]`` 32-byte stripes
+    from byte ``pos[i]``, then merged. One pass per stripe index, rows
+    sorted longest first so each pass updates only a prefix: one long value
+    among short ones costs passes, not an n x length matrix."""
+    order = np.argsort(-stripes, kind="stable")
+    pos = pos[order]
+    active = np.searchsorted(-stripes[order], -np.arange(int(stripes.max())))
+    v = np.tile(_V0, (len(pos), 1))
+    for c in active:
+        acc = v[:c]
+        lanes = w8[pos[:c, None] + _LANES]
+        lanes *= _P2
+        acc += lanes
+        lanes = acc << np.uint64(31)
+        acc >>= np.uint64(33)
+        acc |= lanes
+        acc *= _P1
+        pos[:c] += 32
+    h = _rotl(v[:, 0], 1) + _rotl(v[:, 1], 7) + _rotl(v[:, 2], 12) + _rotl(v[:, 3], 18)
+    for i in range(4):
+        h ^= _rotl(v[:, i] * _P2, 31) * _P1
+        h = h * _P1 + _P4
+    out = np.empty_like(h)
+    out[order] = h
+    return out
+
+
+def _xxh64(data: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """XxHash64 (seed 0) of each ``data[starts[i] : starts[i] + lens[i]]``:
+    the stripes (:func:`_stripes`), then at most three 8-byte words, one
+    4-byte word and three single bytes, each step one pass over the rows
+    that still have one."""
+    h = np.full(len(lens), _P5, dtype=np.uint64)
+    long_rows = np.flatnonzero(lens >= 32)
+    if len(long_rows):
+        h[long_rows] = _stripes(_words(data, 8), starts[long_rows], lens[long_rows] // 32)
+    h += lens.astype(np.uint64)
+    rem = lens & 31
+    pos = starts + (lens - rem)
+    for width, steps in ((8, 3), (4, 1), (1, 3)):
+        words = _words(data, width)
+        for _ in range(steps):
+            sel = rem >= width
+            if not sel.any():
+                break
+            rows = slice(None) if sel.all() else np.flatnonzero(sel)
+            k = words[pos[rows]].astype(np.uint64)
+            hr = h[rows]
+            if width == 8:
+                hr ^= _rotl(k * _P2, 31) * _P1
+                hr = _rotl(hr, 27) * _P1 + _P4
+            elif width == 4:
+                hr ^= k * _P1
+                hr = _rotl(hr, 23) * _P2 + _P3
+            else:
+                hr ^= k * _P5
+                hr = _rotl(hr, 11) * _P1
+            h[rows] = hr
+            pos[rows] += width
+            rem[rows] -= width
     h ^= h >> np.uint64(33)
     h *= _P2
     h ^= h >> np.uint64(29)
     h *= _P3
     h ^= h >> np.uint64(32)
     return h
+
+
+def plain_hashes(values) -> np.ndarray | None:
+    """XxHash64 of each value's PLAIN bytes, for a column in kernel form:
+    ``RaggedBytes`` (strings, binary), ``(n, k)`` uint8 rows (the
+    FIXED_LEN_BYTE_ARRAY family) or a 1-D array of 4- or 8-byte numbers.
+    None for a column without blooms (bool, list)."""
+    from .ragged import RaggedBytes
+
+    if isinstance(values, RaggedBytes):
+        return _xxh64(values.data, values.offsets[:-1], values.lengths)
+    if not isinstance(values, np.ndarray) or values.dtype == np.bool_:
+        return None
+    if values.ndim == 1:
+        if values.dtype.itemsize not in (4, 8):
+            return None
+        values = np.ascontiguousarray(values, dtype=values.dtype.newbyteorder("<"))
+        values = values.view(np.uint8).reshape(len(values), values.dtype.itemsize)
+    n, k = values.shape
+    data = np.ascontiguousarray(values, dtype=np.uint8).reshape(-1)
+    return _xxh64(data, np.arange(n, dtype=np.int64) * k, np.full(n, k, dtype=np.int64))
+
+
+def literal_hash(value, ptype: str) -> int | None:
+    """XxHash64 of one probe value's PLAIN bytes in a column of ``ptype``
+    (its kernel type decides the bytes: a decimal64 probe is its unscaled
+    int, an FLBA-family probe its stored k bytes), as :func:`plain_hashes`
+    hashes the stored value. None for a type without blooms."""
+    from ..pages import _NUMERIC, RAGGED_TYPES, kernel_ptype
+
+    kp = kernel_ptype(ptype)
+    if kp in RAGGED_TYPES:
+        b = value.encode() if isinstance(value, str) else bytes(value)
+    elif kp.startswith("fixed["):
+        from .fixedlen import value_to_fixed
+
+        b = value_to_fixed(value, ptype).tobytes()
+    elif kp in _NUMERIC:
+        b = np.array([value], dtype=np.dtype(_NUMERIC[kp]).newbyteorder("<")).tobytes()
+    else:
+        return None
+    return xxhash64_bytes(b)
 
 
 _M64 = (1 << 64) - 1
@@ -60,10 +171,9 @@ def _rotl_i(x: int, r: int) -> int:
 def xxhash64_bytes(data: bytes, seed: int = 0) -> int:
     """Full XxHash64 over arbitrary-length bytes (python ints) — the hash
     parquet's bloom filter applies to a value's PLAIN encoding
-    (XxHash.java / BlockSplitBloomFilter.hash). Used per distinct value at
-    bloom build/probe time; the vectorized 8-byte fast path above covers
-    INT64/FP64 batches (verified equal on 8-byte inputs). Pinned against
-    the public xxHash test vectors."""
+    (XxHash.java / BlockSplitBloomFilter.hash). The reference the
+    vectorized :func:`plain_hashes` is tested against, and the hash of one
+    probe literal. Pinned against the public xxHash test vectors."""
     p1, p2, p3, p4, p5 = (int(_P1), int(_P2), int(_P3), int(_P4), int(_P5))
     n = len(data)
     pos = 0
@@ -150,12 +260,6 @@ class BlockSplitBloomFilter:
         got = self.blocks[block]  # (n, 8)
         return ((got & masks) == masks).all(axis=1)
 
-    def insert_u64(self, keys: np.ndarray) -> None:
-        self.insert_hashes(xxhash64_u64(keys))
-
-    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
-        return self.contains_hashes(xxhash64_u64(keys))
-
     def serialize(self) -> bytes:
         return self.blocks.astype("<u4").tobytes()
 
@@ -165,66 +269,3 @@ class BlockSplitBloomFilter:
         f = BlockSplitBloomFilter(arr.size * 4)
         f.blocks = arr.copy()
         return f
-
-
-def widen_u64(arr: np.ndarray) -> np.ndarray:
-    """Deterministically map any fixed-width numeric array to u64 keys.
-    32-bit types are WIDENED first (int32→int64, float32→float64 — exact);
-    viewing a 32-bit array as u64 directly would pair adjacent values (and
-    crash on odd lengths). Mirrors the reference hashing each value
-    individually (XxHash.java hashInt/hashFloat)."""
-    arr = np.ascontiguousarray(arr)
-    if arr.dtype.itemsize == 4:
-        arr = arr.astype(np.int64) if arr.dtype.kind in "iu" else arr.astype(np.float64)
-    return arr.view(np.uint64)
-
-
-def fixed_keys(values: np.ndarray) -> np.ndarray:
-    """u64 keys for (n, k) FLBA rows — FNV-1a over the row bytes, k fully
-    vectorized column passes (mirrors ragged_keys on equal-length values)."""
-    n, k = values.shape
-    out = np.full(n, 0xCBF29CE484222325, dtype=np.uint64)
-    prime = np.uint64(0x100000001B3)
-    for j in range(k):
-        out = (out ^ values[:, j].astype(np.uint64)) * prime
-    return out
-
-
-def key_for_value(value, ptype: str) -> int:
-    """Driver/CLI-side probe key (must match the encode path: narrow to the
-    column's physical dtype first, then widen identically)."""
-    from .ragged import RaggedBytes
-
-    if ptype in ("string", "binary", "geometry"):  # geometry = WKB binary
-        v = value.encode() if isinstance(value, str) else bytes(value)
-        return int(ragged_keys(RaggedBytes.from_pylist([v]))[0])
-    if ptype.startswith(("decimal_flba[", "fixed[")) or ptype in (
-        "uuid", "float16", "int96_ts"
-    ):
-        from .fixedlen import value_to_fixed
-
-        return int(fixed_keys(value_to_fixed(value, ptype))[0])
-    if ptype.startswith("decimal64["):
-        ptype = "int64"  # probe with the UNSCALED int
-    dt = {"int32": np.int32, "int64": np.int64, "timestamp_us": np.int64,
-          "date32": np.int32, "timestamp_ntz_us": np.int64,
-          "float32": np.float32, "float64": np.float64}[ptype]
-    return int(widen_u64(np.array([value], dtype=dt))[0])
-
-
-def ragged_keys(col) -> np.ndarray:
-    """Stable u64 keys for variable-length values (pre-hash before bloom,
-    mirroring hashBytes): FNV-1a over bytes, vectorized per position pass."""
-    from .ragged import RaggedBytes
-
-    assert isinstance(col, RaggedBytes)
-    n = len(col)
-    out = np.full(n, 0xCBF29CE484222325, dtype=np.uint64)
-    lens = col.lengths
-    maxlen = int(lens.max()) if n else 0
-    prime = np.uint64(0x100000001B3)
-    for j in range(maxlen):  # passes over byte positions, not rows
-        rows = np.flatnonzero(lens > j)
-        b = col.data[col.offsets[:-1][rows] + j].astype(np.uint64)
-        out[rows] = (out[rows] ^ b) * prime
-    return out

@@ -688,6 +688,10 @@ def _sizestats_row(ptype: str, unencoded, rep_hist, def_hist, pages=None):
 
 
 BLOOM_PAGE = -1  # manifest `page` value of a chunk's bloom-filter row
+# `codec` of a bloom row hashed by kernels.bloom.plain_hashes (the spec's
+# XxHash64 of the PLAIN bytes). Rows of the earlier scheme (codec "bloom":
+# widened or FNV-1a keys) are never probed nor exported, and carry crc32 0.
+BLOOM_CODEC = "xxh64"
 ROWRANGES_PAGE = -3  # manifest `page` value of a column's row-ranges row
 COLINDEX_PAGE = -4  # manifest `page` value of the persisted column-index row
 GEO_PAGE = -5  # manifest `page` value of the GeospatialStatistics bbox row
@@ -816,7 +820,7 @@ def decode_column(pages: list[tuple[dict, bytes]], ptype: str | None = None):
     for meta, blob in pages:
         if meta["codec"] == "dictpage":
             dict_vals = _dict_page_values(meta, blob)
-        elif meta["codec"] == "bloom" or meta["page"] < 0:
+        elif meta["page"] < 0:
             continue  # index rows carry no values
         else:
             data_pages.append((meta, blob))

@@ -34,6 +34,7 @@ from .compression import compress, decompress
 from .kernels import rle
 from .kernels.ragged import RaggedBytes
 from .pages import (
+    BLOOM_CODEC,
     BLOOM_PAGE,
     COLINDEX_PAGE,
     ENCRYPTED_SUFFIX,
@@ -154,13 +155,25 @@ def _crc32(blob) -> int:
     return zlib.crc32(blob) & 0xFFFFFFFF
 
 
-def _checked(page: int, crc: int, blob: bytes) -> bytes:
-    """``blob``, after checking it against its row's ``crc32`` (bloom rows
-    carry 0 and are not checked): a rewrite that gave a corrupt page a new
-    CRC would make its damage undetectable."""
-    if page != BLOOM_PAGE and _crc32(blob) != crc:
+def _unchecked(page: int, codec: str) -> bool:
+    """A bloom row of the earlier hash scheme: it carries crc32 0."""
+    return page == BLOOM_PAGE and codec != BLOOM_CODEC
+
+
+def _checked(page: int, codec: str, crc: int, blob: bytes) -> bytes:
+    """``blob``, after checking it against its row's ``crc32``, raising
+    ``IOError`` on a mismatch (:func:`_unchecked` rows excepted): a rewrite
+    that gave a corrupt page a new CRC would make its damage undetectable."""
+    if not _unchecked(page, codec) and _crc32(blob) != crc:
         raise IOError(f"page {page} CRC mismatch")
     return blob
+
+
+def bloom_bits(codec: str, crc: int, blob: bytes) -> bytes | None:
+    """The bitset of a bloom row after its CRC check, or None for a row of
+    the earlier hash scheme: a probe hashed by ``kernels.bloom`` would find
+    its present values absent, so it disproves nothing and is not exported."""
+    return None if codec != BLOOM_CODEC else _checked(BLOOM_PAGE, codec, crc, blob)
 
 
 # ---------------------------------------------------------------- rewrites
@@ -175,15 +188,15 @@ def transcode(tbl: pa.Table, to: str | None) -> pa.Table:
     with them. A sealed page (:func:`encrypt`) raises ``ValueError``: its
     body is ciphertext, to be decrypted first."""
     to = to or "none"
-    column, page, comp, crc, size, data = (tbl[k].to_pylist() for k in (
-        "column", "page", "compression", "crc32", "encoded_bytes", "data"))
+    column, page, codec, comp, crc, size, data = (tbl[k].to_pylist() for k in (
+        "column", "page", "codec", "compression", "crc32", "encoded_bytes", "data"))
     for i, p in enumerate(page):
         if comp[i] == to or p in (*RAW_COPY_PAGES, ROWRANGES_PAGE):
             continue
         if comp[i].endswith(ENCRYPTED_SUFFIX):
             raise ValueError(f"column {column[i]!r} is encrypted: decrypt it before "
                              f"changing its compression")
-        blob = _checked(p, crc[i], data[i])
+        blob = _checked(p, codec[i], crc[i], data[i])
         pos = split_page_blob(blob)  # handles flat, validity AND list layouts
         data[i] = blob[:pos] + compress(decompress(blob[pos:], comp[i]), to)
         comp[i], size[i], crc[i] = to, len(data[i]), _crc32(data[i])
@@ -256,9 +269,9 @@ def encrypt(tbl: pa.Table, keys: dict[str, bytes], aad_prefix: bytes = b"") -> p
     from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
     ciphers = {c: AESGCM(k) for c, k in keys.items()}
-    split, batch, column, page, comp, crc, mn, mx, ndv, data = (tbl[k].to_pylist() for k in (
-        "split_id", "batch_id", "column", "page", "compression", "crc32", "min", "max", "ndv",
-        "data"))
+    split, batch, column, page, codec, comp, crc, mn, mx, ndv, data = (
+        tbl[k].to_pylist() for k in ("split_id", "batch_id", "column", "page", "codec",
+                                     "compression", "crc32", "min", "max", "ndv", "data"))
     for i, c in enumerate(column):
         if c not in ciphers or page[i] == ROWRANGES_PAGE:
             continue
@@ -266,7 +279,8 @@ def encrypt(tbl: pa.Table, keys: dict[str, bytes], aad_prefix: bytes = b"") -> p
             pt = (mn[i] or "").encode()
         else:
             hdr = json.dumps([mn[i], mx[i], ndv[i]]).encode()
-            pt = len(hdr).to_bytes(4, "little") + hdr + _checked(page[i], crc[i], data[i])
+            blob = _checked(page[i], codec[i], crc[i], data[i])
+            pt = len(hdr).to_bytes(4, "little") + hdr + blob
         nonce = os.urandom(12)
         aad = page_aad(aad_prefix, split[i], batch[i], c, page[i])
         data[i] = nonce + ciphers[c].encrypt(nonce, pt, aad)
@@ -283,9 +297,10 @@ def decrypt(tbl: pa.Table, keys: dict[str, bytes], aad_prefix: bytes = b"") -> p
     from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
     ciphers = {c: AESGCM(k) for c, k in keys.items()}
-    split, batch, column, page, comp, size, crc, mn, mx, ndv, data = (tbl[k].to_pylist() for k in (
-        "split_id", "batch_id", "column", "page", "compression", "encoded_bytes", "crc32", "min",
-        "max", "ndv", "data"))
+    split, batch, column, page, codec, comp, size, crc, mn, mx, ndv, data = (
+        tbl[k].to_pylist() for k in ("split_id", "batch_id", "column", "page", "codec",
+                                     "compression", "encoded_bytes", "crc32", "min", "max",
+                                     "ndv", "data"))
     for i, c in enumerate(column):
         if not comp[i].endswith(ENCRYPTED_SUFFIX):
             continue
@@ -302,9 +317,8 @@ def decrypt(tbl: pa.Table, keys: dict[str, bytes], aad_prefix: bytes = b"") -> p
             mn[i], mx[i], ndv[i] = json.loads(pt[4 : 4 + hlen])
             data[i] = pt[4 + hlen :]
         size[i] = len(data[i])
-        # the plaintext CRC, recomputed after authentication; bloom rows
-        # carry the engine's 0 (see _checked)
-        crc[i] = 0 if page[i] == BLOOM_PAGE else _crc32(data[i])
+        # the plaintext CRC, recomputed after authentication
+        crc[i] = 0 if _unchecked(page[i], codec[i]) else _crc32(data[i])
         comp[i] = comp[i][: -len(ENCRYPTED_SUFFIX)]
     return _replace(tbl, data=data, compression=comp, encoded_bytes=size, crc32=crc,
                     min=mn, max=mx, ndv=ndv)

@@ -18,6 +18,7 @@ distribution boundary.
 from __future__ import annotations
 
 import os
+import zlib
 from typing import Iterator
 
 import numpy as np
@@ -26,9 +27,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .. import pagetable
+from ..kernels.ragged import RaggedBytes
 from ..memtune import tune_allocator
 from ..pagetable import _arrow_to_values, _values_to_arrow
 from ..pages import (
+    BLOOM_CODEC,
     BLOOM_PAGE,
     DICT_PAGE,
     ENCRYPTED_SUFFIX,
@@ -143,37 +146,6 @@ BLOOM_MAX_VALUE_LEN = 64  # bloom only for lookup-sized values (reference:
 # blobs aren't bloom candidates; AdaptiveBlockSplitBloomFilter targets ids/keys)
 
 
-def _bloom_keys(values, ptype: str):
-    """u64 keys for bloom hashing. Any deterministic map works (key
-    collisions only raise FPP, never cause false negatives)."""
-    if ptype.startswith("list<") or ptype == "bool":
-        return None
-    from ..pages import kernel_ptype as _kp
-
-    if _kp(ptype).startswith("fixed["):
-        # FLBA rows (UUIDs especially) are prime point-lookup keys
-        from ..kernels.bloom import fixed_keys
-
-        return fixed_keys(values)
-    if ptype in RAGGED_TYPES or _kp(ptype) in RAGGED_TYPES:
-        from ..kernels.bloom import ragged_keys
-
-        if len(values) == 0 or float(values.lengths.mean()) > BLOOM_MAX_VALUE_LEN:
-            return None
-        return ragged_keys(values)
-    from ..kernels.bloom import widen_u64
-
-    return widen_u64(values)
-
-
-def bloom_key_for_value(value, ptype: str):
-    """Driver-side key for a probe value (must match _bloom_keys: narrow to
-    the column's physical dtype first, then widen identically)."""
-    from ..kernels.bloom import key_for_value
-
-    return key_for_value(value, ptype)
-
-
 def _encode_arrow_batch(
     batch: pa.RecordBatch,
     cols: list[str],
@@ -196,24 +168,28 @@ def _encode_arrow_batch(
         values, validity = _arrow_to_values(arr, ptype)
         pages = []
         if with_bloom:
-            keys = _bloom_keys(values, ptype)
-            if keys is not None and len(keys):
-                from ..kernels.bloom import BlockSplitBloomFilter, optimal_num_bytes
+            from ..kernels.bloom import BlockSplitBloomFilter, optimal_num_bytes, plain_hashes
 
+            # the spec's bloom hash, XxHash64 of each value's PLAIN bytes;
+            # no bloom for bool or list columns, nor for byte values longer
+            # than lookup keys on average
+            long_bytes = isinstance(values, RaggedBytes) and not (
+                len(values) and values.lengths.mean() <= BLOOM_MAX_VALUE_LEN)
+            hashes = None if long_bytes else plain_hashes(values)
+            if hashes is not None and len(hashes):
                 # adaptive sizing: size to OBSERVED ndv, not row count
                 # (AdaptiveBlockSplitBloomFilter.java:40-100 semantics —
                 # exact ndv is one np.unique here instead of the
                 # reference's candidate ladder)
-                ndv = len(np.unique(keys))
-                bf = BlockSplitBloomFilter(optimal_num_bytes(ndv, 0.01))
-                bf.insert_u64(keys)
+                bf = BlockSplitBloomFilter(optimal_num_bytes(len(np.unique(hashes)), 0.01))
+                bf.insert_hashes(hashes)
                 blob = bf.serialize()
                 # a chunk-index row, not a data page
                 pages.append(({
-                    "page": BLOOM_PAGE, "codec": "bloom", "ptype": ptype, "first_row": -1,
-                    "n_rows": len(keys), "null_count": 0, "raw_bytes": 0,
-                    "encoded_bytes": len(blob), "crc32": 0, "compression": "none",
-                    "min": None, "max": None, "ndv": -1,
+                    "page": BLOOM_PAGE, "codec": BLOOM_CODEC, "ptype": ptype, "first_row": -1,
+                    "n_rows": len(hashes), "null_count": 0, "raw_bytes": 0,
+                    "encoded_bytes": len(blob), "crc32": zlib.crc32(blob),
+                    "compression": "none", "min": None, "max": None, "ndv": -1,
                 }, blob))
         pages += encode_column(
             values,
@@ -908,7 +884,7 @@ def index_rows(pages_df: DataFrame, columns, index_columns=None, extra=()) -> pa
     return (
         pages_df.filter(wanted)
         .select("split_id", "batch_id", "column", "page", "codec", "ptype", "n_rows",
-                "compression", data.alias("data"), *extra)
+                "crc32", "compression", data.alias("data"), *extra)
         .toArrow()
     )
 
@@ -975,22 +951,23 @@ def bloom_disproved(meta: pa.Table, column: str, value) -> set:
     """Bloom level (BloomFilterImpl analog): the chunks whose bloom rows all
     prove ``column`` never equals ``value`` (a list/tuple/set: none of its
     values). Probes hash by the column's data-page ptype, so a column without
-    data pages, like an encrypted bloom row, disproves nothing."""
-    from ..kernels.bloom import BlockSplitBloomFilter
+    data pages, like an encrypted bloom row or one of the earlier hash
+    scheme, disproves nothing. A bloom row that fails its CRC raises
+    ``IOError``."""
+    from ..kernels.bloom import BlockSplitBloomFilter, literal_hash
 
     data = _column_rows(meta, column)
-    if data.num_rows == 0:
+    blooms = _column_rows(meta, column, BLOOM_PAGE)
+    if data.num_rows == 0 or blooms.num_rows == 0:
         return set()
     ptype = data["ptype"][0].as_py()
-    probe = np.array([bloom_key_for_value(v, ptype) for v in _probe_list(value)], dtype=np.uint64)
-    blooms = _column_rows(meta, column, BLOOM_PAGE)
+    probe = np.array([literal_hash(v, ptype) for v in _probe_list(value)], dtype=np.uint64)
     seen, maybe = set(), set()
-    for key, blob, comp in zip(
-        chunk_keys(blooms), blooms["data"].to_pylist(), blooms["compression"].to_pylist()
-    ):
+    for key, codec, crc, blob, comp in zip(chunk_keys(blooms), *(
+            blooms[k].to_pylist() for k in ("codec", "crc32", "data", "compression"))):
         seen.add(key)
-        if comp.endswith(ENCRYPTED_SUFFIX) \
-                or BlockSplitBloomFilter.deserialize(blob).contains_u64(probe).any():
+        bits = None if comp.endswith(ENCRYPTED_SUFFIX) else pagetable.bloom_bits(codec, crc, blob)
+        if bits is None or BlockSplitBloomFilter.deserialize(bits).contains_hashes(probe).any():
             maybe.add(key)
     return seen - maybe
 

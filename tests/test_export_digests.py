@@ -25,13 +25,13 @@ from pq_engine.cli import cmd_to_parquet
 # (input, page_compression) -> sha256 of the exported .parquet
 PINNED = {
     ("lineitem", None):
-        "90fa17f2cff7827aa863cb7eae7831d47ddff92c74e5d8499151c02f709303fe",
+        "de90875561236e6b8fe1eb7e0a2fbb49f5ba80aa4c93301029615dff4054773c",
     ("lineitem", "zstd"):
-        "90fa17f2cff7827aa863cb7eae7831d47ddff92c74e5d8499151c02f709303fe",
+        "de90875561236e6b8fe1eb7e0a2fbb49f5ba80aa4c93301029615dff4054773c",
     ("events", None):
-        "fb48555e2f879be6a55dd0e4f8f060125b6b79bea1b597cdee8b865d9d242d99",
+        "2cdbd4c12fd7d8f89ae241fa6569075e372066616d00fb702137e0c781df6f8a",
     ("events", "zstd"):
-        "fb48555e2f879be6a55dd0e4f8f060125b6b79bea1b597cdee8b865d9d242d99",
+        "2cdbd4c12fd7d8f89ae241fa6569075e372066616d00fb702137e0c781df6f8a",
     ("webpages", None):
         "8c730866bc814c424a7b83dd1d01d4259f7969eac0bb534c45f165af99370b42",
     ("webpages", "zstd"):

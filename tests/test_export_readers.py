@@ -94,18 +94,20 @@ def test_spark_reads_export_cell_identically(exports, spark, name, comp):
 def test_bloom_probes_keep_every_match(exports, spark, comp):
     # Spark (parquet-mr) and the interop reader skip a row group whose bloom
     # filter lacks the key, so a bloom hashed unlike the spec loses these
-    # rows there (DuckDB 1.0 reads no bloom filters: its count is the answer)
+    # rows there (DuckDB 1.0 reads no bloom filters: its count is the answer);
+    # an int64, a string and an int32 column
     path, out = exports("lineitem", comp)
-    keys = [k for (k,) in duckdb.sql(
-        f"SELECT l_orderkey FROM read_parquet('{path}') USING SAMPLE 5 ROWS (reservoir, 3)"
-    ).fetchall()]
-    q = "SELECT count(*) FROM read_parquet('{}') WHERE l_orderkey = {}"
-    for k in keys:
-        (want,) = duckdb.sql(q.format(path, k)).fetchone()
-        assert duckdb.sql(q.format(out, k)).fetchone() == (want,)
-        assert spark.read.parquet(out).filter(f"l_orderkey = {k}").count() == want
-        _, cols, report = read_parquet_filtered(out, ("eq", "l_orderkey", k))
-        assert report["blooms_probed"] > 0 and report["rows_matched"] == want
+    for col in ("l_orderkey", "l_returnflag", "l_linenumber"):
+        keys = [k for (k,) in duckdb.sql(
+            f"SELECT {col} FROM read_parquet('{path}') USING SAMPLE 5 ROWS (reservoir, 3)"
+        ).fetchall()]
+        q = "SELECT count(*) FROM read_parquet('{}') WHERE " + col + " = {!r}"
+        for k in keys:
+            (want,) = duckdb.sql(q.format(path, k)).fetchone()
+            assert duckdb.sql(q.format(out, k)).fetchone() == (want,)
+            assert spark.read.parquet(out).filter(f"{col} = {k!r}").count() == want
+            _, cols, report = read_parquet_filtered(out, ("eq", col, k))
+            assert report["blooms_probed"] > 0 and report["rows_matched"] == want, (col, k)
 
 
 @pytest.mark.parametrize("comp", [None, "zstd", "zlib"])

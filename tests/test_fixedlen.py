@@ -225,16 +225,18 @@ def test_worker_read_flba_parquet(spark, tmp_path):
 
 
 def test_fixed_bloom_keys_match_probe():
-    from pq_engine.kernels.bloom import fixed_keys, key_for_value
-    from pq_engine.kernels.fixedlen import value_to_fixed
+    from pq_engine.kernels.bloom import literal_hash, plain_hashes
+    from pq_engine.kernels.fixedlen import float32_to_fixed16, value_to_fixed
 
     u = "6fa459ea-ee8a-3ca4-894e-db77e160355e"
-    col_keys = fixed_keys(value_to_fixed(u, "uuid"))
-    assert int(col_keys[0]) == key_for_value(u, "uuid")
-    assert key_for_value("123.45", "decimal_flba[38,6]") == key_for_value(
+    col_keys = plain_hashes(value_to_fixed(u, "uuid"))
+    assert int(col_keys[0]) == literal_hash(u, "uuid")
+    stored = plain_hashes(value_to_fixed("123.45", "decimal_flba[38,6]"))
+    assert literal_hash("123.45", "decimal_flba[38,6]") == literal_hash(
         "123.450000", "decimal_flba[38,6]"
-    )
-    assert key_for_value(1.5, "float16") == key_for_value(1.5, "float16")
+    ) == int(stored[0])
+    halves = plain_hashes(float32_to_fixed16(np.array([1.5, 2.5], np.float32)))
+    assert literal_hash(1.5, "float16") == int(halves[0]) != int(halves[1])
 
 
 def test_uuid_bloom_pushdown_end_to_end(spark):

@@ -634,16 +634,16 @@ def test_bloom_filter_write_and_probe(tmp_path):
 
 
 def test_xxhash64_public_vectors():
-    from pq_engine.kernels.bloom import xxhash64_bytes, xxhash64_u64
+    from pq_engine.kernels.bloom import plain_hashes, xxhash64_bytes
 
     # public xxHash64 known-answer vectors (seed 0)
     assert xxhash64_bytes(b"abc") == 0x44BC2CF5AD770999
     assert (xxhash64_bytes(b"Nobody inspects the spammish repetition")
             == 0xFBCEA83C8A378BF1)
-    # 8-byte inputs agree with the vectorized fixed-width fast path
+    # 8-byte inputs agree with the vectorized column hash
     for v in (0, 1, 2**63 + 12345, 0xDEADBEEFCAFEBABE):
         assert xxhash64_bytes(v.to_bytes(8, "little")) == int(
-            xxhash64_u64(np.array([v], dtype=np.uint64))[0])
+            plain_hashes(np.array([v], dtype=np.uint64))[0])
 
 
 def _ragged(strings):

@@ -28,13 +28,13 @@ from test_page_table_digests import page_table, source
 # (input, page_compression) -> sha256 over every field of its page table
 PINNED_ROWS = {
     ("lineitem", None):
-        "7bf29a6ab058640cc6afcf715556e5bf2883707ae915771f9f298c212bc00bd1",
+        "224f62ed40451e48d0aa932039cd626fe8bb09003ec1205b180d433f4129b77b",
     ("lineitem", "zstd"):
-        "e8e06efa9573a840ea932a5b0aac53ee8eb90600c4bff92c0b4dfa6efefb97f8",
+        "738c0f5bb4808524e248471c9099deb7c56394f4a1ab126f47e21c8559c4c6f5",
     ("events", None):
-        "4551e3fde39b7462d880ff748c386620639ade6fe3bc4674de053a0ed73db5ea",
+        "c74d21bdb52615d2a2d7a543ba45963333c56ccb51f706c2c49398aaf43546ce",
     ("events", "zstd"):
-        "2d904fa6920059f6181a995d96e362a26626f6591996aeae16b66c13abd4924c",
+        "5980613a08fdde6f7c062b469620106541884f21781931399abf28926bf20ddf",
     ("webpages", None):
         "4f43b52cc088ed4be5a81268366c3a0ff33683e0d2fb8bc37c55fc35a41e6acd",
     ("webpages", "zstd"):

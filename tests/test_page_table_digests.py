@@ -29,13 +29,13 @@ WEBPAGES_ROW_GROUP = 1_500
 # (input, page_compression) -> sha256 of its page table
 PINNED = {
     ("lineitem", None):
-        "70764cd4381b647af895d6cbe4583775977048d5a9110e16f524e02e2948a551",
+        "98f1ba4475e3c14c7a5a385e85c53c98d2c0601677a9cabda4c730eb311f6733",
     ("lineitem", "zstd"):
-        "b92c7d36228508f51ce6633c7260ba1bede453ae6a71609c5d23c86efc6c37b2",
+        "8e1520fd0dfbadafef19476599c21f222d8a2818f3fc8aabd18a456c5658e544",
     ("events", None):
-        "bd8fef57d87d06391fe912cba1baaa335f4e9c7f525f4604a8e434e9c6a286b0",
+        "c62841a18a3c652b3fe04a6f744047579f85e73820cf4dfc0d8de837e217009e",
     ("events", "zstd"):
-        "3c0160aaf87b525783451c327cbac0b901e4c12dc280a9e412024efab98337f4",
+        "10b77615271edf870cd39d2ca71223e7ac39dbb093c5e16bf74b5d2ef0723a9c",
     ("webpages", None):
         "11a1db0185c6705f23b2f1378c5ce150d610149c74d843dc2aa71ac2a8802ec8",
     ("webpages", "zstd"):

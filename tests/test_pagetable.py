@@ -117,7 +117,8 @@ def test_transcode_refuses_a_sealed_page():
 
 @pytest.mark.skipif(not crypto.available(), reason="AES-GCM backend not available")
 def test_decrypt_gives_back_every_field_of_every_row():
-    """Bloom rows included: they carry crc32 0 before sealing and after."""
+    """Bloom rows included: their CRC is checked before sealing and
+    recomputed after authentication, as a data page's is."""
     tbl = _int64_chunk_with_bloom()
     back = pagetable.decrypt(pagetable.encrypt(tbl, {"c": KEY}), {"c": KEY})
     assert back.to_pylist() == tbl.to_pylist()

@@ -1,7 +1,8 @@
 """Regression tests for the round-1 VERDICT/ADVICE findings:
 
-* bloom keys for 32-bit ptypes (int32/float32) — previously viewed pairs of
+* bloom hashes for 32-bit ptypes (int32/float32) — once viewed pairs of
   values as one u64 key (crash on odd length, false negatives on even);
+  each value now hashes its own 4 PLAIN bytes;
 * string stats truncation at codepoint boundaries — previously byte-truncated
   mid-codepoint + errors='replace', which could make the stored bound unsound
   and silently prune matching chunks;
@@ -17,9 +18,8 @@ import numpy as np
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
+from pq_engine.kernels.bloom import literal_hash, plain_hashes
 from pq_engine.spark.engine import (
-    bloom_key_for_value,
-    _bloom_keys,
     decode_table,
     encode_table,
     prune_pages_by_bloom,
@@ -32,20 +32,20 @@ from pq_engine.spark.engine import (
 
 def test_bloom_keys_int32_odd_length():
     vals = np.array([1, 2, 3], dtype=np.int32)  # odd length used to raise
-    keys = _bloom_keys(vals, "int32")
+    keys = plain_hashes(vals)
     assert len(keys) == 3
     for v in vals:
-        assert bloom_key_for_value(int(v), "int32") in keys
+        assert literal_hash(int(v), "int32") in keys
 
 
 def test_bloom_keys_float32_matches_probe():
     vals = np.array([1.5, -2.25, 3.75, 0.0], dtype=np.float32)
-    keys = _bloom_keys(vals, "float32")
+    keys = plain_hashes(vals)
     assert len(keys) == 4
     for v in vals:
-        assert bloom_key_for_value(float(v), "float32") in keys
+        assert literal_hash(float(v), "float32") in keys
     # a value NOT in the column maps elsewhere
-    assert bloom_key_for_value(9.125, "float32") not in keys
+    assert literal_hash(9.125, "float32") not in keys
 
 
 def test_bloom_pushdown_int32_end_to_end(spark):

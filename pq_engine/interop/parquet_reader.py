@@ -1224,9 +1224,9 @@ def _eval_pred(pred, cols):
     val = _coerce(val, leaf)
     if isinstance(values, RaggedBytes):
         nn = _cmp_ragged(op, values, val)
+    elif getattr(values, "ndim", 1) == 2:
+        nn = _cmp_fixed(op, values, val)
     else:
-        if getattr(values, "ndim", 1) == 2:
-            raise ValueError("record-level filter on FLBA unsupported")
         nn = _cmp_numeric(op, values, val)
     if validity is None:
         return nn
@@ -1240,6 +1240,17 @@ def _cmp_numeric(op, values, val):
         "eq": values == val, "ne": values != val, "lt": values < val,
         "le": values <= val, "gt": values > val, "ge": values >= val,
     }[op]
+
+
+def _cmp_fixed(op, rows: np.ndarray, val: bytes):
+    """``eq`` / ``ne`` of each (n, k) FIXED_LEN_BYTE_ARRAY row against the
+    literal's bytes; a literal of another length equals no row."""
+    if op not in ("eq", "ne"):
+        raise ValueError(f"record-level {op!r} filter on FIXED_LEN_BYTE_ARRAY unsupported")
+    eqm = np.zeros(len(rows), dtype=bool)
+    if len(val) == rows.shape[1]:
+        eqm = (rows == np.frombuffer(val, dtype=np.uint8)).all(axis=1)
+    return eqm if op == "eq" else ~eqm
 
 
 def _cmp_ragged(op, rb: RaggedBytes, val: bytes):

@@ -50,6 +50,52 @@ def _words(data: np.ndarray, width: int) -> np.ndarray:
                       buffer=data, strides=(1,))
 
 
+def _round(acc: np.ndarray, lanes: np.ndarray) -> None:
+    """One XXH64 round of the accumulators ``acc`` over ``lanes``, in
+    place (``lanes`` is scratch)."""
+    lanes *= _P2
+    acc += lanes
+    lanes = acc << np.uint64(31)
+    acc >>= np.uint64(33)
+    acc |= lanes
+    acc *= _P1
+
+
+def _merge(v: np.ndarray) -> np.ndarray:
+    """The (n, 4) stripe accumulators ``v`` merged into each row's hash."""
+    h = _rotl(v[:, 0], 1) + _rotl(v[:, 1], 7) + _rotl(v[:, 2], 12) + _rotl(v[:, 3], 18)
+    for i in range(4):
+        h ^= _rotl(v[:, i] * _P2, 31) * _P1
+        h = h * _P1 + _P4
+    return h
+
+
+def _tail(h: np.ndarray, k: np.ndarray, width: int) -> np.ndarray:
+    """``h`` after one ``width``-byte (8, 4 or 1) tail word ``k`` of each
+    row."""
+    k = k.astype(np.uint64)
+    if width == 8:
+        h ^= _rotl(k * _P2, 31) * _P1
+        return _rotl(h, 27) * _P1 + _P4
+    if width == 4:
+        h ^= k * _P1
+        return _rotl(h, 23) * _P2 + _P3
+    h ^= k * _P5
+    return _rotl(h, 11) * _P1
+
+
+def _avalanche(h: np.ndarray) -> np.ndarray:
+    h ^= h >> np.uint64(33)
+    h *= _P2
+    h ^= h >> np.uint64(29)
+    h *= _P3
+    h ^= h >> np.uint64(32)
+    return h
+
+
+_TAIL_STEPS = ((8, 3), (4, 1), (1, 3))
+
+
 def _stripes(w8: np.ndarray, pos: np.ndarray, stripes: np.ndarray) -> np.ndarray:
     """XXH64's four accumulators run over ``stripes[i]`` 32-byte stripes
     from byte ``pos[i]``, then merged. One pass per stripe index, rows
@@ -60,21 +106,10 @@ def _stripes(w8: np.ndarray, pos: np.ndarray, stripes: np.ndarray) -> np.ndarray
     active = np.searchsorted(-stripes[order], -np.arange(int(stripes.max())))
     v = np.tile(_V0, (len(pos), 1))
     for c in active:
-        acc = v[:c]
-        lanes = w8[pos[:c, None] + _LANES]
-        lanes *= _P2
-        acc += lanes
-        lanes = acc << np.uint64(31)
-        acc >>= np.uint64(33)
-        acc |= lanes
-        acc *= _P1
+        _round(v[:c], w8[pos[:c, None] + _LANES])
         pos[:c] += 32
-    h = _rotl(v[:, 0], 1) + _rotl(v[:, 1], 7) + _rotl(v[:, 2], 12) + _rotl(v[:, 3], 18)
-    for i in range(4):
-        h ^= _rotl(v[:, i] * _P2, 31) * _P1
-        h = h * _P1 + _P4
-    out = np.empty_like(h)
-    out[order] = h
+    out = np.empty(len(pos), dtype=np.uint64)
+    out[order] = _merge(v)
     return out
 
 
@@ -90,33 +125,43 @@ def _xxh64(data: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray
     h += lens.astype(np.uint64)
     rem = lens & 31
     pos = starts + (lens - rem)
-    for width, steps in ((8, 3), (4, 1), (1, 3)):
+    for width, steps in _TAIL_STEPS:
         words = _words(data, width)
         for _ in range(steps):
             sel = rem >= width
             if not sel.any():
                 break
             rows = slice(None) if sel.all() else np.flatnonzero(sel)
-            k = words[pos[rows]].astype(np.uint64)
-            hr = h[rows]
-            if width == 8:
-                hr ^= _rotl(k * _P2, 31) * _P1
-                hr = _rotl(hr, 27) * _P1 + _P4
-            elif width == 4:
-                hr ^= k * _P1
-                hr = _rotl(hr, 23) * _P2 + _P3
-            else:
-                hr ^= k * _P5
-                hr = _rotl(hr, 11) * _P1
-            h[rows] = hr
+            h[rows] = _tail(h[rows], words[pos[rows]], width)
             pos[rows] += width
             rem[rows] -= width
-    h ^= h >> np.uint64(33)
-    h *= _P2
-    h ^= h >> np.uint64(29)
-    h *= _P3
-    h ^= h >> np.uint64(32)
-    return h
+    return _avalanche(h)
+
+
+def _xxh64_rows(rows: np.ndarray) -> np.ndarray:
+    """XxHash64 (seed 0) of each row of a C-contiguous (n, k) uint8 array.
+    Every step reads its word of all rows through one view strided by k:
+    no gather and no per-row bookkeeping, as the rows share one length."""
+    n, k = rows.shape
+
+    def words(offset: int, width: int) -> np.ndarray:
+        return np.ndarray((n,), dtype=f"<u{width}", buffer=rows, offset=offset, strides=(k,))
+
+    if k >= 32:
+        v = np.tile(_V0, (n, 1))
+        for s in range(k // 32):
+            lanes = np.ndarray((n, 4), dtype="<u8", buffer=rows, offset=32 * s, strides=(k, 8))
+            _round(v, lanes.astype(np.uint64))
+        h = _merge(v)
+    else:
+        h = np.full(n, _P5, dtype=np.uint64)
+    h += np.uint64(k)
+    pos = k - k % 32
+    for width, steps in _TAIL_STEPS:
+        for _ in range(min(steps, (k - pos) // width)):
+            h = _tail(h, words(pos, width), width)
+            pos += width
+    return _avalanche(h)
 
 
 def plain_hashes(values) -> np.ndarray | None:
@@ -135,9 +180,9 @@ def plain_hashes(values) -> np.ndarray | None:
             return None
         values = np.ascontiguousarray(values, dtype=values.dtype.newbyteorder("<"))
         values = values.view(np.uint8).reshape(len(values), values.dtype.itemsize)
-    n, k = values.shape
-    data = np.ascontiguousarray(values, dtype=np.uint8).reshape(-1)
-    return _xxh64(data, np.arange(n, dtype=np.int64) * k, np.full(n, k, dtype=np.int64))
+    if len(values) == 0:
+        return np.empty(0, dtype=np.uint64)
+    return _xxh64_rows(np.ascontiguousarray(values, dtype=np.uint8))
 
 
 def literal_hash(value, ptype: str) -> int | None:

@@ -17,9 +17,10 @@ distribution boundary.
 
 from __future__ import annotations
 
+import itertools
 import os
 import zlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -335,10 +336,13 @@ def _list_parquet_files(input_path: str) -> list[str]:
     return files
 
 
+_SERIAL_FOOTERS = 256
+
+
 def plan_parquet_splits(
     spark: SparkSession,
     files: list[str],
-    distribute_threshold: int = 256,
+    distribute_threshold: int = _SERIAL_FOOTERS,
 ) -> list[tuple[str, int]]:
     """Enumerate (path, num_row_groups) for every input file — the split
     planning step of the ParquetInputFormat model. Footer reads are
@@ -404,6 +408,44 @@ def plan_parquet_splits(
     return [(f, int(by_path[f]["n_rgs"])) for f in files]
 
 
+def _pack_runs(weights: list[int], n_tasks: int) -> list[tuple[int, int]]:
+    """``min(len(weights), n_tasks)`` contiguous, non-empty runs ``[lo, hi)``
+    of the units ``0 .. len(weights) - 1``, balanced by weight: run j ends at
+    the first unit whose cumulative weight reaches (j + 1) / T of the total."""
+    n = len(weights)
+    t = min(n, n_tasks)
+    cum = np.cumsum(weights, dtype=np.int64)
+    bounds = [0]
+    for j, b in enumerate(np.searchsorted(cum * t, cum[-1] * np.arange(1, t)) + 1, 1):
+        bounds.append(int(min(max(b, bounds[-1] + 1), n - t + j)))
+    bounds.append(n)
+    return list(zip(bounds[:-1], bounds[1:]))
+
+
+def _map_runs(
+    spark: SparkSession,
+    units: list,
+    weights: list[int],
+    fn: Callable[[list], Iterator[pa.RecordBatch]],
+    schema: T.StructType,
+) -> DataFrame:
+    """``fn(run)`` over contiguous runs of ``units``, one task per run and at
+    most ``defaultParallelism`` runs, balanced by ``weights``
+    (:func:`_pack_runs`). The leaf is ``spark.range(0, T, 1, T)``, one row
+    per partition, and a task looks its run up by that row's ``id`` in the
+    runs this closure carries: the plan holds no literal columns and no
+    Exchange, and each task pays the fixed cost of a task once for its run."""
+    par = spark.sparkContext.defaultParallelism
+    runs = [units[lo:hi] for lo, hi in _pack_runs(weights, par)]
+
+    def task(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in it:
+            for i in b.column(0).to_pylist():
+                yield from fn(runs[i])
+
+    return spark.range(0, len(runs), 1, len(runs)).mapInArrow(task, schema)
+
+
 def encode_parquet_files(
     spark: SparkSession,
     input_path: str,
@@ -417,14 +459,25 @@ def encode_parquet_files(
     exclude_splits: set[int] | None = None,
     split_plan: list[tuple[str, int]] | None = None,
 ) -> DataFrame:
-    """Encode parquet files with WORKER-SIDE reads: the driver distributes
-    only (split_id, path) rows; each task opens its own files with pyarrow's
-    C++ reader and encodes the batches in place. This is the
-    ParquetInputFormat split model (one split per file; row-group granularity
-    within), and it skips the JVM→Python Arrow transport entirely — on this
-    host that transport costs more than the encode itself (BENCH/BASELINE.md
-    §2). At cluster scale it is also the natural shape: every executor reads
-    its own splits from object storage.
+    """Encode parquet files with WORKER-SIDE reads: each task opens its own
+    files with pyarrow's C++ reader and encodes their ``batch_rows`` batches
+    in place, so no row crosses the JVM→Python Arrow transport (on this
+    engine's 4-core host that transport cost more than the encode itself,
+    BENCH/BASELINE.md §2). At cluster scale it is also the natural shape:
+    every executor reads its own splits from object storage.
+
+    A split is one row group (ParquetInputFormat: splits ≈ row groups),
+    numbered across ``split_plan`` (default: :func:`plan_parquet_splits`),
+    and ``exclude_splits`` drops splits by id. The splits go to at most
+    ``defaultParallelism`` tasks (:func:`_map_runs`), each a contiguous run
+    balanced by the rows in the footers. With fewer row groups than cores,
+    a plain call makes each batch its own unit, so a row group is shared
+    by several tasks; ``(split_id, batch_id)`` numbering and every batch
+    boundary stay those of the whole row group, so the page rows are the
+    same. A call with ``split_plan`` or ``exclude_splits`` (the resumable
+    :func:`run_encode_files_job`) encodes every split whole inside one
+    task. A task reads each row group it touches once, from the first
+    batch of its run to the last.
 
     Timestamps are read as their parquet logical type (isAdjustedToUTC →
     timestamp_us, else timestamp_ntz_us)."""
@@ -436,8 +489,6 @@ def encode_parquet_files(
     ptypes = {n: arrow_type_to_ptype(schema.field(n).type) for n in cols}
     codec_of = _codec_of(codec)
 
-    # splits at ROW-GROUP granularity (ParquetInputFormat: splits ≈ row
-    # groups) — footer reads distributed, schemas verified (plan_parquet_splits)
     plan = split_plan if split_plan is not None else plan_parquet_splits(spark, files)
     splits = []
     sid = 0
@@ -448,94 +499,58 @@ def encode_parquet_files(
             sid += 1
     if not splits:
         return spark.createDataFrame([], PAGE_SCHEMA)
-    # Oversized-row-group parallelism (guide: one huge unsplittable input =
-    # one straggler task): when there are fewer row groups than cores, cut
-    # each row group into contiguous iter_batches INDEX ranges so several
-    # tasks share it. (sid, batch_id) numbering and every batch boundary are
-    # unchanged — a task encodes batches [bi_lo, bi_hi) of the same global
-    # enumeration — so the emitted page table is byte-identical to the
-    # single-task output. Only for plain calls: the resumable job keys its
-    # idempotent resume on whole split ids, which needs one task per split.
-    par = spark.sparkContext.defaultParallelism
-    tasks = []
-    if split_plan is None and exclude_splits is None and len(splits) < 2 * par and len(files) <= 256:
-        import pyarrow.parquet as _pqm
-
-        rg_rows = {}
+    # Row counts come from footers read serially in this process, up to the
+    # file count plan_parquet_splits also reads serially; past it, every row
+    # group weighs one and none is cut.
+    rows = None
+    if len(plan) <= _SERIAL_FOOTERS:
+        rows = {}
         for f, _ in plan:
-            md = _pqm.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                rg_rows[(f, rg)] = md.row_group(rg).num_rows
-        max_ranges = max(1, (4 * par) // max(len(splits), 1))
-        for sid_, f, rg in splits:
-            n_batches = max(1, -(-rg_rows[(f, rg)] // batch_rows))
-            n_ranges = min(n_batches, max_ranges)
-            per = -(-n_batches // n_ranges)
-            for lo in range(0, n_batches, per):
-                tasks.append((sid_, f, rg, lo, min(lo + per, n_batches)))
-    else:
-        tasks = [(sid_, f, rg, 0, 1 << 30) for sid_, f, rg in splits]
-    # Distribute the task list WITHOUT a Python parallelize job or a hash
-    # exchange: createDataFrame(local list) runs a defaultParallelism-wide
-    # Python job just to ship a handful of rows, and hash-repartitioning n
-    # rows into n partitions leaves ~1/e of them empty (colliding rows become
-    # 2-3x straggler tasks). spark.range(n,...,n) is a JVM leaf with exactly
-    # one row per partition; each task resolves its (path, rg, range) via
-    # literal-array lookup. Falls back to round-robin repartition (exact
-    # 1 row/partition, deterministic under sortBeforeRepartition) when the
-    # task list is too large to inline into the plan.
-    if len(tasks) <= 1024:
-        cols_arrs = [
-            F.array(*[F.lit(t[i]) for t in tasks]).alias(f"_a{i}")
-            for i in range(5)
-        ]
-        idx = (F.col("id") + 1).cast("int")
-        paths_df = spark.range(0, len(tasks), 1, len(tasks)).select(
-            F.element_at(cols_arrs[0], idx).alias("split_id"),
-            F.element_at(cols_arrs[1], idx).alias("path"),
-            F.element_at(cols_arrs[2], idx).alias("rg"),
-            F.element_at(cols_arrs[3], idx).alias("bi_lo"),
-            F.element_at(cols_arrs[4], idx).alias("bi_hi"),
-        )
-    else:
-        paths_df = spark.createDataFrame(
-            tasks, "split_id int, path string, rg int, bi_lo int, bi_hi int"
-        ).repartition(len(tasks))
+            md = pq.read_metadata(f)
+            rows.update(((f, rg), md.row_group(rg).num_rows) for rg in range(md.num_row_groups))
+    cut = (rows is not None and split_plan is None and exclude_splits is None
+           and len(splits) < spark.sparkContext.defaultParallelism)
+    units, weights = [], []
+    for sid, f, rg in splits:
+        n = 1 if rows is None else rows[(f, rg)]
+        if cut:
+            for bi in range(max(1, -(-n // batch_rows))):
+                units.append((sid, f, rg, bi, bi + 1))
+                weights.append(min(batch_rows, n - bi * batch_rows))
+        else:
+            units.append((sid, f, rg, 0, 1 << 30))
+            weights.append(n)
 
-    def encode_files(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def encode_run(run: list) -> Iterator[pa.RecordBatch]:
         tune_allocator()
         import pyarrow.parquet as _pq
 
-        for b in it:
-            for row in range(b.num_rows):
-                split = int(b.column(0)[row].as_py())
-                path = b.column(1)[row].as_py()
-                rg = int(b.column(2)[row].as_py())
-                bi_lo = int(b.column(3)[row].as_py())
-                bi_hi = int(b.column(4)[row].as_py())
-                pf = _pq.ParquetFile(path)
-                # One thread: a Spark task is one core, and pyarrow's pool
-                # per worker would oversubscribe the cores. Keep this with
-                # get_spark's system memory pool for workers: each alone
-                # made encode slower. On 4 cores, perfbench webpages
-                # encode_mbps over three seeds was 1409-1492 with neither,
-                # 1233-1297 with use_threads=False alone, 1160-1189 with
-                # the system pool alone, 1588-1677 with both (session.py).
-                for bi, batch in enumerate(
-                    pf.iter_batches(
-                        batch_size=batch_rows, columns=cols, row_groups=[rg], use_threads=False
-                    )
-                ):
-                    if bi < bi_lo:
-                        continue
-                    if bi >= bi_hi:
-                        break
+        for (split, path, rg), parts in itertools.groupby(run, key=lambda u: u[:3]):
+            parts = list(parts)
+            lo, hi = parts[0][3], parts[-1][4]
+            # One thread: a Spark task is one core, and pyarrow's pool per
+            # worker would oversubscribe the cores. Keep this with
+            # get_spark's system memory pool for workers: each alone made
+            # encode slower. On 4 cores, perfbench webpages encode_mbps over
+            # three seeds was 1409-1492 with neither, 1233-1297 with
+            # use_threads=False alone, 1160-1189 with the system pool alone,
+            # 1588-1677 with both (session.py).
+            batches = _pq.ParquetFile(path).iter_batches(
+                batch_size=batch_rows, columns=cols, row_groups=[rg], use_threads=False
+            )
+            for bi, batch in enumerate(itertools.islice(batches, hi)):
+                if bi >= lo:
                     yield _encode_arrow_batch(
                         batch, cols, ptypes, codec_of, split, bi,
                         page_rows, page_bytes, page_compression, with_bloom,
                     )
+                del batch
+            # The reader holds its last batch too. Drop it with ``batch``
+            # before the next row group's read, so a task holds one source
+            # batch at a time however many row groups its run has.
+            del batches
 
-    return paths_df.mapInArrow(encode_files, PAGE_SCHEMA)
+    return _map_runs(spark, units, weights, encode_run, PAGE_SCHEMA)
 
 
 def repartition_for_encode(
@@ -1154,11 +1169,13 @@ def run_encode_files_job(
     """The worker-read variant of :func:`run_encode_job`: encodes parquet
     files via :func:`encode_parquet_files` (splits = row groups, no
     JVM→Python transport) with the same lineage checkpoint + idempotent
-    resume. Split ids are (file, row-group) ordinals; to keep them STABLE the
-    first run records the enumerated (path, n_row_groups) plan in a
-    ``splitmap`` checkpoint, and a resume whose re-enumeration differs (a
-    file added / removed / renamed / rewritten with different row groups)
-    REFUSES to continue instead of silently re-keying splits and
+    resume. Resume skips whole split ids, so every split is encoded whole
+    inside one task (a task may encode several); no row group is shared
+    between tasks. Split ids are (file, row-group) ordinals; to keep them
+    STABLE the first run records the enumerated (path, n_row_groups) plan
+    in a ``splitmap`` checkpoint, and a resume whose re-enumeration differs
+    (a file added / removed / renamed / rewritten with different row
+    groups) REFUSES to continue instead of silently re-keying splits and
     skipping/duplicating data (ADVICE r2)."""
     import pyarrow.parquet as _pq
 

@@ -94,17 +94,26 @@ def test_vectorized_hash_matches_reference(vals, skip):
     assert [int(h) for h in plain_hashes(col)] == [xxhash64_bytes(v) for v in vals]
 
 
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.binary(min_size=16, max_size=16), min_size=1, max_size=20),
-       st.lists(st.integers(-2**31, 2**31 - 1), min_size=1, max_size=20))
-def test_fixed_width_columns_hash_their_plain_bytes(rows, ints):
-    flba = np.frombuffer(b"".join(rows), np.uint8).reshape(-1, 16)
+_FLBA = st.sampled_from([k for k in _EDGES if k]).flatmap(
+    lambda k: st.lists(st.binary(min_size=k, max_size=k), min_size=1, max_size=20))
+
+
+@settings(max_examples=100, deadline=None)
+@given(_FLBA, st.lists(st.integers(-2**63, 2**63 - 1), min_size=1, max_size=20),
+       st.lists(st.floats(width=32), min_size=1, max_size=20))
+def test_fixed_width_columns_hash_their_plain_bytes(rows, ints, floats):
+    # (n, k) rows and 4- and 8-byte numbers hash through strided word views;
+    # a strided or big-endian column hashes its little-endian values
+    flba = np.frombuffer(b"".join(rows), np.uint8).reshape(len(rows), -1)
     assert [int(h) for h in plain_hashes(flba)] == [xxhash64_bytes(r) for r in rows]
-    for dt, ptype in (("<i4", "int32"), ("<i8", "int64"),
-                      ("<f4", "float32"), ("<f8", "float64")):
-        a = np.array(ints, dtype=dt)
+    i64 = np.array(ints, dtype=np.int64)
+    f64 = np.array(floats, dtype=np.float64)
+    for a, ptype in ((i64.astype("<i4"), "int32"), (i64, "int64"),
+                     (f64.astype("<f4"), "float32"), (f64, "float64")):
         want = [xxhash64_bytes(v.tobytes()) for v in a]
         assert [int(h) for h in plain_hashes(a)] == want
+        assert [int(h) for h in plain_hashes(a.astype(a.dtype.newbyteorder(">")))] == want
+        assert [int(h) for h in plain_hashes(a[::2])] == want[::2]
         assert [literal_hash(v.item(), ptype) for v in a] == want
 
 

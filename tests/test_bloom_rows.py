@@ -143,13 +143,19 @@ def test_bloom_rows_disprove_the_chunks_without_the_key(column):
 
 def test_bloom_row_is_a_parquet_bloom_filter(tmp_path):
     # every bloom row is copied, and the interop reader probes it with the
-    # spec's hash (it has no record-level filter on FLBA: "u" only misses)
+    # spec's hash, then finds the row of a present key (a uuid too)
     out = _export(_table(), tmp_path / "out.parquet")
     for column in COLUMNS:
-        for key, matched in ((PRESENT, 1), (ABSENT[0], 0))[column == "u":]:
-            _, _, report = read_parquet_filtered(out, ("eq", column, _literal(column, key)))
+        for key, matched in ((PRESENT, 1), (ABSENT[0], 0)):
+            _, data, report = read_parquet_filtered(out, ("eq", column, _literal(column, key)))
             assert report["blooms_probed"] == N_CHUNKS, column
             assert report["rows_matched"] == matched, column
+            assert len(data[column][0]) == matched, column
+            if column == "u" and matched:
+                assert bytes(data["u"][0][0]) == _literal("u", key)
+    # FLBA rows compare by equality only
+    with pytest.raises(ValueError, match="'lt'"):
+        read_parquet_filtered(out, ("lt", "u", _literal("u", PRESENT)))
 
 
 def _zeroed(tbl: pa.Table, column: str) -> pa.Table:
@@ -196,7 +202,7 @@ def test_old_scheme_rows_prune_no_chunk_and_are_not_exported(tmp_path):
         lines = _cli_probe(old, column, _value(column, PRESENT))
         assert len(lines) == N_CHUNKS and all(line.endswith("=True") for line in lines)
     out = _export(old, tmp_path / "out.parquet")
-    for column in ("s", "i", "k"):
+    for column in COLUMNS:
         _, _, report = read_parquet_filtered(out, ("eq", column, _literal(column, PRESENT)))
         assert report.get("blooms_probed", 0) == 0 and report["rows_matched"] == 1, column
 

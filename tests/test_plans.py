@@ -6,6 +6,7 @@ RowGroupFilter / ColumnIndexFilter) which Spark supplies for free ON our
 manifest/page tables — but only if our plans keep it reachable."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 
@@ -83,3 +84,38 @@ def test_rewrites_shuffle_only_to_hash(spark, pages_path, rewrite, exchanges):
     else:
         q = getattr(rw, rewrite)(pages, "url")
     assert _plan(q).count("Exchange") <= exchanges
+
+
+@pytest.mark.parametrize("row_groups, units", [(12, 12), (1, 10)])
+def test_encode_files_runs_at_most_one_task_per_core(spark, tmp_path, row_groups, units):
+    """``encode_parquet_files`` hands its units (row groups, or the batches
+    of fewer row groups than cores) to at most ``defaultParallelism`` tasks
+    of a range leaf: no literal-array lookup and no Exchange."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pq_engine.spark.engine import encode_parquet_files
+
+    pq.write_table(pa.table({"id": pa.array(range(1200), pa.int64())}),
+                   str(tmp_path / "in.parquet"), row_group_size=1200 // row_groups)
+    pages = encode_parquet_files(spark, str(tmp_path / "in.parquet"), batch_rows=120)
+    assert pages.rdd.getNumPartitions() == min(units, spark.sparkContext.defaultParallelism)
+    plan = _plan(pages)
+    assert "element_at" not in plan and "Exchange" not in plan
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.integers(0, 10**6), min_size=1, max_size=60), st.integers(1, 16))
+def test_runs_are_contiguous_and_balanced(weights, n_tasks):
+    """Each task's run is non-empty and contiguous, the runs cover every
+    unit once, and no run outweighs its share of the total by more than
+    one unit."""
+    from pq_engine.spark.engine import _pack_runs
+
+    runs = _pack_runs(weights, n_tasks)
+    assert len(runs) == min(len(weights), n_tasks)
+    assert runs[0][0] == 0 and runs[-1][1] == len(weights)
+    assert all(lo < hi for lo, hi in runs)
+    assert all(a[1] == b[0] for a, b in zip(runs, runs[1:]))
+    share = sum(weights) / len(runs)
+    assert all(sum(weights[lo:hi]) <= share + max(weights[lo:hi]) for lo, hi in runs)

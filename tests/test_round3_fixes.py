@@ -172,18 +172,31 @@ def test_files_job_resume_refuses_changed_input(spark, tmp_path):
         run_encode_files_job(spark, str(indir), out)
 
 
-def test_encode_parquet_files_distributed_plan_matches(spark, tmp_path):
-    files = _write_inputs(tmp_path, n_files=4)
-    pages_a = encode_parquet_files(spark, str(tmp_path)).orderBy(
-        "split_id", "batch_id", "column", "page"
-    )
+@pytest.mark.parametrize("n_files, rows, row_group_rows", [
+    (4, 100, 40),  # 12 row groups on 8 cores: whole row groups
+    (1, 1000, 1000),  # one row group of 10 batches: cut into batch ranges
+    (1, 1200, 400),  # 3 row groups of 4 batches on 8 cores: cut
+])
+def test_encode_parquet_files_distributed_plan_matches(spark, tmp_path, n_files, rows,
+                                                       row_group_rows):
+    """A plain call, which cuts row groups into batch ranges when there are
+    fewer than cores, gives the same page rows, every field, as a call with
+    a split plan, which encodes each row group whole in one task."""
+    files = []
+    for i in range(n_files):
+        ids = np.arange(i * rows, (i + 1) * rows)
+        files.append(str(tmp_path / f"part-{i}.parquet"))
+        pq.write_table(pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "v": pa.array([None if j % 13 == 0 else f"s{j % 11}" for j in ids]),
+        }), files[-1], row_group_size=row_group_rows)
+
+    def page_rows(**kw):
+        df = encode_parquet_files(spark, str(tmp_path), batch_rows=100, **kw)
+        return [tuple(r) for r in df.orderBy("split_id", "batch_id", "column", "page").collect()]
+
     plan = plan_parquet_splits(spark, files, distribute_threshold=1)
-    pages_b = encode_parquet_files(spark, str(tmp_path), split_plan=plan).orderBy(
-        "split_id", "batch_id", "column", "page"
-    )
-    a = [(r["split_id"], r["column"], r["page"], bytes(r["data"])) for r in pages_a.collect()]
-    b = [(r["split_id"], r["column"], r["page"], bytes(r["data"])) for r in pages_b.collect()]
-    assert a == b
+    assert page_rows() == page_rows(split_plan=plan)
 
 
 # ------------------------------------------------------------- interop guard

@@ -75,6 +75,7 @@ def _leaf(se: dict) -> dict:
         "type_length": se.get(2),
         "optional": se.get(3, 0) == 1,
         "converted": se.get(6),  # 0 = UTF8 etc.
+        "logical": next(iter(logical), None),  # the LogicalType union's field
         # DECIMAL: LogicalType.DECIMAL{1: scale, 2: precision} wins, else
         # legacy SchemaElement scale(7)/precision(8) with converted == 5
         # (what DuckDB/Hive-era writers emit)
@@ -285,6 +286,20 @@ def _decompress(body, codec: str, raw_size: int):
 # PAGE_COPY_ENCODING, plus the encodings the export never writes
 _ENGINE_CODEC = {enc: codec for codec, enc in PAGE_COPY_ENCODING.items()}
 _ENGINE_CODEC.update({ENC_PLAIN_DICT: "dict", ENC_BSS: "bss"})
+
+
+def _fixed_ptype(leaf: dict) -> str:
+    """The engine ptype of an FLBA leaf, from its annotation (parquet
+    LogicalType 14 UUID, 15 FLOAT16, 5 DECIMAL; ConvertedType 21 INTERVAL)."""
+    if leaf["logical"] == 14:
+        return "uuid"
+    if leaf["logical"] == 15:
+        return "float16"
+    if leaf["precision"] is not None:
+        return f"decimal_flba[{leaf['precision']},{leaf['scale'] or 0}]"
+    if leaf["converted"] == 21:
+        return "interval"
+    return f"fixed[{leaf['type_length']}]"
 
 
 def _kernel_ptype(leaf: dict) -> str:
@@ -864,14 +879,26 @@ def _stats_value(raw, leaf):
         return bool(raw[0])
     if phys in _NUMERIC:
         return _NUMERIC[phys](np.frombuffer(raw, dtype=_NUMERIC[phys])[0])
-    if phys in ("byte_array", "flba"):
-        # UTF8 min/max are unsigned lexicographic — python bytes compare
-        # matches exactly
+    if phys == "byte_array" or phys == "flba" and _fixed_ptype(leaf) in (
+            "uuid", f"fixed[{leaf['type_length']}]"):
+        # UTF8, UUID and plain FLBA min/max are unsigned lexicographic —
+        # python bytes compare matches exactly; decimal and float16 bytes
+        # do not sort as their values
         return bytes(raw)
     return None  # int96: no comparable stats
 
 
 def _coerce(val, leaf):
+    """A predicate literal as the stored values compare: an annotated FLBA
+    leaf's literal (a uuid str or ``UUID``, a decimal, a float16) as its
+    stored bytes, as ``bloom.literal_hash`` converts it; any other str as
+    its UTF-8 bytes."""
+    if leaf.get("physical") == "flba" and not isinstance(val, (bytes, bytearray)):
+        ptype = _fixed_ptype(leaf)
+        if not ptype.startswith("fixed["):
+            from ..kernels.fixedlen import value_to_fixed
+
+            return value_to_fixed(val, ptype).tobytes()
     if isinstance(val, str):
         return val.encode("utf-8")
     return val
@@ -1025,7 +1052,7 @@ def _rg_bloom_can_match(pred, rg, by_name, buf, report, crypto=None):
     from ..kernels.bloom import BlockSplitBloomFilter, literal_hash
 
     try:
-        h = literal_hash(val, _kernel_ptype(by_name[name]))
+        h = literal_hash(_coerce(val, by_name[name]), _kernel_ptype(by_name[name]))
     except ValueError:  # an FLBA literal of another width
         return True
     if h is None:

@@ -653,15 +653,132 @@ def _bounded_batches(tbl: pa.Table) -> pa.Table:
     return pa.Table.from_batches(out, schema=tbl.schema)
 
 
+# Executed-plan nodes of a parquet scan with its filters and projections:
+# the only leaves whose partitions :func:`_chunk_local` can read off footers.
+_SCAN_NODES = frozenset({
+    "FileSourceScanExec", "FilterExec", "ProjectExec", "ColumnarToRowExec",
+    "WholeStageCodegenExec", "InputAdapter",
+})
+
+
+def _plan_nodes(plan) -> Iterator:
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _key_attrs(plan) -> set[tuple[str, int]]:
+    """The (name, exprId) of a plan node's split_id and batch_id outputs."""
+    out = plan.output()
+    attrs = (out.apply(i) for i in range(out.size()))
+    return {(a.name(), a.exprId().id()) for a in attrs if a.name() in ("split_id", "batch_id")}
+
+
+def _chunk_boxes(path: str) -> list[tuple[int, int, int, int]] | None:
+    """The (split_id min, max, batch_id min, max) of every non-empty row
+    group of a page-table file, from its footer; None when a row group
+    lacks either statistic."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+    boxes = []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        box = []
+        for name in ("split_id", "batch_id"):
+            st = rg.column(idx[name]).statistics if name in idx else None
+            if st is None or not st.has_min_max:
+                return None
+            box += [st.min, st.max]
+        boxes.append(tuple(box))
+    return boxes
+
+
+def _disjoint(boxes: list[tuple[int, int, int, int]]) -> bool:
+    """No two (split_id, batch_id) boxes share a key: a sweep in split_id
+    order that compares each box with those whose split_id ranges reach it."""
+    boxes = sorted(boxes)
+    for i, (s0, s1, b0, b1) in enumerate(boxes):
+        for t0, _, c0, c1 in boxes[i + 1:]:
+            if t0 > s1:
+                break
+            if c0 <= b1 and b0 <= c1:
+                return False
+    return True
+
+
+def _chunk_local(pages_df: DataFrame) -> bool:
+    """Whether a decode can map ``pages_df``'s own partitions: every
+    (split_id, batch_id) chunk lies whole in one of them, and there are as
+    many of them as a shuffle would give. Proved on the driver from the
+    executed plan and the parquet footers, with no Spark job; any doubt
+    is False.
+
+    - The plan is a parquet scan under filters and projections
+      (:data:`_SCAN_NODES`), or an empty local relation, which is what
+      :func:`select_chunks` of no key folds to. Its split_id and batch_id
+      are the scan's own columns, not expressions the footers do not see.
+    - The scan reads at most ``_SERIAL_FOOTERS`` local files.
+    - No two row groups' (split_id, batch_id) min/max boxes overlap. Spark
+      never splits a row group across partitions, so each chunk is read by
+      one task.
+    - There are ``defaultParallelism`` files or more, or each file holds
+      one chunk key: otherwise a shuffle spreads the chunks over more
+      tasks than the scan has. A one-file table of many chunks fails here.
+
+    The outputs of :func:`run_encode_job` (``partitionBy("column")``) fail
+    the box test: each column directory spans the same keys."""
+    from urllib.parse import unquote, urlparse
+
+    try:
+        # a new Dataset plans afresh, as the decode's will: an earlier plan of
+        # ``pages_df`` itself would not show a cache made since
+        plan = pages_df.select("*")._jdf.queryExecution().executedPlan()
+        nodes = list(_plan_nodes(plan))
+        names = {n.getClass().getSimpleName() for n in nodes}
+        if names == {"LocalTableScanExec"}:
+            return all(n.rows().isEmpty() for n in nodes)
+        if not names <= _SCAN_NODES:
+            return False
+        keys = _key_attrs(plan)
+        if len(keys) != 2 or not keys <= _key_attrs(nodes[-1]):  # nodes[-1]: the scan
+            return False
+        files = [urlparse(f) for f in pages_df.inputFiles()]
+        if any(u.scheme != "file" for u in files) or len(files) > _SERIAL_FOOTERS:
+            return False
+        per_file = [_chunk_boxes(unquote(u.path)) for u in files]
+    except Exception:
+        return False
+    if any(b is None for b in per_file) or not _disjoint([b for bs in per_file for b in bs]):
+        return False
+    par = pages_df.sparkSession.sparkContext.defaultParallelism
+    return len(files) >= par or all(
+        len({(s0, b0) for s0, _, b0, _ in bs} | {(s1, b1) for _, s1, _, b1 in bs}) <= 1
+        for bs in per_file
+    )
+
+
 def decode_table(
     pages_df: DataFrame,
     column_order: list[str] | None = None,
     ptypes: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Reassemble the original table from a page table. Groups by
-    (split_id, batch_id) — each group holds every column's pages for one
-    input Arrow batch — and zips decoded columns back into rows.
-    Arrow-native (``applyInArrow``): blobs never round-trip through pandas.
+    """Reassemble the original table from a page table: one ``mapInArrow``
+    whose task decodes every (split_id, batch_id) chunk of its partition,
+    in key order, and zips the decoded columns back into rows. Blobs never
+    round-trip through pandas.
+
+    A chunk must reach its task whole. A page table read from files whose
+    footers prove that (:func:`_chunk_local`) is decoded over the scan's
+    own partitions, with no Exchange; any other input is first
+    ``repartition``-ed by (split_id, batch_id), which AQE coalesces to
+    about one task per core (``spark/session.py``). A task holds its
+    partition's page rows (one file split, or one coalesced shuffle
+    partition) and one chunk's decoded output at a time.
 
     Pass ``ptypes`` (from :func:`table_ptypes` or the job manifest) — without
     it a full distinct-collect job runs over the page table's metadata before
@@ -681,31 +798,17 @@ def decode_table(
     )
     arrow_schema = to_arrow_schema(out_schema)
 
-    def decode_group(tbl: pa.Table) -> pa.Table:
+    def decode_chunk(chunks: pagetable.Chunks, split: int, batch: int, range_groups: dict) -> pa.Table:
         import pyarrow.compute as pc
-
-        tune_allocator()
-        # row-range rows (page = -3, one per surviving page range, emitted by
-        # page-level pruning): rows kept = AND over probe columns of the
-        # union of that column's ranges — ColumnIndexFilter.calculateRowRanges
-        # semantics (/root/reference/parquet-hadoop/.../ColumnIndexFilter.java:58-77)
-        rr = tbl.filter(pc.equal(tbl["page"], ROWRANGES_PAGE)).to_pydict()
-        range_groups = {}
-        for c, fr, n in zip(rr["column"], rr["first_row"], rr["n_rows"]):
-            range_groups.setdefault(c, []).append((fr, fr + n))
 
         def keep_mask(row_idx):
             keep = np.ones(len(row_idx), dtype=bool)
             for ranges in range_groups.values():
-                ranges.sort()
-                los = np.array([r[0] for r in ranges], dtype=np.int64)
-                his = np.array([r[1] for r in ranges], dtype=np.int64)
+                los, his = np.array(sorted(ranges), dtype=np.int64).T
                 j = np.searchsorted(los, row_idx, side="right") - 1
                 keep &= (j >= 0) & (row_idx < his[np.maximum(j, 0)])
             return keep
 
-        chunks = pagetable.Chunks(tbl)
-        [(split, batch)] = chunks.keys  # one group is one chunk key
         arrays = []
         for name in cols:
             values, validity = decode_column(chunks.pages(split, batch, name), ptypes[name])
@@ -724,10 +827,31 @@ def decode_table(
             arrays.append(arr.cast(arrow_schema.field(name).type))
         return _bounded_batches(pa.table(arrays, schema=arrow_schema))
 
-    return (
-        pages_df.groupBy("split_id", "batch_id")
-        .applyInArrow(decode_group, schema=out_schema)
-    )
+    def decode_partition(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
+        batches = list(it)
+        if not batches:
+            return
+        tune_allocator()
+        tbl = pa.Table.from_batches(batches)
+        del batches
+        # row-range rows (page = -3, one per surviving page range, emitted by
+        # page-level pruning): a chunk keeps the rows in the AND over its
+        # probe columns of the union of that column's ranges —
+        # ColumnIndexFilter.calculateRowRanges semantics (parquet-hadoop's
+        # ColumnIndexFilter.java:58-77)
+        rr = tbl.filter(pc.equal(tbl["page"], ROWRANGES_PAGE)).to_pydict()
+        ranges = {}
+        for s, b, c, fr, n in zip(rr["split_id"], rr["batch_id"], rr["column"],
+                                  rr["first_row"], rr["n_rows"]):
+            ranges.setdefault((s, b), {}).setdefault(c, []).append((fr, fr + n))
+        chunks = pagetable.Chunks(tbl)
+        for split, batch in chunks.keys:
+            yield from decode_chunk(chunks, split, batch, ranges.get((split, batch), {})).to_batches()
+
+    leaf = pages_df if _chunk_local(pages_df) else pages_df.repartition("split_id", "batch_id")
+    return leaf.mapInArrow(decode_partition, out_schema)
 
 
 def prune_pages_by_stats(

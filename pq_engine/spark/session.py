@@ -28,13 +28,19 @@ to 32 (at 16 × one does at 17 cores). Merging is greedy, so when the keys
 do not divide evenly among the cores a small extra task is left: 10 equal
 chunks on 4 cores run as [3, 2, 2, 2, 1].
 
-Decode needs all of this because its shuffle moves page-table bytes, about
-1.4 % of the bytes its Python UDF decodes: by bytes with Spark's 1 MiB floor,
-AQE packs a column-subset decode into one or two tasks. Measured on a 4-core
-host, ``webpages``, 8 chunks: with the partitions pinned to the core count
-and that floor, chunks per decode task were [3, 2, 2, 1] for the full table
-(8 keys hashed into 4 partitions), [5, 3] for ``html`` alone and [8] for
-``url, warc_ts, lang``; with this rule all three are [2, 2, 2, 2].
+Decode needs this only when it repartitions. A page table read from files
+whose footers prove that every chunk lies whole in one scan partition is
+decoded over the scan's own partitions, with no shuffle
+(``engine._chunk_local``). Any other input (a cached or computed page table,
+a ``run_encode_job`` output partitioned by column, one file of many chunks)
+is first repartitioned by (split_id, batch_id). That shuffle moves
+page-table bytes, about 1.4 % of the bytes its Python UDF decodes: by bytes
+with Spark's 1 MiB floor, AQE packs a column-subset decode into one or two
+tasks. Measured on a 4-core host, ``webpages``, 8 chunks: with the
+partitions pinned to the core count and that floor, chunks per decode task
+were [3, 2, 2, 1] for the full table (8 keys hashed into 4 partitions),
+[5, 3] for ``html`` alone and [8] for ``url, warc_ts, lang``; with this rule
+all three are [2, 2, 2, 2].
 """
 
 from __future__ import annotations

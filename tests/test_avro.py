@@ -1,6 +1,7 @@
 """From-scratch Avro OCF writer/reader (interop/avro.py) — spec-level checks
 (zigzag varints, container layout) + round-trips + CLI to-avro."""
 
+import os
 import struct
 import subprocess
 import sys
@@ -17,6 +18,8 @@ from pq_engine.interop.avro import (
     zigzag_varint_batch,
 )
 from pq_engine.kernels.ragged import RaggedBytes
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_zigzag_batch_matches_scalar():
@@ -122,7 +125,7 @@ def test_cli_to_avro(spark, tmp_path):
     avro_path = str(tmp_path / "out.avro")
     r = subprocess.run(
         [sys.executable, "-m", "pq_engine.cli", "to-avro", out, "--out", avro_path],
-        capture_output=True, text=True, timeout=180, cwd="/root/repo",
+        capture_output=True, text=True, timeout=180, cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-800:]
     schema, recs = read_avro(avro_path)
@@ -147,7 +150,7 @@ def test_cli_from_avro_roundtrip(spark, tmp_path):
                 ["from-avro", avro_path, "--out", back_dir]):
         r = subprocess.run(
             [sys.executable, "-m", "pq_engine.cli", *cmd],
-            capture_output=True, text=True, timeout=180, cwd="/root/repo",
+            capture_output=True, text=True, timeout=180, cwd=ROOT,
         )
         assert r.returncode == 0, (cmd, r.stderr[-800:])
     back = spark.read.parquet(back_dir)

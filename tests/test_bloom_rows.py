@@ -158,6 +158,18 @@ def test_bloom_row_is_a_parquet_bloom_filter(tmp_path):
         read_parquet_filtered(out, ("lt", "u", _literal("u", PRESENT)))
 
 
+@pytest.mark.parametrize("literal", [str, uuid.UUID], ids=["str", "UUID"])
+def test_uuid_literal_finds_its_row(tmp_path, literal):
+    """A uuid literal given as its text or as a ``UUID`` converts to the 16
+    stored bytes, for the bloom probe and the row compare alike."""
+    out = _export(_table(), tmp_path / "out.parquet")
+    key = uuid.UUID(int=PRESENT)
+    _, data, report = read_parquet_filtered(out, ("eq", "u", literal(str(key))))
+    assert report["blooms_probed"] == N_CHUNKS
+    assert report["rows_matched"] == 1
+    assert bytes(data["u"][0][0]) == key.bytes
+
+
 def _zeroed(tbl: pa.Table, column: str) -> pa.Table:
     """``tbl`` with ``column``'s bloom rows zeroed, their CRCs kept."""
     zero = _rows(tbl, column).to_pylist()

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from pq_engine.cli import main as cli_main
 from pq_engine.spark.engine import decode_table, encode_table, table_ptypes
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture(scope="module")
 def pages_dir(spark):
@@ -299,7 +301,7 @@ def test_cli_to_parquet_typed_columns(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "pq_engine.cli", "to-parquet", str(src),
          "--out", str(conv)],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-500:]
     t = duckdb.sql(

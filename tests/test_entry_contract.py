@@ -3,11 +3,12 @@ operator family must run on a plain SparkSession at sf0.001 and return sane
 shapes. The full value-hash compare lives in tools/check_oracle.py (sf0.01);
 this keeps `python -m pytest` sensitive to contract breakage."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 

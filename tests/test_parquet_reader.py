@@ -3,6 +3,7 @@ by pyarrow (v1 + v2 pages, dict/delta/DLBA encodings, snappy/gzip/zstd,
 multi row group, nulls), DuckDB, and our own interop writer all decode
 through the NumPy kernels with no parquet library in the loop."""
 
+import os
 import tempfile
 from decimal import Decimal
 
@@ -17,6 +18,8 @@ from pq_engine.interop.parquet_reader import (
     read_parquet_pandas,
 )
 from pq_engine.kernels.ragged import RaggedBytes
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _same(x, y):
@@ -339,12 +342,12 @@ def test_cli_from_parquet_import(tmp_path):
     r = subprocess.run(
         [_sys.executable, "-m", "pq_engine.cli", "from-parquet",
          "/root/testdata/sf0.001/documents.parquet", "--out", out],
-        capture_output=True, text=True, timeout=120, cwd="/root/repo",
+        capture_output=True, text=True, timeout=120, cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-500:]
     r2 = subprocess.run(
         [_sys.executable, "-m", "pq_engine.cli", "scan", out],
-        capture_output=True, text=True, timeout=120, cwd="/root/repo",
+        capture_output=True, text=True, timeout=120, cwd=ROOT,
     )
     assert r2.returncode == 0 and "records=500" in r2.stdout, r2.stdout
 

@@ -119,3 +119,58 @@ def test_runs_are_contiguous_and_balanced(weights, n_tasks):
     assert all(a[1] == b[0] for a, b in zip(runs, runs[1:]))
     share = sum(weights) / len(runs)
     assert all(sum(weights[lo:hi]) <= share + max(weights[lo:hi]) for lo, hi in runs)
+
+
+def _sink(spark, tmp_path, row_groups: int, batch_rows: int, n: int = 1200) -> str:
+    """An engine-written page table of an ``n``-row table of ``row_groups``
+    row groups, encoded by ``encode_parquet_files`` and written by Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pq_engine.spark.engine import encode_parquet_files
+
+    src, sink = str(tmp_path / "in.parquet"), str(tmp_path / "pages")
+    ids = pa.array(range(n), pa.int64())
+    pq.write_table(pa.table({"id": ids, "s": pa.compute.cast(ids, pa.string())}),
+                   src, row_group_size=n // row_groups)
+    encode_parquet_files(spark, src, batch_rows=batch_rows).write.parquet(sink)
+    return sink
+
+
+def test_decode_of_an_engine_sink_maps_the_scan(spark, tmp_path):
+    """The encode writes every chunk whole into one file, so the decode of
+    its sink runs over the scan's partitions: no Exchange, no Sort."""
+    from pq_engine.spark.engine import decode_table
+
+    sink = _sink(spark, tmp_path, row_groups=12, batch_rows=100)
+    out = decode_table(spark.read.parquet(sink), ["id", "s"], {"id": "int64", "s": "string"})
+    plan = _plan(out)
+    assert "Exchange" not in plan and "Sort" not in plan, plan
+    assert sorted(out.collect()) == [(i, str(i)) for i in range(1200)]
+
+
+def test_one_row_group_table_decodes_in_one_task_per_file(spark, tmp_path):
+    """One row group of 10 batches (``tables_pushdown``'s lineitem shape):
+    the encode spreads the batches over min(10, cores) files, and the
+    decode runs one task per file with no Exchange, where AQE's greedy
+    coalescing of a shuffle left one task too many."""
+    from pyspark.sql import functions as F
+
+    from pq_engine.spark.engine import decode_table
+
+    sink = _sink(spark, tmp_path, row_groups=1, batch_rows=120)
+    out = decode_table(spark.read.parquet(sink), ["id"], {"id": "int64"})
+    assert "Exchange" not in _plan(out)
+    tasks = out.groupBy(F.spark_partition_id()).count().collect()
+    assert len(tasks) == min(10, spark.sparkContext.defaultParallelism)
+    assert sum(r["count"] for r in tasks) == 1200
+
+
+def test_decode_of_no_chunk_runs_no_task(spark, pages_path):
+    """``select_chunks`` of no key folds to an empty relation; the decode
+    over it adds no Exchange and has no partition."""
+    from pq_engine.spark.engine import decode_table, select_chunks
+
+    out = decode_table(select_chunks(spark.read.parquet(pages_path), set()), ["lang"], {"lang": "string"})
+    assert "Exchange" not in _plan(out)
+    assert out.rdd.getNumPartitions() == 0

@@ -2,6 +2,7 @@
 (uvarint batch, tag layout, field presence), round-trips, forward-compat
 unknown-field skipping, and the CLI to-protobuf / from-protobuf pair."""
 
+import os
 import subprocess
 import sys
 import tempfile
@@ -19,6 +20,8 @@ from pq_engine.interop.protobuf import (
     write_protobuf,
 )
 from pq_engine.kernels.ragged import RaggedBytes
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_uvarint_batch_matches_scalar():
@@ -166,7 +169,7 @@ def test_cli_to_protobuf_and_back(spark, tmp_path):
                 ["from-protobuf", pb_path, "--out", back_dir]):
         r = subprocess.run(
             [sys.executable, "-m", "pq_engine.cli", *cmd],
-            capture_output=True, text=True, timeout=180, cwd="/root/repo",
+            capture_output=True, text=True, timeout=180, cwd=ROOT,
         )
         assert r.returncode == 0, (cmd, r.stderr[-800:])
     name, fields, recs = read_protobuf(pb_path)

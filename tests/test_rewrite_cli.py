@@ -1,5 +1,6 @@
 """Rewrite ops (ParquetRewriter analog) + CLI smoke tests."""
 
+import os
 import subprocess
 import sys
 
@@ -15,6 +16,8 @@ from pq_engine.spark.rewrite import (
     prune_columns,
     transcode_compression,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -94,7 +97,7 @@ def test_cli_smoke(spark, pages, tmp_path):
                 ["size-stats", "--pages"]):
         r = subprocess.run(
             [sys.executable, "-m", "pq_engine.cli", cmd[0], out, *cmd[1:]],
-            capture_output=True, text=True, timeout=120, cwd="/root/repo",
+            capture_output=True, text=True, timeout=120, cwd=ROOT,
         )
         assert r.returncode == 0, (cmd, r.stderr[-500:])
         assert r.stdout.strip(), cmd
@@ -172,7 +175,7 @@ def test_cli_rewrite_rename(spark, pages, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "pq_engine.cli", "rewrite", src,
          "--rename", "lang=language", "--out", out],
-        capture_output=True, text=True, timeout=120, cwd="/root/repo",
+        capture_output=True, text=True, timeout=120, cwd=ROOT,
     )
     assert r.returncode == 0, r.stderr[-500:]
     cols = set(_load(out)["column"].to_pylist())

@@ -3,6 +3,7 @@
 thrift_compact.StructWriter that writes our parquet footers), round-trips,
 presence semantics, header-form compatibility, CLI to-thrift/from-thrift."""
 
+import os
 import subprocess
 import sys
 import tempfile
@@ -18,6 +19,8 @@ from pq_engine.interop.thriftobj import (
     write_thrift,
 )
 from pq_engine.kernels.ragged import RaggedBytes
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_wire_value_bytes_match_structwriter():
@@ -154,7 +157,7 @@ def test_cli_to_thrift_and_back(spark, tmp_path):
                 ["from-thrift", tc_path, "--out", back_dir]):
         r = subprocess.run(
             [sys.executable, "-m", "pq_engine.cli", *cmd],
-            capture_output=True, text=True, timeout=180, cwd="/root/repo",
+            capture_output=True, text=True, timeout=180, cwd=ROOT,
         )
         assert r.returncode == 0, (cmd, r.stderr[-800:])
     name, fields, recs = read_thrift(tc_path)

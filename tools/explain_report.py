@@ -1,6 +1,6 @@
 """Regenerate EXPLAIN.md — physical plans of the engine's key jobs with the
 properties each must exhibit (no Exchange in encode, PushedFilters/ReadSchema
-on manifest scans, broadcast resume anti-join, single shuffle in decode).
+on manifest scans, broadcast resume anti-join, no shuffle in a decode of a sink).
 
 Usage: python tools/explain_report.py > EXPLAIN.md
 """
@@ -53,12 +53,11 @@ def main():
         "text": "string", "lang": "string",
     }
     dec = decode_table(pages, ptypes=wp_ptypes)
-    print("## 4. decode_table — one hash-partition shuffle on (split,batch), "
-          "AQE-coalesced to ~one task per core, then arrow-native reassembly\n")
-    print("NOTE: ptypes passed explicitly — no metadata-discovery job precedes the shuffle (r1 fix #3). "
-          "The plan is AQE's final plan, read after the decode ran: the shuffle starts from "
-          "32 × shuffle.partitions partitions and `AQEShuffleRead coalesced` merges them by "
-          "input bytes ÷ defaultParallelism (spark/session.py).\n")
+    print("## 4. decode_table — one mapInArrow over the page-table scan, "
+          "no shuffle when the footers prove every chunk whole in one partition\n")
+    print("NOTE: ptypes passed explicitly — no metadata-discovery job precedes the decode (r1 fix #3). "
+          "Inputs the footers cannot prove chunk-local are repartitioned by (split_id, batch_id) "
+          "first, which AQE coalesces to about one task per core (spark/session.py).\n")
     dec.collect()
     print("```")
     print(dec._jdf.queryExecution().executedPlan().toString()[:1600])
